@@ -128,8 +128,10 @@ object ChangesetConverter {
     coalesce(strictU32(col("_num_changes"), "num_changes"), lit(0L)).as("num_changes"),
     coalesce(strictU32(col("_comments_count"), "comments_count"), lit(0L)).as("comments_count"),
     // last <tag k="comment"> wins (repeated tags overwrite,
-    // reference src/main.rs:240-244); element_at(..., -1) = last match
-    element_at(filter(col("tag"), t => t.getField("_k") === "comment"), -1)
+    // reference src/main.rs:240-244); index -1 = last match, and no
+    // match (tags but no comment) is a null description, not an ANSI
+    // out-of-bounds error
+    try_element_at(filter(col("tag"), t => t.getField("_k") === "comment"), lit(-1))
       .getField("_v").as("description"))
 
   /** Read the raw XML into the attribute/tag struct shape. */

@@ -2,8 +2,13 @@ package graft.changesets
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's scheduled pipeline (EP2, SURVEY.md §3) as a
   * driver-side runner: file-level change detection → full reconvert →
@@ -351,28 +356,90 @@ object Pipeline {
   }
 
   /** The pair's index as ONE DataFrame: the union of its manifest's
-    * immutable segments. Each segment keeps its own cluster-partition
-    * layout, so probe-side partition pruning applies per segment; the
-    * union is a no-shuffle concatenation.
+    * immutable segments, minus its tombstones. Each segment keeps its
+    * own cluster-partition layout, so probe-side partition pruning
+    * applies per segment; the union is a no-shuffle concatenation.
+    * Opening it launches no Spark job ([[readSegments]]).
     */
-  def readAnnIndex(spark: SparkSession, pairDir: String): org.apache.spark.sql.DataFrame = {
+  def readAnnIndex(spark: SparkSession, pairDir: String): DataFrame = {
     val publishDir = Paths.get(pairDir).getParent.toString
     val (_, segs) = readAnnManifest(pairDir)
-    val dfs = segs.map(r => spark.read.parquet(s"$publishDir/$r"))
-    // column order drifts across segments (the partition column moves
-    // to the end on read) — normalize before the union
-    val cols = dfs.head.columns.sorted.map(col).toSeq
-    val union = dfs.map(_.select(cols: _*)).reduce(_.unionByName(_))
+    val union = readSegments(spark, publishDir, segs)
+    // a fixed column order, whatever order the segments' footers hold
+    val index = union.select(union.columns.sorted.map(col).toSeq: _*)
     val tombs = readAnnTombstones(pairDir)
-    if (tombs.isEmpty) union
+    if (tombs.isEmpty) index
     else {
       // tombstoned vectors subtract at READ time (deletion is a
       // manifest operation, segments stay immutable) — the q172
-      // postings rule on the vector side
-      val deleted = tombs.map(r => spark.read.parquet(s"$publishDir/$r"))
-        .reduce(_.unionByName(_)).select(col("neighbor_id")).distinct()
-      union.join(broadcast(deleted), Seq("neighbor_id"), "left_anti")
+      // postings rule on the vector side. An id tombstoned twice is
+      // harmless: duplicates on an anti join's build side cannot
+      // change its result, so no distinct (and no shuffle) here.
+      val deleted = readSegments(spark, publishDir, tombs).select(col("neighbor_id"))
+      index.join(broadcast(deleted), Seq("neighbor_id"), "left_anti")
     }
+  }
+
+  /** The Spark schema key in the footer of every parquet file Spark
+    * writes — the schema Spark's own inference returns for the file.
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** A segment or tombstone dir's data schema, read on the driver from
+    * the footer of its first data file, and whether its rows sit under
+    * `col=value` partition dirs. None when there is no such footer (an
+    * empty partitioned write, a file Spark did not write): the reader
+    * then leaves the dir to Spark's own inference and its errors.
+    */
+  private def segmentLayout(conf: Configuration, dir: String): Option[(StructType, Boolean)] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(name: String) = !name.startsWith("_") && !name.startsWith(".")
+    def firstFile(p: Path, depth: Int): Option[(Path, Int)] = {
+      val (dirs, files) = fs.listStatus(p).filter(s => visible(s.getPath.getName))
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.map(f => (f.getPath, depth)).orElse(
+        dirs.iterator.filter(_.getPath.getName.contains("="))
+          .flatMap(d => firstFile(d.getPath, depth + 1)).nextOption())
+    }
+    if (!fs.exists(root)) None
+    else firstFile(root, 0).flatMap { case (file, depth) =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val json =
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+        finally reader.close()
+      Option(json).map(j => (DataType.fromJson(j).asInstanceOf[StructType], depth > 0))
+    }
+  }
+
+  /** The one reader for segment and tombstone refs (publishDir-relative):
+    * their union as ONE DataFrame, opened without a Spark job. A bare
+    * `spark.read.parquet` runs a schema-inference job per ref; here the
+    * schema comes from the ref's footer ([[segmentLayout]]) and is
+    * passed to `spark.read.schema`, which is what inference would have
+    * returned. Partition discovery (`cluster=`) still applies, so
+    * partition pruning holds. Unpartitioned refs that share a schema
+    * are one multi-path scan (at most the parallel-listing threshold
+    * of paths each, so listing stays on the driver); the rest union by
+    * name, so refs whose column order differs still read.
+    */
+  private def readSegments(spark: SparkSession, publishDir: String, refs: Seq[String]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val maxPaths = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+    final case class Scan(schema: Option[StructType], flat: Boolean, paths: Vector[String])
+    val scans = refs.foldLeft(Vector.empty[Scan]) { (acc, r) =>
+      val p = s"$publishDir/$r"
+      val layout = segmentLayout(conf, p)
+      val flat = layout.exists(!_._2)
+      val i = acc.indexWhere(s => flat && s.flat && s.schema == layout.map(_._1) &&
+        s.paths.size < maxPaths)
+      if (i >= 0) acc.updated(i, acc(i).copy(paths = acc(i).paths :+ p))
+      else acc :+ Scan(layout.map(_._1), flat, Vector(p))
+    }
+    scans.map {
+      case Scan(Some(schema), _, ps) => spark.read.schema(schema).parquet(ps: _*)
+      case Scan(None, _, ps) => spark.read.parquet(ps: _*)
+    }.reduce(_.unionByName(_))
   }
 
   /** An ANN version's tombstone segment refs — see
@@ -519,8 +586,8 @@ object Pipeline {
     val tombRefs =
       if (oldTombs.isEmpty) Seq.empty[String]
       else {
-        val deleted = oldTombs.map(r => spark.read.parquet(s"$publishDir/$r"))
-          .reduce(_.unionByName(_)).select(col("neighbor_id")).distinct()
+        val deleted = readSegments(spark, publishDir, oldTombs)
+          .select(col("neighbor_id")).distinct()
         if (deleted.join(broadcast(newIds), Seq("neighbor_id"), "left_semi").isEmpty)
           oldTombs
         else {
@@ -798,23 +865,22 @@ object Pipeline {
   }
 
   /** The live index as ONE postings DataFrame (term, doc, tf) — the
-    * no-shuffle union of the manifest's immutable segments. Disjoint
-    * doc batches mean no (term, doc) pair spans segments, so df/dl/tf
-    * over the union equal a full rebuild's.
+    * no-shuffle union of the manifest's immutable segments, minus its
+    * tombstones. Disjoint doc batches mean no (term, doc) pair spans
+    * segments, so df/dl/tf over the union equal a full rebuild's.
+    * Opening it launches no Spark job ([[readSegments]]).
     */
-  def readPostingsIndex(spark: SparkSession, pairDir: String): org.apache.spark.sql.DataFrame = {
+  def readPostingsIndex(spark: SparkSession, pairDir: String): DataFrame = {
     val publishDir = Paths.get(pairDir).getParent.toString
-    val segs = readPostingsManifest(pairDir)
-      .map(r => spark.read.parquet(s"$publishDir/$r"))
-      .reduce(_.unionByName(_))
+    val segs = readSegments(spark, publishDir, readPostingsManifest(pairDir))
     val tombs = readPostingsTombstones(pairDir)
     if (tombs.isEmpty) segs
     else {
       // tombstoned docs subtract at READ time (deletion is a manifest
       // operation, segments stay immutable); the takedown set is tiny
-      // relative to the index, so it broadcasts onto the anti join
-      val deleted = tombs.map(r => spark.read.parquet(s"$publishDir/$r"))
-        .reduce(_.unionByName(_)).select(col("doc")).distinct()
+      // relative to the index, so it broadcasts onto the anti join —
+      // undeduplicated, as duplicates cannot change an anti join
+      val deleted = readSegments(spark, publishDir, tombs).select(col("doc"))
       segs.join(broadcast(deleted), Seq("doc"), "left_anti")
     }
   }
@@ -891,8 +957,8 @@ object Pipeline {
     val tombRefs =
       if (oldTombs.isEmpty) Seq.empty[String]
       else {
-        val deleted = oldTombs.map(r => spark.read.parquet(s"$publishDir/$r"))
-          .reduce(_.unionByName(_)).select(col("doc")).distinct()
+        val deleted = readSegments(spark, publishDir, oldTombs)
+          .select(col("doc")).distinct()
         val resurrected = deleted
           .join(broadcast(newDocs.select(col(idCol).as("doc")).distinct()), Seq("doc"), "left_semi")
         if (resurrected.isEmpty) oldTombs

@@ -232,8 +232,9 @@ object Retrieval {
     * are additive over disjoint-doc segments, probing a segment union
     * is bit-identical to probing a full rebuild (q148 gates it).
     * `post` feeds three consumers — pass a materialized or
-    * cheap-to-rescan frame (a parquet read, or a localCheckpoint as
-    * [[searchTopKBm25]] does).
+    * cheap-to-rescan frame: a `readPostingsIndex` version (opened
+    * without a Spark job, its segments one parquet scan), or a
+    * localCheckpoint as [[searchTopKBm25]] does.
     */
   def bm25OverPostings(
       queries: DataFrame,

@@ -606,7 +606,7 @@ object Similarity {
       coarse: Array[Array[Double]]): DataFrame = {
     require(coarse.nonEmpty, "need at least one coarse centroid")
     VectorExpressions.register(corpus.sparkSession)
-    val rel = coarseRelCol(col(vecCol), coarse)
+    val rel = coarseRelCol(asDoubleVec(col(vecCol)), coarse)
     corpus.select(col(idCol).as("id"),
       (array_position(rel, array_min(rel)) - 1).cast("int").as("cluster"))
   }
@@ -886,13 +886,27 @@ object Similarity {
   // vectors stay in cold storage for optional exact re-ranking.
   // ------------------------------------------------------------------
 
-  /** Squared L2 distance between a sub-vector column and a literal
-    * centroid, in the expanded form x·x − 2·x·c + c·c (all three via
-    * the codegen'd VecDot; c·c folds to a constant).
+  /** Squared L2 distance between an `array<double>` sub-vector column
+    * and a literal centroid, in the expanded form x·x − 2·x·c + c·c
+    * (x·x and x·c via the codegen'd VecDot; c·c is a driver constant).
+    * The centroid is ONE array literal, not an `array(lit, …)` tree,
+    * and the already-double slice is not re-cast by a lambda
+    * `transform`, which keeps the per-probe LUT tree Catalyst analyses
+    * small. Same VecDot sums, so the same bits.
     */
-  private def d2ToCentroid(sv: Column, cent: Array[Double]): Column = {
-    val cl = array(cent.map(lit): _*)
-    dotWide(sv, sv) - lit(2.0) * dotWide(sv, cl) + lit(cent.map(x => x * x).sum)
+  private def d2ToCentroid(sv: Column, cent: Array[Double]): Column =
+    dot(sv, sv) - lit(2.0) * dot(sv, typedLit(cent)) + lit(cent.map(x => x * x).sum)
+
+  /** The ADC lookup table of an `array<double>` vector column: element
+    * m is the [[d2ToCentroid]] of the vector's m-th slice to each
+    * subspace-m centroid, in codebook order.
+    */
+  private[operators] def lutCol(dv: Column, codebooks: Array[Array[Array[Double]]]): Column = {
+    val subDim = codebooks(0)(0).length
+    array(codebooks.zipWithIndex.map { case (cents, m) =>
+      val sv = slice(dv, m * subDim + 1, subDim)
+      array(cents.map(c => d2ToCentroid(sv, c)): _*)
+    }: _*)
   }
 
   /** Train PQ codebooks: k-means per dim-subspace.
@@ -1048,12 +1062,8 @@ object Similarity {
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     VectorExpressions.register(queries.sparkSession)
     val numSubspaces = codebooks.length
-    val subDim = codebooks(0)(0).length
-    val lut = array(codebooks.zipWithIndex.map { case (cents, m) =>
-      val qv = slice(asDoubleVec(col(vecCol)), m * subDim + 1, subDim)
-      array(cents.map(c => d2ToCentroid(qv, c)): _*)
-    }: _*)
-    val q = broadcast(queries.select(col(idCol).as("query_id"), lut.as("lut")))
+    val q = broadcast(queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("qv"))
+      .select(col("query_id"), lutCol(col("qv"), codebooks).as("lut")))
 
     val scored = codes.join(q, col("query_id") =!= col("neighbor_id"))
       .withColumn("approx_d2",
@@ -1189,13 +1199,13 @@ object Similarity {
   /** Per-centroid coarse-selection key. Selection needs only the
     * ORDERING of distances, and the ||v||^2 term is constant per row —
     * drop it (one VecDot per centroid saved):
-    * rel(c) = c.c - 2 v.c = d2(v,c) - ||v||^2.
+    * rel(c) = c.c - 2 v.c = d2(v,c) - ||v||^2. `dv` is an
+    * `array<double>` column or an [[asDoubleVec]] of one; each centroid
+    * is one array literal (see [[d2ToCentroid]]).
     */
-  private def coarseRelCol(vec: Column, coarse: Array[Array[Double]]): Column = {
-    val v = asDoubleVec(vec)
+  private[operators] def coarseRelCol(dv: Column, coarse: Array[Array[Double]]): Column =
     array(coarse.map(c =>
-      lit(c.map(x => x * x).sum) - lit(2.0) * dotWide(v, array(c.map(lit): _*))): _*)
-  }
+      lit(c.map(x => x * x).sum) - lit(2.0) * dot(dv, typedLit(c))): _*)
 
   /** The IVF-PQ index table (neighbor_id, cluster, codes) — the
     * INDEX-BUILD half of [[ivfPqScan]]: map-only coarse assignment +
@@ -1211,7 +1221,7 @@ object Similarity {
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     VectorExpressions.register(corpus.sparkSession)
     // nearest coarse cluster: first-min tiebreak, same rule as pqEncodeCol
-    val corpusRel = coarseRelCol(col(vecCol), coarse)
+    val corpusRel = coarseRelCol(asDoubleVec(col(vecCol)), coarse)
     corpus.select(col(idCol).as("neighbor_id"),
       (array_position(corpusRel, array_min(corpusRel)) - 1)
         .cast("int").as("cluster"),
@@ -1234,17 +1244,18 @@ object Similarity {
       codebooks: Array[Array[Array[Double]]],
       nprobe: Int): DataFrame =
     ivfPqProbe(queries, index, idCol, vecCol, k, coarse, codebooks, nprobe,
-      probeClusterPrune(queries, idCol, vecCol, coarse, nprobe))
+      probeClusterPrune(queries, vecCol, coarse, nprobe))
 
   /** The nprobe-nearest-lists expression shared by the probe plan and
     * the static prune: per query the lexicographic struct sort
     * (distance, then cluster id — deterministic), sliced to nprobe.
+    * `dv` as in [[coarseRelCol]].
     */
   private def probesCol(
-      vec: Column, coarse: Array[Array[Double]], nprobe: Int): Column =
+      dv: Column, coarse: Array[Array[Double]], nprobe: Int): Column =
     slice(
       array_sort(zip_with(
-        coarseRelCol(vec, coarse),
+        coarseRelCol(dv, coarse),
         sequence(lit(0), lit(coarse.length - 1)),
         (d, i) => struct(d.as("d"), i.as("cl")))),
       1, nprobe)
@@ -1265,30 +1276,29 @@ object Similarity {
     *
     * The collect runs at plan-CONSTRUCTION time, so its driver job
     * must stay cheap even when a caller violates the small-batch
-    * contract: a bounded head() probe (reads partitions only until
-    * the cap is hit, never the full frame) checks the contract first,
-    * and an oversized batch falls back to the plain join (None) —
-    * correct either way, just without static pruning (a batch that
-    * big can't broadcast-probe efficiently regardless).
+    * contract: ONE bounded head() over the per-query probe lists
+    * (reads partitions only until the cap is hit, never the full
+    * frame) both checks the contract and yields the lists; an
+    * oversized batch falls back to the plain join (None) — correct
+    * either way, just without static pruning (a batch that big can't
+    * broadcast-probe efficiently regardless). The ids come back
+    * sorted, so the same probe lists always give the same `isin`
+    * filter (and the same generated code).
     *
     * Split out of ivfPqProbe in r22 so callers probing SEVERAL index
     * reads with the SAME query batch and frozen model (the q232
-    * asof/compact/live lifecycle) pay the head() check and the
-    * cluster collect once, not once per probe.
+    * asof/compact/live lifecycle) pay the job once, not once per probe.
     */
   def probeClusterPrune(
       queries: DataFrame,
-      idCol: String,
       vecCol: String,
       coarse: Array[Array[Double]],
       nprobe: Int): Option[Seq[Int]] = {
-    val smallBatch = queries.select(col(idCol))
-      .head(MaxPruneQueryBatch + 1).length <= MaxPruneQueryBatch
-    if (!smallBatch) None
-    else Some(queries
-      .select(explode(probesCol(col(vecCol), coarse, nprobe)).as("probe"))
-      .select(col("probe.cl")).distinct()
-      .collect().map(_.getInt(0)).toSeq)
+    val lists = queries
+      .select(transform(probesCol(asDoubleVec(col(vecCol)), coarse, nprobe), _.getField("cl")))
+      .head(MaxPruneQueryBatch + 1)
+    if (lists.length > MaxPruneQueryBatch) None
+    else Some(lists.flatMap(_.getSeq[Int](0)).distinct.sorted.toSeq)
   }
 
   /** [[ivfPqProbe]] with an explicit (pre-computed) prune set — see
@@ -1308,17 +1318,13 @@ object Similarity {
     val numSubspaces = codebooks.length
     require(nprobe >= 1 && nprobe <= nlist, "nprobe must be in [1, nlist]")
     VectorExpressions.register(queries.sparkSession)
-    val subDim = codebooks(0)(0).length
 
-    // per query: the nprobe nearest lists + the ADC LUT
-    val lut = array(codebooks.zipWithIndex.map { case (cents, m) =>
-      val qv = slice(asDoubleVec(col(vecCol)), m * subDim + 1, subDim)
-      array(cents.map(c => d2ToCentroid(qv, c)): _*)
-    }: _*)
-    val probes = probesCol(col(vecCol), coarse, nprobe)
+    // per query: the nprobe nearest lists + the ADC LUT, both over the
+    // query vector cast to double ONCE
     val q = broadcast(
-      queries.select(col(idCol).as("query_id"), lut.as("lut"),
-          explode(probes).as("probe"))
+      queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("qv"))
+        .select(col("query_id"), lutCol(col("qv"), codebooks).as("lut"),
+          explode(probesCol(col("qv"), coarse, nprobe)).as("probe"))
         .select(col("query_id"), col("lut"), col("probe.cl").as("cluster")))
 
     val prunedIndex = pruneClusters match {

@@ -3022,11 +3022,10 @@ object CorpusOps {
     val cur2 = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
     require(cur2 != cur, "q232 precondition: compaction must publish a new pair")
     val compIdx = graft.changesets.Pipeline.readAnnIndex(s, cur2)
-    // one head() contract check + one cluster collect for ALL three
-    // probes — the query batch and frozen model are shared, so the
-    // per-probe recompute (r21: 2 driver jobs x 3 probes) is pure waste
+    // one prune job for ALL three probes — the query batch and frozen
+    // model are shared, so a per-probe recompute is pure waste
     val prune = Similarity.probeClusterPrune(
-      queries, "vid", "embedding", model.coarse, nprobe = 2)
+      queries, "embedding", model.coarse, nprobe = 2)
     def probe(idx: DataFrame, stage: String): DataFrame =
       Similarity.ivfPqProbe(queries, idx, "vid", "embedding", k = 5,
           coarse = model.coarse, codebooks = model.codebooks, nprobe = 2,

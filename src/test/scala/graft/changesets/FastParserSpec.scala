@@ -67,6 +67,23 @@ class FastParserSpec extends SparkSpec {
     assert(slow.head.getString(4) === "multi line")
   }
 
+  test("differential: tags without a comment, and no tags, give a null description") {
+    // the default parser once raised INVALID_ARRAY_INDEX_IN_ELEMENT_AT
+    // under ANSI when a changeset's tags held no comment
+    val got = bothAgree(
+      """<osm>
+        |<changeset id="1" open="false">
+        |  <tag k="created_by" v="JOSM"/>
+        |  <tag k="source" v="survey"/>
+        |</changeset>
+        |<changeset id="2" open="false"/>
+        |<changeset id="3" open="false"><tag k="comment" v="kept"/></changeset>
+        |</osm>""".stripMargin)
+    assert(got.map(_.getLong(0)) === Seq(1L, 2L, 3L))
+    assert(got(0).isNullAt(12) && got(1).isNullAt(12))
+    assert(got(2).getString(12) === "kept")
+  }
+
   test("differential: absent attributes default exactly like the reference") {
     val got = bothAgree(
       """<osm><changeset open="true"/><changeset id="9"/></osm>""")
