@@ -3021,6 +3021,11 @@ object CorpusOps {
     graft.changesets.Pipeline.compactAnn(s, publishDir, "chunks-compact")
     val cur2 = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
     require(cur2 != cur, "q232 precondition: compaction must publish a new pair")
+    // liveIdx/asofIdx are lazy scans: compactAnn's retention must have
+    // kept both versions, or the probe below would read collected segments
+    Seq(cur, day1Dir).foreach(v => require(
+      java.nio.file.Files.exists(java.nio.file.Paths.get(v, "manifest.json")),
+      s"q232 precondition: $v must outlive the compaction's retention"))
     val compIdx = graft.changesets.Pipeline.readAnnIndex(s, cur2)
     // one prune job for ALL three probes — the query batch and frozen
     // model are shared, so a per-probe recompute is pure waste
@@ -3269,20 +3274,26 @@ object CorpusOps {
     val out = java.nio.file.Files.createTempDirectory("q218-export").toString + "/data"
     graft.sources.Export.writeShardsWithManifest(
       t(s, dir, "documents"), "doc_id", out, seed = 42L, rowsPerShard = 64L)
-    // verification runs INSIDE readShardsInOrder (it refuses any
-    // non-ok shard, loudly) — the r21 form also called verifyShards
-    // here first, paying the full scan + checksum fold twice per query
-    // (guide §1.2: don't compute things you throw away)
-    // a committed EMPTY export (empty corpus drop) verifies clean and
-    // has nothing to replay
-    val replay =
-      if (graft.sources.Export.readManifest(out).totalRows == 0L)
-        s.range(0).select(col("id").as("doc_id"), col("id").as("position"),
-          col("id").as("shard"))
-      else graft.sources.Export.readShardsInOrder(s, out)
+    replayExport(s, out)
+  }
+
+  /** q218/q222's read-back: the training order replayed from the temp
+    * export at `out`, materialized, then the export deleted.
+    * Verification runs once, INSIDE readShardsInOrderIfAny (it refuses
+    * any non-ok shard, loudly — the r21 form also called verifyShards
+    * first, paying the full scan + checksum fold twice per query); a
+    * committed EMPTY export (empty corpus drop) replays as no rows once
+    * no stray shard dir sits beside its manifest.
+    */
+  private def replayExport(s: SparkSession, out: String): DataFrame = {
+    val replay = graft.sources.Export.readShardsInOrderIfAny(s, out) match {
+      case Some(rows) => rows
         .select(col("doc_id"), col("position"), col("shard").cast("long").as("shard"))
         .orderBy(col("position"))
         .localCheckpoint(true) // materialize before deleting the temp export
+      case None =>
+        s.range(0).select(col("id").as("doc_id"), col("id").as("position"), col("id").as("shard"))
+    }
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
     }
@@ -3312,21 +3323,7 @@ object CorpusOps {
     graft.sources.Export.appendShardsWithManifest(
       docs.filter(col("doc_id") % 4 === 0), "doc_id", out,
       deltaSeed = 43L, batchId = 0L)
-    // verify-then-replay runs once inside readShardsInOrder (r22; the
-    // explicit verifyShards call here duplicated the full checksum scan)
-    val replay =
-      if (graft.sources.Export.readManifest(out).totalRows == 0L)
-        s.range(0).select(col("id").as("doc_id"), col("id").as("position"),
-          col("id").as("shard"))
-      else graft.sources.Export.readShardsInOrder(s, out)
-        .select(col("doc_id"), col("position"), col("shard").cast("long").as("shard"))
-        .orderBy(col("position"))
-        .localCheckpoint(true) // materialize before deleting the temp export
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(out).getParentFile)
-    replay
+    replayExport(s, out)
   }
 
   private val q222Sql =

@@ -399,6 +399,20 @@ object Export {
     readShardFiles(spark, outDir)
   }
 
+  /** [[readShardsInOrder]], or None for an export committed EMPTY
+    * (total_rows = 0) — which still verifies: a `shard=` dir beside a
+    * 0-row manifest is a foreign or partial write ([[verifyShards]]
+    * reports it `unexpected_shard`) and is refused, not replayed as
+    * nothing.
+    */
+  def readShardsInOrderIfAny(
+      spark: org.apache.spark.sql.SparkSession, outDir: String): Option[DataFrame] =
+    if (readManifest(outDir).totalRows > 0) Some(readShardsInOrder(spark, outDir))
+    else if (shardDirsExist(outDir))
+      throw new IllegalStateException(s"export verification failed: $outDir is committed " +
+        "EMPTY (total_rows = 0) but holds shard= dirs: unexpected_shard")
+    else None
+
   /** The shard data files only — the manifest (json) sits in the same
     * dir and must not reach the parquet footer reader.
     */

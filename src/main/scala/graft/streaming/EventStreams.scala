@@ -407,9 +407,11 @@ object EventStreams {
     * and ABSORBED into the versioned segmented index
     * ([[graft.changesets.Pipeline.absorbAnnBatch]] → one O(batch)
     * delta segment + manifest under the live pair's FROZEN model).
-    * Delivery: at-least-once replay absorbs a batch once (the segment
-    * ref is the commit record — absorbAnnBatch skips ids the live
-    * manifest already references). Bootstrap: [[graft.changesets.Pipeline.publishAnn]]
+    * Delivery: at-least-once replay absorbs a batch once (the
+    * manifest's absorbed batch ids are the commit record:
+    * absorbAnnBatch skips ids the live manifest records, and completes
+    * a batch whose commit a crash interrupted before the pointer
+    * flip). Bootstrap: [[graft.changesets.Pipeline.publishAnn]]
     * must have published a pair (the weekly retrain); the stream pays
     * only per-batch encode + delta writes forever after.
     */

@@ -104,7 +104,7 @@ class AnnAppendSpec extends SparkSpec {
     // the day-1 pair is untouched by the append
     assert(indexRows(Pipeline.readAnnIndex(spark, s"$dir/ann-day1")) === day1Rows)
     // flip back: the reader protocol sees exactly the day-1 index again
-    Pipeline.flipAnnPointer(dir, "ann-day1", "day1")
+    Pipeline.annStore.flipPointer(dir, "ann-day1", "day1")
     assert(indexRows(pairIndex(dir)) === day1Rows)
   }
 
@@ -116,7 +116,7 @@ class AnnAppendSpec extends SparkSpec {
     Pipeline.appendAnn(spark, dir, "day3", emb(30 until 40), "vec_id", "embedding")
     // keep only the newest manifest (day3) — it references day1's
     // model and ALL THREE segments, so GC must reap nothing
-    Pipeline.applyAnnRetention(dir, keep = 1, protect = Pipeline.readCurrentAnn(dir))
+    Pipeline.annStore.applyRetention(dir, keep = 1, protect = Pipeline.readCurrentAnn(dir))
     assert(!new java.io.File(s"$dir/ann-day1").exists())
     assert(!new java.io.File(s"$dir/ann-day2").exists())
     val segs = new java.io.File(s"$dir/_ann_segments").listFiles().map(_.getName).toSet
@@ -128,7 +128,7 @@ class AnnAppendSpec extends SparkSpec {
     val orphan = new java.io.File(s"$dir/_ann_segments/seg-orphan")
     orphan.mkdirs()
     java.nio.file.Files.writeString(orphan.toPath.resolve("part-0.parquet"), "x")
-    Pipeline.applyAnnRetention(dir, keep = 1, protect = Pipeline.readCurrentAnn(dir))
+    Pipeline.annStore.applyRetention(dir, keep = 1, protect = Pipeline.readCurrentAnn(dir))
     assert(!orphan.exists(), "unreferenced segment must be garbage-collected")
     assert(pairIndex(dir).count() === 40, "GC touched referenced segments")
   }
@@ -186,7 +186,7 @@ class AnnAppendSpec extends SparkSpec {
     // rollback across the compaction: pre-compact manifests still read
     // their exact segment prefix (old segments are never rewritten)
     assert(indexRows(Pipeline.readAnnIndex(spark, s"$dir/ann-day2")) === preDay2)
-    Pipeline.flipAnnPointer(dir, "ann-day2", "day2")
+    Pipeline.annStore.flipPointer(dir, "ann-day2", "day2")
     assert(indexRows(pairIndex(dir)) === preDay2)
   }
 
@@ -244,7 +244,7 @@ class AnnAppendSpec extends SparkSpec {
     Pipeline.absorbAnnBatch(spark, dir, 1L, emb(20 until 30), "vec_id", "embedding")
     Pipeline.compactAnn(spark, dir, "wk1")
     val cur = Pipeline.readCurrentAnn(dir).get
-    assert(Pipeline.readAnnAbsorbed(cur) === Set(1L),
+    assert(Pipeline.annStore.readManifest(cur).absorbed === Set(1L),
       "compaction must carry the absorbed-batch record forward")
     val before = indexRows(pairIndex(dir))
     // the replay: same batch id, same (or re-fetched) vectors
@@ -253,7 +253,7 @@ class AnnAppendSpec extends SparkSpec {
     assert(indexRows(pairIndex(dir)) === before, "replay must not change the index")
     // a genuinely new batch still appends, and carries the record on
     Pipeline.absorbAnnBatch(spark, dir, 2L, emb(30 until 35), "vec_id", "embedding")
-    assert(Pipeline.readAnnAbsorbed(Pipeline.readCurrentAnn(dir).get) === Set(1L, 2L))
+    assert(Pipeline.annStore.readManifest(Pipeline.readCurrentAnn(dir).get).absorbed === Set(1L, 2L))
     assert(pairIndex(dir).count() === 35)
   }
 
@@ -278,7 +278,7 @@ class AnnAppendSpec extends SparkSpec {
     // and names the SAME data segments — deletion is a manifest op
     assert(indexRows(Pipeline.readAnnIndex(spark, baseDir)) === indexRows(full))
     assert(Pipeline.readAnnManifest(cur)._2 === Pipeline.readAnnManifest(baseDir)._2)
-    assert(Pipeline.readAnnTombstones(cur).size === 1)
+    assert(Pipeline.annStore.readManifest(cur).tombstones.size === 1)
   }
 
   test("re-appending deleted vectors resurrects them; compaction materializes deletions") {
@@ -293,12 +293,12 @@ class AnnAppendSpec extends SparkSpec {
     val afterReadd = Pipeline.readCurrentAnn(dir).get
     assert(indexRows(Pipeline.readAnnIndex(spark, afterReadd)) === indexRows(
       Similarity.ivfPqIndex(emb(0 until 25), "vec_id", "embedding", coarse, codebooks)))
-    assert(Pipeline.readAnnTombstones(afterReadd).size === 1)
+    assert(Pipeline.annStore.readManifest(afterReadd).tombstones.size === 1)
     // compaction materializes the remaining deletion and clears the
     // tombstone list (the single-segment+tombstones early-return case
     // is pinned on the postings side)
     val compacted = Pipeline.compactAnn(spark, dir, "weekly")
-    assert(Pipeline.readAnnTombstones(compacted).isEmpty)
+    assert(Pipeline.annStore.readManifest(compacted).tombstones.isEmpty)
     assert(indexRows(Pipeline.readAnnIndex(spark, compacted)) === indexRows(
       Similarity.ivfPqIndex(emb(0 until 25), "vec_id", "embedding", coarse, codebooks)))
   }

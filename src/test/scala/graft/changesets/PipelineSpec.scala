@@ -227,13 +227,13 @@ class PipelineSpec extends SparkSpec {
     assert(readerSees() === ((4L, 2.0)))
 
     // rollback: ONE pointer flip reverts BOTH halves
-    Pipeline.flipAnnPointer(pub, "ann-v1", "v1")
+    Pipeline.annStore.flipPointer(pub, "ann-v1", "v1")
     assert(readerSees() === ((3L, 1.0)))
 
     // retention never deletes the pointed-at pair, even when mtime
     // ordering would age it out after the rollback (keep=0 ages out
     // every unprotected pair)
-    Pipeline.applyAnnRetention(pub, keep = 0, protect = Pipeline.readCurrentAnn(pub))
+    Pipeline.annStore.applyRetention(pub, keep = 0, protect = Pipeline.readCurrentAnn(pub))
     assert(readerSees() === ((3L, 1.0)))
     assert(!Files.exists(Paths.get(pub, "ann-v2")), "unprotected pair should age out")
   }

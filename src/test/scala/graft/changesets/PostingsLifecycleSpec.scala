@@ -82,7 +82,7 @@ class PostingsLifecycleSpec extends SparkSpec {
       .select(col("term"), col("doc"), col("tf")))
     assert(base === postRows(Retrieval.postings(docs(0 until 30), "doc_id", "text")
       .select(col("term"), col("doc"), col("tf"))))
-    Pipeline.flipPostingsPointer(dir, "post-base", "base")
+    Pipeline.postingsStore.flipPointer(dir, "post-base", "base")
     assert(Pipeline.readCurrentPostings(dir).get.endsWith("post-base"))
   }
 
@@ -91,7 +91,7 @@ class PostingsLifecycleSpec extends SparkSpec {
     Pipeline.publishPostings(spark, dir, "d1", docs(0 until 10), "doc_id", "text")
     Pipeline.appendPostings(spark, dir, "d2", docs(10 until 20), "doc_id", "text")
     Pipeline.appendPostings(spark, dir, "d3", docs(20 until 30), "doc_id", "text")
-    Pipeline.applyPostingsRetention(dir, keep = 1,
+    Pipeline.postingsStore.applyRetention(dir, keep = 1,
       protect = Pipeline.readCurrentPostings(dir))
     assert(!new java.io.File(s"$dir/post-d1").exists())
     assert(!new java.io.File(s"$dir/post-d2").exists())
@@ -102,7 +102,7 @@ class PostingsLifecycleSpec extends SparkSpec {
     val orphan = new java.io.File(s"$dir/_postings_segments/seg-orphan")
     orphan.mkdirs()
     java.nio.file.Files.writeString(orphan.toPath.resolve("part-0.parquet"), "x")
-    Pipeline.applyPostingsRetention(dir, keep = 1,
+    Pipeline.postingsStore.applyRetention(dir, keep = 1,
       protect = Pipeline.readCurrentPostings(dir))
     assert(!orphan.exists())
     assert(Pipeline.readPostingsIndex(spark,
@@ -124,11 +124,11 @@ class PostingsLifecycleSpec extends SparkSpec {
     assert(postRows(Pipeline.readPostingsIndex(spark, cur)
       .select(col("term"), col("doc"), col("tf"))) === preCompact)
     // rollback to the pre-compact version still reads all three segments
-    Pipeline.flipPostingsPointer(dir, "post-d3", "d3")
+    Pipeline.postingsStore.flipPointer(dir, "post-d3", "d3")
     assert(postRows(Pipeline.readPostingsIndex(
         spark, Pipeline.readCurrentPostings(dir).get)
       .select(col("term"), col("doc"), col("tf"))) === preCompact)
-    Pipeline.flipPostingsPointer(dir, "post-w1", "w1")
+    Pipeline.postingsStore.flipPointer(dir, "post-w1", "w1")
     // reusing a retained version token post-compaction must fail, not
     // overwrite an immutable segment older manifests reference
     val e = intercept[IllegalArgumentException] {
@@ -159,7 +159,7 @@ class PostingsLifecycleSpec extends SparkSpec {
       === postRows(Retrieval.postings(docs(0 until 40), "doc_id", "text")
         .select(col("term"), col("doc"), col("tf"))))
     assert(Pipeline.readPostingsManifest(cur) === Pipeline.readPostingsManifest(baseDir))
-    assert(Pipeline.readPostingsTombstones(cur).size === 1)
+    assert(Pipeline.postingsStore.readManifest(cur).tombstones.size === 1)
   }
 
   test("re-appending a deleted doc resurrects it (tombstone set shrinks)") {
@@ -177,8 +177,8 @@ class PostingsLifecycleSpec extends SparkSpec {
         .select(col("term"), col("doc"), col("tf"))))
     // full resurrection clears the tombstone list entirely
     Pipeline.appendPostings(spark, dir, "readd2", docs(25 until 30), "doc_id", "text")
-    assert(Pipeline.readPostingsTombstones(
-      Pipeline.readCurrentPostings(dir).get).isEmpty)
+    assert(Pipeline.postingsStore.readManifest(
+      Pipeline.readCurrentPostings(dir).get).tombstones.isEmpty)
   }
 
   test("compaction materializes deletions: one clean segment, tombstones cleared") {
@@ -189,7 +189,7 @@ class PostingsLifecycleSpec extends SparkSpec {
     // (materializing the deletion IS the rewrite)
     val compacted = Pipeline.compactPostings(spark, dir, "weekly")
     assert(compacted !== Pipeline.readPostingsManifest(compacted).head)
-    assert(Pipeline.readPostingsTombstones(compacted).isEmpty)
+    assert(Pipeline.postingsStore.readManifest(compacted).tombstones.isEmpty)
     assert(Pipeline.readPostingsManifest(compacted).size === 1)
     assert(postRows(Pipeline.readPostingsIndex(spark, compacted)
         .select(col("term"), col("doc"), col("tf")))

@@ -92,9 +92,9 @@ class SegmentReadSpec extends SparkSpec {
     val annCur = Pipeline.readCurrentAnn(annDir).get
     val postCur = Pipeline.readCurrentPostings(postDir).get
     assert(Pipeline.readAnnManifest(annCur)._2.size === 2)
-    assert(Pipeline.readAnnTombstones(annCur).size === 2)
+    assert(Pipeline.annStore.readManifest(annCur).tombstones.size === 2)
     assert(Pipeline.readPostingsManifest(postCur).size === 2)
-    assert(Pipeline.readPostingsTombstones(postCur).size === 2)
+    assert(Pipeline.postingsStore.readManifest(postCur).tombstones.size === 2)
 
     val (ann, annJobs) = jobsDuring(Pipeline.readAnnIndex(spark, annCur))
     val (post, postJobs) = jobsDuring(Pipeline.readPostingsIndex(spark, postCur))

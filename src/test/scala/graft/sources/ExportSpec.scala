@@ -286,6 +286,19 @@ class ExportSpec extends SparkSpec {
     assert(e.getMessage.contains("EMPTY"))
   }
 
+  test("empty corpus: a stray shard dir beside the 0-row manifest is refused, not replayed as nothing") {
+    val out = tmpDir("export-empty-stray") + "/data"
+    Export.writeShardsWithManifest(
+      docs(10).filter($"doc_id" > 100), "doc_id", out, seed = 7L, rowsPerShard = 32L)
+    assert(Export.readShardsInOrderIfAny(spark, out).isEmpty)
+    // a foreign or partial write lands a shard beside the committed manifest
+    docs(3).withColumn("position", $"doc_id").write.parquet(s"$out/shard=0")
+    val e = intercept[IllegalStateException] {
+      Export.readShardsInOrderIfAny(spark, out)
+    }
+    assert(e.getMessage.contains("unexpected_shard"))
+  }
+
   test("appendShardsWithManifest: O(delta) append, untouched shards byte-identical, replays converge") {
     def fileBytes(dir: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =

@@ -12,8 +12,8 @@ import graft.operators.{Encode, Similarity}
   * delta segment under the live pair's frozen model. The binding
   * properties: stream-fed index ≡ the index built from ALL vectors in
   * one shot with the same frozen model, and at-least-once replay
-  * absorbs a batch exactly once (the segment ref is the commit
-  * record).
+  * absorbs a batch exactly once (the manifest's absorbed batch ids
+  * are the commit record).
   */
 class AnnIngestStreamSpec extends SparkSpec {
   import spark.implicits._

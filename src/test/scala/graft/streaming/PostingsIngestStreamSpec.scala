@@ -43,7 +43,7 @@ class PostingsIngestStreamSpec extends SparkSpec {
     assert(postRows(Pipeline.readPostingsIndex(spark, cur))
       === postRows(Retrieval.postings(docs(0 until 40), "doc_id", "text")))
     // both batch ids are durably recorded as absorbed
-    assert(Pipeline.readPostingsAbsorbed(cur) === Set(0L, 1L))
+    assert(Pipeline.postingsStore.readManifest(cur).absorbed === Set(0L, 1L))
   }
 
   test("replayed batch ids skip — before AND after a compaction rewrites the segments") {
