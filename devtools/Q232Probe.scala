@@ -78,9 +78,11 @@ object Q232Probe {
       val d = graft.changesets.Pipeline.readAnnIndex(s, cur2).localCheckpoint(true)
       d.count(); d
     }
+    val table = time("probe table") {
+      Similarity.probeTable(queries, "vid", "embedding", model.coarse, model.codebooks, nprobe = 2).get
+    }
     def probe(idx: org.apache.spark.sql.DataFrame, stage: String) = time(s"probe $stage") {
-      val p = Similarity.ivfPqProbe(queries, idx, "vid", "embedding", k = 5,
-        coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
+      val p = Similarity.ivfPqProbe(idx, table, k = 5)
       p.count(); p
     }
     probe(asofIdx, "asof")

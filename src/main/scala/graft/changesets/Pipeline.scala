@@ -6,8 +6,7 @@ import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -184,8 +183,7 @@ object Pipeline {
 
   private val PointerName = "current.json"
 
-  private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
-  private val JsonOut = Json.writer(new DefaultPrettyPrinter().withSeparators(
+  private val JsonOut = graft.Json.Mapper.writer(new DefaultPrettyPrinter().withSeparators(
     Separators.createDefaultInstance().withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
 
   /** The one commit primitive for pointers, manifests and the catalog:
@@ -199,7 +197,7 @@ object Pipeline {
     Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private[changesets] def readJson(p: JPath): JsonNode = Json.readTree(p.toFile)
+  private[changesets] def readJson(p: JPath): JsonNode = graft.Json.read(p)
 
   /** The publishDir-relative path a pointer file's `field` names,
     * resolved against publishDir (None before the first flip).
@@ -473,24 +471,38 @@ object Pipeline {
   // [[SegmentStore]] without a model. What makes the incremental form
   // CORRECT for BM25/tf-idf is that every corpus statistic the scorers
   // need is ADDITIVE over disjoint-doc segments: df(term) counts
-  // (term, doc) rows, dl(doc) sums tf, avgdl sums dl — so probing the
+  // (term, doc) rows, nd counts docs, avgdl sums tf — so probing the
   // segment UNION is bit-identical to probing a full rebuild (q148
   // hash-gates exactly that through the BM25 tail), while a daily
   // append tokenizes ONLY the new docs: build cost ∝ batch, not corpus.
+  // The per-doc statistics are stored, not recomputed per probe: every
+  // data segment row carries its doc's length `dl`, and exactly one row
+  // per doc (its smallest term) carries `lead` = true
+  // (Retrieval.postingsWithStats at publish and append; the store's
+  // `prepare`, Retrieval.withDocStats, adds them when a compaction
+  // rewrites a version that still holds older segments), so a probe counts
+  // docs and sums lengths in one partial aggregate instead of
+  // regrouping the whole index by doc. A doc's rows live in one
+  // segment and a tombstone drops all of them, so both columns stay
+  // exact under append, delete and compaction.
   // ------------------------------------------------------------------
 
   private[graft] val postingsStore = new SegmentStore(
     kind = "Postings", prefix = "post-", pointerName = "postings_current.json",
     segmentDir = "_postings_segments", idCol = "doc", partitionCol = None,
-    modelDir = None, sortColumns = false)
+    modelDir = None, sortColumns = false, prepare = graft.operators.Retrieval.withDocStats)
 
   def readPostingsManifest(pairDir: String): Seq[String] =
     postingsStore.readManifest(pairDir).segments
 
-  /** The live index as ONE postings DataFrame (term, doc, tf) — the
-    * no-shuffle union of the manifest's immutable segments, minus its
-    * tombstones. Disjoint doc batches mean no (term, doc) pair spans
-    * segments, so df/dl/tf over the union equal a full rebuild's.
+  /** A version as ONE postings DataFrame (term, doc, tf, dl, lead) —
+    * the no-shuffle union of the manifest's immutable segments, minus
+    * its tombstones, opened without a Spark job. Disjoint doc batches
+    * mean no (term, doc) pair spans segments, so df/tf over the union
+    * and the stored per-doc `dl`/`lead` equal a full rebuild's. A
+    * version that still holds segments written before the stored
+    * statistics existed reads as (term, doc, tf); the BM25 scorers
+    * derive `dl`/`lead` for it ([[graft.operators.Retrieval.withDocStats]]).
     */
   def readPostingsIndex(spark: SparkSession, pairDir: String): DataFrame =
     postingsStore.read(spark, pairDir)
@@ -508,7 +520,7 @@ object Pipeline {
       textCol: String,
       keepHistory: Int = 5): String =
     postingsStore.publish(spark, publishDir, sourceVersion,
-      graft.operators.Retrieval.postings(corpus, idCol, textCol), keepHistory)
+      graft.operators.Retrieval.postingsWithStats(corpus, idCol, textCol), keepHistory)
 
   /** O(delta) daily append: tokenize ONLY the new docs, write one
     * delta segment + one manifest referencing the live prefix
@@ -525,13 +537,13 @@ object Pipeline {
       keepHistory: Int = 5,
       absorbBatchId: Option[Long] = None): String =
     postingsStore.append(spark, publishDir, sourceVersion, newDocs, idCol, keepHistory,
-      absorbBatchId)(_ => graft.operators.Retrieval.postings(newDocs, idCol, textCol))
+      absorbBatchId)(_ => graft.operators.Retrieval.postingsWithStats(newDocs, idCol, textCol))
 
   /** Takedown: delete documents from the live postings index WITHOUT
     * touching any segment — the compliance operation (DMCA/GDPR
     * removal) a training-data index must support on the same
     * immutable-artifact terms as append. Every read of the new version
-    * subtracts the union of its tombstones, so df/dl/avgdl shift
+    * subtracts the docs from the segments it holds, so df/dl/avgdl shift
     * EXACTLY as if the docs had never been indexed (q172 hash-gates
     * delete ≡ rebuild-without). Retained older versions still see the
     * docs (takedown of HISTORY is [[compactPostings]] + retention aging
@@ -650,7 +662,7 @@ object Pipeline {
     finally s.close()
   }
 
-  private[changesets] def deleteRecursively(p: JPath): Unit = {
+  private[graft] def deleteRecursively(p: JPath): Unit = {
     if (Files.isDirectory(p)) listChildren(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
@@ -666,7 +678,11 @@ object Pipeline {
 }
 
 /** One version of a [[SegmentStore]]: its commit record. All refs are
-  * publishDir-relative. `absorbed` holds the streaming micro-batch ids
+  * publishDir-relative. Tombstone t hides ids in the first `scopes(t)`
+  * segments only — the segments the version held when the delete
+  * committed — so rows a later append re-adds under a deleted id show,
+  * while the deleted rows stay hidden (per-segment deletion, like a
+  * lakehouse deletion vector). `absorbed` holds the streaming micro-batch ids
   * the version contains, carried forward by every later version (a
   * compaction rewrites the segment list, so the list alone stops being
   * evidence of absorption). `seq` orders versions for retention: 1 +
@@ -674,7 +690,8 @@ object Pipeline {
   * `parent` names the version an append, delete or compact was built
   * from (its dir name and seq; a publish builds on none). Absent fields
   * (manifests from before a field existed) read as empty, an absent
-  * `seq` as 0.
+  * `seq` as 0, absent scopes as every segment (the manifest's writer
+  * applied each tombstone to all of them).
   */
 private[graft] final case class SegmentManifest(
     segments: Seq[String],
@@ -682,8 +699,12 @@ private[graft] final case class SegmentManifest(
     absorbed: Set[Long] = Set.empty,
     model: Option[String] = None,
     seq: Long = 0L,
-    parent: Option[(String, Long)] = None) {
+    parent: Option[(String, Long)] = None,
+    scopes: Seq[Int] = Nil) {
   def refs: Seq[String] = model.toSeq ++ segments ++ tombstones
+
+  /** The tombstones that hide segment `i`: those committed after it. */
+  def hiddenBy(i: Int): Seq[String] = tombstones.zip(scopes).collect { case (t, s) if i < s => t }
 }
 
 /** A versioned index as manifests over IMMUTABLE segments — the
@@ -691,8 +712,9 @@ private[graft] final case class SegmentManifest(
   * the ANN and postings indexes need:
   *
   *   publishDir/<segmentDir>/seg-<v>/   data segment (publish, append, compact)
-  *   publishDir/<segmentDir>/tomb-<v>/  tombstone segment: ids that every
-  *                                      read of a version subtracts
+  *   publishDir/<segmentDir>/tomb-<v>/  tombstone segment: ids that reads
+  *                                      of a version subtract from the
+  *                                      segments the delete saw
   *   publishDir/<prefix><v>/manifest.json   one version ([[SegmentManifest]])
   *   publishDir/<pointerName>           the pointer: names the live version
   *
@@ -709,8 +731,10 @@ private[graft] final case class SegmentManifest(
   * `idCol` is the id column tombstones hold, `partitionCol` the
   * column a data segment is clustered and partitioned by, `modelDir`
   * a directory of extra refs (the ANN model) collected like segments,
-  * and `sortColumns` fixes the read's column order whatever order the
-  * segments' footers hold.
+  * `sortColumns` fixes the read's column order whatever order the
+  * segments' footers hold, and `prepare` completes a data segment's
+  * rows before they are written (the postings' stored per-doc
+  * statistics).
   */
 private[graft] final class SegmentStore(
     kind: String,
@@ -720,7 +744,8 @@ private[graft] final class SegmentStore(
     idCol: String,
     partitionCol: Option[String],
     modelDir: Option[String],
-    sortColumns: Boolean) {
+    sortColumns: Boolean,
+    prepare: DataFrame => DataFrame = identity) {
   import Pipeline.{deleteRecursively, listChildren, safeVersion}
 
   def readCurrent(publishDir: String): Option[String] =
@@ -746,10 +771,20 @@ private[graft] final class SegmentStore(
     if (!j.has("segments"))
       throw new IllegalStateException(s"manifest at $versionDir names no segments")
     def all(field: String) = j.path(field).elements.asScala.toSeq
-    SegmentManifest(all("segments").map(_.asText), all("tombstones").map(_.asText),
+    val segments = all("segments").map(_.asText)
+    val tombstones = all("tombstones").map(_.asText)
+    val scopes =
+      if (j.has("tombstone_scopes")) all("tombstone_scopes").map(_.asInt)
+      else tombstones.map(_ => segments.size)
+    if (scopes.size != tombstones.size || scopes.exists(s => s < 0 || s > segments.size))
+      throw new IllegalStateException(
+        s"manifest at $versionDir has tombstone scopes $scopes that do not fit its " +
+          s"${tombstones.size} tombstone(s) over ${segments.size} segment(s)")
+    SegmentManifest(segments, tombstones,
       all("absorbed").map(_.asLong).toSet, Option(j.get("model")).map(_.asText),
       j.path("seq").asLong(0L),
-      Option(j.get("parent")).map(p => (p.asText, j.path("parent_seq").asLong(0L))))
+      Option(j.get("parent")).map(p => (p.asText, j.path("parent_seq").asLong(0L))),
+      scopes)
   }
 
   /** Every committed version under publishDir, with its manifest. */
@@ -793,22 +828,32 @@ private[graft] final class SegmentStore(
     }
   }
 
-  /** A version's rows as ONE DataFrame: the union of its segments minus
-    * the union of its tombstones. Tombstoned ids subtract at READ time
-    * (deletion is a manifest operation, segments stay immutable); the
-    * takedown set is tiny relative to the index, so it broadcasts onto
-    * the anti join — undeduplicated, as duplicates on an anti join's
-    * build side cannot change its result. Opening a version launches
-    * no Spark job ([[readSegments]]).
+  /** A version's rows as ONE DataFrame: each segment minus the ids of
+    * the tombstones that hide it ([[SegmentManifest.hiddenBy]]).
+    * Tombstoned ids subtract at READ time (deletion is a manifest
+    * operation, segments stay immutable); the takedown set is tiny
+    * relative to the index, so it broadcasts onto the anti join —
+    * undeduplicated, as duplicates on an anti join's build side cannot
+    * change its result. Consecutive segments hidden by the same
+    * tombstones are one scan with one anti join, so a version with no
+    * segment appended after a delete reads as one union and one anti
+    * join. Opening a version launches no Spark job ([[readSegments]]).
     */
   def read(spark: SparkSession, versionDir: String): DataFrame = {
     val publishDir = Paths.get(versionDir).getParent.toString
     val m = readManifest(versionDir)
-    val union = readSegments(spark, publishDir, m.segments)
-    val rows = if (sortColumns) union.select(union.columns.sorted.map(col).toSeq: _*) else union
-    if (m.tombstones.isEmpty) rows
-    else rows.join(broadcast(readSegments(spark, publishDir, m.tombstones).select(col(idCol))),
-      Seq(idCol), "left_anti")
+    val runs = m.segments.indices.foldLeft(Vector.empty[(Vector[String], Seq[String])]) {
+      case (acc :+ ((segs, tombs)), i) if m.hiddenBy(i) == tombs =>
+        acc :+ ((segs :+ m.segments(i), tombs))
+      case (acc, i) => acc :+ ((Vector(m.segments(i)), m.hiddenBy(i)))
+    }
+    val union = unionCommon(runs.map { case (segs, tombs) =>
+      val rows = readSegments(spark, publishDir, segs)
+      if (tombs.isEmpty) rows
+      else rows.join(broadcast(readSegments(spark, publishDir, tombs).select(col(idCol))),
+        Seq(idCol), "left_anti")
+    })
+    if (sortColumns) union.select(union.columns.sorted.map(col).toSeq: _*) else union
   }
 
   /** Publish `rows` as a new version holding one segment (and `model`,
@@ -819,7 +864,7 @@ private[graft] final class SegmentStore(
       keepHistory: Int, model: Option[String] = None): String = {
     Files.createDirectories(Paths.get(publishDir))
     val segRef = ref("seg", sourceVersion)
-    writeSegment(rows, s"$publishDir/$segRef")
+    writeData(rows, s"$publishDir/$segRef")
     commit(publishDir, sourceVersion, SegmentManifest(Seq(segRef), model = model), keepHistory)
   }
 
@@ -829,7 +874,10 @@ private[graft] final class SegmentStore(
     * contract is CHECKED — a re-appended id would duplicate its rows
     * (plain union, no dedup: dedup here would mask real upstream id
     * collisions) — by one broadcast semi-join count of the live index
-    * against the batch's ids.
+    * against the batch's ids. That count reads the FILTERED index, so a
+    * deleted id may be re-added: the live tombstones keep their scopes,
+    * which end before the new segment, so its new rows show and its
+    * old rows stay hidden.
     */
   def append(spark: SparkSession, publishDir: String, sourceVersion: String, batch: DataFrame,
       batchIdCol: String, keepHistory: Int, absorbBatchId: Option[Long])(
@@ -844,50 +892,25 @@ private[graft] final class SegmentStore(
         "batch — batches must be disjoint (re-running an already-appended batch would " +
         "duplicate its rows).")
     val segRef = ref("seg", sourceVersion)
-    writeSegment(delta, s"$publishDir/$segRef")
+    writeData(delta, s"$publishDir/$segRef")
     commit(publishDir, sourceVersion, child(cur, m).copy(segments = m.segments :+ segRef,
-      tombstones = resurrect(spark, publishDir, m.tombstones, newIds, sourceVersion),
       absorbed = m.absorbed ++ absorbBatchId), keepHistory)
   }
 
-  /** The tombstone refs of a version that re-adds `newIds`. A re-added,
-    * previously deleted id passes the disjoint check (which reads the
-    * FILTERED index), so a stale tombstone would silently hide its new
-    * rows: the set drops those ids instead. Tombstone segments are
-    * immutable, so a shrunken set means one new tombstone segment;
-    * an unchanged set carries its refs.
-    */
-  private def resurrect(spark: SparkSession, publishDir: String, tombs: Seq[String],
-      newIds: DataFrame, sourceVersion: String): Seq[String] =
-    if (tombs.isEmpty) tombs
-    else {
-      val deleted = readSegments(spark, publishDir, tombs).select(col(idCol)).distinct()
-      if (deleted.join(broadcast(newIds), Seq(idCol), "left_semi").isEmpty) tombs
-      else {
-        val remaining = deleted.join(broadcast(newIds), Seq(idCol), "left_anti")
-        if (remaining.isEmpty) Nil
-        else {
-          val tRef = ref("tomb", sourceVersion)
-          writeSegment(remaining, s"$publishDir/$tRef", partitioned = false)
-          Seq(tRef)
-        }
-      }
-    }
-
-  /** Takedown: one tombstone segment of `ids` and a version whose
-    * tombstone list grows by it; data segments stay untouched, retained
-    * versions still see the rows, re-adding resurrects ([[append]]),
-    * compaction materializes and clears.
+  /** Takedown: one tombstone segment of `ids`, scoped to the version's
+    * current segments, and a version whose tombstone list grows by it;
+    * data segments stay untouched, retained versions still see the
+    * rows, a later append may re-add an id ([[append]]), compaction
+    * materializes and clears.
     */
   def delete(publishDir: String, sourceVersion: String, ids: DataFrame, idsCol: String,
       keepHistory: Int): String = {
     val (cur, m) = live(publishDir, s"delete$kind")
     requireFresh(s"delete$kind", publishDir, cur, sourceVersion)
     val tRef = ref("tomb", sourceVersion)
-    writeSegment(ids.select(col(idsCol).as(idCol)).distinct(), s"$publishDir/$tRef",
-      partitioned = false)
-    commit(publishDir, sourceVersion, child(cur, m).copy(tombstones = m.tombstones :+ tRef),
-      keepHistory)
+    ids.select(col(idsCol).as(idCol)).distinct().write.mode("overwrite").parquet(s"$publishDir/$tRef")
+    commit(publishDir, sourceVersion, child(cur, m).copy(tombstones = m.tombstones :+ tRef,
+      scopes = m.scopes :+ m.segments.size), keepHistory)
   }
 
   /** Rewrite the live version's rows as ONE segment under a new
@@ -902,9 +925,9 @@ private[graft] final class SegmentStore(
     if (m.segments.size <= 1 && m.tombstones.isEmpty) return cur
     requireFresh(s"compact$kind", publishDir, cur, sourceVersion)
     val segRef = ref("seg", sourceVersion)
-    writeSegment(read(spark, cur), s"$publishDir/$segRef")
-    commit(publishDir, sourceVersion, child(cur, m).copy(segments = Seq(segRef), tombstones = Nil),
-      keepHistory)
+    writeData(read(spark, cur), s"$publishDir/$segRef")
+    commit(publishDir, sourceVersion,
+      child(cur, m).copy(segments = Seq(segRef), tombstones = Nil, scopes = Nil), keepHistory)
   }
 
   /** Idempotent per-batch absorb for streaming ingest: run `append`
@@ -968,15 +991,17 @@ private[graft] final class SegmentStore(
         "on it. Use a fresh version token.")
   }
 
-  private def writeSegment(rows: DataFrame, path: String, partitioned: Boolean = true): Unit =
-    partitionCol.filter(_ => partitioned) match {
+  private def writeData(rows: DataFrame, path: String): Unit = {
+    val out = prepare(rows)
+    partitionCol match {
       // cluster-collocate before the partitioned write: without it every
       // upstream partition emits a file into every cluster dir; with it
       // each cluster's rows land in one file, so a probe opens nprobe
       // files, not nprobe × thousands
-      case Some(c) => rows.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(path)
-      case None => rows.write.mode("overwrite").parquet(path)
+      case Some(c) => out.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(path)
+      case None => out.write.mode("overwrite").parquet(path)
     }
+  }
 
   /** Commit `m` as the version of `sourceVersion` — the manifest LAST,
     * after every segment it names, with seq = 1 + the largest retained
@@ -989,7 +1014,7 @@ private[graft] final class SegmentStore(
     val dir = Paths.get(publishDir, name)
     Files.createDirectories(dir)
     Pipeline.commitJson(dir.resolve("manifest.json"), m.model.map("model" -> _).toSeq ++ Seq(
-      "segments" -> m.segments, "tombstones" -> m.tombstones,
+      "segments" -> m.segments, "tombstones" -> m.tombstones, "tombstone_scopes" -> m.scopes,
       "absorbed" -> m.absorbed.toSeq.sorted, "source_version" -> sourceVersion,
       "seq" -> seq) ++ m.parent.toSeq.flatMap { case (p, ps) =>
         Seq("parent" -> p, "parent_seq" -> ps) }: _*)
@@ -1044,7 +1069,8 @@ private[graft] final class SegmentStore(
     * partition pruning holds. Unpartitioned refs that share a schema
     * are one multi-path scan (at most the parallel-listing threshold
     * of paths each, so listing stays on the driver); the rest union by
-    * name, so refs whose column order differs still read.
+    * name ([[unionCommon]]), so refs whose column order differs still
+    * read.
     */
   private def readSegments(spark: SparkSession, publishDir: String, refs: Seq[String]): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
@@ -1059,9 +1085,20 @@ private[graft] final class SegmentStore(
       if (i >= 0) acc.updated(i, acc(i).copy(paths = acc(i).paths :+ p))
       else acc :+ Scan(layout.map(_._1), flat, Vector(p))
     }
-    scans.map {
+    unionCommon(scans.map {
       case Scan(Some(schema), _, ps) => spark.read.schema(schema).parquet(ps: _*)
       case Scan(None, _, ps) => spark.read.parquet(ps: _*)
-    }.reduce(_.unionByName(_))
+    })
+  }
+
+  /** The union by column name of `frames` over the columns they all
+    * hold. A column only some segments carry — one a newer writer adds,
+    * like the postings' stored `dl`/`lead` — is left out, and readers
+    * that need it derive it (Retrieval.withDocStats).
+    */
+  private def unionCommon(frames: Seq[DataFrame]): DataFrame = {
+    val common = frames.map(_.columns.toSet).reduce(_ intersect _)
+    frames.map(f => if (f.columns.forall(common)) f else f.select(f.columns.filter(common).map(col).toSeq: _*))
+      .reduce(_.unionByName(_))
   }
 }

@@ -21,7 +21,7 @@ object ArtifactStamp {
     val p = new org.apache.hadoop.fs.Path(dir, fileName)
     val fs = p.getFileSystem(conf)
     val out = fs.create(p, true)
-    try out.write(s"""{"scheme": "$scheme"}""".getBytes("UTF-8")) finally out.close()
+    try out.write(graft.Json.Mapper.writeValueAsBytes(Map("scheme" -> scheme))) finally out.close()
   }
 
   /** The stored scheme string at `dir/fileName`, if the stamp exists
@@ -31,16 +31,14 @@ object ArtifactStamp {
     */
   def read(dir: String, conf: org.apache.hadoop.conf.Configuration,
       fileName: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, fileName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val stored = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") finally in.close()
-      "\"scheme\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(stored).map(_.group(1))
-    }
+    graft.Json.readText(new org.apache.hadoop.fs.Path(dir, fileName), conf).flatMap(scheme)
   }
+
+  /** The `scheme` string of a stamp's body; None when the body is not
+    * a JSON object with a non-empty string `scheme`.
+    */
+  private def scheme(stored: String): Option[String] =
+    graft.Json.parseOption(stored).flatMap(graft.Json.text(_, "scheme")).filter(_.nonEmpty)
 
   /** Fail loudly unless `dir/fileName` exists and names `expected`.
     * An artifact with NO stamp also fails: it predates the stamp (or
@@ -58,10 +56,7 @@ object ArtifactStamp {
         s"$artifactKind at $dir has no $fileName stamp — its scheme is unknown " +
           s"and composing '$expected' work with it could silently produce wrong " +
           "results. Verify its provenance and stamp it with ArtifactStamp.write.")
-    val in = fs.open(p)
-    val stored = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") finally in.close()
-    val parsed = "\"scheme\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(stored).map(_.group(1))
+    val parsed = read(dir, conf, fileName)
     if (!parsed.contains(expected))
       throw new IllegalStateException(
         s"$artifactKind at $dir was built with scheme " +

@@ -530,17 +530,9 @@ object Quality {
     */
   private def readMgHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[(Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir, "_mg_head.json")
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") finally in.close()
-      val gen = "\"gen\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      val lb = "\"last_batch_id\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      for (g <- gen; b <- lb) yield (g, b)
-    }
+    for (j <- graft.sources.AtomicHead.read(stateDir, "_mg_head.json", hconf);
+         g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id"))
+      yield (g, b)
   }
 
   /** Commit the head pointer via create-temp + atomic rename — the
@@ -568,18 +560,10 @@ object Quality {
 
   private def readCmsHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[CmsHead] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir, "_cms_head.json")
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") finally in.close()
-      def f(k: String): Option[Long] =
-        ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-      for (g <- f("gen"); b <- f("last_batch_id"); dd <- f("d"); ww <- f("w"))
-        yield CmsHead(g, b, dd.toInt, ww.toInt)
-    }
+    for (j <- graft.sources.AtomicHead.read(stateDir, "_cms_head.json", hconf);
+         g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id");
+         dd <- graft.Json.long(j, "d"); ww <- graft.Json.long(j, "w"))
+      yield CmsHead(g, b, dd.toInt, ww.toInt)
   }
 
   private def writeCmsHead(stateDir: String,
@@ -1264,17 +1248,9 @@ object Quality {
 
   private def readCdcHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[CdcHead] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir, "_cdc_head.json")
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") finally in.close()
-      def f(k: String): Option[Long] =
-        ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-      for (g <- f("gen"); b <- f("last_batch_id")) yield CdcHead(g, b)
-    }
+    for (j <- graft.sources.AtomicHead.read(stateDir, "_cdc_head.json", hconf);
+         g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id"))
+      yield CdcHead(g, b)
   }
 
   private def writeCdcHead(stateDir: String,

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.{TextFunctions, TopKAggregator}
 
@@ -34,6 +38,31 @@ object Retrieval {
     corpus.select(col(idCol).as("doc"),
         explode(TextFunctions.tokens(col(textCol))).as("term"))
       .groupBy(col("term"), col("doc")).agg(count(lit(1)).as("tf"))
+
+  /** Postings (term, doc, tf) with the per-doc statistics BM25 needs
+    * stored on the rows: `dl` = Σ tf over the doc's rows (its length),
+    * on every row, and `lead` = true on exactly one row per doc, its
+    * smallest term. Then nd = count of `lead` rows and Σ dl = Σ tf,
+    * both one partial aggregate over any union of whole docs. One
+    * window over `doc`; a frame that already holds both columns comes
+    * back as it is. The segmented postings index stores these columns
+    * ([[graft.changesets.Pipeline.publishPostings]]).
+    */
+  def withDocStats(post: DataFrame): DataFrame =
+    if (Set("dl", "lead").subsetOf(post.columns.toSet)) post
+    else {
+      val perDoc = Window.partitionBy(col("doc"))
+      post.withColumn("dl", sum(col("tf")).over(perDoc))
+        .withColumn("lead", col("term") === min(col("term")).over(perDoc))
+    }
+
+  /** [[postings]] with [[withDocStats]] from ONE exchange: the corpus
+    * is hash-partitioned by its id first, which both the (term, doc)
+    * aggregate and the per-doc window already need, so neither adds a
+    * shuffle.
+    */
+  def postingsWithStats(corpus: DataFrame, idCol: String, textCol: String): DataFrame =
+    withDocStats(postings(corpus.repartition(col(idCol)), idCol, textCol))
 
   /** Top-k corpus documents per query document by integer tf-idf.
     * Returns (query_id, rank, doc_id, score); rank 1..k by
@@ -208,10 +237,10 @@ object Retrieval {
     * tf-idf. Per-term magnitudes stay under ~10¹⁷ (idf ≤ N·10⁶,
     * sat < 2.3·10⁶), safely inside BIGINT before the per-term div.
     *
-    * Same scale shape as [[searchTopK]]: postings built once, query
-    * terms broadcast so only matching postings move, doc-length table
-    * joins on the doc key, TopKAggregator tail — k-sized state per
-    * query, no window over all scored docs.
+    * Same scale shape as [[searchTopK]]: postings built once (with
+    * their per-doc statistics, [[withDocStats]]), query terms filter
+    * the scan so only matching postings move, TopKAggregator tail —
+    * k-sized state per query, no window over all scored docs.
     */
   def searchTopKBm25(
       queries: DataFrame,
@@ -222,19 +251,26 @@ object Retrieval {
       k1Ppm: Long = 1200000L,
       bPpm: Long = 750000L): DataFrame =
     bm25OverPostings(queries,
-      postings(corpus, idCol, textCol).localCheckpoint(true),
+      postingsWithStats(corpus, idCol, textCol).localCheckpoint(true),
       idCol, textCol, k, k1Ppm, bPpm)
 
   /** [[searchTopKBm25]] over an ALREADY-BUILT postings table — the
     * probe side of the stored/segmented index
-    * ([[graft.changesets.Pipeline.readPostingsIndex]]): df, dl, and
-    * avgdl derive from the postings themselves, and because all three
-    * are additive over disjoint-doc segments, probing a segment union
-    * is bit-identical to probing a full rebuild (q148 gates it).
-    * `post` feeds three consumers — pass a materialized or
-    * cheap-to-rescan frame: a `readPostingsIndex` version (opened
-    * without a Spark job, its segments one parquet scan), or a
-    * localCheckpoint as [[searchTopKBm25]] does.
+    * ([[graft.changesets.Pipeline.readPostingsIndex]]). Scoring reads
+    * the per-doc statistics stored on the rows (`dl`, `lead`,
+    * [[withDocStats]]); a frame without them — fresh
+    * [[postings]], or an index version that still holds segments
+    * written before they were stored — derives them first, by one
+    * window over the whole frame. df, nd and avgdl come from one
+    * partial aggregate ([[bm25OverQueryTerms]]), all additive over
+    * disjoint-doc segments, so probing a segment union is
+    * bit-identical to probing a full rebuild (q148 gates it). The
+    * statistics are computed when the result frame is built (two
+    * small driver collects); `post` feeds that aggregate and the
+    * scoring scan — pass a materialized or cheap-to-rescan
+    * frame: a `readPostingsIndex` version (opened without a Spark job,
+    * its segments one parquet scan), or a localCheckpoint as
+    * [[searchTopKBm25]] does.
     */
   def bm25OverPostings(
       queries: DataFrame,
@@ -245,15 +281,33 @@ object Retrieval {
       k1Ppm: Long = 1200000L,
       bPpm: Long = 750000L): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val qTerms = queries.select(col(idCol).as("qid"),
-      explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("term"))
-    bm25OverQueryTerms(qTerms, post, k, k1Ppm, bPpm)
+    // a projection, not an explode: over a local query frame it folds
+    // into the local relation, so collecting it runs no job
+    val q = queries.select(col(idCol).as("qid"),
+      array_distinct(TextFunctions.tokens(col(textCol))).as("terms"))
+    bm25OverPairs(q.collect().toSeq.flatMap(r =>
+        Option(r.getSeq[String](1)).toSeq.flatten.map(t => (r.get(0), t))),
+      q.schema("qid"), post, k, k1Ppm, bPpm)
   }
 
   /** [[bm25OverPostings]] with the (qid, term) pairs already derived —
     * for callers that reuse one query-side tokenize across several
     * scoring passes ([[snippets]]). Same plan tail, bit-identical
     * scores.
+    *
+    * Per-probe work never regroups the index. The (qid, term) pairs —
+    * a probe's query batch, small by contract — are collected to the
+    * driver, and ONE partial aggregate over the postings,
+    * keyed by the row's term when it is a query term and null
+    * otherwise, yields every query term's df (its rows), nd (`lead`
+    * rows) and Σ dl (Σ tf). The driver turns those into nd·10⁶ div df
+    * and Σ dl·10⁶ div nd with the same floor-divs the plan used
+    * (overflow still fails), and the hits — the postings of a query
+    * term, a pushed-down `IN` filter — join the per-(qid, term) idf as
+    * a local literal table. df is counted per distinct term before the
+    * hits fan out to query ids, so a term two query rows share (or a
+    * query id that appears twice) counts each posting once, while the
+    * fan-out keeps each query row's own contribution.
     */
   def bm25OverQueryTerms(
       qTerms: DataFrame,
@@ -262,17 +316,41 @@ object Retrieval {
       k1Ppm: Long = 1200000L,
       bPpm: Long = 750000L): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val df = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val dl = post.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("nd"),
-      expr("(sum(dl) * 1000000) div count(1)").as("avgdl_ppm"))
-    val scored = post.join(broadcast(qTerms), Seq("term"))
-      .join(df, Seq("term"))
-      .join(dl, Seq("doc"))
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", expr("(nd * 1000000) div df"))
+    val q = qTerms.select(col("qid"), col("term"))
+    bm25OverPairs(q.collect().toSeq.map(r => (r.get(0), r.getString(1))), q.schema("qid"),
+      post, k, k1Ppm, bPpm)
+  }
+
+  /** The scoring body of [[bm25OverQueryTerms]] over collected
+    * (qid, term) pairs; `qidField` types the qid column.
+    */
+  private def bm25OverPairs(
+      pairs: Seq[(Any, String)],
+      qidField: StructField,
+      post: DataFrame,
+      k: Int,
+      k1Ppm: Long,
+      bPpm: Long): DataFrame = {
+    val p = withDocStats(post)
+    val terms = pairs.map(_._2).distinct
+    val byTerm = p.groupBy(when(col("term").isin(terms: _*), col("term")))
+      .agg(count(lit(1)), count_if(col("lead")), sum(col("tf")))
+      .collect()
+    val nd = byTerm.map(_.getLong(2)).sum
+    val sumDl = byTerm.filterNot(_.isNullAt(3)).map(_.getLong(3)).sum
+    val avgdlPpm = if (nd == 0L) 1L else Math.multiplyExact(sumDl, 1000000L) / nd
+    val idf = byTerm.filterNot(_.isNullAt(0))
+      .map(r => r.getString(0) -> Math.multiplyExact(nd, 1000000L) / r.getLong(1)).toMap
+    val qIdf = p.sparkSession.createDataFrame(
+      pairs.collect { case (qid, t) if idf.contains(t) => Row(qid, t, idf(t)) }.asJava,
+      StructType(Seq(qidField, StructField("term", StringType),
+        StructField("idf", LongType, nullable = false))))
+    // a null doc counts toward df and nd but, as in the doc-keyed join
+    // this replaced, never scores
+    val scored = p.filter(col("term").isin(idf.keys.toSeq: _*) && col("doc").isNotNull)
+      .join(broadcast(qIdf), Seq("term"))
       .withColumn("len_ppm", expr(
-        s"(1000000 - $bPpm) + ($bPpm * ((dl * 1000000000000) div avgdl_ppm)) div 1000000"))
+        s"(1000000 - $bPpm) + ($bPpm * ((dl * 1000000000000) div $avgdlPpm)) div 1000000"))
       .withColumn("sat_ppm", expr(
         s"(tf * ($k1Ppm + 1000000) * 1000000) div (tf * 1000000 + ($k1Ppm * len_ppm) div 1000000)"))
       .groupBy(col("qid"), col("doc"))
@@ -455,8 +533,8 @@ object Retrieval {
     val toks = corpus.select(col(idCol).as("doc_id"),
         TextFunctions.tokens(col(textCol)).as("toks"))
       .localCheckpoint(true)
-    val post = toks.select(col("doc_id").as("doc"), explode(col("toks")).as("term"))
-      .groupBy(col("term"), col("doc")).agg(count(lit(1)).as("tf"))
+    val post = withDocStats(toks.select(col("doc_id").as("doc"), explode(col("toks")).as("term"))
+        .groupBy(col("term"), col("doc")).agg(count(lit(1)).as("tf")))
       .localCheckpoint(true)
     // the ONE query-side tokenize (r22): the BM25 scoring pass and the
     // candidate-term join each re-derived (query_id, term) from the

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 import graft.functions.VectorExpressions
 
@@ -29,10 +32,11 @@ import graft.functions.VectorExpressions
   */
 object Similarity {
 
-  /** Query batches larger than this skip ivfPqProbe's static
-    * partition-pruning collect (the plain cluster equi-join still
-    * restricts the scan at runtime; only the file-level prune is
-    * lost). Bounds the plan-construction driver job.
+  /** Query batches larger than this skip ivfPqProbe's driver-side
+    * [[probeTable]] and compute the probe lists and LUTs inside the
+    * plan (the plain cluster equi-join still restricts the scan at
+    * runtime; only the file-level prune is lost). Bounds the
+    * plan-construction collect.
     */
   val MaxPruneQueryBatch = 10000
 
@@ -1230,9 +1234,14 @@ object Similarity {
 
   /** The probe + ADC scan over a prebuilt index table — the QUERY-TIME
     * half of [[ivfPqScan]]: per query the nprobe nearest lists and the
-    * LUT (broadcast), an equi-join on `cluster`, table-lookup
-    * distances, top-k UDAF tail. Per-query cost: ~nprobe/nlist of the
-    * codes table at numSubspaces lookups per candidate.
+    * LUT, an equi-join on `cluster`, table-lookup distances, top-k UDAF
+    * tail. Per-query cost: ~nprobe/nlist of the codes table at
+    * numSubspaces lookups per candidate.
+    *
+    * A batch of at most [[MaxPruneQueryBatch]] queries probes through
+    * its driver-side [[probeTable]]; a larger one computes lists and
+    * LUT inside the plan ([[lutCol]], [[probesCol]]) and scans every
+    * cluster's files. Both give the same bits.
     */
   def ivfPqProbe(
       queries: DataFrame,
@@ -1243,15 +1252,29 @@ object Similarity {
       coarse: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
       nprobe: Int): DataFrame =
-    ivfPqProbe(queries, index, idCol, vecCol, k, coarse, codebooks, nprobe,
-      probeClusterPrune(queries, vecCol, coarse, nprobe))
+    probeTable(queries, idCol, vecCol, coarse, codebooks, nprobe) match {
+      case Some(t) => ivfPqProbe(index, t, k)
+      case None => inPlanProbe(queries, index, idCol, vecCol, k, coarse, codebooks, nprobe)
+    }
 
-  /** The nprobe-nearest-lists expression shared by the probe plan and
-    * the static prune: per query the lexicographic struct sort
-    * (distance, then cluster id — deterministic), sliced to nprobe.
-    * `dv` as in [[coarseRelCol]].
+  /** [[ivfPqProbe]] with the lists and LUTs computed inside the plan. */
+  private[operators] def inPlanProbe(
+      queries: DataFrame,
+      index: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      coarse: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
+      nprobe: Int): DataFrame =
+    adcScan(index, broadcast(inPlanProbeRows(queries, idCol, vecCol, coarse, codebooks, nprobe)),
+      codebooks.length, k)
+
+  /** The nprobe-nearest-lists expression of the in-plan probe: per
+    * query the lexicographic struct sort (distance, then cluster id —
+    * deterministic), sliced to nprobe. `dv` as in [[coarseRelCol]].
     */
-  private def probesCol(
+  private[operators] def probesCol(
       dv: Column, coarse: Array[Array[Double]], nprobe: Int): Column =
     slice(
       array_sort(zip_with(
@@ -1260,83 +1283,152 @@ object Similarity {
         (d, i) => struct(d.as("d"), i.as("cl")))),
       1, nprobe)
 
-  /** Static partition pruning set for [[ivfPqProbe]] — computed ONCE.
-    *
-    * The equi-join on `cluster` alone does NOT emit a partition
-    * filter, so a probe over a cluster-PARTITIONED published index
-    * (Pipeline.publishAnn's layout) would scan every file. The
-    * probe-cluster set is ≤ nlist rows (distinct cluster ids), and the
-    * query batch is small by the same contract that lets the probe's
-    * query side broadcast — collect it (one tiny job, no LUT
-    * evaluation) and filter the index scan explicitly.
-    * Semantics-preserving (the join already restricts to these
-    * clusters); at fleet scale this is the difference between reading
-    * nprobe partitions and the whole index. BucketingSpec pins the
-    * file-count effect on the REAL probe path.
-    *
-    * The collect runs at plan-CONSTRUCTION time, so its driver job
-    * must stay cheap even when a caller violates the small-batch
-    * contract: ONE bounded head() over the per-query probe lists
-    * (reads partitions only until the cap is hit, never the full
-    * frame) both checks the contract and yields the lists; an
-    * oversized batch falls back to the plain join (None) — correct
-    * either way, just without static pruning (a batch that big can't
-    * broadcast-probe efficiently regardless). The ids come back
-    * sorted, so the same probe lists always give the same `isin`
-    * filter (and the same generated code).
-    *
-    * Split out of ivfPqProbe in r22 so callers probing SEVERAL index
-    * reads with the SAME query batch and frozen model (the q232
-    * asof/compact/live lifecycle) pay the job once, not once per probe.
+  /** The in-plan form of a [[ProbeTable]]'s rows (query_id, cluster,
+    * lut): the fallback for batches too large to collect.
     */
-  def probeClusterPrune(
+  private[operators] def inPlanProbeRows(
       queries: DataFrame,
-      vecCol: String,
-      coarse: Array[Array[Double]],
-      nprobe: Int): Option[Seq[Int]] = {
-    val lists = queries
-      .select(transform(probesCol(asDoubleVec(col(vecCol)), coarse, nprobe), _.getField("cl")))
-      .head(MaxPruneQueryBatch + 1)
-    if (lists.length > MaxPruneQueryBatch) None
-    else Some(lists.flatMap(_.getSeq[Int](0)).distinct.sorted.toSeq)
-  }
-
-  /** [[ivfPqProbe]] with an explicit (pre-computed) prune set — see
-    * [[probeClusterPrune]]. None = no static pruning.
-    */
-  def ivfPqProbe(
-      queries: DataFrame,
-      index: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
       coarse: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
-      nprobe: Int,
-      pruneClusters: Option[Seq[Int]]): DataFrame = {
-    val nlist = coarse.length
-    val numSubspaces = codebooks.length
-    require(nprobe >= 1 && nprobe <= nlist, "nprobe must be in [1, nlist]")
+      nprobe: Int): DataFrame = {
     VectorExpressions.register(queries.sparkSession)
+    // the query vector cast to double ONCE for both expressions
+    queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("qv"))
+      .select(col("query_id"), lutCol(col("qv"), codebooks).as("lut"),
+        explode(probesCol(col("qv"), coarse, nprobe)).as("probe"))
+      .select(col("query_id"), col("probe.cl").as("cluster"), col("lut"))
+  }
 
-    // per query: the nprobe nearest lists + the ADC LUT, both over the
-    // query vector cast to double ONCE
-    val q = broadcast(
-      queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("qv"))
-        .select(col("query_id"), lutCol(col("qv"), codebooks).as("lut"),
-          explode(probesCol(col("qv"), coarse, nprobe)).as("probe"))
-        .select(col("query_id"), col("lut"), col("probe.cl").as("cluster")))
+  /** A query batch's probe state, computed ONCE on the driver and
+    * reusable across every index read probed with the same batch and
+    * frozen model (q232 probes three versions with one table):
+    *
+    *   - `rows` (query_id, cluster, lut) — one row per query and probed
+    *     list, the query's ADC lookup table on each; a local literal
+    *     table that joins the index as a broadcast without a Spark job;
+    *   - `clusters` — the distinct probed lists, sorted, as the index
+    *     scan's static partition filter. The equi-join on `cluster`
+    *     alone emits no partition filter, so a probe over a
+    *     cluster-PARTITIONED index (Pipeline.publishAnn's layout) would
+    *     open every file; BucketingSpec pins the file-count effect;
+    *   - `numSubspaces` — the LUT's outer length.
+    *
+    * Keeping the lists and the LUT out of the plan keeps a 64-entry
+    * expression tree per probe out of Catalyst's analysis, optimization
+    * and codegen; the plan's only per-query input is this table.
+    */
+  final case class ProbeTable(rows: DataFrame, clusters: Seq[Int], numSubspaces: Int)
 
-    val prunedIndex = pruneClusters match {
-      case Some(cs) => index.filter(col("cluster").isin(cs: _*))
-      case None => index
+  /** The [[ProbeTable]] of `queries`, or None for a batch larger than
+    * [[MaxPruneQueryBatch]]. One bounded head() collects the query ids
+    * and double-cast vectors (it reads partitions only until the cap
+    * is hit, never the full frame; a local query frame runs no job);
+    * the driver then evaluates the in-plan expressions' arithmetic
+    * with the same operations in the same order — VecDot's
+    * left-to-right double sums, x·x − 2·x·c + c·c per subspace
+    * centroid, c·c − 2·v·c per coarse centroid, a struct sort with
+    * nulls first and Spark's double order (−0.0 equals 0.0, NaN
+    * largest) — so every LUT entry and list is bit-identical
+    * (IvfPqExprSpec pins it). A length mismatch yields null where
+    * VecDot does; a null or short vector thus gets null distances and
+    * emits no neighbors, on either path. Query ids keep their type.
+    */
+  def probeTable(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      coarse: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
+      nprobe: Int): Option[ProbeTable] = {
+    require(nprobe >= 1 && nprobe <= coarse.length, "nprobe must be in [1, nlist]")
+    val batch = queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)))
+    val qs = batch.head(MaxPruneQueryBatch + 1)
+    if (qs.length > MaxPruneQueryBatch) None
+    else {
+      val rows = qs.toSeq.flatMap { r =>
+        val v = Option(r.getSeq[Double](1)).map(_.toArray)
+        val lut = driverLut(v, codebooks)
+        driverProbes(v, coarse, nprobe).map(cl => Row(r.get(0), cl, lut))
+      }
+      val schema = StructType(Seq(batch.schema.fields(0),
+        StructField("cluster", IntegerType, nullable = false),
+        StructField("lut", ArrayType(ArrayType(DoubleType)), nullable = false)))
+      Some(ProbeTable(queries.sparkSession.createDataFrame(rows.asJava, schema),
+        rows.map(_.getInt(1)).distinct.sorted, codebooks.length))
     }
-    val scored = prunedIndex.join(q, Seq("cluster"))
+  }
+
+  /** VecDot on the driver: the left-to-right sum, None on a length
+    * mismatch.
+    */
+  private def driverDot(a: Array[Double], b: Array[Double]): Option[Double] =
+    if (a.length != b.length) None
+    else {
+      var s = 0.0
+      var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      Some(s)
+    }
+
+  /** [[lutCol]] on the driver; entries are boxed, null where the
+    * expression yields null.
+    */
+  private def driverLut(v: Option[Array[Double]],
+      codebooks: Array[Array[Array[Double]]]): Seq[Seq[java.lang.Double]] = {
+    val subDim = codebooks(0)(0).length
+    codebooks.toSeq.zipWithIndex.map { case (cents, m) =>
+      val sv = v.map(_.slice(m * subDim, m * subDim + subDim))
+      cents.toSeq.map { c =>
+        val d2 = for (x <- sv; ss <- driverDot(x, x); sc <- driverDot(x, c))
+          yield ss - 2.0 * sc + c.map(y => y * y).sum
+        d2.map(java.lang.Double.valueOf).orNull
+      }
+    }
+  }
+
+  /** [[probesCol]]'s cluster ids on the driver. */
+  private def driverProbes(v: Option[Array[Double]], coarse: Array[Array[Double]],
+      nprobe: Int): Seq[Int] = {
+    val rel = coarse.toSeq.map(c =>
+      v.flatMap(driverDot(_, c)).map(vc => c.map(x => x * x).sum - 2.0 * vc))
+    def cmp(a: Option[Double], b: Option[Double]): Int = (a, b) match {
+      case (None, None) => 0
+      case (None, _) => -1
+      case (_, None) => 1
+      case (Some(x), Some(y)) =>
+        if (x == y || (x.isNaN && y.isNaN)) 0
+        else if (x.isNaN) 1
+        else if (y.isNaN || x < y) -1
+        else 1
+    }
+    rel.zipWithIndex
+      .sortWith { case ((da, ia), (db, ib)) => val c = cmp(da, db); c < 0 || (c == 0 && ia < ib) }
+      .take(nprobe).map(_._2)
+  }
+
+  /** [[ivfPqProbe]] with a precomputed [[probeTable]] — the form for
+    * callers probing SEVERAL index reads with the same query batch and
+    * frozen model, which pay the collect once.
+    */
+  def ivfPqProbe(index: DataFrame, table: ProbeTable, k: Int): DataFrame =
+    adcScan(index.filter(col("cluster").isin(table.clusters: _*)),
+      broadcast(table.rows), table.numSubspaces, k)
+
+  /** The equi-join of index rows with per-(query, cluster) LUT rows,
+    * table-lookup distances and the top-k tail. A null distance (a
+    * null or short query vector) is no neighbor: the top-k aggregator
+    * would read it as 0.0.
+    */
+  private def adcScan(index: DataFrame, probes: DataFrame, numSubspaces: Int, k: Int): DataFrame = {
+    val scored = index.join(probes, Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("approx_d2",
         (0 until numSubspaces).map(m =>
           element_at(element_at(col("lut"), m + 1), element_at(col("codes"), m + 1) + 1))
           .reduce(_ + _))
+      .filter(col("approx_d2").isNotNull)
     adcTopK(scored, k)
   }
 }

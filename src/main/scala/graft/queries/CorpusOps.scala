@@ -3027,14 +3027,14 @@ object CorpusOps {
       java.nio.file.Files.exists(java.nio.file.Paths.get(v, "manifest.json")),
       s"q232 precondition: $v must outlive the compaction's retention"))
     val compIdx = graft.changesets.Pipeline.readAnnIndex(s, cur2)
-    // one prune job for ALL three probes — the query batch and frozen
-    // model are shared, so a per-probe recompute is pure waste
-    val prune = Similarity.probeClusterPrune(
-      queries, "embedding", model.coarse, nprobe = 2)
+    // one probe table for ALL three probes — the query batch and
+    // frozen model are shared, so a per-probe recompute is pure waste
+    val table = Similarity.probeTable(
+      queries, "vid", "embedding", model.coarse, model.codebooks, nprobe = 2)
     def probe(idx: DataFrame, stage: String): DataFrame =
-      Similarity.ivfPqProbe(queries, idx, "vid", "embedding", k = 5,
-          coarse = model.coarse, codebooks = model.codebooks, nprobe = 2,
-          pruneClusters = prune)
+      table.fold(Similarity.ivfPqProbe(queries, idx, "vid", "embedding", k = 5,
+          coarse = model.coarse, codebooks = model.codebooks, nprobe = 2))(
+          Similarity.ivfPqProbe(idx, _, k = 5))
         .select(lit(stage).as("stage"), col("query_id"), col("neighbor_id"),
           col("rank"), col("approx_d2"))
     val out = probe(asofIdx, "asof")

@@ -1327,24 +1327,18 @@ object TextAnalytics {
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
-    val pub = java.nio.file.Files.createTempDirectory("q170-postings").toString
-    val baseDir = Pipeline.publishPostings(s, pub, "base",
-      corpus.filter(col("doc_id") < 250), "doc_id", "text")
-    Pipeline.appendPostings(s, pub, "day2",
-      corpus.filter(col("doc_id") >= 250), "doc_id", "text")
-    // the live pointer moved on; the read below is the RETAINED version
-    require(!Pipeline.readCurrentPostings(pub).contains(baseDir),
-      "q170 precondition: the append must have moved the live pointer")
-    val post = Pipeline.readPostingsIndex(s, baseDir)
-    val out = graft.operators.Retrieval
-      .bm25OverPostings(qs, post, "doc_id", "text", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp index
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q170-postings") { pub =>
+      val baseDir = Pipeline.publishPostings(s, pub, "base",
+        corpus.filter(col("doc_id") < 250), "doc_id", "text")
+      Pipeline.appendPostings(s, pub, "day2",
+        corpus.filter(col("doc_id") >= 250), "doc_id", "text")
+      // the live pointer moved on; the read below is the RETAINED version
+      require(!Pipeline.readCurrentPostings(pub).contains(baseDir),
+        "q170 precondition: the append must have moved the live pointer")
+      graft.operators.Retrieval
+        .bm25OverPostings(qs, Pipeline.readPostingsIndex(s, baseDir), "doc_id", "text", k = 5)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(pub))
-    out
   }
 
   private val q170Sql =
@@ -1357,10 +1351,9 @@ object TextAnalytics {
     * deleted, %11 = 5 born, %7 = 0 changed), the delta classes come
     * from Quality.snapshotDiff, and the LIVE postings index is
     * maintained by lifecycle primitives only — deletePostings
-    * (removed + changed), compactPostings (materialize: an updated
-    * doc's OLD postings must physically leave before its new text
-    * lands, or tombstone resurrection would resurrect stale text),
-    * appendPostings (added + changed at v2 text). Gate: probing the
+    * (removed + changed), compactPostings (materialize the deletion:
+    * an updated doc's OLD postings physically leave before its new
+    * text lands), appendPostings (added + changed at v2 text). Gate: probing the
     * maintained index ≡ q143's rebuild-as-of-v2 SQL, bit-for-bit
     * through the BM25 tail — index cost ∝ |delta| (+ the scheduled
     * compact), correctness ≡ full rebuild.
@@ -1377,8 +1370,6 @@ object TextAnalytics {
       .select(col("doc_id"), rev2.as("t"))
     val corpus2 = v2.filter(col("doc_id") % 97 =!= 0)
     val qs = v2.filter(col("doc_id") % 97 === 0) // queries drawn from v2
-    val pub = java.nio.file.Files.createTempDirectory("q186-postings").toString
-    Pipeline.publishPostings(s, pub, "v1", corpus1, "doc_id", "t")
     // the diff feeds TWO lifecycle consumers (the tombstone write and
     // the append's postings build) — materialize the non-unchanged
     // rows once (r22; O(delta) state) or each consumer re-runs the
@@ -1392,19 +1383,16 @@ object TextAnalytics {
       delta.filter(col("status").isin("added", "changed"))
         .select(col("id").as("doc_id")),
       Seq("doc_id"), "left_semi")
-    Pipeline.deletePostings(s, pub, "upd-del", gone, "doc_id")
-    Pipeline.compactPostings(s, pub, "upd-compact")
-    Pipeline.appendPostings(s, pub, "upd-add", fresh, "doc_id", "t")
-    val post = Pipeline.readPostingsIndex(
-      s, Pipeline.readCurrentPostings(pub).get)
-    val out = graft.operators.Retrieval
-      .bm25OverPostings(qs, post, "doc_id", "t", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp index
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    val out = graft.Checkpoints.overTempDir(s, "q186-postings") { pub =>
+      Pipeline.publishPostings(s, pub, "v1", corpus1, "doc_id", "t")
+      Pipeline.deletePostings(s, pub, "upd-del", gone, "doc_id")
+      Pipeline.compactPostings(s, pub, "upd-compact")
+      Pipeline.appendPostings(s, pub, "upd-add", fresh, "doc_id", "t")
+      graft.operators.Retrieval
+        .bm25OverPostings(qs, Pipeline.readPostingsIndex(
+          s, Pipeline.readCurrentPostings(pub).get), "doc_id", "t", k = 5)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(pub))
     graft.Checkpoints.release(delta)
     out
   }
@@ -1431,23 +1419,17 @@ object TextAnalytics {
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
-    val pub = java.nio.file.Files.createTempDirectory("q172-postings").toString
-    Pipeline.publishPostings(s, pub, "base", corpus, "doc_id", "text")
-    Pipeline.deletePostings(s, pub, "takedown1",
-      corpus.filter(col("doc_id") >= 250 && col("doc_id") < 400), "doc_id")
-    Pipeline.deletePostings(s, pub, "takedown2",
-      corpus.filter(col("doc_id") >= 400), "doc_id")
-    val post = Pipeline.readPostingsIndex(
-      s, Pipeline.readCurrentPostings(pub).get)
-    val out = graft.operators.Retrieval
-      .bm25OverPostings(qs, post, "doc_id", "text", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp index
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q172-postings") { pub =>
+      Pipeline.publishPostings(s, pub, "base", corpus, "doc_id", "text")
+      Pipeline.deletePostings(s, pub, "takedown1",
+        corpus.filter(col("doc_id") >= 250 && col("doc_id") < 400), "doc_id")
+      Pipeline.deletePostings(s, pub, "takedown2",
+        corpus.filter(col("doc_id") >= 400), "doc_id")
+      graft.operators.Retrieval
+        .bm25OverPostings(qs, Pipeline.readPostingsIndex(
+          s, Pipeline.readCurrentPostings(pub).get), "doc_id", "text", k = 5)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(pub))
-    out
   }
 
   // --------------------------------------------------------------- q150
@@ -2110,22 +2092,16 @@ object TextAnalytics {
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
-    val pub = java.nio.file.Files.createTempDirectory("q148-postings").toString
-    Pipeline.publishPostings(s, pub, "base",
-      corpus.filter(col("doc_id") < 250), "doc_id", "text")
-    Pipeline.appendPostings(s, pub, "day2",
-      corpus.filter(col("doc_id") >= 250), "doc_id", "text")
-    val post = Pipeline.readPostingsIndex(
-      s, Pipeline.readCurrentPostings(pub).get)
-    val out = graft.operators.Retrieval
-      .bm25OverPostings(qs, post, "doc_id", "text", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp index
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q148-postings") { pub =>
+      Pipeline.publishPostings(s, pub, "base",
+        corpus.filter(col("doc_id") < 250), "doc_id", "text")
+      Pipeline.appendPostings(s, pub, "day2",
+        corpus.filter(col("doc_id") >= 250), "doc_id", "text")
+      graft.operators.Retrieval
+        .bm25OverPostings(qs, Pipeline.readPostingsIndex(
+          s, Pipeline.readCurrentPostings(pub).get), "doc_id", "text", k = 5)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(pub))
-    out
   }
 
   // --------------------------------------------------------------- q158
@@ -2143,25 +2119,19 @@ object TextAnalytics {
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
-    val pub = java.nio.file.Files.createTempDirectory("q158-postings").toString
-    Pipeline.publishPostings(s, pub, "base",
-      corpus.filter(col("doc_id") < 250), "doc_id", "text")
-    Pipeline.appendPostings(s, pub, "day2",
-      corpus.filter(col("doc_id") >= 250), "doc_id", "text")
-    Pipeline.compactPostings(s, pub, "week1")
-    val cur = Pipeline.readCurrentPostings(pub).get
-    assert(Pipeline.readPostingsManifest(cur).size == 1,
-      "compaction must leave a single-segment manifest")
-    val out = graft.operators.Retrieval
-      .bm25OverPostings(qs, Pipeline.readPostingsIndex(s, cur),
-        "doc_id", "text", k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp index
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q158-postings") { pub =>
+      Pipeline.publishPostings(s, pub, "base",
+        corpus.filter(col("doc_id") < 250), "doc_id", "text")
+      Pipeline.appendPostings(s, pub, "day2",
+        corpus.filter(col("doc_id") >= 250), "doc_id", "text")
+      Pipeline.compactPostings(s, pub, "week1")
+      val cur = Pipeline.readCurrentPostings(pub).get
+      assert(Pipeline.readPostingsManifest(cur).size == 1,
+        "compaction must leave a single-segment manifest")
+      graft.operators.Retrieval
+        .bm25OverPostings(qs, Pipeline.readPostingsIndex(s, cur), "doc_id", "text", k = 5)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(pub))
-    out
   }
 
   // --------------------------------------------------------------- q159

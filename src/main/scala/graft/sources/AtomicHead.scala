@@ -35,4 +35,11 @@ object AtomicHead {
     try out.write(json.getBytes("UTF-8")) finally out.close()
     fc.rename(tmp, fin, Options.Rename.OVERWRITE)
   }
+
+  /** The committed head `stateDir/name` as parsed JSON — None when there
+    * is none, or when its body is not a JSON object.
+    */
+  def read(stateDir: String, name: String, hconf: Configuration)
+      : Option[com.fasterxml.jackson.databind.JsonNode] =
+    graft.Json.readText(new Path(stateDir, name), hconf).flatMap(graft.Json.parseOption)
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -282,21 +284,16 @@ object Export {
       throw new IllegalStateException(
         s"no manifest.json in $outDir — export never committed (the " +
           "manifest lands LAST; data files without one are an aborted write)")
-    val s = java.nio.file.Files.readString(p)
+    val j = graft.Json.read(p)
     def f(k: String): Long =
-      ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(s)
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(s"manifest missing $k"))
-    val entry = ("\\{\"shard\":\\s*(\\d+),\\s*\"rows\":\\s*(\\d+)" +
-      "(?:,\\s*\"checksum\":\\s*(-?\\d+))?\\}").r
-    val matches = entry.findAllMatchIn(s).toSeq
-    val shards = matches.map(m => (m.group(1).toInt, m.group(2).toLong))
-    val checksums = matches.flatMap(m =>
-      Option(m.group(3)).map(c => m.group(1).toInt -> c.toLong)).toMap
-    val lastBatch = ("\"last_batch_id\"\\s*:\\s*(-?\\d+)").r
-      .findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
+      graft.Json.long(j, k).getOrElse(throw new IllegalStateException(s"manifest missing $k"))
+    val entries = j.path("shards").elements.asScala.toSeq
+      .filter(e => graft.Json.long(e, "shard").isDefined && graft.Json.long(e, "rows").isDefined)
+    val shards = entries.map(e => (e.get("shard").asInt, e.get("rows").asLong))
+    val checksums = entries.flatMap(e =>
+      graft.Json.long(e, "checksum").map(e.get("shard").asInt -> _)).toMap
     ExportManifest(f("seed"), f("rows_per_shard"), f("n_shards").toInt,
-      f("total_rows"), shards, lastBatch, checksums)
+      f("total_rows"), shards, graft.Json.long(j, "last_batch_id").getOrElse(-1L), checksums)
   }
 
   /** CONSUMER-side verification of a sharded export — the read-back

@@ -167,17 +167,9 @@ object Robots {
 
   private def readRcHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[RcHead] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir, "_rc_head.json")
-    val fs = p.getFileSystem(hconf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") finally in.close()
-      def f(k: String): Option[Long] =
-        ("\"" + k + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-      for (g <- f("gen"); b <- f("last_batch_id")) yield RcHead(g, b)
-    }
+    for (j <- AtomicHead.read(stateDir, "_rc_head.json", hconf);
+         g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id"))
+      yield RcHead(g, b)
   }
 
   private def writeRcHead(stateDir: String,

@@ -287,8 +287,8 @@ class AnnAppendSpec extends SparkSpec {
     Pipeline.publishAnn(spark, dir, "day1", day1, coarse, codebooks)
     Pipeline.deleteAnn(spark, dir, "takedown", emb(20 until 30), "vec_id")
     // re-append half the deleted ids: the dup check reads the filtered
-    // index, so without the resurrection rule the stale tombstone
-    // would silently hide the appended rows
+    // index, and the takedown's tombstone is scoped to the segment it
+    // deleted from, so the appended rows show
     Pipeline.appendAnn(spark, dir, "readd", emb(20 until 25), "vec_id", "embedding")
     val afterReadd = Pipeline.readCurrentAnn(dir).get
     assert(indexRows(Pipeline.readAnnIndex(spark, afterReadd)) === indexRows(
