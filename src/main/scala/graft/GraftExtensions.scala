@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{SortedIntersectCount, StripVecDotCasts, VecDot, VectorExpressions}
+import graft.functions.{StripVecDotCasts, VectorExpressions}
 
 /** SparkSessionExtensions entry point: lets ANY session pick up the
   * native graft expressions declaratively —
@@ -22,49 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => StripVecDotCasts)
     // native sorted-merge as-of join (graft.plans.AsOfJoinExec)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier(VectorExpressions.fnName),
-      new ExpressionInfo(classOf[VecDot].getName, VectorExpressions.fnName),
-      (children: Seq[Expression]) => VecDot(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorExpressions.isectFnName),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, VectorExpressions.isectFnName),
-      (children: Seq[Expression]) => SortedIntersectCount(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorExpressions.ngramsFnName),
-      new ExpressionInfo(classOf[graft.functions.ExplodeNGrams].getName, VectorExpressions.ngramsFnName),
-      (children: Seq[Expression]) => graft.functions.ExplodeNGrams(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorExpressions.triFnName),
-      new ExpressionInfo(classOf[graft.functions.ExplodeTriContexts].getName, VectorExpressions.triFnName),
-      (children: Seq[Expression]) => graft.functions.ExplodeTriContexts(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.PolyHash.fnName),
-      new ExpressionInfo(classOf[graft.functions.PolyHash].getName, graft.functions.PolyHash.fnName),
-      (children: Seq[Expression]) => graft.functions.PolyHash(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.NfcNormalize.fnName),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, graft.functions.NfcNormalize.fnName),
-      (children: Seq[Expression]) => graft.functions.NfcNormalize(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.Tokens.fnName),
-      new ExpressionInfo(classOf[graft.functions.Tokens].getName, graft.functions.Tokens.fnName),
-      (children: Seq[Expression]) => graft.functions.Tokens(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.Hash60Md5.fnName),
-      new ExpressionInfo(classOf[graft.functions.Hash60Md5].getName, graft.functions.Hash60Md5.fnName),
-      (children: Seq[Expression]) => graft.functions.Hash60Md5(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.Md5Bin.fnName),
-      new ExpressionInfo(classOf[graft.functions.Md5Bin].getName, graft.functions.Md5Bin.fnName),
-      (children: Seq[Expression]) => graft.functions.Md5Bin(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.GramHashes.fnName),
-      new ExpressionInfo(classOf[graft.functions.GramHashes].getName, graft.functions.GramHashes.fnName),
-      (children: Seq[Expression]) => graft.functions.GramHashes(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.StopwordHits.fnName),
-      new ExpressionInfo(classOf[graft.functions.StopwordHits].getName, graft.functions.StopwordHits.fnName),
-      (children: Seq[Expression]) => graft.functions.StopwordHits(children.head, children(1))))
+    VectorExpressions.functions.foreach(ext.injectFunction)
   }
 }

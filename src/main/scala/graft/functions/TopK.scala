@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions.udaf
   * At 100 TB this is the difference between shuffling every row to a
   * per-group sort (window plan) and shuffling k rows per group after
   * map-side combine. Ordering: value DESC, then id ASC — a total order,
-  * so results are deterministic and SQL-mirrorable.
+  * so results are deterministic and SQL-mirrorable. A null value is no
+  * candidate: its row is skipped, as SQL aggregates skip nulls.
   */
 class TopKAggregator(k: Int)
     extends Aggregator[TopKAggregator.In, List[(Double, Long)], TopKAggregator.Out] {
@@ -27,7 +28,7 @@ class TopKAggregator(k: Int)
 
   override def zero: List[(Double, Long)] = Nil
   override def reduce(buf: List[(Double, Long)], in: In): List[(Double, Long)] =
-    insert(buf, (in.value, in.id))
+    in.value.fold(buf)(v => insert(buf, (v, in.id)))
   override def merge(a: List[(Double, Long)], b: List[(Double, Long)]): List[(Double, Long)] =
     b.foldLeft(a)(insert)
   override def finish(buf: List[(Double, Long)]): Out =
@@ -38,7 +39,7 @@ class TopKAggregator(k: Int)
 }
 
 object TopKAggregator {
-  final case class In(value: Double, id: Long)
+  final case class In(value: Option[Double], id: Long)
   /** Parallel arrays (not array<struct>) so the SQL oracle can mirror
     * the output with plain list aggregates.
     */
@@ -50,7 +51,7 @@ object TopKAggregator {
     (value, id) => fn(value, id)
   }
 
-  final case class InStr(value: Double, id: String)
+  final case class InStr(value: Option[Double], id: String)
   final case class OutStr(top_values: Seq[Double], top_ids: Seq[String])
 
   /** String-id variant (value DESC, id ASC). The id tiebreak is
@@ -80,7 +81,7 @@ class TopKStrAggregator(k: Int)
 
   override def zero: List[(Double, String)] = Nil
   override def reduce(buf: List[(Double, String)], in: InStr): List[(Double, String)] =
-    insert(buf, (in.value, in.id))
+    in.value.fold(buf)(v => insert(buf, (v, in.id)))
   override def merge(a: List[(Double, String)], b: List[(Double, String)]): List[(Double, String)] =
     b.foldLeft(a)(insert)
   override def finish(buf: List[(Double, String)]): OutStr =

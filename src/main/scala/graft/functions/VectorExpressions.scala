@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.{ClassTag, classTag}
+
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -112,6 +115,11 @@ case class VecDot(left: Expression, right: Expression)
   * hash-set allocation. Callers must pre-sort with `array_sort`
   * (cheap, once per row — not per pair); `array_sort`'s string order
   * IS `UTF8String.compareTo`, the compare used here.
+  *
+  * Precondition: both arrays are in `array_sort` order — ascending,
+  * nulls LAST. `sort_array` puts nulls FIRST, so a nullable array
+  * sorted with it gives a wrong count here; sort with `array_sort`,
+  * or filter the nulls out first.
   *
   * The string form (r21) serves the shingle-Jaccard verifies, where
   * the set elements must stay EXACT strings (the oracles intersect
@@ -281,57 +289,44 @@ object VectorExpressions {
   val ngramsFnName = "explode_ngrams"
   val triFnName = "explode_tri_contexts"
 
-  private val info = new ExpressionInfo(classOf[VecDot].getName, fnName)
-  private val isectInfo =
-    new ExpressionInfo(classOf[SortedIntersectCount].getName, isectFnName)
-  private val ngramsInfo =
-    new ExpressionInfo(classOf[ExplodeNGrams].getName, ngramsFnName)
-  private val triInfo =
-    new ExpressionInfo(classOf[ExplodeTriContexts].getName, triFnName)
+  /** The native functions, one (name, arity, builder) entry each, read
+    * by both [[register]] and [[graft.GraftExtensions]]. A call with
+    * the wrong number of arguments fails analysis.
+    */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    native(fnName, 2)(c => VecDot(c(0), c(1))),
+    native(isectFnName, 2)(c => SortedIntersectCount(c(0), c(1))),
+    native(ngramsFnName, 2)(c => ExplodeNGrams(c(0), c(1))),
+    native(triFnName, 1)(c => ExplodeTriContexts(c(0))),
+    native(PolyHash.fnName, 1)(c => PolyHash(c(0))),
+    native(NfcNormalize.fnName, 1)(c => NfcNormalize(c(0))),
+    native(Tokens.fnName, 1)(c => Tokens(c(0))),
+    native(Hash60Md5.fnName, 1)(c => Hash60Md5(c(0))),
+    native(Md5Bin.fnName, 1)(c => Md5Bin(c(0))),
+    native(GramHashes.fnName, 1)(c => GramHashes(c(0))),
+    native(StopwordHits.fnName, 2)(c => StopwordHits(c(0), c(1))))
+
+  private def native[E <: Expression: ClassTag](name: String, arity: Int)(
+      build: Seq[Expression] => E): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(classTag[E].runtimeClass.getName, name),
+      (children: Seq[Expression]) => {
+        if (children.length != arity)
+          throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+            "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+            "actualNum" -> children.length.toString,
+            "docroot" -> "https://spark.apache.org/docs/latest"))
+        build(children)
+      })
 
   /** Idempotent session registration; callers that only have a
-    * DataFrame can self-register through its sparkSession.
+    * DataFrame can self-register through its sparkSession. Names the
+    * session already has (from [[graft.GraftExtensions]] or an earlier
+    * call) are left as they are.
     */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName), info,
-      (children: Seq[Expression]) => VecDot(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(isectFnName), isectInfo,
-      (children: Seq[Expression]) => SortedIntersectCount(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(ngramsFnName), ngramsInfo,
-      (children: Seq[Expression]) => ExplodeNGrams(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(triFnName), triInfo,
-      (children: Seq[Expression]) => ExplodeTriContexts(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(PolyHash.fnName),
-      new ExpressionInfo(classOf[PolyHash].getName, PolyHash.fnName),
-      (children: Seq[Expression]) => PolyHash(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(NfcNormalize.fnName),
-      new ExpressionInfo(classOf[NfcNormalize].getName, NfcNormalize.fnName),
-      (children: Seq[Expression]) => NfcNormalize(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Tokens.fnName),
-      new ExpressionInfo(classOf[Tokens].getName, Tokens.fnName),
-      (children: Seq[Expression]) => Tokens(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Hash60Md5.fnName),
-      new ExpressionInfo(classOf[Hash60Md5].getName, Hash60Md5.fnName),
-      (children: Seq[Expression]) => Hash60Md5(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Md5Bin.fnName),
-      new ExpressionInfo(classOf[Md5Bin].getName, Md5Bin.fnName),
-      (children: Seq[Expression]) => Md5Bin(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(GramHashes.fnName),
-      new ExpressionInfo(classOf[GramHashes].getName, GramHashes.fnName),
-      (children: Seq[Expression]) => GramHashes(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(StopwordHits.fnName),
-      new ExpressionInfo(classOf[StopwordHits].getName, StopwordHits.fnName),
-      (children: Seq[Expression]) => StopwordHits(children.head, children(1)))
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 }

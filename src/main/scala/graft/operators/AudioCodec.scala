@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** Real audio decoding for the multimodal column path — a
   * dependency-free WAV (RIFF) parser, the audio sibling of
   * [[ImageCodec]]:
@@ -57,17 +59,12 @@ object AudioCodec {
   private def dataChunk(
       d: Array[Byte]): Either[String, (Int, Long, Int, Int, Int, Int)] = {
     if (!sniff(d)) return Left("wav: not a RIFF/WAVE payload")
-    def u16(o: Int): Int = (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) | ((d(o + 2) & 0xffL) << 16) |
-        ((d(o + 3) & 0xffL) << 24)
-
     var pos = 12
     var fmt: Option[(Int, Int, Int, Int)] = None // format, channels, rate, bits
     var result: Option[Either[String, (Int, Long, Int, Int, Int, Int)]] = None
     while (result.isEmpty && pos + 8 <= d.length) {
       val id = new String(d, pos, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val size = u32(pos + 4)
+      val size = u32le(d, pos + 4)
       val body = pos + 8
       if (body + size > d.length)
         result = Some(Left(s"wav: truncated '$id' chunk — need $size bytes, " +
@@ -75,7 +72,7 @@ object AudioCodec {
       else id match {
         case "fmt " =>
           if (size < 16) result = Some(Left("wav: fmt chunk shorter than 16 bytes"))
-          else fmt = Some((u16(body), u16(body + 2), u32(body + 4).toInt, u16(body + 14)))
+          else fmt = Some((u16le(d, body), u16le(d, body + 2), u32le(d, body + 4).toInt, u16le(d, body + 14)))
         case "data" =>
           fmt match {
             case None => result = Some(Left("wav: data chunk before fmt"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes.Malformed
+
 /** CCITT Group 3 (ITU-T T.4) bilevel codecs — the OLDER fax
   * compressions archival scans carry next to [[CcittG4]]'s T.6
   * (TIFF Compressions 2 and 3; G4 landed in r19, these close the fax
@@ -21,12 +23,12 @@ package graft.operators
   *    RTC (six EOLs) is tolerated as trailing garbage — decoding
   *    stops after exactly `rows` lines, the TIFF strip contract.
   *
-  * Malformed input throws [[CcittG4.Malformed]] (same channel — the
+  * Malformed input throws [[graft.bytes.Bytes.Malformed]] (same channel — the
   * TIFF integration maps both to its error Left).
   */
 object CcittG3 {
 
-  import CcittG4.{Malformed, Reader, Writer}
+  import CcittG4.{Reader, Writer}
 
   /** Decode `rows` MH lines (Compression 2; PDF's CCITTFaxDecode
     * K = 0 uses the same 1D stream with `byteAlign` following its

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes.Malformed
+
 /** CCITT Group 4 (ITU-T T.6) two-dimensional bilevel codec — the fax
   * compression archival document scans actually use (TIFF
   * Compression 4), dependency-free like its codec siblings. Pure 2D
@@ -17,12 +19,10 @@ package graft.operators
   * is pinned at class-init (prefix-freeness + completeness) and by
   * the exhaustive per-run round-trip spec.
   *
-  * Malformed input throws the named [[CcittG4.Malformed]], which the
-  * TIFF integration maps to its error channel.
+  * Malformed input throws the shared [[graft.bytes.Bytes.Malformed]],
+  * which the TIFF integration maps to its error channel.
   */
 object CcittG4 {
-
-  final case class Malformed(msg: String) extends RuntimeException(msg)
 
   // ------------------------------------------------------------ tables
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes
+
 /** EXIF GPS surfacing + redaction — the media-layer PII pass
   * (`Quality.piiRedact` covers text; training pipelines must also
   * scrub location metadata from images before the bytes ship). Walks
@@ -37,20 +39,12 @@ object ExifGps {
       latArcsec: Long,
       lonArcsec: Long)
 
-  /** Bounds-checked TIFF view over an APP1 payload. */
-  private final class Tiff(d: Array[Byte], val t: Int, end: Int, little: Boolean) {
-    def u16(o: Int): Int =
-      if (o < 0 || o + 2 > end) -1
-      else if (little) (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-      else ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o < 0 || o + 4 > end) -1L
-      else if (little)
-        (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-          ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-      else
-        ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
-          ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
+  /** Bounds-checked TIFF view over an APP1 payload (also JPEG's
+    * orientation walk): an out-of-range read is -1, never a throw.
+    */
+  private[operators] final class Tiff(d: Array[Byte], val t: Int, end: Int, little: Boolean) {
+    def u16(o: Int): Int = if (o < 0 || o + 2 > end) -1 else Bytes.u16(d, o, little)
+    def u32(o: Int): Long = if (o < 0 || o + 4 > end) -1L else Bytes.u32(d, o, little)
     def byteAt(o: Int): Int = if (o < 0 || o >= end) -1 else d(o) & 0xff
     /** entry offset of `tag` in the IFD at `ifd`, or -1 */
     def find(ifd: Int, tag: Int): Int = {
@@ -85,7 +79,7 @@ object ExifGps {
     while (pos + 4 <= d.length && (d(pos) & 0xff) == 0xff) {
       val marker = d(pos + 1) & 0xff
       if (marker == 0xd9 || marker == 0xda) return None // EOI / SOS: no APP1
-      val len = ((d(pos + 2) & 0xff) << 8) | (d(pos + 3) & 0xff)
+      val len = Bytes.u16be(d, pos + 2)
       if (len < 2 || pos + 2 + len > d.length) return None
       if (marker == 0xe1) {
         val b = pos + 4

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** FLAC decode — the lossless audio sibling of [[ImageCodec]]'s PNG
   * path, dependency-free: after WAV/PCM this is the audio format a
   * crawl actually carries losslessly (podcast masters, archival
@@ -44,8 +46,6 @@ object FlacCodec {
 
   def sniff(d: Array[Byte]): Boolean =
     d.length >= 4 && d(0) == 'f' && d(1) == 'L' && d(2) == 'a' && d(3) == 'C'
-
-  private final case class Abort(msg: String) extends RuntimeException(msg)
 
   // ---------------------------------------------------------- bit I/O
 
@@ -145,12 +145,7 @@ object FlacCodec {
 
   def decode(d: Array[Byte]): Either[String, AudioStats] = {
     if (!sniff(d)) return Left("flac: missing fLaC marker")
-    try decodeInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("flac: truncated payload")
-      case _: NegativeArraySizeException => Left("flac: negative size field")
-    }
+    guarded("flac")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, AudioStats] = {
@@ -212,14 +207,14 @@ object FlacCodec {
       d: Array[Byte], frameStart: Int, siRate: Int, siChannels: Int, siBps: Int,
       fold: Int => Unit): (Int, Int) = {
     val br = new BitReader(d, frameStart)
-    if (br.readBits(14) != 0x3ffe) throw Abort("flac: lost frame sync")
-    if (br.readBits(1) != 0) throw Abort("flac: reserved header bit set")
+    if (br.readBits(14) != 0x3ffe) throw Malformed("flac: lost frame sync")
+    if (br.readBits(1) != 0) throw Malformed("flac: reserved header bit set")
     br.readBits(1) // blocking strategy: only changes the number's meaning
     val bsCode = br.readBits(4)
     val srCode = br.readBits(4)
     val chanAsg = br.readBits(4)
     val ssCode = br.readBits(3)
-    if (br.readBits(1) != 0) throw Abort("flac: reserved header bit set")
+    if (br.readBits(1) != 0) throw Malformed("flac: reserved header bit set")
     // UTF-8-coded frame/sample number: walk by the leading byte
     val lead = br.readBits(8)
     val extra =
@@ -230,14 +225,14 @@ object FlacCodec {
       else if ((lead & 0xfc) == 0xf8) 4
       else if ((lead & 0xfe) == 0xfc) 5
       else if (lead == 0xfe) 6
-      else throw Abort("flac: bad UTF-8 coded number")
+      else throw Malformed("flac: bad UTF-8 coded number")
     var i = 0
     while (i < extra) {
-      if ((br.readBits(8) & 0xc0) != 0x80) throw Abort("flac: bad UTF-8 continuation")
+      if ((br.readBits(8) & 0xc0) != 0x80) throw Malformed("flac: bad UTF-8 continuation")
       i += 1
     }
     val blockSize = bsCode match {
-      case 0 => throw Abort("flac: reserved block-size code 0")
+      case 0 => throw Malformed("flac: reserved block-size code 0")
       case 1 => 192
       case c if c >= 2 && c <= 5 => 576 << (c - 2)
       case 6 => br.readBits(8) + 1
@@ -260,9 +255,9 @@ object FlacCodec {
       case 12 => br.readBits(8) * 1000
       case 13 => br.readBits(16)
       case 14 => br.readBits(16) * 10
-      case _ => throw Abort("flac: invalid sample-rate code 15")
+      case _ => throw Malformed("flac: invalid sample-rate code 15")
     }
-    if (rate <= 0) throw Abort("flac: bad frame sample rate")
+    if (rate <= 0) throw Malformed("flac: bad frame sample rate")
     val bps = ssCode match {
       case 0 => siBps
       case 1 => 8
@@ -270,15 +265,15 @@ object FlacCodec {
       case 4 => 16
       case 5 => 20
       case 6 => 24
-      case c => throw Abort(s"flac: sample-size code $c out of scope")
+      case c => throw Malformed(s"flac: sample-size code $c out of scope")
     }
     val channels = if (chanAsg <= 7) chanAsg + 1 else 2
-    if (chanAsg > 10) throw Abort(s"flac: reserved channel assignment $chanAsg")
+    if (chanAsg > 10) throw Malformed(s"flac: reserved channel assignment $chanAsg")
     if (channels != siChannels)
-      throw Abort("flac: frame channel count disagrees with STREAMINFO")
+      throw Malformed("flac: frame channel count disagrees with STREAMINFO")
     val headerEnd = br.bytePos
     val storedCrc8 = br.readBits(8)
-    if (crc8(d, frameStart, headerEnd) != storedCrc8) throw Abort("flac: frame header CRC-8 mismatch")
+    if (crc8(d, frameStart, headerEnd) != storedCrc8) throw Malformed("flac: frame header CRC-8 mismatch")
 
     val chans = Array.ofDim[Int](channels, blockSize)
     var ch = 0
@@ -294,8 +289,8 @@ object FlacCodec {
     }
     br.align()
     val frameEnd = br.bytePos
-    val storedCrc16 = ((d(frameEnd) & 0xff) << 8) | (d(frameEnd + 1) & 0xff)
-    if (crc16(d, frameStart, frameEnd) != storedCrc16) throw Abort("flac: frame CRC-16 mismatch")
+    val storedCrc16 = u16be(d, frameEnd)
+    if (crc16(d, frameStart, frameEnd) != storedCrc16) throw Malformed("flac: frame CRC-16 mismatch")
 
     // stereo reconstruction, then fold
     chanAsg match {
@@ -325,11 +320,11 @@ object FlacCodec {
   }
 
   private def decodeSubframe(br: BitReader, n: Int, bps: Int, out: Array[Int]): Unit = {
-    if (br.readBits(1) != 0) throw Abort("flac: subframe padding bit set")
+    if (br.readBits(1) != 0) throw Malformed("flac: subframe padding bit set")
     val t = br.readBits(6)
     val wasted = if (br.readBits(1) == 1) 1 + br.readUnary() else 0
     val eb = bps - wasted
-    if (eb <= 0) throw Abort("flac: wasted bits exhaust the sample size")
+    if (eb <= 0) throw Malformed("flac: wasted bits exhaust the sample size")
     t match {
       case 0 =>
         val v = br.readSigned(eb)
@@ -339,7 +334,7 @@ object FlacCodec {
         while (i < n) { out(i) = br.readSigned(eb) << wasted; i += 1 }
       case o if o >= 8 && o <= 12 =>
         val order = o - 8
-        if (order > n) throw Abort("flac: fixed order exceeds block size")
+        if (order > n) throw Malformed("flac: fixed order exceeds block size")
         var i = 0
         while (i < order) { out(i) = br.readSigned(eb); i += 1 }
         readResiduals(br, n, order, out)
@@ -358,13 +353,13 @@ object FlacCodec {
         if (wasted > 0) { i = 0; while (i < n) { out(i) <<= wasted; i += 1 } }
       case o if o >= 32 =>
         val order = o - 31
-        if (order > n) throw Abort("flac: LPC order exceeds block size")
+        if (order > n) throw Malformed("flac: LPC order exceeds block size")
         var i = 0
         while (i < order) { out(i) = br.readSigned(eb); i += 1 }
         val precision = br.readBits(4)
-        if (precision == 15) throw Abort("flac: invalid LPC precision code")
+        if (precision == 15) throw Malformed("flac: invalid LPC precision code")
         val shift = br.readSigned(5)
-        if (shift < 0) throw Abort("flac: negative LPC shift")
+        if (shift < 0) throw Malformed("flac: negative LPC shift")
         val coefs = new Array[Int](order)
         i = 0
         while (i < order) { coefs(i) = br.readSigned(precision + 1); i += 1 }
@@ -378,7 +373,7 @@ object FlacCodec {
           i += 1
         }
         if (wasted > 0) { i = 0; while (i < n) { out(i) <<= wasted; i += 1 } }
-      case o => throw Abort(s"flac: reserved subframe type $o")
+      case o => throw Malformed(s"flac: reserved subframe type $o")
     }
   }
 
@@ -387,18 +382,18 @@ object FlacCodec {
     */
   private def readResiduals(br: BitReader, n: Int, order: Int, out: Array[Int]): Unit = {
     val method = br.readBits(2)
-    if (method > 1) throw Abort(s"flac: reserved residual method $method")
+    if (method > 1) throw Malformed(s"flac: reserved residual method $method")
     val pBits = if (method == 0) 4 else 5
     val escape = (1 << pBits) - 1
     val partOrder = br.readBits(4)
     val parts = 1 << partOrder
-    if (n % parts != 0) throw Abort("flac: partition count does not divide block size")
+    if (n % parts != 0) throw Malformed("flac: partition count does not divide block size")
     val perPart = n / parts
     var idx = order
     var p = 0
     while (p < parts) {
       val count = if (p == 0) perPart - order else perPart
-      if (count < 0) throw Abort("flac: predictor order exceeds first partition")
+      if (count < 0) throw Malformed("flac: predictor order exceeds first partition")
       val param = br.readBits(pBits)
       if (param == escape) {
         val raw = br.readBits(5)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** GIF (87a/89a) decode — with PNG, JPEG and BMP this completes the
   * image formats a web crawl carries in volume, dependency-free on
   * the same precedent as the siblings.
@@ -39,24 +41,16 @@ object GifCodec {
     d.length >= 6 && d(0) == 'G' && d(1) == 'I' && d(2) == 'F' &&
       d(3) == '8' && (d(4) == '7' || d(4) == '9') && d(5) == 'a'
 
-  private final case class GifAbort(msg: String) extends RuntimeException(msg)
-
   /** Decode the first frame to (summary stats, aHash grid grays). */
   def decode(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
     if (!sniff(d)) return Left("gif: missing GIF87a/GIF89a signature")
-    try decodeInner(d)
-    catch {
-      case GifAbort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("gif: truncated payload")
-    }
+    guarded("gif")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
-    def u16(o: Int): Int = (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-
     var pos = 6
-    val screenW = u16(pos)
-    val screenH = u16(pos + 2)
+    val screenW = u16le(d, pos)
+    val screenH = u16le(d, pos + 2)
     val packed = d(pos + 4) & 0xff
     pos += 7
     var gct: Array[Byte] = null
@@ -84,8 +78,8 @@ object GifCodec {
           }
           pos += 1 // block terminator
         case 0x2c => // image descriptor
-          val w = u16(pos + 4)
-          val h = u16(pos + 6)
+          val w = u16le(d, pos + 4)
+          val h = u16le(d, pos + 6)
           val ipacked = d(pos + 8) & 0xff
           pos += 9
           if (w <= 0 || h <= 0) return Left(s"gif: bad frame dimensions ${w}x$h")
@@ -155,7 +149,7 @@ object GifCodec {
       var i = 0
       while (i < w) {
         val idx = row(i)
-        if (idx >= paletteN) throw GifAbort(
+        if (idx >= paletteN) throw Malformed(
           s"gif: palette index $idx out of range ($paletteN entries)")
         var ch = 0
         while (ch < 3) {
@@ -214,7 +208,7 @@ object GifCodec {
       // refill bits from the sub-block stream
       while (nbits < width && !done) {
         if (blockLeft == 0) {
-          if (pos >= d.length) throw GifAbort("gif: truncated LZW data")
+          if (pos >= d.length) throw Malformed("gif: truncated LZW data")
           blockLeft = d(pos) & 0xff
           pos += 1
           if (blockLeft == 0) { // block terminator before EOI: tolerate
@@ -222,7 +216,7 @@ object GifCodec {
           }
         }
         if (!done) {
-          if (pos >= d.length) throw GifAbort("gif: truncated LZW sub-block")
+          if (pos >= d.length) throw Malformed("gif: truncated LZW sub-block")
           acc |= (d(pos) & 0xff).toLong << nbits // LSB-first
           nbits += 8
           pos += 1
@@ -241,7 +235,7 @@ object GifCodec {
         else {
           val first =
             if (code < nextCode) {
-              if (code >= clear && code < eoi + 1) throw GifAbort("gif: invalid code")
+              if (code >= clear && code < eoi + 1) throw Malformed("gif: invalid code")
               emitCode(code)
             } else if (code == nextCode && prev >= 0) {
               // KwKwK: prev + first(prev)
@@ -250,7 +244,7 @@ object GifCodec {
               prefix(nextCode) = prev // provisional: completed below
               tail(nextCode) = c.toByte
               emitCode(code)
-            } else throw GifAbort(s"gif: code $code beyond table")
+            } else throw Malformed(s"gif: code $code beyond table")
           if (prev >= 0 && nextCode < 4096) {
             prefix(nextCode) = prev
             tail(nextCode) = first.toByte
@@ -301,15 +295,15 @@ object GifCodec {
 
     val out = new java.io.ByteArrayOutputStream(indices.length / 2 + 64)
     def b(v: Int): Unit = out.write(v & 0xff)
-    def le16(v: Int): Unit = { b(v); b(v >> 8) }
+    def put16(v: Int): Unit = { b(v); b(v >> 8) }
     out.write("GIF89a".getBytes("US-ASCII"))
-    le16(w); le16(h)
+    put16(w); put16(h)
     b(0x80 | ((bits - 1) & 7)) // GCT present, size 2^bits
     b(0); b(0)
     for (i <- 0 until 3 * ctN) b(if (i < palette.length) palette(i) & 0xff else 0)
     // image descriptor
     b(0x2c)
-    le16(0); le16(0); le16(w); le16(h)
+    put16(0); put16(0); put16(w); put16(h)
     b(if (interlaced) 0x40 else 0x00)
     b(minCode)
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** Real image decoding for the multimodal column path — a
   * dependency-free parser for three public formats:
   *
@@ -85,7 +87,7 @@ object ImageCodec {
     if (data.length < 2) Left("image: payload shorter than any magic")
     else if (data(0) == 'P' && (data(1) == '5' || data(1) == '6')) decodePnm(data)
     else if (data(0) == 'B' && data(1) == 'M') decodeBmp(data)
-    else if (sniffPng(data)) decodePngFull(data).map(_._1)
+    else if (sniffPng(data)) guarded("png")(decodePngFull(data)).map(_._1)
     else if (JpegCodec.sniff(data)) JpegCodec.decode(data).map(_._1)
     else if (GifCodec.sniff(data)) GifCodec.decode(data).map(_._1)
     else if (WebpCodec.sniff(data)) WebpCodec.decode(data).map(_._1)
@@ -164,7 +166,7 @@ object ImageCodec {
         while (i < nSamples) {
           val v =
             if (bytesPerSample == 1) d(p) & 0xff
-            else ((d(p) & 0xff) << 8) | (d(p + 1) & 0xff) // 16-bit is big-endian
+            else u16be(d, p) // 16-bit is big-endian
           sums((i % channels).toInt) += v
           if (v < mn) mn = v
           if (v > mx) mx = v
@@ -194,7 +196,7 @@ object ImageCodec {
     * hamming 0).
     */
   def aHash(data: Array[Byte]): Either[String, (Long, Long)] =
-    if (sniffPng(data)) decodePngFull(data).map(t => packAHash(t._2))
+    if (sniffPng(data)) guarded("png")(decodePngFull(data)).map(t => packAHash(t._2))
     else if (JpegCodec.sniff(data)) JpegCodec.decode(data).map(t => packAHash(t._2))
     else if (GifCodec.sniff(data)) GifCodec.decode(data).map(t => packAHash(t._2))
     else if (WebpCodec.sniff(data)) WebpCodec.decode(data).map(t => packAHash(t._2))
@@ -246,17 +248,13 @@ object ImageCodec {
 
   private def decodeBmp(d: Array[Byte]): Either[String, ImageStats] = {
     if (d.length < 54) return Left("bmp: truncated header")
-    def u16(o: Int): Int = (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-    def i32(o: Int): Int =
-      (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8) | ((d(o + 2) & 0xff) << 16) | ((d(o + 3) & 0xff) << 24)
-
-    val dataOffset = i32(10)
-    val dibSize = i32(14)
+    val dataOffset = u32le(d, 10).toInt
+    val dibSize = u32le(d, 14).toInt
     if (dibSize < 40) return Left(s"bmp: unsupported DIB header size $dibSize")
-    val width = i32(18)
-    val heightRaw = i32(22)
-    val bpp = u16(28)
-    val compression = i32(30)
+    val width = u32le(d, 18).toInt
+    val heightRaw = u32le(d, 22).toInt
+    val bpp = u16le(d, 28)
+    val compression = u32le(d, 30).toInt
     if (width <= 0 || heightRaw == 0) return Left(s"bmp: bad dimensions ${width}x$heightRaw")
     if (compression != 0) return Left(s"bmp: compression $compression not supported (BI_RGB only)")
     if (bpp != 24 && bpp != 32) return Left(s"bmp: $bpp bpp not supported (24/32 only)")
@@ -325,9 +323,6 @@ object ImageCodec {
   private def decodePngFull(
       d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
     if (d.length < 8 + 12) return Left("png: payload shorter than signature + one chunk")
-    def u32(o: Int): Long =
-      ((d(o) & 0xff).toLong << 24) | ((d(o + 1) & 0xff) << 16) |
-        ((d(o + 2) & 0xff) << 8) | (d(o + 3) & 0xff)
 
     var width = 0
     var height = 0
@@ -342,22 +337,22 @@ object ImageCodec {
     var pos = 8
     while (!seenIend) {
       if (pos + 12 > d.length) return Left("png: truncated chunk header")
-      val len = u32(pos)
+      val len = u32be(d, pos)
       if (len > (Int.MaxValue - 12).toLong || pos + 12 + len > d.length)
         return Left("png: truncated chunk body")
       val bodyLen = len.toInt
       val typ = new String(d, pos + 4, 4, "US-ASCII")
       crc.reset()
       crc.update(d, pos + 4, 4 + bodyLen)
-      if (crc.getValue != u32(pos + 8 + bodyLen))
+      if (crc.getValue != u32be(d, pos + 8 + bodyLen))
         return Left(s"png: crc mismatch in $typ chunk")
       typ match {
         case "IHDR" =>
           if (seenIhdr) return Left("png: duplicate IHDR")
           if (bodyLen != 13) return Left(s"png: IHDR length $bodyLen != 13")
           val b = pos + 8
-          val w = u32(b)
-          val h = u32(b + 4)
+          val w = u32be(d, b)
+          val h = u32be(d, b + 4)
           if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue)
             return Left(s"png: bad dimensions ${w}x$h")
           width = w.toInt
@@ -402,8 +397,9 @@ object ImageCodec {
     val colorCh = if (colorType == 0 || colorType == 4) 1 else 3
     val maxval = if (bitDepth == 16) 65535 else 255
     val paletteN = if (palette == null) 0 else palette.length / 3
-    if (width.toLong * bpp > Int.MaxValue - 1)
-      return Left(s"png: scanline too wide: $width x $bpp bytes")
+    // the rows the IDAT stream must inflate to (filter byte + packed
+    // samples), checked before any row buffer is sized from IHDR
+    capped("png", "raster", height * ((width.toLong * nchan * bitDepth + 7) / 8 + 1))
     // bytes of one scanline of n pixels (packed for sub-byte depths)
     def lineBytes(n: Int): Int =
       if (bitDepth >= 8) n * bpp else (n * bitDepth + 7) / 8
@@ -444,10 +440,8 @@ object ImageCodec {
       // PLTE lookup (any depth) for indexed
       def sample(row: Array[Byte], px: Int, ch: Int): Int =
         if (colorType == 3) palette(3 * paletteIdx(row, px) + ch) & 0xff
-        else if (bitDepth == 16) {
-          val o = px * bpp + ch * 2
-          ((row(o) & 0xff) << 8) | (row(o + 1) & 0xff)
-        } else row(px * bpp + ch) & 0xff
+        else if (bitDepth == 16) u16be(row, px * bpp + ch * 2)
+        else row(px * bpp + ch) & 0xff
 
       // Adam7 pass geometry (x0, dx, y0, dy); non-interlaced = one
       // full pass. Each pixel is visited EXACTLY ONCE across passes,

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** Baseline sequential JFIF (JPEG) codec — the dominant image format
   * in any real crawl, decoded dependency-free on the PNG/Inflater
   * precedent (the reference sniffs and decompresses its own inputs
@@ -139,7 +141,7 @@ object JpegCodec {
   /** Bit-level reader over the entropy-coded scan: FF 00 unstuffs to
     * FF; any other FF-marker inside bit reads is a parse error (RSTs
     * are consumed byte-aligned between restart intervals, never from
-    * inside a bit read). Errors surface via [[JpegAbort]] and become
+    * inside a bit read). Errors surface as [[Malformed]] and become
     * the caller's Left — never an exception out of [[decode]].
     */
   private final class BitReader(d: Array[Byte], var p: Int) {
@@ -147,14 +149,14 @@ object JpegCodec {
     private var n = 0
     def nextBit(): Int = {
       if (n == 0) {
-        if (p >= d.length) throw JpegAbort("jpeg: entropy data exhausted")
+        if (p >= d.length) throw Malformed("jpeg: entropy data exhausted")
         var b = d(p) & 0xff
         p += 1
         if (b == 0xff) {
-          if (p >= d.length) throw JpegAbort("jpeg: truncated after FF in scan")
+          if (p >= d.length) throw Malformed("jpeg: truncated after FF in scan")
           val m = d(p) & 0xff
           if (m == 0x00) p += 1
-          else throw JpegAbort(f"jpeg: unexpected marker FF$m%02X inside scan")
+          else throw Malformed(f"jpeg: unexpected marker FF$m%02X inside scan")
           b = 0xff
         }
         acc = b
@@ -173,7 +175,7 @@ object JpegCodec {
       var code = nextBit()
       var l = 1
       while (code > t.maxCode(l)) {
-        if (l >= 16) throw JpegAbort("jpeg: huffman code longer than 16 bits")
+        if (l >= 16) throw Malformed("jpeg: huffman code longer than 16 bits")
         code = (code << 1) | nextBit()
         l += 1
       }
@@ -182,15 +184,13 @@ object JpegCodec {
     /** Byte-align and consume an expected RSTn marker. */
     def restart(expected: Int): Unit = {
       n = 0
-      if (p + 1 >= d.length) throw JpegAbort("jpeg: truncated at restart")
+      if (p + 1 >= d.length) throw Malformed("jpeg: truncated at restart")
       if ((d(p) & 0xff) != 0xff || (d(p + 1) & 0xff) != (0xd0 + expected))
-        throw JpegAbort(f"jpeg: expected RST$expected%d, found " +
+        throw Malformed(f"jpeg: expected RST$expected%d, found " +
           f"${d(p) & 0xff}%02X${d(p + 1) & 0xff}%02X")
       p += 2
     }
   }
-
-  private final case class JpegAbort(msg: String) extends RuntimeException(msg)
 
   private def extend(v: Int, t: Int): Int =
     if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
@@ -202,19 +202,14 @@ object JpegCodec {
     */
   def decode(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
     if (!sniff(d)) return Left("jpeg: missing SOI marker")
-    try decodeInner(d)
-    catch {
-      case JpegAbort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("jpeg: truncated payload")
-    }
+    guarded("jpeg")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
-    def u16(o: Int): Int = ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
     // segment length field (includes itself): < 2 would loop forever
     def segLen(o: Int): Int = {
-      val l = u16(o)
-      if (l < 2) throw JpegAbort(s"jpeg: bad segment length $l")
+      val l = u16be(d, o)
+      if (l < 2) throw Malformed(s"jpeg: bad segment length $l")
       l
     }
 
@@ -255,7 +250,7 @@ object JpegCodec {
       val b = hdrPos + 2
       val ns = d(b) & 0xff
       if (ns < 1 || ns > comps.length)
-        throw JpegAbort(s"jpeg: bad scan component count $ns")
+        throw Malformed(s"jpeg: bad scan component count $ns")
       val sc = new Array[Int](ns)
       val sdc = new Array[Int](ns)
       val sac = new Array[Int](ns)
@@ -264,8 +259,8 @@ object JpegCodec {
       while (i < ns) {
         val cid = d(b + 1 + 2 * i) & 0xff
         val ci = comps.indexWhere(_.id == cid)
-        if (ci < 0) throw JpegAbort(s"jpeg: scan references unknown component $cid")
-        if (ci <= prevCi) throw JpegAbort("jpeg: scan components out of frame order")
+        if (ci < 0) throw Malformed(s"jpeg: scan references unknown component $cid")
+        if (ci <= prevCi) throw Malformed("jpeg: scan components out of frame order")
         prevCi = ci
         sc(i) = ci
         sdc(i) = (d(b + 2 + 2 * i) & 0xff) >> 4
@@ -277,10 +272,10 @@ object JpegCodec {
       val ahal = d(b + 3 + 2 * ns) & 0xff
       val ah = ahal >> 4
       val al = ahal & 15
-      if (se > 63 || ss > se) throw JpegAbort(s"jpeg: bad spectral band $ss..$se")
-      if (ss == 0 && se != 0) throw JpegAbort("jpeg: progressive scan mixes DC and AC")
-      if (ss > 0 && ns != 1) throw JpegAbort("jpeg: progressive AC scan must be single-component")
-      if (al > 13 || ah > 13) throw JpegAbort(s"jpeg: bad successive approximation $ah/$al")
+      if (se > 63 || ss > se) throw Malformed(s"jpeg: bad spectral band $ss..$se")
+      if (ss == 0 && se != 0) throw Malformed("jpeg: progressive scan mixes DC and AC")
+      if (ss > 0 && ns != 1) throw Malformed("jpeg: progressive AC scan must be single-component")
+      if (al > 13 || ah > 13) throw Malformed(s"jpeg: bad successive approximation $ah/$al")
       val isDc = ss == 0
       val br = new BitReader(d, hdrPos + len)
       var eobrun = 0
@@ -290,9 +285,9 @@ object JpegCodec {
         val ci = sc(si)
         if (ah == 0) {
           val tab = huff(0)(sdc(si))
-          if (tab == null) throw JpegAbort(s"jpeg: missing DC table ${sdc(si)}")
+          if (tab == null) throw Malformed(s"jpeg: missing DC table ${sdc(si)}")
           val t = br.decodeHuff(tab)
-          if (t > 11) throw JpegAbort(s"jpeg: bad DC category $t")
+          if (t > 11) throw Malformed(s"jpeg: bad DC category $t")
           pred(ci) += extend(br.receive(t), t)
           progCoefs(ci)(off) = pred(ci) << al
         } else if (br.nextBit() == 1)
@@ -309,7 +304,7 @@ object JpegCodec {
           val s = rs & 15
           if (s != 0) {
             k += r
-            if (k > se) throw JpegAbort("jpeg: AC run past band end")
+            if (k > se) throw Malformed("jpeg: AC run past band end")
             co(off + k) = extend(br.receive(s), s) << al
             k += 1
           } else if (r == 15) k += 16 // ZRL
@@ -346,7 +341,7 @@ object JpegCodec {
                 brk = true // band tail handled by the eobrun path below
               }
             } else {
-              if (s != 1) throw JpegAbort("jpeg: bad AC refinement magnitude")
+              if (s != 1) throw Malformed("jpeg: bad AC refinement magnitude")
               newVal = if (br.nextBit() == 1) p1 else m1
             }
             if (!brk) {
@@ -360,7 +355,7 @@ object JpegCodec {
                 k += 1
               }
               if (!placed && newVal != 0)
-                throw JpegAbort("jpeg: AC refinement run past band end")
+                throw Malformed("jpeg: AC refinement run past band end")
             }
           }
         }
@@ -426,7 +421,7 @@ object JpegCodec {
         val co = progCoefs(ci)
         val tab = if (isDc) null else {
           val t = huff(1)(sac(0))
-          if (t == null) throw JpegAbort(s"jpeg: missing AC table ${sac(0)}")
+          if (t == null) throw Malformed(s"jpeg: missing AC table ${sac(0)}")
           t
         }
         var by = 0
@@ -468,8 +463,8 @@ object JpegCodec {
           val b = pos + 2
           val precision = d(b) & 0xff
           if (precision != 8) return Left(s"jpeg: $precision-bit precision not supported (8 only)")
-          height = u16(b + 1)
-          width = u16(b + 3)
+          height = u16be(d, b + 1)
+          width = u16be(d, b + 3)
           if (width <= 0 || height <= 0) return Left(s"jpeg: bad dimensions ${width}x$height")
           val nc = d(b + 5) & 0xff
           if (nc != 1 && nc != 3)
@@ -538,7 +533,7 @@ object JpegCodec {
             val t = new Array[Int](64)
             var i = 0
             while (i < 64) {
-              t(i) = if (pq == 0) d(b + 1 + i) & 0xff else u16(b + 1 + 2 * i)
+              t(i) = if (pq == 0) d(b + 1 + i) & 0xff else u16be(d, b + 1 + 2 * i)
               i += 1
             }
             qt(tq) = t
@@ -546,7 +541,7 @@ object JpegCodec {
           }
           pos += len
         case 0xdd => // DRI
-          restartInterval = u16(pos + 2)
+          restartInterval = u16be(d, pos + 2)
           pos += segLen(pos)
         case 0xda => // SOS
           if (comps == null) return Left("jpeg: SOS before SOF")
@@ -671,7 +666,7 @@ object JpegCodec {
       val acT = huff(1)(scanAc(ci))
       val q = qt(comps(ci).tq)
       val t = br.decodeHuff(dcT)
-      if (t > 11) throw JpegAbort(s"jpeg: bad DC category $t")
+      if (t > 11) throw Malformed(s"jpeg: bad DC category $t")
       pred(ci) += extend(br.receive(t), t)
       coef(0) = pred(ci) * q(0)
       var k = 1
@@ -685,7 +680,7 @@ object JpegCodec {
           else done = true // EOB
         } else {
           k += r
-          if (k > 63) throw JpegAbort("jpeg: AC run past block end")
+          if (k > 63) throw Malformed("jpeg: AC run past block end")
           coef(Zigzag(k)) = extend(br.receive(s), s) * q(k)
           k += 1
         }
@@ -842,30 +837,19 @@ object JpegCodec {
       case (0x4d, 0x4d) => false
       case _ => return None
     }
-    def u16(o: Int): Int =
-      if (o + 2 > end) -1
-      else if (little) (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-      else ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (o + 4 > end) -1L
-      else if (little)
-        (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-          ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-      else
-        ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
-          ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
-    if (u16(t + 2) != 42) return None
-    val ifdOff = u32(t + 4)
+    val tiff = new ExifGps.Tiff(d, t, end, little)
+    if (tiff.u16(t + 2) != 42) return None
+    val ifdOff = tiff.u32(t + 4)
     if (ifdOff < 0 || t + ifdOff + 2 > end) return None
     val ifd = t + ifdOff.toInt
-    val nEntries = u16(ifd)
+    val nEntries = tiff.u16(ifd)
     if (nEntries < 0) return None
     var i = 0
     while (i < nEntries) {
       val e = ifd + 2 + 12 * i
       if (e + 12 > end) return None
-      if (u16(e) == 0x0112 && u16(e + 2) == 3 && u32(e + 4) == 1L) {
-        val v = u16(e + 8)
+      if (tiff.u16(e) == 0x0112 && tiff.u16(e + 2) == 3 && tiff.u32(e + 4) == 1L) {
+        val v = tiff.u16(e + 8)
         return if (v >= 1 && v <= 8) Some(v) else None
       }
       i += 1

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** MP3 container metadata — the census-grade parse of the dominant
   * lossy audio format a crawl carries: ID3v2 tag walk (title/artist
   * text frames) plus the MPEG audio frame-header walk that yields
@@ -53,15 +55,9 @@ object Mp3Meta {
     (d.length >= 10 && d(0) == 'I' && d(1) == 'D' && d(2) == '3') ||
       (d.length >= 4 && (d(0) & 0xff) == 0xff && (d(1) & 0xe0) == 0xe0)
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   def decode(d: Array[Byte]): Either[String, Mp3Stats] = {
     if (!sniff(d)) return Left("mp3: no ID3v2 tag or frame sync")
-    try decodeInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("mp3: truncated payload")
-    }
+    guarded("mp3")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, Mp3Stats] = {
@@ -105,9 +101,7 @@ object Mp3Meta {
       if (verMajor == 2 && (flags & 0x40) != 0)
         return Left("mp3: compressed ID3v2.2 tags are out of scope")
       if (verMajor != 2 && (flags & 0x40) != 0) { // extended header: skip by its own size
-        p += (if (verMajor >= 4) syncsafe(t, p)
-              else ((t(p) & 0xff) << 24) | ((t(p + 1) & 0xff) << 16) |
-                ((t(p + 2) & 0xff) << 8) | (t(p + 3) & 0xff)) + (if (verMajor >= 4) 0 else 4)
+        p += (if (verMajor >= 4) syncsafe(t, p) else u32be(t, p).toInt + 4)
       }
       // ID3v2.2 (r20): 6-byte frame headers — 3-char IDs (TT2/TP1
       // are TIT2/TPE1's ancestors), 3-byte big-endian sizes, no
@@ -120,8 +114,7 @@ object Mp3Meta {
           if (verMajor == 2)
             ((t(p + 3) & 0xff) << 16) | ((t(p + 4) & 0xff) << 8) | (t(p + 5) & 0xff)
           else if (verMajor >= 4) syncsafe(t, p + 4)
-          else ((t(p + 4) & 0xff) << 24) | ((t(p + 5) & 0xff) << 16) |
-            ((t(p + 6) & 0xff) << 8) | (t(p + 7) & 0xff)
+          else u32be(t, p + 4).toInt
         val body = p + hdrLen
         // v2.3 sizes are plain 32-bit: a malformed tag with the top bit
         // set reads NEGATIVE, and `p = body + fSize` would then stall
@@ -230,7 +223,7 @@ object Mp3Meta {
       case 1 => new String(raw, UTF_16) // BOM-routed
       case 2 => new String(raw, UTF_16BE)
       case 3 => new String(raw, UTF_8)
-      case e => throw Abort(s"mp3: unknown ID3v2 text encoding $e")
+      case e => throw Malformed(s"mp3: unknown ID3v2 text encoding $e")
     }
     s.takeWhile(_ != '\u0000')
   }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** MP4 / ISO-BMFF container metadata — video is the dominant crawl
   * media type by bytes, and a training pipeline needs duration, track
   * geometry, and codec identification WITHOUT an entropy decode (the
@@ -71,15 +73,9 @@ object Mp4Meta {
     d.length >= 12 && ((d(4) == 'f' && d(5) == 't') || (d(4) == 's' && d(5) == 't')) &&
       d(6) == 'y' && d(7) == 'p'
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   def decode(d: Array[Byte]): Either[String, Mp4Stats] = {
     if (!sniff(d)) return Left("mp4: first box is neither ftyp nor styp")
-    try decodeInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("mp4: truncated payload")
-    }
+    guarded("mp4")(decodeInner(d))
   }
 
   private final class TrackCtx {
@@ -92,10 +88,6 @@ object Mp4Meta {
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, Mp4Stats] = {
-    def u32(o: Int): Long =
-      ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
-        ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
-    def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
     def fourcc(o: Int): String =
       new String(d, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
@@ -128,49 +120,49 @@ object Mp4Meta {
     def walk(from: Int, until: Int, topLevel: Boolean, ctx: TrackCtx): Unit = {
       var pos = from
       while (pos < until) {
-        if (pos + 8 > until) throw Abort("mp4: truncated box header")
-        val size32 = u32(pos)
+        if (pos + 8 > until) throw Malformed("mp4: truncated box header")
+        val size32 = u32be(d, pos)
         val typ = fourcc(pos + 4)
         val (body, end) =
           if (size32 == 0) {
             // "to end of file": only the final top-level box may claim it
-            if (!topLevel) throw Abort(s"mp4: size-0 box $typ below top level")
+            if (!topLevel) throw Malformed(s"mp4: size-0 box $typ below top level")
             (pos + 8, until)
           } else if (size32 == 1) {
-            if (pos + 16 > until) throw Abort("mp4: truncated largesize")
-            val large = u64(pos + 8)
-            if (large < 16) throw Abort(s"mp4: largesize $large under header size")
+            if (pos + 16 > until) throw Malformed("mp4: truncated largesize")
+            val large = u64be(d, pos + 8)
+            if (large < 16) throw Malformed(s"mp4: largesize $large under header size")
             val e = pos + large
-            if (e > until) throw Abort(s"mp4: box $typ runs past its parent")
+            if (e > until) throw Malformed(s"mp4: box $typ runs past its parent")
             (pos + 16, e.toInt)
           } else {
-            if (size32 < 8) throw Abort(s"mp4: box size $size32 under header size")
+            if (size32 < 8) throw Malformed(s"mp4: box size $size32 under header size")
             val e = pos + size32
-            if (e > until) throw Abort(s"mp4: box $typ runs past its parent")
+            if (e > until) throw Malformed(s"mp4: box $typ runs past its parent")
             (pos + 8, e.toInt)
           }
         typ match {
           case "ftyp" | "styp" => // styp: the media-segment twin
-            if (body + 8 > end) throw Abort("mp4: ftyp too short")
+            if (body + 8 > end) throw Malformed("mp4: ftyp too short")
             brand = fourcc(body)
-            minorVersion = u32(body + 4)
+            minorVersion = u32be(d, body + 4)
           case "sidx" =>
             val ver = d(body) & 0xff
-            if (ver > 1) throw Abort(s"mp4: sidx version $ver out of scope")
-            if (body + 12 > end) throw Abort("mp4: sidx too short")
-            sidxTimescale = u32(body + 8)
-            if (sidxTimescale <= 0) throw Abort("mp4: sidx timescale is zero")
+            if (ver > 1) throw Malformed(s"mp4: sidx version $ver out of scope")
+            if (body + 12 > end) throw Malformed("mp4: sidx too short")
+            sidxTimescale = u32be(d, body + 8)
+            if (sidxTimescale <= 0) throw Malformed("mp4: sidx timescale is zero")
             // after earliest_presentation_time + first_offset
             // (4+4 in v0, 8+8 in v1): reserved(2) + reference_count(2)
             val o = body + 12 + (if (ver == 1) 16 else 8)
-            if (o + 4 > end) throw Abort("mp4: sidx too short for its version")
-            val cnt = (u32(o) & 0xffffL).toInt
-            if (o + 4 + 12L * cnt > end) throw Abort("mp4: sidx reference table overrun")
+            if (o + 4 > end) throw Malformed("mp4: sidx too short for its version")
+            val cnt = (u32be(d, o) & 0xffffL).toInt
+            if (o + 4 + 12L * cnt > end) throw Malformed("mp4: sidx reference table overrun")
             var i = 0
             while (i < cnt) {
               // each reference: type+size(4), subsegment_duration(4),
               // SAP fields(4)
-              sidxTicks += u32(o + 4 + 12 * i + 4)
+              sidxTicks += u32be(d, o + 4 + 12 * i + 4)
               i += 1
             }
           case "moof" =>
@@ -183,9 +175,9 @@ object Mp4Meta {
             trafDefaultDur = -1L
             walk(body, end, topLevel = false, null)
           case "tfhd" =>
-            if (body + 8 > end) throw Abort("mp4: tfhd too short")
-            val flags = u32(body) & 0xffffffL
-            trafTrack = u32(body + 4)
+            if (body + 8 > end) throw Malformed("mp4: tfhd too short")
+            val flags = u32be(d, body) & 0xffffffL
+            trafTrack = u32be(d, body + 4)
             // optional fields in spec order: base-data-offset (8,
             // 0x01), sample-description-index (4, 0x02),
             // default-sample-duration (4, 0x08)
@@ -193,14 +185,14 @@ object Mp4Meta {
             if ((flags & 0x01L) != 0) o += 8
             if ((flags & 0x02L) != 0) o += 4
             if ((flags & 0x08L) != 0) {
-              if (o + 4 > end) throw Abort("mp4: tfhd too short for its flags")
-              trafDefaultDur = u32(o)
+              if (o + 4 > end) throw Malformed("mp4: tfhd too short for its flags")
+              trafDefaultDur = u32be(d, o)
             }
           case "trun" =>
-            if (trafTrack < 0) throw Abort("mp4: trun outside a traf with tfhd")
-            if (body + 8 > end) throw Abort("mp4: trun too short")
-            val flags = u32(body) & 0xffffffL
-            val sampleCount = u32(body + 4)
+            if (trafTrack < 0) throw Malformed("mp4: trun outside a traf with tfhd")
+            if (body + 8 > end) throw Malformed("mp4: trun too short")
+            val flags = u32be(d, body) & 0xffffffL
+            val sampleCount = u32be(d, body + 4)
             var o = body + 8
             if ((flags & 0x001L) != 0) o += 4 // data-offset
             if ((flags & 0x004L) != 0) o += 4 // first-sample-flags
@@ -210,11 +202,11 @@ object Mp4Meta {
             val ticks =
               if ((flags & 0x100L) != 0) {
                 if (o + stride * sampleCount > end)
-                  throw Abort("mp4: trun sample table runs past its box")
+                  throw Malformed("mp4: trun sample table runs past its box")
                 var acc = 0L
                 var i = 0L
                 while (i < sampleCount) {
-                  acc += u32(o + (stride * i).toInt) // duration is field 0
+                  acc += u32be(d, o + (stride * i).toInt) // duration is field 0
                   i += 1
                 }
                 acc
@@ -228,61 +220,61 @@ object Mp4Meta {
             fragTicks = fragTicks.updated(trafTrack,
               fragTicks.getOrElse(trafTrack, 0L) + ticks)
           case "trex" =>
-            if (body + 24 > end) throw Abort("mp4: trex too short")
-            trexDefault = trexDefault.updated(u32(body + 4), u32(body + 12))
+            if (body + 24 > end) throw Malformed("mp4: trex too short")
+            trexDefault = trexDefault.updated(u32be(d, body + 4), u32be(d, body + 12))
           case "mehd" =>
             val ver = d(body) & 0xff
-            if (ver > 1) throw Abort(s"mp4: mehd version $ver out of scope")
+            if (ver > 1) throw Malformed(s"mp4: mehd version $ver out of scope")
             if (body + 4 + (if (ver == 1) 8 else 4) > end)
-              throw Abort("mp4: mehd too short")
-            mehdDuration = if (ver == 1) u64(body + 4) else u32(body + 4)
+              throw Malformed("mp4: mehd too short")
+            mehdDuration = if (ver == 1) u64be(d, body + 4) else u32be(d, body + 4)
           case "mdhd" =>
             if (ctx != null) {
               val ver = d(body) & 0xff
-              if (ver > 1) throw Abort(s"mp4: mdhd version $ver out of scope")
+              if (ver > 1) throw Malformed(s"mp4: mdhd version $ver out of scope")
               val o = body + 4 + (if (ver == 1) 16 else 8)
-              if (o + 4 > end) throw Abort("mp4: mdhd too short")
-              ctx.mediaTimescale = u32(o)
+              if (o + 4 > end) throw Malformed("mp4: mdhd too short")
+              ctx.mediaTimescale = u32be(d, o)
             }
           case "mvhd" =>
             val ver = d(body) & 0xff
-            if (ver > 1) throw Abort(s"mp4: mvhd version $ver out of scope")
+            if (ver > 1) throw Malformed(s"mp4: mvhd version $ver out of scope")
             // FullBox header 4, then v0: creation 4 + modification 4;
             // v1: 8 + 8 — timescale is u32 in BOTH versions
             val o = body + 4 + (if (ver == 1) 16 else 8)
-            if (o + (if (ver == 1) 12 else 8) > end) throw Abort("mp4: mvhd too short")
-            timescale = u32(o)
-            duration = if (ver == 1) u64(o + 4) else u32(o + 4)
-            if (timescale <= 0) throw Abort("mp4: mvhd timescale is zero")
+            if (o + (if (ver == 1) 12 else 8) > end) throw Malformed("mp4: mvhd too short")
+            timescale = u32be(d, o)
+            duration = if (ver == 1) u64be(d, o + 4) else u32be(d, o + 4)
+            if (timescale <= 0) throw Malformed("mp4: mvhd timescale is zero")
           case "trak" =>
             val t = new TrackCtx
             walk(body, end, topLevel = false, t)
             tracks += t
           case "tkhd" =>
-            if (ctx == null) throw Abort("mp4: tkhd outside trak")
+            if (ctx == null) throw Malformed("mp4: tkhd outside trak")
             val ver = d(body) & 0xff
-            if (ver > 1) throw Abort(s"mp4: tkhd version $ver out of scope")
-            ctx.trackId = u32(body + 4 + (if (ver == 1) 16 else 8))
+            if (ver > 1) throw Malformed(s"mp4: tkhd version $ver out of scope")
+            ctx.trackId = u32be(d, body + 4 + (if (ver == 1) 16 else 8))
             // after FullBox hdr: v0 creation 4 + modification 4 +
             // track_ID 4 + reserved 4 + duration 4 = 20 (v1: 32), then
             // reserved 8, layer/alt/volume/reserved 8, matrix 36
             val o = body + 4 + (if (ver == 1) 32 else 20) + 8 + 8 + 36
-            if (o + 8 > end) throw Abort("mp4: tkhd too short")
-            ctx.w = (u32(o) >>> 16).toInt // 16.16 fixed -> integer part
-            ctx.h = (u32(o + 4) >>> 16).toInt
+            if (o + 8 > end) throw Malformed("mp4: tkhd too short")
+            ctx.w = (u32be(d, o) >>> 16).toInt // 16.16 fixed -> integer part
+            ctx.h = (u32be(d, o + 4) >>> 16).toInt
           case "hdlr" =>
             if (ctx != null) {
               // FullBox hdr 4 + pre_defined 4, then handler_type
-              if (body + 12 > end) throw Abort("mp4: hdlr too short")
+              if (body + 12 > end) throw Malformed("mp4: hdlr too short")
               ctx.handler = fourcc(body + 8)
             }
           case "stsd" =>
-            if (ctx == null) throw Abort("mp4: stsd outside trak")
-            if (body + 8 > end) throw Abort("mp4: stsd too short")
-            val entries = u32(body + 4)
+            if (ctx == null) throw Malformed("mp4: stsd outside trak")
+            if (body + 8 > end) throw Malformed("mp4: stsd too short")
+            val entries = u32be(d, body + 4)
             if (entries > 0) {
               // first sample entry: u32 size + format fourcc
-              if (body + 16 > end) throw Abort("mp4: stsd entry too short")
+              if (body + 16 > end) throw Malformed("mp4: stsd entry too short")
               ctx.codec = fourcc(body + 12)
             }
           case t if containers.contains(t) =>
@@ -314,10 +306,10 @@ object Mp4Meta {
       else if (sidxTimescale > 0) sidxTicks * 1000L / sidxTimescale
       else {
         if (trunNoSource)
-          throw Abort("mp4: trun with no sample duration source (tfhd/trex/sidx)")
+          throw Malformed("mp4: trun with no sample duration source (tfhd/trex/sidx)")
         fragTicks.foldLeft(0L) { case (best, (tid, ticks)) =>
           val mts = tracks.find(_.trackId == tid).map(_.mediaTimescale).getOrElse(-1L)
-          if (mts <= 0) throw Abort(s"mp4: fragments on track $tid without an mdhd timescale")
+          if (mts <= 0) throw Malformed(s"mp4: fragments on track $tid without an mdhd timescale")
           math.max(best, ticks * 1000L / mts)
         }
       }

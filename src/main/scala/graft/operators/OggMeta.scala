@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** Ogg container metadata — the [[Mp3Meta]] discipline for the other
   * audio container a crawl carries in volume (Opus voice notes,
   * Vorbis archives): page walk with per-page CRC verification, first-
@@ -41,8 +43,6 @@ object OggMeta {
   def sniff(d: Array[Byte]): Boolean =
     d.length >= 4 && d(0) == 'O' && d(1) == 'g' && d(2) == 'g' && d(3) == 'S'
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   /** Ogg CRC-32: forward (unreflected), poly 0x04C11DB7, init 0, no
     * final xor — NOT the zlib CRC.
     */
@@ -66,56 +66,42 @@ object OggMeta {
 
   def decode(d: Array[Byte]): Either[String, OggStats] = {
     if (!sniff(d)) return Left("ogg: missing OggS capture pattern")
-    try decodeInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("ogg: truncated payload")
-    }
+    guarded("ogg")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, OggStats] = {
-    def u32(o: Int): Long =
-      (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) | ((d(o + 2) & 0xffL) << 16) |
-        ((d(o + 3) & 0xffL) << 24)
-    def i64(o: Int): Long = {
-      var v = 0L
-      var k = 7
-      while (k >= 0) { v = (v << 8) | (d(o + k) & 0xffL); k -= 1 }
-      v
-    }
-
     var pos = 0
     var serial = -1L
     var nPages = 0L
     var lastGranule = -1L
     var firstPacket: Array[Byte] = null
     while (pos < d.length) {
-      if (pos + 27 > d.length) throw Abort("ogg: truncated page header")
+      if (pos + 27 > d.length) throw Malformed("ogg: truncated page header")
       if (!(d(pos) == 'O' && d(pos + 1) == 'g' && d(pos + 2) == 'g' && d(pos + 3) == 'S'))
-        throw Abort("ogg: lost page sync")
-      if (d(pos + 4) != 0) throw Abort(s"ogg: stream structure version ${d(pos + 4)}")
+        throw Malformed("ogg: lost page sync")
+      if (d(pos + 4) != 0) throw Malformed(s"ogg: stream structure version ${d(pos + 4)}")
       val htype = d(pos + 5) & 0xff
-      val granule = i64(pos + 6)
-      val pageSerial = u32(pos + 14)
-      val crcStored = u32(pos + 22)
+      val granule = u64le(d, pos + 6)
+      val pageSerial = u32le(d, pos + 14)
+      val crcStored = u32le(d, pos + 22)
       val nSegs = d(pos + 26) & 0xff
       val lacingAt = pos + 27
-      if (lacingAt + nSegs > d.length) throw Abort("ogg: truncated lacing table")
+      if (lacingAt + nSegs > d.length) throw Malformed("ogg: truncated lacing table")
       var bodyLen = 0
       var s = 0
       while (s < nSegs) { bodyLen += d(lacingAt + s) & 0xff; s += 1 }
       val bodyAt = lacingAt + nSegs
       val pageEnd = bodyAt + bodyLen
-      if (pageEnd > d.length) throw Abort("ogg: page body runs past EOF")
+      if (pageEnd > d.length) throw Malformed("ogg: page body runs past EOF")
       if (oggCrc(d, pos, pageEnd, zeroFrom = pos + 22, zeroUntil = pos + 26) != crcStored)
-        throw Abort("ogg: page CRC mismatch")
+        throw Malformed("ogg: page CRC mismatch")
       if (serial < 0) {
-        if ((htype & 2) == 0) throw Abort("ogg: first page is not a BOS page")
+        if ((htype & 2) == 0) throw Malformed("ogg: first page is not a BOS page")
         serial = pageSerial
       } else if (pageSerial != serial)
-        throw Abort("ogg: multiplexed/chained streams are out of scope")
+        throw Malformed("ogg: multiplexed/chained streams are out of scope")
       else if ((htype & 2) != 0)
-        throw Abort("ogg: second BOS page — chained streams are out of scope")
+        throw Malformed("ogg: second BOS page — chained streams are out of scope")
       if (firstPacket == null) {
         // ID header: first packet of the BOS page, must end there
         var len = 0
@@ -126,7 +112,7 @@ object OggMeta {
           if ((d(lacingAt + k) & 0xff) < 255) done = true
           k += 1
         }
-        if (!done) throw Abort("ogg: ID header spans pages — out of scope")
+        if (!done) throw Malformed("ogg: ID header spans pages — out of scope")
         firstPacket = java.util.Arrays.copyOfRange(d, bodyAt, bodyAt + len)
       }
       if (granule != -1L) lastGranule = granule
@@ -137,20 +123,16 @@ object OggMeta {
     if (lastGranule < 0) return Left("ogg: no page carries a granule position")
 
     val p = firstPacket
-    def le16(o: Int): Int = (p(o) & 0xff) | ((p(o + 1) & 0xff) << 8)
-    def le32(o: Int): Long =
-      (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) | ((p(o + 2) & 0xffL) << 16) |
-        ((p(o + 3) & 0xffL) << 24)
     if (p.length >= 19 && new String(p, 0, 8, java.nio.charset.StandardCharsets.US_ASCII) == "OpusHead") {
       val channels = p(9) & 0xff
-      val preSkip = le16(10)
+      val preSkip = u16le(p, 10)
       if (channels <= 0) return Left("ogg: bad Opus channel count")
       val dur = math.max(0L, lastGranule - preSkip) * 1000L / 48000L
       Right(OggStats("opus", channels, 48000, preSkip, nPages, lastGranule, dur))
     } else if (p.length >= 30 && p(0) == 1 &&
       new String(p, 1, 6, java.nio.charset.StandardCharsets.US_ASCII) == "vorbis") {
       val channels = p(11) & 0xff
-      val rate = le32(12).toInt
+      val rate = u32le(p, 12).toInt
       if (channels <= 0) return Left("ogg: bad Vorbis channel count")
       if (rate <= 0) return Left("ogg: bad Vorbis sample rate")
       Right(OggStats("vorbis", channels, rate, 0, nPages, lastGranule,

@@ -1417,9 +1417,8 @@ object Similarity {
       broadcast(table.rows), table.numSubspaces, k)
 
   /** The equi-join of index rows with per-(query, cluster) LUT rows,
-    * table-lookup distances and the top-k tail. A null distance (a
-    * null or short query vector) is no neighbor: the top-k aggregator
-    * would read it as 0.0.
+    * table-lookup distances and the top-k tail (which skips the null
+    * distance of a null or short query vector).
     */
   private def adcScan(index: DataFrame, probes: DataFrame, numSubspaces: Int, k: Int): DataFrame = {
     val scored = index.join(probes, Seq("cluster"))
@@ -1428,7 +1427,6 @@ object Similarity {
         (0 until numSubspaces).map(m =>
           element_at(element_at(col("lut"), m + 1), element_at(col("codes"), m + 1) + 1))
           .reduce(_ + _))
-      .filter(col("approx_d2").isNotNull)
     adcTopK(scored, k)
   }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** Baseline TIFF decode — the scanned-document image format (faxes,
   * archival scans, the raster sibling of the PDF path), dependency-
   * free like its codec siblings. Implements TIFF 6.0 baseline plus
@@ -62,37 +64,22 @@ object TiffCodec {
       (d(0) == 'I' && d(1) == 'I' && d(2) == 42 && d(3) == 0) ||
         (d(0) == 'M' && d(1) == 'M' && d(2) == 0 && d(3) == 42))
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   def decode(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
     if (!sniff(d)) return Left("tiff: missing II*/MM* signature")
-    try decodeInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("tiff: truncated payload")
-      case _: NegativeArraySizeException => Left("tiff: negative size field")
-    }
+    guarded("tiff")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
     val le = d(0) == 'I'
-    def u16(o: Int): Int =
-      if (le) (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-      else ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-    def u32(o: Int): Long =
-      if (le) (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-        ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-      else ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
-        ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
 
-    val ifd = u32(4).toInt
-    val n = u16(ifd)
+    val ifd = u32(d, 4, le).toInt
+    val n = u16(d, ifd, le)
     // tag -> (fieldType, count, entry offset of the value cell)
     var entries = Map.empty[Int, (Int, Int, Int)]
     var k = 0
     while (k < n) {
       val e = ifd + 2 + 12 * k
-      entries += u16(e) -> ((u16(e + 2), u32(e + 4).toInt, e + 8))
+      entries += u16(d, e, le) -> ((u16(d, e + 2, le), u32(d, e + 4, le).toInt, e + 8))
       k += 1
     }
     def vals(tag: Int): Option[Seq[Long]] = entries.get(tag).map { case (tpe, count, cell) =>
@@ -100,25 +87,25 @@ object TiffCodec {
         case 3 => 2 // SHORT
         case 4 => 4 // LONG
         case 1 | 7 => 1 // BYTE / UNDEFINED (tag 347 JPEGTables)
-        case t => throw Abort(s"tiff: unsupported field type $t for tag $tag")
+        case t => throw Malformed(s"tiff: unsupported field type $t for tag $tag")
       }
-      val base = if (unit * count <= 4) cell else u32(cell).toInt
+      val base = if (unit * count <= 4) cell else u32(d, cell, le).toInt
       (0 until count).map { i =>
         unit match {
           case 1 => (d(base + i) & 0xff).toLong
-          case 2 => u16(base + 2 * i).toLong
-          case _ => u32(base + 4 * i)
+          case 2 => u16(d, base + 2 * i, le).toLong
+          case _ => u32(d, base + 4 * i, le)
         }
       }
     }
     def one(tag: Int, default: => Long): Long =
       // flatMap over headOption: a malformed entry with count 0 gives
       // an EMPTY value list — fall to the default (which for required
-      // tags is an Abort), never a NoSuchElementException
+      // tags throws Malformed), never a NoSuchElementException
       vals(tag).flatMap(_.headOption).getOrElse(default)
 
-    val w = one(256, throw Abort("tiff: no ImageWidth")).toInt
-    val h = one(257, throw Abort("tiff: no ImageLength")).toInt
+    val w = one(256, throw Malformed("tiff: no ImageWidth")).toInt
+    val h = one(257, throw Malformed("tiff: no ImageLength")).toInt
     if (w <= 0 || h <= 0) return Left(s"tiff: bad dimensions ${w}x$h")
     val spp = one(277, 1L).toInt
     if (spp != 1 && spp != 3) return Left(s"tiff: $spp samples/pixel out of scope")
@@ -162,8 +149,8 @@ object TiffCodec {
 
     if (isJpeg) {
       if (entries.contains(322)) return Left("tiff: tiled JPEG-in-TIFF out of scope")
-      val offsets = vals(273).getOrElse(throw Abort("tiff: no StripOffsets"))
-      val counts = vals(279).getOrElse(throw Abort("tiff: no StripByteCounts"))
+      val offsets = vals(273).getOrElse(throw Malformed("tiff: no StripOffsets"))
+      val counts = vals(279).getOrElse(throw Malformed("tiff: no StripByteCounts"))
       // JpegCodec surfaces stats, not pixel rows, so multi-strip
       // JPEG files (independent streams whose stats cannot merge)
       // are a named Left — real scanner output is single-strip
@@ -199,8 +186,8 @@ object TiffCodec {
     val palette: Array[Array[Int]] =
       if (photometric != 3) null
       else {
-        val cm = vals(320).getOrElse(throw Abort("tiff: palette image without a ColorMap"))
-        if (cm.length != 3 * 256) throw Abort(s"tiff: ColorMap carries ${cm.length} of 768 entries")
+        val cm = vals(320).getOrElse(throw Malformed("tiff: palette image without a ColorMap"))
+        if (cm.length != 3 * 256) throw Malformed(s"tiff: ColorMap carries ${cm.length} of 768 entries")
         Array.tabulate(3, 256)((c, i) => (cm(c * 256 + i) / 257L).toInt)
       }
 
@@ -272,21 +259,22 @@ object TiffCodec {
       }
     }
 
-    def decodeRegion(off: Int, len: Int, expect: Int, what: String): Array[Byte] = {
+    def decodeRegion(off: Int, len: Int, size: Long, what: String): Array[Byte] = {
+      val expect = capped("tiff", what, size)
       // u32 offsets/counts read as Int can wrap NEGATIVE on malformed
       // input — copyOfRange would throw IllegalArgumentException,
       // which the decode() catch list does not (and should not) cover
-      if (off < 0 || len < 0) throw Abort(s"tiff: $what offset/size out of range")
-      if (off + len > d.length) throw Abort(s"tiff: $what runs past EOF")
+      if (off < 0 || len < 0) throw Malformed(s"tiff: $what offset/size out of range")
+      if (off + len > d.length) throw Malformed(s"tiff: $what runs past EOF")
       val raw = java.util.Arrays.copyOfRange(d, off, off + len)
       val out = compression match {
         case 1 => raw
         case 32773 => packBitsDecode(raw, expect)
         case _ => graft.sources.Pdf.lzwDecode(raw)
-          .getOrElse(throw Abort(s"tiff: malformed LZW $what"))
+          .getOrElse(throw Malformed(s"tiff: malformed LZW $what"))
       }
       if (out.length != expect)
-        throw Abort(s"tiff: $what decoded ${out.length} of $expect bytes")
+        throw Malformed(s"tiff: $what decoded ${out.length} of $expect bytes")
       out
     }
 
@@ -296,11 +284,11 @@ object TiffCodec {
       // 16 per spec SS15; tile data is ALWAYS full-size (edge tiles
       // padded), decoded tile by tile in O(tile) memory
       val tw = one(322, 0L).toInt
-      val th = one(323, throw Abort("tiff: tiled image without TileLength")).toInt
+      val th = one(323, throw Malformed("tiff: tiled image without TileLength")).toInt
       if (tw <= 0 || th <= 0 || tw % 16 != 0 || th % 16 != 0)
         return Left(s"tiff: tile geometry ${tw}x$th out of range")
-      val tOffsets = vals(324).getOrElse(throw Abort("tiff: no TileOffsets"))
-      val tCounts = vals(325).getOrElse(throw Abort("tiff: no TileByteCounts"))
+      val tOffsets = vals(324).getOrElse(throw Malformed("tiff: no TileOffsets"))
+      val tCounts = vals(325).getOrElse(throw Malformed("tiff: no TileByteCounts"))
       if (tOffsets.length != tCounts.length) return Left("tiff: ragged tile tables")
       val across = (w + tw - 1) / tw
       val down = (h + th - 1) / th
@@ -310,7 +298,7 @@ object TiffCodec {
       for (ty <- 0 until down; tx <- 0 until across) {
         val i = ty * across + tx
         val tile = decodeRegion(tOffsets(i).toInt, tCounts(i).toInt,
-          tileRowBytes * th, s"tile $i")
+          tw.toLong * spp * th, s"tile $i")
         emitRegion(tile, tx * tw, ty * th, tileRowBytes,
           math.min(tw, w - tx * tw), math.min(th, h - ty * th))
       }
@@ -320,8 +308,8 @@ object TiffCodec {
       // by zero below — ArithmeticException is not in decode()'s catch
       // list, so it must be a Left here, not a throw
       if (rowsPerStrip <= 0) return Left(s"tiff: RowsPerStrip $rowsPerStrip out of range")
-      val offsets = vals(273).getOrElse(throw Abort("tiff: no StripOffsets"))
-      val counts = vals(279).getOrElse(throw Abort("tiff: no StripByteCounts"))
+      val offsets = vals(273).getOrElse(throw Malformed("tiff: no StripOffsets"))
+      val counts = vals(279).getOrElse(throw Malformed("tiff: no StripByteCounts"))
       if (offsets.length != counts.length) return Left("tiff: ragged strip tables")
       val expectStrips = (h + rowsPerStrip - 1) / rowsPerStrip
       if (offsets.length != expectStrips)
@@ -329,6 +317,9 @@ object TiffCodec {
       val rowBytes = w * spp
       for (s <- offsets.indices) {
         val rowsHere = math.min(rowsPerStrip, h - s * rowsPerStrip)
+        // strip buffers (and the fax decoders' bit planes) are sized by
+        // the header: checked in Long before anything is allocated
+        capped("tiff", s"strip $s", rowsHere.toLong * w * spp)
         val strip =
           if (isFax) {
             // each strip is an independent fax stream (fresh all-white
@@ -336,8 +327,8 @@ object TiffCodec {
             // the photometric implies so the shared stats pass applies
             val off = offsets(s).toInt
             val len = counts(s).toInt
-            if (off < 0 || len < 0) throw Abort(s"tiff: strip $s offset/size out of range")
-            if (off + len > d.length) throw Abort(s"tiff: strip $s runs past EOF")
+            if (off < 0 || len < 0) throw Malformed(s"tiff: strip $s offset/size out of range")
+            if (off + len > d.length) throw Malformed(s"tiff: strip $s runs past EOF")
             val raw = java.util.Arrays.copyOfRange(d, off, off + len)
             val bits =
               try compression match {
@@ -345,7 +336,7 @@ object TiffCodec {
                 case 3 => CcittG3.decodeG3(raw, w, rowsHere, (t4Options & 1L) != 0)
                 case _ => CcittG4.decode(raw, w, rowsHere)
               }
-              catch { case CcittG4.Malformed(m) => throw Abort(s"tiff: $m") }
+              catch { case Malformed(m) => throw Malformed(s"tiff: $m") }
             val out = new Array[Byte](rowsHere * rowBytes)
             var i = 0
             while (i < out.length) {
@@ -359,7 +350,7 @@ object TiffCodec {
             }
             out
           } else decodeRegion(offsets(s).toInt, counts(s).toInt,
-            rowsHere * rowBytes, s"strip $s")
+            rowsHere.toLong * rowBytes, s"strip $s")
         emitRegion(strip, 0, s * rowsPerStrip, rowBytes, w, rowsHere)
       }
     }
@@ -383,13 +374,13 @@ object TiffCodec {
     var i = 0
     var o = 0
     while (o < expect) {
-      if (i >= src.length) throw Abort("tiff: truncated PackBits strip")
+      if (i >= src.length) throw Malformed("tiff: truncated PackBits strip")
       val n = src(i) & 0xff
       i += 1
       if (n < 128) {
         var k = 0
         while (k <= n) {
-          if (o >= expect) throw Abort("tiff: PackBits overrun")
+          if (o >= expect) throw Malformed("tiff: PackBits overrun")
           out(o) = src(i); i += 1; o += 1; k += 1
         }
       } else if (n > 128) {
@@ -398,7 +389,7 @@ object TiffCodec {
         i += 1
         var k = 0
         while (k < rep) {
-          if (o >= expect) throw Abort("tiff: PackBits overrun")
+          if (o >= expect) throw Malformed("tiff: PackBits overrun")
           out(o) = b; o += 1; k += 1
         }
       } // 128: no-op
@@ -706,8 +697,8 @@ object TiffCodec {
     if (!soi(tables) || tables.length < 4 ||
       (tables(tables.length - 2) & 0xff) != 0xff ||
       (tables(tables.length - 1) & 0xff) != 0xd9)
-      throw Abort("tiff: JPEGTables is not an SOI..EOI stream")
-    if (!soi(strip)) throw Abort("tiff: JPEG strip missing SOI")
+      throw Malformed("tiff: JPEGTables is not an SOI..EOI stream")
+    if (!soi(strip)) throw Malformed("tiff: JPEG strip missing SOI")
     Array[Byte](0xff.toByte, 0xd8.toByte) ++
       java.util.Arrays.copyOfRange(tables, 2, tables.length - 2) ++
       java.util.Arrays.copyOfRange(strip, 2, strip.length)
@@ -737,7 +728,7 @@ object TiffCodec {
         rest.write(jpeg, p, jpeg.length - p)
         done = true
       } else {
-        val segLen = ((jpeg(p + 2) & 0xff) << 8) | (jpeg(p + 3) & 0xff)
+        val segLen = u16be(jpeg, p + 2)
         require(p + 2 + segLen <= jpeg.length, "splitJpegTables: truncated segment")
         val sink = if (m == 0xdb || m == 0xc4) tables else rest
         sink.write(jpeg, p, 2 + segLen) // marker + length-inclusive payload

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** WebM / Matroska container metadata — the OTHER half of the crawl
   * video-container family next to [[Mp4Meta]] (YouTube-era crawls
   * carry WebM in volume), same metadata-only contract: duration,
@@ -55,15 +57,9 @@ object WebmMeta {
     d.length >= 4 && (d(0) & 0xff) == 0x1a && (d(1) & 0xff) == 0x45 &&
       (d(2) & 0xff) == 0xdf && (d(3) & 0xff) == 0xa3
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   def decode(d: Array[Byte]): Either[String, WebmStats] = {
     if (!sniff(d)) return Left("webm: missing EBML header magic")
-    try decodeInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("webm: truncated payload")
-    }
+    guarded("webm")(decodeInner(d))
   }
 
   private final class TrackCtx {
@@ -82,7 +78,7 @@ object WebmMeta {
     def readId(): Long = {
       val b0 = d(pos) & 0xff
       val n = Integer.numberOfLeadingZeros(b0) - 24 + 1
-      if (n < 1 || n > 4) throw Abort(f"webm: bad element-ID lead byte 0x$b0%02x")
+      if (n < 1 || n > 4) throw Malformed(f"webm: bad element-ID lead byte 0x$b0%02x")
       var v = 0L
       var i = 0
       while (i < n) { v = (v << 8) | (d(pos + i) & 0xff); i += 1 }
@@ -94,9 +90,9 @@ object WebmMeta {
     // for the all-ones unknown size
     def readSize(): Option[Long] = {
       val b0 = d(pos) & 0xff
-      if (b0 == 0) throw Abort("webm: zero size lead byte")
+      if (b0 == 0) throw Malformed("webm: zero size lead byte")
       val n = Integer.numberOfLeadingZeros(b0) - 24 + 1
-      if (n > 8) throw Abort("webm: size varint wider than 8 bytes")
+      if (n > 8) throw Malformed("webm: size varint wider than 8 bytes")
       var v = (b0 & (0xff >>> n)).toLong
       var i = 1
       while (i < n) { v = (v << 8) | (d(pos + i) & 0xff); i += 1 }
@@ -106,7 +102,7 @@ object WebmMeta {
     }
 
     def uintAt(from: Int, len: Int): Long = {
-      if (len < 1 || len > 8) throw Abort(s"webm: uint of $len bytes")
+      if (len < 1 || len > 8) throw Malformed(s"webm: uint of $len bytes")
       var v = 0L
       var i = 0
       while (i < len) { v = (v << 8) | (d(from + i) & 0xff); i += 1 }
@@ -116,7 +112,7 @@ object WebmMeta {
     def floatAt(from: Int, len: Int): Double = len match {
       case 4 => java.lang.Float.intBitsToFloat(uintAt(from, 4).toInt).toDouble
       case 8 => java.lang.Double.longBitsToDouble(uintAt(from, 8))
-      case n => throw Abort(s"webm: float of $n bytes")
+      case n => throw Malformed(s"webm: float of $n bytes")
     }
 
     var docType = ""
@@ -131,18 +127,18 @@ object WebmMeta {
     // returns the element's end offset; size None only legal where noted
     def walk(until: Int, inside: String, track: TrackCtx): Unit = {
       while (pos < until) {
-        if (pos + 2 > until) throw Abort("webm: truncated element header")
+        if (pos + 2 > until) throw Malformed("webm: truncated element header")
         val id = readId()
         val size = readSize()
         val end = size match {
           case Some(n) =>
             val e = pos + n
-            if (e > until) throw Abort(f"webm: element 0x$id%x runs past its parent")
+            if (e > until) throw Malformed(f"webm: element 0x$id%x runs past its parent")
             e.toInt
           case None =>
             // unknown size: only Segment (top level) and Cluster may
             if (id != 0x18538067L && id != 0x1f43b675L)
-              throw Abort(f"webm: unknown-size element 0x$id%x out of scope")
+              throw Malformed(f"webm: unknown-size element 0x$id%x out of scope")
             until
         }
         id match {
@@ -154,15 +150,15 @@ object WebmMeta {
           case 0x42f7L | 0x42f2L | 0x42f3L if inside == "ebml" =>
             // ReadVersion / MaxIDLength / MaxSizeLength
             val v = uintAt(pos, end - pos)
-            if (id == 0x42f2L && v > 4) throw Abort("webm: EBMLMaxIDLength > 4 out of scope")
-            if (id == 0x42f3L && v > 8) throw Abort("webm: EBMLMaxSizeLength > 8 out of scope")
+            if (id == 0x42f2L && v > 4) throw Malformed("webm: EBMLMaxIDLength > 4 out of scope")
+            if (id == 0x42f3L && v > 8) throw Malformed("webm: EBMLMaxSizeLength > 8 out of scope")
           case 0x18538067L => // Segment
             walk(end, "segment", null)
           case 0x1549a966L if inside == "segment" => // Info
             walk(end, "info", null)
           case 0x2ad7b1L if inside == "info" => // TimestampScale
             scale = uintAt(pos, end - pos)
-            if (scale <= 0) throw Abort("webm: TimestampScale is zero")
+            if (scale <= 0) throw Malformed("webm: TimestampScale is zero")
           case 0x4489L if inside == "info" => // Duration (float)
             durationTicks = floatAt(pos, end - pos)
           case 0x1654ae6bL if inside == "segment" => // Tracks
@@ -200,23 +196,23 @@ object WebmMeta {
           case 0xa3L if inside == "cluster" => // SimpleBlock header only
             // track number: EBML varint (marker stripped, like sizes),
             // then a SIGNED 16-bit big-endian relative timestamp
-            if (pos >= end) throw Abort("webm: empty SimpleBlock")
+            if (pos >= end) throw Malformed("webm: empty SimpleBlock")
             val b0 = d(pos) & 0xff
-            if (b0 == 0) throw Abort("webm: zero SimpleBlock track varint")
+            if (b0 == 0) throw Malformed("webm: zero SimpleBlock track varint")
             val n = Integer.numberOfLeadingZeros(b0) - 24 + 1
-            if (pos + n + 2 > end) throw Abort("webm: truncated SimpleBlock header")
-            lastRel = (((d(pos + n) & 0xff) << 8) | (d(pos + n + 1) & 0xff)).toShort.toLong
+            if (pos + n + 2 > end) throw Malformed("webm: truncated SimpleBlock header")
+            lastRel = u16be(d, pos + n).toShort.toLong
           case 0xa0L if inside == "cluster" => // BlockGroup (r20)
             walk(end, "blockgroup", null)
           case 0xa1L if inside == "blockgroup" =>
             // Block: the same header layout as SimpleBlock (the
             // flags byte differs — never read here)
-            if (pos >= end) throw Abort("webm: empty Block")
+            if (pos >= end) throw Malformed("webm: empty Block")
             val b0 = d(pos) & 0xff
-            if (b0 == 0) throw Abort("webm: zero Block track varint")
+            if (b0 == 0) throw Malformed("webm: zero Block track varint")
             val n = Integer.numberOfLeadingZeros(b0) - 24 + 1
-            if (pos + n + 2 > end) throw Abort("webm: truncated Block header")
-            lastRel = (((d(pos + n) & 0xff) << 8) | (d(pos + n + 1) & 0xff)).toShort.toLong
+            if (pos + n + 2 > end) throw Malformed("webm: truncated Block header")
+            lastRel = u16be(d, pos + n).toShort.toLong
           case _ => () // Cluster / SeekHead / Cues / unknown: skip whole
         }
         pos = end

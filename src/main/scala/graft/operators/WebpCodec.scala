@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.bytes.Bytes._
+
 /** WebP (VP8L lossless) decode — after PNG/JPEG/GIF/BMP the last
   * common web image format, dependency-free on the same precedent as
   * the siblings (the reference sniffs and decodes its own inputs
@@ -55,8 +57,6 @@ object WebpCodec {
     d.length >= 16 && d(0) == 'R' && d(1) == 'I' && d(2) == 'F' && d(3) == 'F' &&
       d(8) == 'W' && d(9) == 'E' && d(10) == 'B' && d(11) == 'P'
 
-  private final case class WebpAbort(msg: String) extends RuntimeException(msg)
-
   /** CL-code transmission order (spec 5.2.2). */
   private val ClOrder: Array[Int] =
     Array(17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
@@ -90,7 +90,7 @@ object WebpCodec {
     private var n = 0
     def bits(k: Int): Int = {
       while (n < k) {
-        if (pos >= end) throw WebpAbort("webp: bitstream exhausted")
+        if (pos >= end) throw Malformed("webp: bitstream exhausted")
         acc |= (d(pos) & 0xffL) << n
         pos += 1
         n += 8
@@ -115,16 +115,16 @@ object WebpCodec {
     private var right: Array[Int] = null
     locally {
       val used = lengths.zipWithIndex.filter(_._1 > 0)
-      if (used.isEmpty) throw WebpAbort("webp: empty prefix code")
+      if (used.isEmpty) throw Malformed("webp: empty prefix code")
       if (used.length == 1) single = used(0)._2
       else {
         var kraft = 0.0
         used.foreach { case (l, _) =>
-          if (l > 15) throw WebpAbort(s"webp: code length $l > 15")
+          if (l > 15) throw Malformed(s"webp: code length $l > 15")
           kraft += 1.0 / (1L << l)
         }
         if (math.abs(kraft - 1.0) > 1e-12)
-          throw WebpAbort("webp: prefix code not complete")
+          throw Malformed("webp: prefix code not complete")
         val maxNodes = 2 * used.length + 16
         left = Array.fill(maxNodes)(0)
         right = Array.fill(maxNodes)(0)
@@ -166,7 +166,7 @@ object WebpCodec {
       while (true) {
         val nxt = if (br.bit() == 0) left(node) else right(node)
         if (nxt < 0) return -nxt - 1
-        if (nxt == 0) throw WebpAbort("webp: invalid prefix code walk")
+        if (nxt == 0) throw Malformed("webp: invalid prefix code walk")
         node = nxt
       }
       -1 // unreachable
@@ -181,10 +181,10 @@ object WebpCodec {
     if (br.bit() == 1) { // simple
       val numSyms = br.bit() + 1
       val first = if (br.bit() == 1) br.bits(8) else br.bits(1)
-      if (first >= alphabetSize) throw WebpAbort("webp: simple-code symbol out of range")
+      if (first >= alphabetSize) throw Malformed("webp: simple-code symbol out of range")
       if (numSyms == 2) {
         val second = br.bits(8)
-        if (second >= alphabetSize) throw WebpAbort("webp: simple-code symbol out of range")
+        if (second >= alphabetSize) throw Malformed("webp: simple-code symbol out of range")
         lengths(first) = 1
         lengths(second) = 1
       } else lengths(first) = 1
@@ -214,10 +214,10 @@ object WebpCodec {
             case 16 => (3 + br.bits(2), prevLen)
             case 17 => (3 + br.bits(3), 0)
             case 18 => (11 + br.bits(7), 0)
-            case _ => throw WebpAbort(s"webp: bad code-length symbol $cl")
+            case _ => throw Malformed(s"webp: bad code-length symbol $cl")
           }
           if (sym + rep > alphabetSize)
-            throw WebpAbort("webp: code-length repeat overruns alphabet")
+            throw Malformed("webp: code-length repeat overruns alphabet")
           var r = 0
           while (r < rep) { lengths(sym) = fill; sym += 1; r += 1 }
         }
@@ -237,24 +237,17 @@ object WebpCodec {
   /** Decode the first VP8L image to (stats, aHash grid grays). */
   def decode(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
     if (!sniff(d)) return Left("webp: missing RIFF/WEBP signature")
-    try decodeInner(d)
-    catch {
-      case WebpAbort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("webp: truncated payload")
-    }
+    guarded("webp")(decodeInner(d))
   }
 
   private def decodeInner(d: Array[Byte]): Either[String, (ImageStats, Array[Int])] = {
-    def u32le(o: Int): Long =
-      (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-        ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
     // RIFF chunk walk to VP8L
     var pos = 12
     var payload = -1
     var payloadEnd = -1
     while (payload < 0 && pos + 8 <= d.length) {
       val fourcc = new String(d, pos, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val size = u32le(pos + 4)
+      val size = u32le(d, pos + 4)
       if (size > d.length) return Left("webp: chunk size overruns file")
       fourcc match {
         case "VP8L" =>
@@ -360,7 +353,7 @@ object WebpCodec {
       var seen = 0
       while (br.bit() == 1) {
         val t = br.bits(2)
-        if ((seen & (1 << t)) != 0) throw WebpAbort("webp: duplicate transform")
+        if ((seen & (1 << t)) != 0) throw Malformed("webp: duplicate transform")
         seen |= 1 << t
         t match {
           case 2 => transforms += Xform(2, 0, xsize, null) // subtract-green
@@ -385,11 +378,11 @@ object WebpCodec {
       }
     }
     val nPx = xsize.toLong * ysize
-    if (nPx > (1L << 26)) throw WebpAbort("webp: raster too large for buffering")
-    if (nPx <= 0) throw WebpAbort("webp: empty image stream")
+    if (nPx > (1L << 26)) throw Malformed("webp: raster too large for buffering")
+    if (nPx <= 0) throw Malformed("webp: empty image stream")
 
     val cacheBits = if (br.bit() == 1) br.bits(4) else 0
-    if (cacheBits > 11) throw WebpAbort(s"webp: bad color-cache bits $cacheBits")
+    if (cacheBits > 11) throw Malformed(s"webp: bad color-cache bits $cacheBits")
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     val cache = if (cacheSize > 0) new Array[Int](cacheSize) else null
 
@@ -461,8 +454,8 @@ object WebpCodec {
             dy * xsize + dx
           }
         val dist = math.max(1, dist0)
-        if (dist > i) throw WebpAbort("webp: LZ77 distance before image start")
-        if (i + len > nPx) throw WebpAbort("webp: LZ77 run overruns raster")
+        if (dist > i) throw Malformed("webp: LZ77 distance before image start")
+        if (i + len > nPx) throw Malformed("webp: LZ77 run overruns raster")
         var k = 0
         while (k < len) {
           px(i + k) = px(i + k - dist)
@@ -471,7 +464,7 @@ object WebpCodec {
         }
         advance(len)
       } else {
-        if (cache == null) throw WebpAbort("webp: cache reference without a color cache")
+        if (cache == null) throw Malformed("webp: cache reference without a color cache")
         val argb = cache(g - 256 - 24)
         px(i) = argb
         insertCache(argb) // a re-insert of the same slot, per spec
@@ -511,7 +504,7 @@ object WebpCodec {
       while (x < fullW) {
         val unit = packed(y * packedW + (x >> widthBits))
         val idx = (((unit >>> 8) & 0xff) >> (bitsPer * (x & (perUnit - 1)))) & mask
-        if (idx >= pal.length) throw WebpAbort("webp: palette index out of range")
+        if (idx >= pal.length) throw Malformed("webp: palette index out of range")
         out(y * fullW + x) = pal(idx)
         x += 1
       }
@@ -605,7 +598,7 @@ object WebpCodec {
               case 11 => select(top, left, tl)
               case 12 => clampAddSubFull(left, top, tl)
               case 13 => clampAddSubHalf(avg2(left, top), tl)
-              case m => throw WebpAbort(s"webp: bad predictor mode $m")
+              case m => throw Malformed(s"webp: bad predictor mode $m")
             }
           }
         px(idx) = addPixels(px(idx), pred)
@@ -746,16 +739,16 @@ object WebpCodec {
     val out = new java.io.ByteArrayOutputStream(payload.length + 24)
     def ascii(s: String): Unit =
       out.write(s.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    def u32le(v: Int): Unit = {
+    def put32le(v: Int): Unit = {
       out.write(v & 0xff); out.write((v >> 8) & 0xff)
       out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
     }
     val padded = payload.length + (payload.length & 1)
     ascii("RIFF")
-    u32le(4 + 8 + padded)
+    put32le(4 + 8 + padded)
     ascii("WEBP")
     ascii("VP8L")
-    u32le(payload.length)
+    put32le(payload.length)
     out.write(payload)
     if ((payload.length & 1) == 1) out.write(0)
     out.toByteArray

@@ -3,13 +3,14 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.bytes.Bytes._
 import graft.operators.Media
 
 /** Archive container sources — ZIP and TAR (ustar), the two wrappers
   * crawl and data-drop payloads overwhelmingly arrive in (WARC sits a
   * level up; gzip members are [[Warc]]'s job). Dependency-free on the
   * JDK-only precedent of the sibling codecs: DEFLATE entries ride
-  * `java.util.zip.Inflater` in raw (nowrap) mode, CRC-32 verification
+  * the shared capped `graft.bytes.Bytes.inflate` in raw mode, CRC-32 verification
   * rides `java.util.zip.CRC32`.
   *
   * ZIP, IN scope:
@@ -92,8 +93,6 @@ object Archive {
     d.length >= 512 && d(257) == 'u' && d(258) == 's' && d(259) == 't' &&
       d(260) == 'a' && d(261) == 'r'
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   // --------------------------------------------------------------- ZIP
 
   /** Extract all regular-file entries of a ZIP archive. */
@@ -105,65 +104,54 @@ object Archive {
     * census rows can split the format family.
     */
   def readZipDetailed(d: Array[Byte]): Either[String, (Boolean, Seq[EntryRec])] = {
-    try Right(readZipInner(d))
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("zip: truncated payload")
-      case _: NegativeArraySizeException => Left("zip: negative length field")
-    }
+    guarded("zip")(Right(readZipInner(d)))
   }
 
   private def readZipInner(d: Array[Byte]): (Boolean, Seq[EntryRec]) = {
-    def u16(o: Int): Int = (d(o) & 0xff) | ((d(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long =
-      (d(o) & 0xffL) | ((d(o + 1) & 0xffL) << 8) |
-        ((d(o + 2) & 0xffL) << 16) | ((d(o + 3) & 0xffL) << 24)
-    def u64(o: Int): Long = u32(o) | (u32(o + 4) << 32)
-
     // EOCD: backward scan over the comment window (<= 64 KiB + 22)
     val lo = math.max(0, d.length - 65557)
     var eocd = -1
     var p = d.length - 22
     while (p >= lo && eocd < 0) {
       if (d(p) == 'P' && d(p + 1) == 'K' && d(p + 2) == 5 && d(p + 3) == 6 &&
-        u16(p + 20) == d.length - (p + 22)) eocd = p
+        u16le(d, p + 20) == d.length - (p + 22)) eocd = p
       p -= 1
     }
-    if (eocd < 0) throw Abort("zip: no end-of-central-directory record")
-    var nEntries: Long = u16(eocd + 10)
-    var cdOff: Long = u32(eocd + 16)
+    if (eocd < 0) throw Malformed("zip: no end-of-central-directory record")
+    var nEntries: Long = u16le(d, eocd + 10)
+    var cdOff: Long = u32le(d, eocd + 16)
     val zip64 = nEntries == 0xffffL || cdOff == 0xffffffffL
     if (zip64) {
       // Zip64 EOCD locator sits immediately before the EOCD record
       val loc = eocd - 20
-      if (loc < 0 || u32(loc) != 0x07064b50L)
-        throw Abort("zip: masked EOCD without a Zip64 locator")
-      if (u32(loc + 4) != 0L || u32(loc + 16) != 1L)
-        throw Abort("zip: multi-disk Zip64 archives are out of scope")
-      val z64 = u64(loc + 8)
-      if (z64 < 0 || z64 + 56 > loc) throw Abort("zip: Zip64 EOCD offset out of range")
+      if (loc < 0 || u32le(d, loc) != 0x07064b50L)
+        throw Malformed("zip: masked EOCD without a Zip64 locator")
+      if (u32le(d, loc + 4) != 0L || u32le(d, loc + 16) != 1L)
+        throw Malformed("zip: multi-disk Zip64 archives are out of scope")
+      val z64 = u64le(d, loc + 8)
+      if (z64 < 0 || z64 + 56 > loc) throw Malformed("zip: Zip64 EOCD offset out of range")
       val z = z64.toInt
-      if (u32(z) != 0x06064b50L) throw Abort("zip: bad Zip64 EOCD signature")
-      nEntries = u64(z + 32) // total entries, all disks
-      cdOff = u64(z + 48)
-      if (cdOff < 0 || cdOff > d.length) throw Abort("zip: Zip64 directory offset out of range")
+      if (u32le(d, z) != 0x06064b50L) throw Malformed("zip: bad Zip64 EOCD signature")
+      nEntries = u64le(d, z + 32) // total entries, all disks
+      cdOff = u64le(d, z + 48)
+      if (cdOff < 0 || cdOff > d.length) throw Malformed("zip: Zip64 directory offset out of range")
     }
 
     val out = Vector.newBuilder[EntryRec]
     var c = cdOff.toInt
     var i = 0L
     while (i < nEntries) {
-      if (u32(c) != 0x02014b50L) throw Abort("zip: bad central-directory signature")
-      val flags = u16(c + 8)
-      if ((flags & 1) != 0) throw Abort("zip: encrypted entries are out of scope")
-      val method = u16(c + 10)
-      val crc = u32(c + 16)
-      var compSize = u32(c + 20)
-      var uncompSize = u32(c + 24)
-      val nameLen = u16(c + 28)
-      val extraLen = u16(c + 30)
-      val commentLen = u16(c + 32)
-      var localOff = u32(c + 42)
+      if (u32le(d, c) != 0x02014b50L) throw Malformed("zip: bad central-directory signature")
+      val flags = u16le(d, c + 8)
+      if ((flags & 1) != 0) throw Malformed("zip: encrypted entries are out of scope")
+      val method = u16le(d, c + 10)
+      val crc = u32le(d, c + 16)
+      var compSize = u32le(d, c + 20)
+      var uncompSize = u32le(d, c + 24)
+      val nameLen = u16le(d, c + 28)
+      val extraLen = u16le(d, c + 30)
+      val commentLen = u16le(d, c + 32)
+      var localOff = u32le(d, c + 42)
       if (compSize == 0xffffffffL || uncompSize == 0xffffffffL ||
         localOff == 0xffffffffL) {
         // Zip64 extended-information extra (id 0x0001): only the
@@ -172,14 +160,14 @@ object Archive {
         val extraEnd = e + extraLen
         var found = false
         while (e + 4 <= extraEnd && !found) {
-          val id = u16(e)
-          val sz = u16(e + 2)
+          val id = u16le(d, e)
+          val sz = u16le(d, e + 2)
           if (id == 1) {
             var q = e + 4
             val fieldEnd = e + 4 + sz
             def take64(): Long = {
-              if (q + 8 > fieldEnd) throw Abort("zip: Zip64 extra too short")
-              val v = u64(q); q += 8; v
+              if (q + 8 > fieldEnd) throw Malformed("zip: Zip64 extra too short")
+              val v = u64le(d, q); q += 8; v
             }
             if (uncompSize == 0xffffffffL) uncompSize = take64()
             if (compSize == 0xffffffffL) compSize = take64()
@@ -187,60 +175,44 @@ object Archive {
             found = true
           } else e += 4 + sz
         }
-        if (!found) throw Abort("zip: masked entry without a Zip64 extra")
+        if (!found) throw Malformed("zip: masked entry without a Zip64 extra")
         // extraction materializes a byte array: entries beyond the
         // 2 GiB row-cell bound are a named Left, not an allocation
         if (compSize > Int.MaxValue || uncompSize > Int.MaxValue)
-          throw Abort("zip: Zip64 entry exceeds the 2 GiB row-cell bound")
+          throw Malformed("zip: Zip64 entry exceeds the 2 GiB row-cell bound")
         if (localOff > Int.MaxValue || localOff < 0)
-          throw Abort("zip: Zip64 local offset out of range")
+          throw Malformed("zip: Zip64 local offset out of range")
       }
       // bound the variable-length tail BEFORE the String copy: a
       // corrupt nameLen reaches the String constructor as an uncaught
       // StringIndexOutOfBoundsException otherwise (fuzz-caught, r19)
       if (c + 46 + nameLen + extraLen + commentLen > d.length)
-        throw Abort("zip: central record runs past EOF")
+        throw Malformed("zip: central record runs past EOF")
       val name = new String(d, c + 46, nameLen, java.nio.charset.StandardCharsets.UTF_8)
       c += 46 + nameLen + extraLen + commentLen
       i += 1
       if (!name.endsWith("/")) { // regular files only
         // local header gives the data offset; sizes come from central
         val lh = localOff.toInt
-        if (u32(lh) != 0x04034b50L) throw Abort(s"zip: bad local header for $name")
-        val dataOff = lh + 30 + u16(lh + 26) + u16(lh + 28)
-        if (dataOff + compSize > d.length) throw Abort(s"zip: $name data runs past EOF")
-        val raw = java.util.Arrays.copyOfRange(d, dataOff, dataOff + compSize.toInt)
+        if (u32le(d, lh) != 0x04034b50L) throw Malformed(s"zip: bad local header for $name")
+        val dataOff = lh + 30 + u16le(d, lh + 26) + u16le(d, lh + 28)
+        if (dataOff + compSize > d.length) throw Malformed(s"zip: $name data runs past EOF")
         val (methodName, bytes) = method match {
-          case 0 => ("stored", raw)
-          case 8 => ("deflate", inflateRaw(raw, uncompSize.toInt))
-          case m => throw Abort(s"zip: compression method $m is out of scope")
+          case 0 => ("stored", java.util.Arrays.copyOfRange(d, dataOff, dataOff + compSize.toInt))
+          case 8 =>
+            capped("zip", s"$name uncompressed size", uncompSize)
+            ("deflate", inflate("zip", d, dataOff, compSize.toInt, Raw)
+              .fold(r => throw Malformed(s"zip: $r"), identity))
+          case m => throw Malformed(s"zip: compression method $m is out of scope")
         }
         if (bytes.length != uncompSize)
-          throw Abort(s"zip: $name extracted ${bytes.length} of $uncompSize bytes")
+          throw Malformed(s"zip: $name extracted ${bytes.length} of $uncompSize bytes")
         val check = new java.util.zip.CRC32()
         check.update(bytes)
         out += EntryRec(name, methodName, compSize, uncompSize, check.getValue == crc, bytes)
       }
     }
     (zip64, out.result())
-  }
-
-  private def inflateRaw(raw: Array[Byte], expect: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true) // nowrap: ZIP stores raw DEFLATE
-    try {
-      inf.setInput(raw)
-      val out = new Array[Byte](expect)
-      var off = 0
-      while (off < expect && !inf.finished()) {
-        val n = inf.inflate(out, off, expect - off)
-        if (n == 0 && inf.needsInput()) throw Abort("zip: DEFLATE stream truncated")
-        off += n
-      }
-      if (off != expect) throw Abort(s"zip: inflated $off of $expect bytes")
-      out
-    } catch {
-      case _: java.util.zip.DataFormatException => throw Abort("zip: malformed DEFLATE stream")
-    } finally inf.end()
   }
 
   /** Build a ZIP archive: local headers with up-front sizes, raw
@@ -256,8 +228,8 @@ object Archive {
   def zipBytes(entries: Seq[(String, Array[Byte], Boolean)],
       zip64: Boolean = false): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Long): Unit = {
+    def put16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
+    def put32(v: Long): Unit = {
       out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
       out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
     }
@@ -281,45 +253,45 @@ object Archive {
           } finally defl.end()
         }
       val off = out.size()
-      u32(0x04034b50L); u16(20); u16(0); u16(if (deflate) 8 else 0)
-      u16(0); u16(0) // DOS time/date: zero (deterministic artifacts)
-      u32(crc.getValue); u32(stored.length.toLong); u32(data.length.toLong)
-      u16(nameB.length); u16(0)
+      put32(0x04034b50L); put16(20); put16(0); put16(if (deflate) 8 else 0)
+      put16(0); put16(0) // DOS time/date: zero (deterministic artifacts)
+      put32(crc.getValue); put32(stored.length.toLong); put32(data.length.toLong)
+      put16(nameB.length); put16(0)
       out.write(nameB); out.write(stored)
       Central(nameB, if (deflate) 8 else 0, crc.getValue, stored.length, data.length, off)
     }
-    def u64(v: Long): Unit = { u32(v & 0xffffffffL); u32(v >>> 32) }
+    def put64(v: Long): Unit = { put32(v & 0xffffffffL); put32(v >>> 32) }
     val cdStart = out.size()
     centrals.foreach { ce =>
-      u32(0x02014b50L); u16(if (zip64) 45 else 20); u16(if (zip64) 45 else 20)
-      u16(0); u16(ce.method)
-      u16(0); u16(0)
-      u32(ce.crc)
-      if (zip64) { u32(0xffffffffL); u32(0xffffffffL) }
-      else { u32(ce.comp.toLong); u32(ce.uncomp.toLong) }
-      u16(ce.name.length); u16(if (zip64) 28 else 0); u16(0); u16(0); u16(0)
-      u32(0L); u32(if (zip64) 0xffffffffL else ce.off.toLong)
+      put32(0x02014b50L); put16(if (zip64) 45 else 20); put16(if (zip64) 45 else 20)
+      put16(0); put16(ce.method)
+      put16(0); put16(0)
+      put32(ce.crc)
+      if (zip64) { put32(0xffffffffL); put32(0xffffffffL) }
+      else { put32(ce.comp.toLong); put32(ce.uncomp.toLong) }
+      put16(ce.name.length); put16(if (zip64) 28 else 0); put16(0); put16(0); put16(0)
+      put32(0L); put32(if (zip64) 0xffffffffL else ce.off.toLong)
       out.write(ce.name)
       if (zip64) { // 0x0001 extra: uncomp, comp, offset (all masked)
-        u16(1); u16(24)
-        u64(ce.uncomp.toLong); u64(ce.comp.toLong); u64(ce.off.toLong)
+        put16(1); put16(24)
+        put64(ce.uncomp.toLong); put64(ce.comp.toLong); put64(ce.off.toLong)
       }
     }
     val cdSize = out.size() - cdStart
     if (zip64) {
       val z64At = out.size()
-      u32(0x06064b50L); u64(44L) // record size after this field
-      u16(45); u16(45); u32(0L); u32(0L)
-      u64(centrals.size.toLong); u64(centrals.size.toLong)
-      u64(cdSize.toLong); u64(cdStart.toLong)
-      u32(0x07064b50L); u32(0L); u64(z64At.toLong); u32(1L) // locator
-      u32(0x06054b50L); u16(0); u16(0)
-      u16(0xffff); u16(0xffff)
-      u32(0xffffffffL); u32(0xffffffffL); u16(0)
+      put32(0x06064b50L); put64(44L) // record size after this field
+      put16(45); put16(45); put32(0L); put32(0L)
+      put64(centrals.size.toLong); put64(centrals.size.toLong)
+      put64(cdSize.toLong); put64(cdStart.toLong)
+      put32(0x07064b50L); put32(0L); put64(z64At.toLong); put32(1L) // locator
+      put32(0x06054b50L); put16(0); put16(0)
+      put16(0xffff); put16(0xffff)
+      put32(0xffffffffL); put32(0xffffffffL); put16(0)
     } else {
-      u32(0x06054b50L); u16(0); u16(0)
-      u16(centrals.size); u16(centrals.size)
-      u32(cdSize.toLong); u32(cdStart.toLong); u16(0)
+      put32(0x06054b50L); put16(0); put16(0)
+      put16(centrals.size); put16(centrals.size)
+      put32(cdSize.toLong); put32(cdStart.toLong); put16(0)
     }
     out.toByteArray
   }
@@ -328,11 +300,7 @@ object Archive {
 
   /** Extract all regular-file entries of a ustar TAR archive. */
   def readTar(d: Array[Byte]): Either[String, Seq[EntryRec]] = {
-    try Right(readTarInner(d))
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("tar: truncated payload")
-    }
+    guarded("tar")(Right(readTarInner(d)))
   }
 
   /** Parse a pax extended-header payload: "%d key=value\n" records
@@ -348,17 +316,17 @@ object Archive {
       var len = 0
       while (q < until && d(q) != ' ') {
         val ch = d(q) & 0xff
-        if (ch < '0' || ch > '9') throw Abort("tar: bad pax record length")
+        if (ch < '0' || ch > '9') throw Malformed("tar: bad pax record length")
         len = len * 10 + (ch - '0')
-        if (len > until - from) throw Abort("tar: pax record length overrun")
+        if (len > until - from) throw Malformed("tar: pax record length overrun")
         q += 1
       }
       if (q >= until || len < q - p + 2 || p + len > until || d(p + len - 1) != '\n')
-        throw Abort("tar: pax record framing")
+        throw Malformed("tar: pax record framing")
       val body = new String(d, q + 1, p + len - 1 - (q + 1),
         java.nio.charset.StandardCharsets.UTF_8)
       val eq = body.indexOf('=')
-      if (eq < 0) throw Abort("tar: pax record without '='")
+      if (eq < 0) throw Malformed("tar: pax record without '='")
       m += body.substring(0, eq) -> body.substring(eq + 1)
       p += len
     }
@@ -399,7 +367,7 @@ object Archive {
             v = (d(p + off) & 0x7fL)
             i = off + 1
             while (i < off + len) {
-              if (v > (Long.MaxValue >> 8)) throw Abort("tar: base-256 field overflows")
+              if (v > (Long.MaxValue >> 8)) throw Malformed("tar: base-256 field overflows")
               v = (v << 8) | (d(p + i) & 0xffL)
               i += 1
             }
@@ -408,7 +376,7 @@ object Archive {
           while (i < off + len) {
             val ch = d(p + i) & 0xff
             if (ch >= '0' && ch <= '7') v = v * 8 + (ch - '0')
-            else if (ch != ' ' && ch != 0) throw Abort(s"tar: bad octal digit '${ch.toChar}'")
+            else if (ch != ' ' && ch != 0) throw Malformed(s"tar: bad octal digit '${ch.toChar}'")
             i += 1
           }
           v
@@ -440,12 +408,12 @@ object Archive {
               // near-Long.MaxValue size overflows dataStart + size
               // negative, bypassing the EOF check below
               if (s.isEmpty || s.length > 18 || !s.forall(c => c >= '0' && c <= '9'))
-                throw Abort("tar: bad pax size value")
+                throw Malformed("tar: bad pax size value")
               s.toLong
             }.getOrElse(headerSize)
           else headerSize
         val blocks = ((size + 511) / 512).toInt
-        if (dataStart + size > d.length) throw Abort(s"tar: $name data runs past EOF")
+        if (dataStart + size > d.length) throw Malformed(s"tar: $name data runs past EOF")
         if (typeflag == '0' || typeflag == 0) {
           val bytes = java.util.Arrays.copyOfRange(d, dataStart, dataStart + size.toInt)
           // name precedence: pax 'x' path > GNU 'L' > pax 'g' path >

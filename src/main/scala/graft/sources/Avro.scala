@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.bytes.Bytes._
 import graft.operators.Media
 
 /** Avro object-container reader — the data-lake interchange format
@@ -66,16 +67,9 @@ object Avro {
   def sniff(d: Array[Byte]): Boolean =
     d.length >= 4 && d(0) == 'O' && d(1) == 'b' && d(2) == 'j' && d(3) == 1
 
-  private final case class Abort(msg: String) extends RuntimeException(msg)
-
   def read(d: Array[Byte]): Either[String, AvroFile] = {
     if (!sniff(d)) return Left("avro: missing Obj\\x01 magic")
-    try readInner(d)
-    catch {
-      case Abort(m) => Left(m)
-      case _: ArrayIndexOutOfBoundsException => Left("avro: truncated payload")
-      case _: NegativeArraySizeException => Left("avro: negative length field")
-    }
+    guarded("avro")(readInner(d))
   }
 
   private final class Reader(d: Array[Byte], var pos: Int) {
@@ -89,7 +83,7 @@ object Avro {
         acc |= (b & 0x7fL) << shift
         shift += 7
         more = (b & 0x80) != 0
-        if (shift > 70) throw Abort("avro: varint overrun")
+        if (shift > 70) throw Malformed("avro: varint overrun")
       }
       (acc >>> 1) ^ -(acc & 1L)
     }
@@ -97,8 +91,8 @@ object Avro {
       // a negative zigzag length (-1 encodes as varint 1) passes the
       // pos + n > d.length bound and copyOfRange then throws
       // IllegalArgumentException, which read() does not catch
-      if (n < 0) throw Abort(s"avro: negative length $n")
-      if (pos + n > d.length) throw Abort("avro: truncated byte run")
+      if (n < 0) throw Malformed(s"avro: negative length $n")
+      if (pos + n > d.length) throw Malformed("avro: truncated byte run")
       val r = java.util.Arrays.copyOfRange(d, pos, pos + n)
       pos += n
       r
@@ -146,20 +140,19 @@ object Avro {
       if (!java.util.Arrays.equals(blockSync, sync))
         return Left("avro: block sync marker mismatch")
       val body = codec match {
-        case "deflate" => inflateRaw(raw)
+        case "deflate" =>
+          inflate("avro", raw, 0, raw.length, Raw).fold(r => throw Malformed(s"avro: $r"), identity)
         case "snappy" =>
           // Avro spec: raw snappy block + 4-byte BE CRC32 of the
           // UNCOMPRESSED bytes
-          if (raw.length < 4) throw Abort("avro: snappy block under CRC size")
+          if (raw.length < 4) throw Malformed("avro: snappy block under CRC size")
           val un =
             try Snappy.decompress(java.util.Arrays.copyOfRange(raw, 0, raw.length - 4))
-            catch { case Snappy.Malformed(m) => throw Abort(s"avro: $m") }
+            catch { case Malformed(m) => throw Malformed(s"avro: $m") }
           val crc = new java.util.zip.CRC32()
           crc.update(un)
-          val stored = ((raw(raw.length - 4) & 0xffL) << 24) |
-            ((raw(raw.length - 3) & 0xffL) << 16) |
-            ((raw(raw.length - 2) & 0xffL) << 8) | (raw(raw.length - 1) & 0xffL)
-          if (crc.getValue != stored) throw Abort("avro: snappy block CRC mismatch")
+          if (crc.getValue != u32be(raw, raw.length - 4))
+            throw Malformed("avro: snappy block CRC mismatch")
           un
         case _ => raw
       }
@@ -172,19 +165,19 @@ object Avro {
           if (b == 1) "true" else "false"
         case "double" =>
           val p = br.pos; br.pos += 8
-          if (br.pos > body.length) throw Abort("avro: truncated double")
+          if (br.pos > body.length) throw Malformed("avro: truncated double")
           var v = 0L
           var k = 7
           while (k >= 0) { v = (v << 8) | (body(p + k) & 0xffL); k -= 1 }
           java.lang.Double.longBitsToDouble(v).toString
         case "float" =>
           val p = br.pos; br.pos += 4
-          if (br.pos > body.length) throw Abort("avro: truncated float")
+          if (br.pos > body.length) throw Malformed("avro: truncated float")
           var v = 0
           var k = 3
           while (k >= 0) { v = (v << 8) | (body(p + k) & 0xff); k -= 1 }
           java.lang.Float.intBitsToFloat(v).toString
-        case t => throw Abort(s"avro: field type $t out of scope")
+        case t => throw Malformed(s"avro: field type $t out of scope")
       }
       var i = 0L
       while (i < cnt) {
@@ -201,7 +194,7 @@ object Avro {
             val b = br.varLong()
             if (b == nullIdx) ()
             else if (b == 1 - nullIdx) vals += name -> prim(tpe.substring(7))
-            else throw Abort(s"avro: union branch $b out of range")
+            else throw Malformed(s"avro: union branch $b out of range")
           } else if (tpe.startsWith("array:")) {
             val item = tpe.stripPrefix("array:")
             val sb = new StringBuilder
@@ -239,7 +232,7 @@ object Avro {
             val syms = tpe.stripPrefix("enum:").split('|')
             val idx = br.varLong()
             if (idx < 0 || idx >= syms.length)
-              throw Abort(s"avro: enum index $idx out of range for $name")
+              throw Malformed(s"avro: enum index $idx out of range for $name")
             vals += name -> syms(idx.toInt)
           } else if (tpe.startsWith("fixed:")) {
             val n = tpe.stripPrefix("fixed:").toInt
@@ -273,7 +266,7 @@ object Avro {
 
   private def parseJson(text: String): Jv = {
     var i = 0
-    def fail(msg: String): Nothing = throw Abort(s"avro: schema JSON $msg at $i")
+    def fail(msg: String): Nothing = throw Malformed(s"avro: schema JSON $msg at $i")
     def ws(): Unit = while (i < text.length && text.charAt(i).isWhitespace) i += 1
     def expect(c: Char): Unit = {
       ws()
@@ -389,16 +382,16 @@ object Avro {
         case _ => return Left("avro: schema has no name")
       }
       def fieldsOf(rec: Jo, prefix: String, depth: Int): Seq[(String, String)] = {
-        if (depth > 8) throw Abort("avro: record nesting deeper than 8 out of scope")
+        if (depth > 8) throw Malformed("avro: record nesting deeper than 8 out of scope")
         val fs = get(rec, "fields") match {
           case Some(Ja(items)) => items
-          case _ => throw Abort("avro: record without a fields array")
+          case _ => throw Malformed("avro: record without a fields array")
         }
         fs.flatMap {
           case fo: Jo =>
             val fname = get(fo, "name") match {
               case Some(Js(n)) => prefix + n
-              case _ => throw Abort("avro: field without a name")
+              case _ => throw Malformed("avro: field without a name")
             }
             get(fo, "type") match {
               case Some(Js(t)) if prims.contains(t) => Seq(fname -> t)
@@ -410,57 +403,40 @@ object Avro {
                 get(inner, "type") match {
                   case Some(Js("array")) => get(inner, "items") match {
                     case Some(Js(it)) if prims.contains(it) => Seq(fname -> s"array:$it")
-                    case _ => throw Abort(s"avro: array items of $fname out of scope")
+                    case _ => throw Malformed(s"avro: array items of $fname out of scope")
                   }
                   case Some(Js("record")) =>
                     fieldsOf(inner, fname + ".", depth + 1)
                   case Some(Js("map")) => get(inner, "values") match {
                     case Some(Js(vt)) if prims.contains(vt) => Seq(fname -> s"map:$vt")
-                    case _ => throw Abort(s"avro: map values of $fname out of scope")
+                    case _ => throw Malformed(s"avro: map values of $fname out of scope")
                   }
                   case Some(Js("enum")) => get(inner, "symbols") match {
                     case Some(Ja(items)) if items.nonEmpty &&
                       items.forall { case Js(s) => !s.contains('|'); case _ => false } =>
                       Seq(fname -> ("enum:" +
                         items.map { case Js(s) => s; case _ => "" }.mkString("|")))
-                    case _ => throw Abort(s"avro: enum symbols of $fname out of scope")
+                    case _ => throw Malformed(s"avro: enum symbols of $fname out of scope")
                   }
                   case Some(Js("fixed")) => get(inner, "size") match {
                     case Some(Jn(n)) if n >= 1 && n <= 1024 && n == n.toInt =>
                       Seq(fname -> s"fixed:${n.toInt}")
-                    case _ => throw Abort(s"avro: fixed size of $fname out of range")
+                    case _ => throw Malformed(s"avro: fixed size of $fname out of range")
                   }
                   case _ =>
-                    throw Abort(s"avro: field type of $fname out of scope")
+                    throw Malformed(s"avro: field type of $fname out of scope")
                 }
-              case _ => throw Abort(s"avro: field type of $fname out of scope")
+              case _ => throw Malformed(s"avro: field type of $fname out of scope")
             }
-          case _ => throw Abort("avro: fields array carries a non-object")
+          case _ => throw Malformed("avro: fields array carries a non-object")
         }
       }
       val fields = fieldsOf(root, "", 0)
       if (fields.isEmpty) return Left("avro: no fields parsed from the schema")
       Right((name, fields))
     } catch {
-      case Abort(m) => Left(m)
+      case Malformed(m) => Left(m)
     }
-  }
-
-  private def inflateRaw(raw: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(raw)
-      val out = new java.io.ByteArrayOutputStream(raw.length * 3 + 64)
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) throw Abort("avro: truncated deflate block")
-        out.write(buf, 0, n)
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => throw Abort("avro: malformed deflate block")
-    } finally inf.end()
   }
 
   // ------------------------------------------------------------ encode

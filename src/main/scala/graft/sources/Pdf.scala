@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.bytes.Bytes._
+
 /** PDF text extraction for the crawl-extraction family (q130's HTML,
   * q141's markdown — PDFs are the third text container a crawl
   * carries in volume). Dependency-free and deliberately SCOPED, the
@@ -91,7 +93,10 @@ object Pdf {
     data.length >= 5 && data(0) == '%' && data(1) == 'P' &&
       data(2) == 'D' && data(3) == 'F' && data(4) == '-'
 
-  def extractText(data: Array[Byte]): Either[String, PdfExtract] = {
+  def extractText(data: Array[Byte]): Either[String, PdfExtract] =
+    guarded("pdf")(extractInner(data))
+
+  private def extractInner(data: Array[Byte]): Either[String, PdfExtract] = {
     if (!sniff(data)) return Left("pdf: missing %PDF- header")
     // byte-preserving view: Latin-1 maps byte k to codepoint k
     val s = new String(data, java.nio.charset.StandardCharsets.ISO_8859_1)
@@ -326,7 +331,7 @@ object Pdf {
     filters.foreach { f =>
       if (cur.isDefined) f match {
         case "FlateDecode" | "Fl" if !hasPredictor =>
-          cur = inflate(cur.get, 0, cur.get.length)
+          cur = inflate("pdf", cur.get, 0, cur.get.length, Zlib).toOption
         case "ASCIIHexDecode" | "AHx" => cur = Some(asciiHexDecode(cur.get))
         case "ASCII85Decode" | "A85" => cur = ascii85Decode(cur.get)
         case "RunLengthDecode" | "RL" => cur = runLengthDecode(cur.get)
@@ -365,7 +370,7 @@ object Pdf {
           Some(CcittG3.decodeMH(bytes, w, rows, byteAlign = flag("/EncodedByteAlign")))
         else if (flag("/EndOfLine")) Some(CcittG3.decodeG3(bytes, w, rows, twoD = true))
         else None
-      } catch { case CcittG4.Malformed(_) => None }
+      } catch { case Malformed(_) => None }
     bits.flatMap { b =>
       val hdr = s"P5\n$w $rows\n255\n"
         .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
@@ -731,23 +736,6 @@ object Pdf {
     // EOD never arrived — tolerate (some writers omit it) if bits left
     // are only padding
     Some(out.toByteArray)
-  }
-
-  private def inflate(d: Array[Byte], off: Int, len: Int): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(d, off, len)
-      val out = new java.io.ByteArrayOutputStream(len * 3 + 64)
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException => return None }
-        if (n > 0) out.write(buf, 0, n)
-        else if (inf.needsInput() || inf.needsDictionary()) return None
-      }
-      Some(out.toByteArray)
-    } finally inf.end()
   }
 
   /** PDF delimiter or whitespace byte (spec §7.2.2-3): token

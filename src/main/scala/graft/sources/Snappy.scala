@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.bytes.Bytes.{Malformed, capped}
+
 /** Raw Snappy block-format codec — the fourth JDK-free decompressor
   * in the source family (after Inflater-deflate, PackBits, and LZW):
   * snappy is the most common Avro codec in the wild, and the wire
@@ -14,13 +16,12 @@ package graft.sources
   * output any decoder accepts (compression ratio is not this
   * repo's concern; correctness of the interchange is).
   *
-  * Malformed input aborts with a named reason via the caller's
-  * exception contract ([[Snappy.Malformed]]), never a raw
-  * out-of-bounds throw.
+  * Malformed input aborts with a named reason via the shared
+  * [[graft.bytes.Bytes.Malformed]], never a raw out-of-bounds throw,
+  * and a declared length over [[graft.bytes.Bytes.InflateCap]] is
+  * refused before anything is allocated.
   */
 object Snappy {
-
-  final case class Malformed(msg: String) extends RuntimeException(msg)
 
   /** Decompress a raw Snappy block (varint uncompressed length +
     * tag stream). Throws [[Malformed]] on any framing violation.
@@ -42,8 +43,7 @@ object Snappy {
       more = (b & 0x80) != 0
       if (shift > 35) throw Malformed("snappy: length varint overrun")
     }
-    if (expect > Int.MaxValue) throw Malformed(s"snappy: length $expect too large")
-    val out = new Array[Byte](expect.toInt)
+    val out = new Array[Byte](capped("snappy", "declared length", expect))
     var w = 0
     while (pos < d.length) {
       val tag = byte()

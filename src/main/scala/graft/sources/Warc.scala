@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.bytes.Bytes.{GzipMembers, guarded, inflate}
+
 /** Crawl-archive ingestion: dependency-free WARC (ISO 28500) record
   * framing plus an HTML boilerplate-strip text extractor — the first
   * stage a web-scale training corpus build runs, and the training-data
@@ -220,17 +222,12 @@ object Warc {
     * header and continues, so one read loop drains every member.
     * Decompressing all members restores exactly the uncompressed
     * archive, and [[parseArchiveBytes]]'s Content-Length framing
-    * applies unchanged.
+    * applies unchanged. A corrupt container is a Left, as is one that
+    * inflates past [[graft.bytes.Bytes.InflateCap]].
     */
-  def gunzipMembers(data: Array[Byte]): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(data), 1 << 16)
-    val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 4))
-    val buf = new Array[Byte](1 << 16)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
+  def gunzipMembers(data: Array[Byte]): Either[String, Array[Byte]] =
+    guarded("warc")(inflate("warc", data, 0, data.length, GzipMembers)
+      .left.map(r => s"warc: gzip decode failed: $r"))
 
   /** Compress bytes as ONE gzip member (fixture/adapter side of
     * [[gunzipMembers]] — concatenating these per record reproduces the
@@ -246,12 +243,23 @@ object Warc {
   private val GzMagic0 = 0x1F.toByte
   private val GzMagic1 = 0x8B.toByte
 
+  /** One archive's records. Archives whose first two bytes are the
+    * gzip magic decode through [[gunzipMembers]] first
+    * (sniff-then-decode, the reference's `.bz2` handling); a corrupt or
+    * over-cap gzip container becomes ONE error row for the archive —
+    * framing inside it is unknowable — never a task failure.
+    */
+  def parseArchive(archive: String, data: Array[Byte]): Seq[WarcRecord] =
+    if (data.length >= 2 && data(0) == GzMagic0 && data(1) == GzMagic1)
+      gunzipMembers(data) match {
+        case Right(plain) => parseArchiveBytes(archive, plain)
+        case Left(e) => Seq(WarcRecord(archive, 0, ok = false, e, "", "", "", -1L, -1, "", ""))
+      }
+    else parseArchiveBytes(archive, data)
+
   /** Frame a column of archive bytes into records: one input row per
-    * archive, exploded map-side — no shuffle, per-record O(1) state.
-    * Archives whose first two bytes are the gzip magic decode through
-    * [[gunzipMembers]] first (sniff-then-decode, the reference's `.bz2`
-    * handling); a corrupt gzip container becomes ONE error row for the
-    * archive — framing inside it is unknowable — never a task failure.
+    * archive, exploded map-side through [[parseArchive]] — no shuffle,
+    * per-record O(1) state.
     */
   def parseArchives(archives: DataFrame, nameCol: String, bytesCol: String): DataFrame = {
     val spark = archives.sparkSession
@@ -259,16 +267,7 @@ object Warc {
     archives
       .select(col(nameCol).cast("string").as("a"), col(bytesCol).as("b"))
       .as[(String, Array[Byte])]
-      .flatMap { case (a, b) =>
-        if (b.length >= 2 && b(0) == GzMagic0 && b(1) == GzMagic1) {
-          try parseArchiveBytes(a, gunzipMembers(b))
-          catch {
-            case e: java.io.IOException =>
-              Seq(WarcRecord(a, 0, ok = false,
-                s"warc: gzip decode failed: ${e.getMessage}", "", "", "", -1L, -1, "", ""))
-          }
-        } else parseArchiveBytes(a, b)
-      }
+      .flatMap { case (a, b) => parseArchive(a, b) }
       .toDF()
   }
 

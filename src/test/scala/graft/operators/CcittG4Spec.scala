@@ -69,10 +69,10 @@ class CcittG4Spec extends AnyFunSuite {
     // truncations starve the bit reader or desync a mode
     for (cut <- 0 until good.length) {
       try { CcittG4.decode(good.take(cut), 64, 4); () }
-      catch { case CcittG4.Malformed(_) => () }
+      catch { case graft.bytes.Bytes.Malformed(_) => () }
     }
     // pure garbage
-    intercept[CcittG4.Malformed] {
+    intercept[graft.bytes.Bytes.Malformed] {
       CcittG4.decode(Array.fill(16)(0.toByte), 64, 4)
     }
   }

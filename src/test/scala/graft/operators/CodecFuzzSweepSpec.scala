@@ -102,4 +102,18 @@ class CodecFuzzSweepSpec extends AnyFunSuite {
     for (m <- mutations(tar, 2006L, N)) graft.sources.Archive.readTar(m)
     for (m <- mutations(avro, 2007L, N)) graft.sources.Avro.read(m)
   }
+
+  test("warc-gz: multi-member gzip archives under mutation") {
+    import graft.sources.Warc
+    def record(id: Int, body: String): String =
+      s"WARC/1.0\r\nWARC-Type: resource\r\nWARC-Record-ID: <urn:r:$id>\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n$body\r\n\r\n"
+    val gz = (0 until 3).map(i => Warc.gzipMember(
+      record(i, s"warc fuzz body $i").getBytes("US-ASCII"))).reduce(_ ++ _)
+    assert(Warc.parseArchive("base", gz).count(_.ok) === 3)
+    for (m <- mutations(gz, 2008L, N)) {
+      val recs = Warc.parseArchive("m", m)
+      assert(recs.forall(r => r.ok || r.error.startsWith("warc")), recs.map(_.error))
+    }
+  }
 }

@@ -58,6 +58,22 @@ class PQSpec extends SparkSpec {
     assert(got.map(_.getAs[Double]("approx_d2")).toSeq === Seq(5.0, 26.0))
   }
 
+  test("pqProbe: a null query vector gets no neighbors, not distance-0 ones") {
+    import spark.implicits._
+    val vs = Seq(
+      (0L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (1L, Seq(0.0, 2.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 0.0, 3.0, 4.0))).toDF("vec_id", "embedding")
+    val cb = Array(vs.collect().map(_.getSeq[Double](1).toArray))
+    val queries = Seq((0L, Some(Seq(1.0, 0.0, 0.0, 0.0))), (9L, None))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.pqProbe(queries, Similarity.pqIndex(vs, "vec_id", "embedding", cb),
+        "vec_id", "embedding", k = 2, cb)
+      .orderBy($"query_id", $"rank").collect()
+    assert(got.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
+      r.getAs[Double]("approx_d2"))).toSeq === Seq((0L, 1L, 5.0), (0L, 2L, 26.0)))
+  }
+
   test("clustered data: ADC recovers same-cluster neighbors with high recall") {
     import spark.implicits._
     // 8 well-separated 64-dim clusters, 8 points each: the regime PQ

@@ -56,7 +56,7 @@ class R19CodecFuzzSpec extends AnyFunSuite {
     val base = graft.sources.Snappy.compressLiteral(text ++ text ++ text)
     mutations(base, 1903L, 1500).foreach { m =>
       try { graft.sources.Snappy.decompress(m); () }
-      catch { case graft.sources.Snappy.Malformed(_) => () }
+      catch { case graft.bytes.Bytes.Malformed(_) => () }
     }
   }
 

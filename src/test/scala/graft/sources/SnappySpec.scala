@@ -44,7 +44,7 @@ class SnappySpec extends AnyFunSuite {
 
   test("malformed streams throw the named Malformed, never raw OOB") {
     def mal(d: Array[Byte]): String =
-      intercept[Snappy.Malformed](Snappy.decompress(d)).msg
+      intercept[graft.bytes.Bytes.Malformed](Snappy.decompress(d)).msg
     assert(mal(Array.emptyByteArray).contains("truncated"))
     // declared length larger than the literals provide
     assert(mal(bytes(10, (3 << 2), 'a', 'b', 'c', 'd')).contains("decoded"))
