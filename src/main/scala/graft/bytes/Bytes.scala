@@ -7,8 +7,10 @@ package graft.bytes
   *
   * Readers do no bounds checks of their own: an out-of-range read
   * raises `ArrayIndexOutOfBoundsException`, which [[guarded]] maps to
-  * `"<fmt>: truncated payload"`. Every size an untrusted header or
-  * stream can make the decoder allocate is held to [[InflateCap]].
+  * `"<fmt>: truncated payload"`. Every buffer that one untrusted
+  * header field or one compressed stream can size is held to
+  * [[InflateCap]]; what a decoder keeps across streams or blocks (Avro
+  * records, PDF text) is bounded by the input, not by the cap.
   */
 object Bytes {
 
@@ -71,16 +73,22 @@ object Bytes {
   case object Zlib extends Wrap
   case object GzipMembers extends Wrap
 
+  /** The Left reason of a stream that inflates past [[InflateCap]]. */
+  val OverCap: String = s"inflated output exceeds $CapLabel"
+
   /** Inflate `d(off until off + len)`. A corrupt stream is a Left
     * reason the caller words or skips: `truncated deflate stream`,
     * `malformed deflate stream` (also a preset dictionary), or for
-    * gzip the JDK's own message. Output past [[InflateCap]] is never a
-    * Left: it throws `"<fmt>: inflated output exceeds 64 MiB"` having
-    * held at most one cap's worth of output. Bytes after the end of a
-    * raw or zlib stream are ignored.
+    * gzip the JDK's own message. At most `stopAt` bytes are inflated:
+    * a stream with more output is cut there when `stopAt` is below
+    * the cap (a ZIP entry stops at its declared size), and at the cap
+    * it is the Left reason [[OverCap]], having held at most one cap's
+    * worth of output. Bytes after the end of a raw or zlib stream are
+    * ignored.
     */
-  def inflate(fmt: String, d: Array[Byte], off: Int, len: Int,
-      wrap: Wrap): Either[String, Array[Byte]] = {
+  def inflate(d: Array[Byte], off: Int, len: Int, wrap: Wrap,
+      stopAt: Int = InflateCap): Either[String, Array[Byte]] = {
+    val limit = math.min(stopAt, InflateCap)
     val src = new java.io.ByteArrayInputStream(d, off, len)
     val inf = if (wrap == GzipMembers) null else new java.util.zip.Inflater(wrap == Raw)
     var in: java.io.InputStream = null
@@ -89,31 +97,30 @@ object Bytes {
         if (inf == null) new java.util.zip.GZIPInputStream(src, 1 << 16)
         else new java.util.zip.InflaterInputStream(src, inf, 1 << 16)
       // output lands in chunks (doubling up to 4 MiB) that are joined
-      // once at the end, so a tripped cap never copied or regrown them
+      // once at the end, so a tripped cap never copied or regrown them;
+      // one byte past `limit` is read to tell a longer stream apart
       val full = Vector.newBuilder[Array[Byte]]
-      var chunk = new Array[Byte](math.min(len.toLong * 4 + 64, 1L << 20).toInt)
+      var chunk = new Array[Byte](math.min(len.toLong * 4 + 64, math.min(1L << 20,
+        limit + 1L)).toInt)
       var at = 0
       var total = 0L
       var n = 0
-      while (n >= 0) {
+      while (n >= 0 && total <= limit) {
         if (at == chunk.length) {
           full += chunk
           chunk = new Array[Byte](math.min(chunk.length * 2L, math.min(1L << 22,
-            InflateCap + 1L - total)).toInt)
+            limit + 1L - total)).toInt)
           at = 0
         }
         n = in.read(chunk, at, chunk.length - at)
-        if (n > 0) {
-          at += n
-          total += n
-          if (total > InflateCap) throw Malformed(s"$fmt: inflated output exceeds $CapLabel")
-        }
+        if (n > 0) { at += n; total += n }
       }
       val parts = full.result()
-      if (inf != null && !inf.finished()) Left("malformed deflate stream")
-      else if (parts.isEmpty) Right(java.util.Arrays.copyOf(chunk, at))
+      if (total > InflateCap) Left(OverCap)
+      else if (total <= limit && inf != null && !inf.finished()) Left("malformed deflate stream")
+      else if (parts.isEmpty) Right(java.util.Arrays.copyOf(chunk, math.min(at, limit)))
       else {
-        val out = new Array[Byte](total.toInt)
+        val out = new Array[Byte](math.min(total, limit.toLong).toInt)
         var w = 0
         (parts :+ chunk).foreach { p =>
           val k = math.min(p.length, out.length - w)

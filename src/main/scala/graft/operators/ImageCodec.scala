@@ -397,9 +397,11 @@ object ImageCodec {
     val colorCh = if (colorType == 0 || colorType == 4) 1 else 3
     val maxval = if (bitDepth == 16) 65535 else 255
     val paletteN = if (palette == null) 0 else palette.length / 3
-    // the rows the IDAT stream must inflate to (filter byte + packed
-    // samples), checked before any row buffer is sized from IHDR
-    capped("png", "raster", height * ((width.toLong * nchan * bitDepth + 7) / 8 + 1))
+    // one scanline, then the rows the IDAT stream must inflate to
+    // (filter byte + packed samples), checked before any row buffer is
+    // sized from IHDR; the capped scanline keeps the product in range
+    val line = capped("png", "scanline", (width.toLong * nchan * bitDepth + 7) / 8)
+    capped("png", "raster", height * (line + 1L))
     // bytes of one scanline of n pixels (packed for sub-byte depths)
     def lineBytes(n: Int): Int =
       if (bitDepth >= 8) n * bpp else (n * bitDepth + 7) / 8

@@ -317,11 +317,11 @@ object TiffCodec {
       val rowBytes = w * spp
       for (s <- offsets.indices) {
         val rowsHere = math.min(rowsPerStrip, h - s * rowsPerStrip)
-        // strip buffers (and the fax decoders' bit planes) are sized by
-        // the header: checked in Long before anything is allocated
-        capped("tiff", s"strip $s", rowsHere.toLong * w * spp)
         val strip =
           if (isFax) {
+            // the fax decoders' bit planes are sized by the header:
+            // checked in Long before anything is allocated
+            capped("tiff", s"strip $s", rowsHere.toLong * w * spp)
             // each strip is an independent fax stream (fresh all-white
             // reference line); bilevel bits expand to the 8-bit values
             // the photometric implies so the shared stats pass applies
@@ -350,7 +350,7 @@ object TiffCodec {
             }
             out
           } else decodeRegion(offsets(s).toInt, counts(s).toInt,
-            rowsHere.toLong * rowBytes, s"strip $s")
+            rowsHere.toLong * w * spp, s"strip $s")
         emitRegion(strip, 0, s * rowsPerStrip, rowBytes, w, rowsHere)
       }
     }

@@ -200,8 +200,10 @@ object Archive {
         val (methodName, bytes) = method match {
           case 0 => ("stored", java.util.Arrays.copyOfRange(d, dataOff, dataOff + compSize.toInt))
           case 8 =>
-            capped("zip", s"$name uncompressed size", uncompSize)
-            ("deflate", inflate("zip", d, dataOff, compSize.toInt, Raw)
+            // a stream longer than declared is cut there (crc_ok then
+            // says so); past the cap the archive is an error row
+            val stopAt = math.min(uncompSize, InflateCap.toLong).toInt
+            ("deflate", inflate(d, dataOff, compSize.toInt, Raw, stopAt)
               .fold(r => throw Malformed(s"zip: $r"), identity))
           case m => throw Malformed(s"zip: compression method $m is out of scope")
         }

@@ -141,7 +141,7 @@ object Avro {
         return Left("avro: block sync marker mismatch")
       val body = codec match {
         case "deflate" =>
-          inflate("avro", raw, 0, raw.length, Raw).fold(r => throw Malformed(s"avro: $r"), identity)
+          inflate(raw, 0, raw.length, Raw).fold(r => throw Malformed(s"avro: $r"), identity)
         case "snappy" =>
           // Avro spec: raw snappy block + 4-byte BE CRC32 of the
           // UNCOMPRESSED bytes

@@ -48,6 +48,9 @@ import graft.bytes.Bytes._
   *  - image XObjects with foreign codecs (CCITT/JBIG2/JPX), predictor
   *    rows, sub-8-bit/16-bit samples, or palette/ICC/CMYK color
   *    spaces → counted in `n_image_skipped`
+  *  - a FlateDecode stream inflating past
+  *    [[graft.bytes.Bytes.InflateCap]] → skipped like a corrupt one
+  *    (`n_skipped`, or `n_image_skipped` for an image XObject)
   *  - font/CMap decoding (bytes are taken as standard-encoding
   *    Latin-1 — the all-ASCII adapter corpus and fixtures make this
   *    exact)
@@ -331,7 +334,7 @@ object Pdf {
     filters.foreach { f =>
       if (cur.isDefined) f match {
         case "FlateDecode" | "Fl" if !hasPredictor =>
-          cur = inflate("pdf", cur.get, 0, cur.get.length, Zlib).toOption
+          cur = inflate(cur.get, 0, cur.get.length, Zlib).toOption
         case "ASCIIHexDecode" | "AHx" => cur = Some(asciiHexDecode(cur.get))
         case "ASCII85Decode" | "A85" => cur = ascii85Decode(cur.get)
         case "RunLengthDecode" | "RL" => cur = runLengthDecode(cur.get)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.bytes.Bytes.{GzipMembers, guarded, inflate}
+import graft.bytes.Bytes.{GzipMembers, inflate}
 
 /** Crawl-archive ingestion: dependency-free WARC (ISO 28500) record
   * framing plus an HTML boilerplate-strip text extractor — the first
@@ -226,8 +226,7 @@ object Warc {
     * inflates past [[graft.bytes.Bytes.InflateCap]].
     */
   def gunzipMembers(data: Array[Byte]): Either[String, Array[Byte]] =
-    guarded("warc")(inflate("warc", data, 0, data.length, GzipMembers)
-      .left.map(r => s"warc: gzip decode failed: $r"))
+    inflate(data, 0, data.length, GzipMembers).left.map(r => s"warc: gzip decode failed: $r")
 
   /** Compress bytes as ONE gzip member (fixture/adapter side of
     * [[gunzipMembers]] — concatenating these per record reproduces the

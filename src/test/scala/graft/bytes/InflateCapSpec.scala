@@ -11,10 +11,11 @@ import graft.operators.ImageCodec
 import graft.sources.{Archive, Avro, Pdf, Snappy, Warc}
 
 /** Every decoder of untrusted compressed or size-declaring bytes stops
-  * at [[Bytes.InflateCap]] with a named error: bombs (small inputs that
-  * inflate past the cap) one per carrier, and headers of a few bytes
-  * that declare about 2 GB. Heap growth is read from this thread's own
-  * allocation counter, so other work in the JVM does not blur it.
+  * at [[Bytes.InflateCap]]: bombs (small inputs that inflate past the
+  * cap) one per carrier, each a named error or, in PDF, a skipped
+  * stream; and headers of a few bytes that declare about 2 GB. Heap
+  * growth is read from this thread's own allocation counter, so other
+  * work in the JVM does not blur it.
   */
 class InflateCapSpec extends AnyFunSuite {
 
@@ -103,10 +104,18 @@ class InflateCapSpec extends AnyFunSuite {
     assertBomb(got, "png: raster of 67125249 bytes exceeds 64 MiB", grown)
   }
 
-  test("zip entry bomb: a deflate stream past the cap under a small declared size") {
-    val bomb = zipDeclaring(new Array[Byte](BombBytes.toInt), uncomp = 1024)
+  test("zip entry bomb: a deflate stream past the cap") {
+    val bomb = zipDeclaring(new Array[Byte](BombBytes.toInt), uncomp = BombBytes)
     val (got, grown) = allocating(Archive.readZip(bomb))
     assertBomb(got, s"zip: $overCap", grown)
+  }
+
+  test("zip: a stream longer than its declared size is cut there and kept") {
+    val bomb = zipDeclaring(new Array[Byte](BombBytes.toInt), uncomp = 1024)
+    val (got, grown) = allocating(Archive.readZip(bomb))
+    assert(got.map(_.map(e => (e.entry_name, e.data.length, e.crc_ok))) ===
+      Right(Seq(("bomb.bin", 1024, false))))
+    assert(grown < (1L << 20), s"allocated $grown bytes")
   }
 
   test("avro deflate block bomb") {
@@ -122,40 +131,60 @@ class InflateCapSpec extends AnyFunSuite {
     assertBomb(got, "avro: snappy: declared length of 83886080 bytes exceeds 64 MiB", grown)
   }
 
-  test("pdf FlateDecode bomb") {
-    val stream = zeros(BombBytes, Bytes.Zlib)
-    val bomb = s"%PDF-1.4\n1 0 obj\n<< /Length ${stream.length} /Filter /FlateDecode >>\nstream\n"
-      .getBytes(US_ASCII) ++ stream ++ "\nendstream\nendobj\n%%EOF\n".getBytes(US_ASCII)
+  test("pdf FlateDecode bomb: the stream is skipped, the document's text kept") {
+    def obj(n: Int, body: Array[Byte]): Array[Byte] =
+      s"$n 0 obj\n<< /Length ${body.length} /Filter /FlateDecode >>\nstream\n"
+        .getBytes(US_ASCII) ++ body ++ "\nendstream\nendobj\n".getBytes(US_ASCII)
+    val text = new ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(text)
+    z.write("BT (kept) Tj ET".getBytes(US_ASCII))
+    z.close()
+    val bomb = "%PDF-1.4\n".getBytes(US_ASCII) ++ obj(1, zeros(BombBytes, Bytes.Zlib)) ++
+      obj(2, text.toByteArray) ++ "%%EOF\n".getBytes(US_ASCII)
     val (got, grown) = allocating(Pdf.extractText(bomb))
-    assertBomb(got, s"pdf: $overCap", grown)
+    assert(got.map(x => (x.nStreams, x.nFlate, x.nSkipped, x.text.trim)) ===
+      Right((2, 1, 1, "kept")))
+    assert(grown < 2L * InflateCap, s"allocated $grown bytes")
   }
 
   test("warc gzip member bomb: one error row for the archive") {
     val bomb =
       Warc.gzipMember("WARC/1.0\r\n".getBytes(US_ASCII)) ++ zeros(BombBytes, Bytes.GzipMembers)
     val (got, grown) = allocating(Warc.gunzipMembers(bomb))
-    assertBomb(got, s"warc: $overCap", grown)
+    assertBomb(got, s"warc: gzip decode failed: $overCap", grown)
     val rows = Warc.parseArchive("bomb", bomb)
-    assert(rows.map(r => (r.ok, r.error)) === Seq((false, s"warc: $overCap")))
+    assert(rows.map(r => (r.ok, r.error)) ===
+      Seq((false, s"warc: gzip decode failed: $overCap")))
   }
 
   test("a ~1 MB gzip member inflating to 1 GiB is an error, not an OutOfMemoryError") {
     val member = zeros(1L << 30, Bytes.GzipMembers)
     assert(member.length > (1 << 19) && member.length < (2 << 20))
     val (got, grown) = allocating(Warc.gunzipMembers(member))
-    assertBomb(got, s"warc: $overCap", grown)
+    assertBomb(got, s"warc: gzip decode failed: $overCap", grown)
   }
 
   test("inflate: corrupt streams are Left reasons; output of exactly the cap is kept") {
     val cut = zeros(1000, Bytes.Raw).dropRight(4)
-    assert(Bytes.inflate("t", cut, 0, cut.length, Bytes.Raw) === Left("truncated deflate stream"))
+    assert(Bytes.inflate(cut, 0, cut.length, Bytes.Raw) === Left("truncated deflate stream"))
     val junk = Array.fill[Byte](64)(0xff.toByte)
-    assert(Bytes.inflate("t", junk, 0, junk.length, Bytes.Zlib) === Left("malformed deflate stream"))
-    assert(Bytes.inflate("t", junk, 0, junk.length, Bytes.GzipMembers) ===
+    assert(Bytes.inflate(junk, 0, junk.length, Bytes.Zlib) === Left("malformed deflate stream"))
+    assert(Bytes.inflate(junk, 0, junk.length, Bytes.GzipMembers) ===
       Left("Not in GZIP format"))
     val exact = zeros(InflateCap.toLong, Bytes.Zlib)
-    assert(Bytes.inflate("t", exact, 0, exact.length, Bytes.Zlib).map(_.length) ===
+    assert(Bytes.inflate(exact, 0, exact.length, Bytes.Zlib).map(_.length) ===
       Right(InflateCap))
+    val over = zeros(InflateCap + 1L, Bytes.Zlib)
+    assert(Bytes.inflate(over, 0, over.length, Bytes.Zlib) === Left(Bytes.OverCap))
+  }
+
+  test("inflate: stopAt below the cap cuts a longer stream, a shorter one is whole") {
+    val raw = zeros(1000, Bytes.Raw)
+    assert(Bytes.inflate(raw, 0, raw.length, Bytes.Raw, stopAt = 10).map(_.length) === Right(10))
+    assert(Bytes.inflate(raw, 0, raw.length, Bytes.Raw, stopAt = 1000).map(_.length) ===
+      Right(1000))
+    assert(Bytes.inflate(raw, 0, raw.length, Bytes.Raw, stopAt = 5000).map(_.length) ===
+      Right(1000))
   }
 
   test("snappy: a 5-byte block declaring 2 GB is refused without the allocation") {
@@ -169,15 +198,26 @@ class InflateCapSpec extends AnyFunSuite {
   test("zip: a central record declaring 2 GB is refused without the allocation") {
     val z = zipDeclaring("tiny".getBytes(US_ASCII), uncomp = Int.MaxValue)
     val (got, grown) = allocating(Archive.readZip(z))
-    assert(got === Left("zip: bomb.bin uncompressed size of 2147483647 bytes exceeds 64 MiB"))
+    assert(got === Left("zip: bomb.bin extracted 4 of 2147483647 bytes"))
     assert(grown < (1L << 20), s"allocated $grown bytes")
+    // a 32-bit size past Int.MaxValue, read without a Zip64 extra
+    val z4 = zipDeclaring("tiny".getBytes(US_ASCII), uncomp = 0xfffffffeL)
+    assert(Archive.readZip(z4) === Left("zip: bomb.bin extracted 4 of 4294967294 bytes"))
   }
 
   test("png: an IHDR width declaring 2 GB rows is refused before any row buffer") {
-    // RGB rows of 3 * 715827882 + 1 = 2^31 - 1 bytes
+    // RGB scanlines of 3 * 715827882 = 2^31 - 2 bytes
     val p = png(715827882, 1, 2, zeros(16, Bytes.Zlib))
     val (got, grown) = allocating(ImageCodec.decode(p))
-    assert(got === Left("png: raster of 2147483647 bytes exceeds 64 MiB"))
+    assert(got === Left("png: scanline of 2147483646 bytes exceeds 64 MiB"))
+    assert(grown < (1L << 20), s"allocated $grown bytes")
+  }
+
+  test("png: an IHDR whose raster size overflows a Long is refused, not allocated") {
+    // 2^31 - 1 RGB pixels per row times 1431655766 rows passes 2^63
+    val p = png(Int.MaxValue, 1431655766, 2, zeros(16, Bytes.Zlib))
+    val (got, grown) = allocating(ImageCodec.decode(p))
+    assert(got === Left("png: scanline of 6442450941 bytes exceeds 64 MiB"))
     assert(grown < (1L << 20), s"allocated $grown bytes")
   }
 
