@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR (and a second, smaller scale point) and prints
   * one COMPACT JSON line the driver collects into BENCH_r{N}.json.
@@ -43,6 +45,23 @@ package graft
   * operator is leaking again).
   */
 object Bench {
+
+  /** `s` as a JSON string literal, quotes and escapes included. */
+  private def jsonString(s: String): String = Json.Mapper.writeValueAsString(s)
+
+  /** Seconds per query (`queries.<q…>.sec`) from the `bench_detail.json`
+    * at `p`, when that run's primary `sf` was `sfDir`; empty when there
+    * is no such file, it names another sf, or it is not a JSON object.
+    */
+  private[graft] def priorSeconds(p: java.nio.file.Path, sfDir: String): Map[String, Double] =
+    Option.when(java.nio.file.Files.exists(p))(java.nio.file.Files.readString(p))
+      .flatMap(Json.parseOption).filter(j => Json.text(j, "sf").contains(sfDir))
+      .map(_.path("queries").properties.asScala.collect {
+        case e if e.getKey.matches("q[0-9].*") && e.getValue.path("sec").isNumber =>
+          e.getKey -> e.getValue.path("sec").asDouble
+      }.toMap)
+      .getOrElse(Map.empty)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // second scale point: exposes fixed per-query overheads (planning,
@@ -100,7 +119,6 @@ object Bench {
         new Thread(() => { times.add(calibrate()) })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
-      import scala.jdk.CollectionConverters._
       val sorted = times.asScala.toSeq.sorted
       (sorted(sorted.size / 2), sorted.last)
     }
@@ -186,18 +204,7 @@ object Bench {
     // once, flagged high, and re-enters the full tier next run. The
     // sf2 sweep is untouched (warm + 1 for all — dropping ITS warm
     // was the r14 scale-inversion defect).
-    val priorDetail: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("bench_detail.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val s = java.nio.file.Files.readString(p)
-        val sfOk = ("\"sf\":\"" + java.util.regex.Pattern.quote(sfDir) + "\"").r
-          .findFirstIn(s).isDefined
-        if (!sfOk) Map.empty
-        else "\"(q[0-9][^\"]*)\":\\{\"sec\":([0-9.]+)".r.findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
+    val priorDetail = priorSeconds(java.nio.file.Paths.get("bench_detail.json"), sfDir)
 
     // per-query result: (min seconds, all measured runs, residual
     // persisted bytes AFTER the query's runs + cleanup — the leak
@@ -397,7 +404,8 @@ object Bench {
     }.mkString("{", ",", "}")
     val calibJson = calibSamples.map(r3).mkString("[", ",", "]")
     val detail =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","sf2":"$sfDir2",""" +
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":${jsonString(sfDir)},""" +
+        s""""sf2":${jsonString(sfDir2)},""" +
         s""""total_sf2":${r3(total2)},"queries":$detailQs,"converter":$conv,""" +
         s""""converter_fast":$convFast,"ann_split":$annSplit,"calib_sec":${r3(calib)},""" +
         s""""calib_samples":$calibJson,"calib_mt_sec":${r3(calibMt)},""" +
@@ -470,7 +478,7 @@ object Bench {
         s""""membw_gbs":${r3(membwSt)},"membw_mt_gbs":${r3(membwMt)},""" +
         s""""membw_mt_gbs_post":${r3(membwMtPost)},"window_ok":$windowOk,""" +
         s""""quiet_gate":$quietGate,"tier_cold1":${results.count(_._2.coldTier)},""" +
-        s""""detail":"bench_detail.json","perf_doc":"PERF.md","sf":"$sfDir"}""")
+        s""""detail":"bench_detail.json","perf_doc":"PERF.md","sf":${jsonString(sfDir)}}""")
     spark.stop()
   }
 }

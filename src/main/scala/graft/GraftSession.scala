@@ -41,6 +41,11 @@ object GraftSession {
       // reader rejects; read as epoch-nanos long and normalize in Tables.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // 1000 (default 100) compiled classes, JVM-wide: one lifecycle
+      // write compiles dozens, so at 100 a repeated probe shape lost its
+      // classes to the writes between two probes and recompiled them
+      // (4–8 classes per BM25 probe; PERF.md "Lifecycle probes III")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def build(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

@@ -9,8 +9,12 @@ import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -113,8 +117,7 @@ object Pipeline {
     // stable name (yml:145-162 publishes changesets.parquet + keeps a
     // versioned copy; retention below mirrors manage-r2.sh:94-102)
     val versioned = s"$publishDir/changesets-${safeVersion(sourceVersion)}.parquet"
-    ChangesetConverter.convert(spark, inputXml, versioned, opts)
-    val rows = spark.read.parquet(versioned).count()
+    val rows = ChangesetConverter.convert(spark, inputXml, versioned, opts)
 
     // publish the stable name as a byte-identical COPY of the
     // versioned artifact (no second Spark job re-encoding the same
@@ -246,8 +249,7 @@ object Pipeline {
     Files.createDirectories(Paths.get(publishDir))
     val versionedFile = s"changesets-${safeVersion(sourceVersion)}.parquet"
     val versioned = s"$publishDir/$versionedFile"
-    ChangesetConverter.convert(spark, inputXml, versioned, opts)
-    val rows = spark.read.parquet(versioned).count()
+    val rows = ChangesetConverter.convert(spark, inputXml, versioned, opts)
 
     flipPointer(publishDir, versionedFile, rows, sourceVersion)
     applyRetention(publishDir, keepHistory, protect = readCurrent(publishDir))
@@ -485,12 +487,79 @@ object Pipeline {
   // regrouping the whole index by doc. A doc's rows live in one
   // segment and a tombstone drops all of them, so both columns stay
   // exact under append, delete and compaction.
+  // The collection statistics are stored too: every write records each
+  // new ref's term → df lexicon, nd and Σ dl (the store's `figures`,
+  // [[writeLexicon]]), so a probe of a version adds them up on the
+  // driver ([[storedPostingsStatistics]]) instead of aggregating the
+  // index in a Spark job.
   // ------------------------------------------------------------------
 
   private[graft] val postingsStore = new SegmentStore(
     kind = "Postings", prefix = "post-", pointerName = "postings_current.json",
     segmentDir = "_postings_segments", idCol = "doc", partitionCol = None,
-    modelDir = None, sortColumns = false, prepare = graft.operators.Retrieval.withDocStats)
+    modelDir = None, sortColumns = false, prepare = graft.operators.Retrieval.withDocStats,
+    figures = Some(writeLexicon))
+
+  /** A postings ref's figures: the term → df lexicon of `rows`, written
+    * to `dir` as one parquet file sorted by term, with their nd (`lead`
+    * rows) and Σ dl (Σ tf) observed on that write — one Spark job.
+    * Rows that lack `lead` (a tombstone over a segment rewritten
+    * without it) get it from [[graft.operators.Retrieval.withDocStats]].
+    */
+  private def writeLexicon(rows: DataFrame, dir: String): RefStats = {
+    val obs = new org.apache.spark.sql.Observation()
+    graft.operators.Retrieval.withDocStats(rows).groupBy(col("term"))
+      .agg(count(lit(1)).as("df"), count_if(col("lead")).as("nd"), sum(col("tf")).as("sum_dl"))
+      .observe(obs, coalesce(sum(col("nd")), lit(0L)).as("nd"),
+        coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"))
+      .select(col("term"), col("df"))
+      .coalesce(1).sortWithinPartitions(col("term"))
+      .write.mode("overwrite").parquet(dir)
+    val figures = obs.get
+    RefStats(figures("nd").asInstanceOf[Long], figures("sum_dl").asInstanceOf[Long])
+  }
+
+  /** The BM25 statistics of `post` from what its refs stored at write
+    * time, when `post` is a frame [[readPostingsIndex]] returned and
+    * every ref of its version stored them: (nd, Σ dl, df of each of
+    * `terms` that has rows). Data segments add, tombstones subtract the
+    * rows they hide. The lexicons are read on the driver, filtered to
+    * `terms`, so no Spark job runs. None for any other frame, or when a
+    * ref's lexicon is missing.
+    */
+  private[graft] def storedPostingsStatistics(
+      post: DataFrame, terms: Seq[String]): Option[(Long, Long, Map[String, Long])] =
+    postingsStore.opened(post).filter(_._2.figured).flatMap { case (publishDir, m) =>
+      val conf = post.sparkSession.sessionState.newHadoopConf()
+      val signed = m.segments.map(_ -> 1L) ++ m.tombstones.map(_ -> -1L)
+      val lexicons = signed.map { case (r, _) =>
+        readLexicon(conf, s"$publishDir/$r/${SegmentStore.LexiconDir}", terms) }
+      Option.when(lexicons.forall(_.isDefined)) {
+        def total(f: RefStats => Long) = signed.map { case (r, sign) => sign * f(m.stats(r)) }.sum
+        val df = signed.zip(lexicons.flatten).flatMap { case ((_, sign), lex) =>
+          lex.map { case (t, n) => t -> sign * n } }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0)
+        (total(_.nd), total(_.sumDl), df)
+      }
+    }
+
+  /** The df of each of `terms` in the lexicon at `dir`, read on the
+    * driver with a pushed-down `term IN (…)` filter; None when there is
+    * no lexicon.
+    */
+  private def readLexicon(conf: Configuration, dir: String, terms: Seq[String]): Option[Map[String, Long]] = {
+    val root = new Path(dir)
+    val files =
+      try Some(root.getFileSystem(conf).listStatus(root).map(_.getPath).filter(_.getName.endsWith(".parquet")))
+      catch { case _: java.io.FileNotFoundException => None }
+    lazy val wanted = FilterCompat.get(FilterApi.in[Binary, Operators.BinaryColumn](
+      FilterApi.binaryColumn("term"), terms.map(Binary.fromString).toSet.asJava))
+    files.map(parts => if (terms.isEmpty) Map.empty else parts.iterator.flatMap { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(conf).withFilter(wanted).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => g.getString("term", 0) -> g.getLong("df", 0)).toList
+      finally reader.close()
+    }.toMap)
+  }
 
   def readPostingsManifest(pairDir: String): Seq[String] =
     postingsStore.readManifest(pairDir).segments
@@ -688,10 +757,12 @@ object Pipeline {
   * evidence of absorption). `seq` orders versions for retention: 1 +
   * the largest seq among the manifests retained when it committed.
   * `parent` names the version an append, delete or compact was built
-  * from (its dir name and seq; a publish builds on none). Absent fields
-  * (manifests from before a field existed) read as empty, an absent
-  * `seq` as 0, absent scopes as every segment (the manifest's writer
-  * applied each tombstone to all of them).
+  * from (its dir name and seq; a publish builds on none). `stats` holds
+  * the [[RefStats]] of each ref that stored them, keyed by the ref; a
+  * ref without an entry has none. Absent fields (manifests from before
+  * a field existed) read as empty, an absent `seq` as 0, absent scopes
+  * as every segment (the manifest's writer applied each tombstone to
+  * all of them).
   */
 private[graft] final case class SegmentManifest(
     segments: Seq[String],
@@ -700,12 +771,23 @@ private[graft] final case class SegmentManifest(
     model: Option[String] = None,
     seq: Long = 0L,
     parent: Option[(String, Long)] = None,
-    scopes: Seq[Int] = Nil) {
+    scopes: Seq[Int] = Nil,
+    stats: Map[String, RefStats] = Map.empty) {
   def refs: Seq[String] = model.toSeq ++ segments ++ tombstones
 
   /** The tombstones that hide segment `i`: those committed after it. */
   def hiddenBy(i: Int): Seq[String] = tombstones.zip(scopes).collect { case (t, s) if i < s => t }
+
+  /** Every data segment and tombstone carries stored statistics. */
+  def figured: Boolean = (segments ++ tombstones).forall(stats.contains)
 }
+
+/** The collection statistics a store records for one ref at write time
+  * (see [[SegmentStore]]): for a data segment, the docs it holds (`nd`)
+  * and their summed length (`sumDl`); for a tombstone, the same figures
+  * of the rows it hides.
+  */
+private[graft] final case class RefStats(nd: Long, sumDl: Long)
 
 /** A versioned index as manifests over IMMUTABLE segments — the
   * snapshot-isolation idea of lakehouse table formats, reduced to what
@@ -715,6 +797,8 @@ private[graft] final case class SegmentManifest(
   *   publishDir/<segmentDir>/tomb-<v>/  tombstone segment: ids that reads
   *                                      of a version subtract from the
   *                                      segments the delete saw
+  *   publishDir/<segmentDir>/<ref>/_lexicon/  a ref's stored lexicon
+  *                                      (stores with `figures` only)
   *   publishDir/<prefix><v>/manifest.json   one version ([[SegmentManifest]])
   *   publishDir/<pointerName>           the pointer: names the live version
   *
@@ -735,6 +819,19 @@ private[graft] final case class SegmentManifest(
   * segments' footers hold, and `prepare` completes a data segment's
   * rows before they are written (the postings' stored per-doc
   * statistics).
+  *
+  * `figures`, when given, records collection statistics at write time
+  * (the postings' BM25 statistics): it is handed a ref's rows and the
+  * ref's `_lexicon` dir, writes what it keeps there and returns the
+  * ref's [[RefStats]], which the manifest's `stats` field records. A
+  * data segment's rows are the rows it holds, read back after its
+  * write; a tombstone's are the rows of the live version it hides. A
+  * tombstone gets figures only when every ref of the live version has
+  * them, so a version's figures are either complete or unused. Spark
+  * skips `_`-prefixed dirs, so segment reads, tombstone reads and
+  * garbage collection are unchanged, and a crash before the manifest
+  * leaves the lexicon in the orphaned ref dir that retention deletes.
+  * Such a store remembers the frames [[read]] returns ([[opened]]).
   */
 private[graft] final class SegmentStore(
     kind: String,
@@ -745,8 +842,22 @@ private[graft] final class SegmentStore(
     partitionCol: Option[String],
     modelDir: Option[String],
     sortColumns: Boolean,
-    prepare: DataFrame => DataFrame = identity) {
+    prepare: DataFrame => DataFrame = identity,
+    figures: Option[(DataFrame, String) => RefStats] = None) {
   import Pipeline.{deleteRecursively, listChildren, safeVersion}
+
+  /** The frames [[read]] returned, weakly held and keyed by identity
+    * (a Dataset keeps Object's equality), with the version each one
+    * is. A frame derived from one (a projection, a filter, a
+    * checkpoint) is a different object and is not here.
+    */
+  private val returned = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, (String, SegmentManifest)]())
+
+  /** The (publishDir, manifest) of the version `df` is, when `df` is a
+    * frame this store's [[read]] returned.
+    */
+  def opened(df: DataFrame): Option[(String, SegmentManifest)] = Option(returned.get(df))
 
   def readCurrent(publishDir: String): Option[String] =
     Pipeline.readPointer(publishDir, pointerName, "dir")
@@ -780,11 +891,15 @@ private[graft] final class SegmentStore(
       throw new IllegalStateException(
         s"manifest at $versionDir has tombstone scopes $scopes that do not fit its " +
           s"${tombstones.size} tombstone(s) over ${segments.size} segment(s)")
+    val stats = j.path("stats").properties.asScala.flatMap { e =>
+      for (nd <- graft.Json.long(e.getValue, "nd"); dl <- graft.Json.long(e.getValue, "sum_dl"))
+        yield e.getKey -> RefStats(nd, dl)
+    }.toMap
     SegmentManifest(segments, tombstones,
       all("absorbed").map(_.asLong).toSet, Option(j.get("model")).map(_.asText),
       j.path("seq").asLong(0L),
       Option(j.get("parent")).map(p => (p.asText, j.path("parent_seq").asLong(0L))),
-      scopes)
+      scopes, stats)
   }
 
   /** Every committed version under publishDir, with its manifest. */
@@ -838,6 +953,7 @@ private[graft] final class SegmentStore(
     * tombstones are one scan with one anti join, so a version with no
     * segment appended after a delete reads as one union and one anti
     * join. Opening a version launches no Spark job ([[readSegments]]).
+    * A store with `figures` remembers the returned frame ([[opened]]).
     */
   def read(spark: SparkSession, versionDir: String): DataFrame = {
     val publishDir = Paths.get(versionDir).getParent.toString
@@ -853,7 +969,9 @@ private[graft] final class SegmentStore(
       else rows.join(broadcast(readSegments(spark, publishDir, tombs).select(col(idCol))),
         Seq(idCol), "left_anti")
     })
-    if (sortColumns) union.select(union.columns.sorted.map(col).toSeq: _*) else union
+    val out = if (sortColumns) union.select(union.columns.sorted.map(col).toSeq: _*) else union
+    if (figures.isDefined) returned.put(out, (publishDir, m))
+    out
   }
 
   /** Publish `rows` as a new version holding one segment (and `model`,
@@ -864,8 +982,9 @@ private[graft] final class SegmentStore(
       keepHistory: Int, model: Option[String] = None): String = {
     Files.createDirectories(Paths.get(publishDir))
     val segRef = ref("seg", sourceVersion)
-    writeData(rows, s"$publishDir/$segRef")
-    commit(publishDir, sourceVersion, SegmentManifest(Seq(segRef), model = model), keepHistory)
+    val stats = writeData(rows, publishDir, segRef)
+    commit(publishDir, sourceVersion, SegmentManifest(Seq(segRef), model = model, stats = stats),
+      keepHistory)
   }
 
   /** O(delta) append: `encode` turns the batch into the delta segment's
@@ -892,16 +1011,18 @@ private[graft] final class SegmentStore(
         "batch — batches must be disjoint (re-running an already-appended batch would " +
         "duplicate its rows).")
     val segRef = ref("seg", sourceVersion)
-    writeData(delta, s"$publishDir/$segRef")
+    val stats = writeData(delta, publishDir, segRef)
     commit(publishDir, sourceVersion, child(cur, m).copy(segments = m.segments :+ segRef,
-      absorbed = m.absorbed ++ absorbBatchId), keepHistory)
+      absorbed = m.absorbed ++ absorbBatchId, stats = m.stats ++ stats), keepHistory)
   }
 
   /** Takedown: one tombstone segment of `ids`, scoped to the version's
     * current segments, and a version whose tombstone list grows by it;
     * data segments stay untouched, retained versions still see the
     * rows, a later append may re-add an id ([[append]]), compaction
-    * materializes and clears.
+    * materializes and clears. With `figures`, the rows the tombstone
+    * hides are the live version's rows with its ids: earlier
+    * tombstones already subtract theirs, so no row is hidden twice.
     */
   def delete(publishDir: String, sourceVersion: String, ids: DataFrame, idsCol: String,
       keepHistory: Int): String = {
@@ -909,8 +1030,12 @@ private[graft] final class SegmentStore(
     requireFresh(s"delete$kind", publishDir, cur, sourceVersion)
     val tRef = ref("tomb", sourceVersion)
     ids.select(col(idsCol).as(idCol)).distinct().write.mode("overwrite").parquet(s"$publishDir/$tRef")
+    val spark = ids.sparkSession
+    val stats = if (!m.figured) Map.empty else recordFigures(publishDir, tRef,
+      read(spark, cur).join(broadcast(readSegments(spark, publishDir, Seq(tRef))), Seq(idCol),
+        "left_semi"))
     commit(publishDir, sourceVersion, child(cur, m).copy(tombstones = m.tombstones :+ tRef,
-      scopes = m.scopes :+ m.segments.size), keepHistory)
+      scopes = m.scopes :+ m.segments.size, stats = m.stats ++ stats), keepHistory)
   }
 
   /** Rewrite the live version's rows as ONE segment under a new
@@ -925,9 +1050,9 @@ private[graft] final class SegmentStore(
     if (m.segments.size <= 1 && m.tombstones.isEmpty) return cur
     requireFresh(s"compact$kind", publishDir, cur, sourceVersion)
     val segRef = ref("seg", sourceVersion)
-    writeData(read(spark, cur), s"$publishDir/$segRef")
-    commit(publishDir, sourceVersion,
-      child(cur, m).copy(segments = Seq(segRef), tombstones = Nil, scopes = Nil), keepHistory)
+    val stats = writeData(read(spark, cur), publishDir, segRef)
+    commit(publishDir, sourceVersion, child(cur, m).copy(segments = Seq(segRef), tombstones = Nil,
+      scopes = Nil, stats = stats), keepHistory)
   }
 
   /** Idempotent per-batch absorb for streaming ingest: run `append`
@@ -991,8 +1116,12 @@ private[graft] final class SegmentStore(
         "on it. Use a fresh version token.")
   }
 
-  private def writeData(rows: DataFrame, path: String): Unit = {
+  /** Write the data segment `segRef` from `rows` (completed by
+    * `prepare`); returns its figures, keyed by the ref.
+    */
+  private def writeData(rows: DataFrame, publishDir: String, segRef: String): Map[String, RefStats] = {
     val out = prepare(rows)
+    val path = s"$publishDir/$segRef"
     partitionCol match {
       // cluster-collocate before the partitioned write: without it every
       // upstream partition emits a file into every cluster dir; with it
@@ -1001,7 +1130,14 @@ private[graft] final class SegmentStore(
       case Some(c) => out.repartition(col(c)).write.mode("overwrite").partitionBy(c).parquet(path)
       case None => out.write.mode("overwrite").parquet(path)
     }
+    recordFigures(publishDir, segRef, readSegments(rows.sparkSession, publishDir, Seq(segRef)))
   }
+
+  /** `figures` of `rows` for the ref `r`, its lexicon inside the ref's
+    * dir; nothing for a store without figures.
+    */
+  private def recordFigures(publishDir: String, r: String, rows: => DataFrame): Map[String, RefStats] =
+    figures.map(f => r -> f(rows, s"$publishDir/$r/${SegmentStore.LexiconDir}")).toMap
 
   /** Commit `m` as the version of `sourceVersion` — the manifest LAST,
     * after every segment it names, with seq = 1 + the largest retained
@@ -1013,11 +1149,13 @@ private[graft] final class SegmentStore(
     val seq = 1L + versions(publishDir).map(_._2.seq).maxOption.getOrElse(0L)
     val dir = Paths.get(publishDir, name)
     Files.createDirectories(dir)
+    val stats = ListMap(m.stats.toSeq.sortBy(_._1).map { case (r, s) =>
+      r -> ListMap("nd" -> s.nd, "sum_dl" -> s.sumDl) }: _*)
     Pipeline.commitJson(dir.resolve("manifest.json"), m.model.map("model" -> _).toSeq ++ Seq(
       "segments" -> m.segments, "tombstones" -> m.tombstones, "tombstone_scopes" -> m.scopes,
       "absorbed" -> m.absorbed.toSeq.sorted, "source_version" -> sourceVersion,
       "seq" -> seq) ++ m.parent.toSeq.flatMap { case (p, ps) =>
-        Seq("parent" -> p, "parent_seq" -> ps) }: _*)
+        Seq("parent" -> p, "parent_seq" -> ps) } ++ Option.when(stats.nonEmpty)("stats" -> stats): _*)
     flip(publishDir, name, sourceVersion, keepHistory)
   }
 
@@ -1101,4 +1239,9 @@ private[graft] final class SegmentStore(
     frames.map(f => if (f.columns.forall(common)) f else f.select(f.columns.filter(common).map(col).toSeq: _*))
       .reduce(_.unionByName(_))
   }
+}
+
+private[graft] object SegmentStore {
+  /** The dir inside a ref's dir that holds its stored lexicon. */
+  val LexiconDir = "_lexicon"
 }

@@ -261,15 +261,15 @@ object Retrieval {
     * [[withDocStats]]); a frame without them — fresh
     * [[postings]], or an index version that still holds segments
     * written before they were stored — derives them first, by one
-    * window over the whole frame. df, nd and avgdl come from one
-    * partial aggregate ([[bm25OverQueryTerms]]), all additive over
-    * disjoint-doc segments, so probing a segment union is
-    * bit-identical to probing a full rebuild (q148 gates it). The
-    * statistics are computed when the result frame is built (two
-    * small driver collects); `post` feeds that aggregate and the
-    * scoring scan — pass a materialized or cheap-to-rescan
-    * frame: a `readPostingsIndex` version (opened without a Spark job,
-    * its segments one parquet scan), or a localCheckpoint as
+    * window over the whole frame. df, nd and avgdl are all additive
+    * over disjoint-doc segments, so probing a segment union is
+    * bit-identical to probing a full rebuild (q148 gates it). A
+    * `readPostingsIndex` version as returned (opened without a Spark
+    * job, its segments one parquet scan) brings them stored; any other
+    * frame gets them from one partial aggregate, collected when the
+    * result frame is built ([[bm25OverQueryTerms]]), so `post` feeds
+    * that aggregate and the scoring scan — pass a materialized or
+    * cheap-to-rescan frame, e.g. a localCheckpoint as
     * [[searchTopKBm25]] does.
     */
   def bm25OverPostings(
@@ -308,6 +308,16 @@ object Retrieval {
     * hits fan out to query ids, so a term two query rows share (or a
     * query id that appears twice) counts each posting once, while the
     * fan-out keeps each query row's own contribution.
+    *
+    * A frame that IS a [[graft.changesets.Pipeline.readPostingsIndex]]
+    * version, as that call returned it, skips the aggregate: the
+    * version's refs stored their df, nd and Σ dl at write time, and the
+    * driver adds them up for the query terms
+    * ([[graft.changesets.Pipeline.storedPostingsStatistics]]), so the
+    * probe is the scoring query alone. Any other frame — a projection,
+    * filter or checkpoint of a version, or a version with a ref that
+    * stored no statistics — takes the aggregate. Both give the same
+    * figures, so the scores are bit-identical.
     */
   def bm25OverQueryTerms(
       qTerms: DataFrame,
@@ -333,24 +343,29 @@ object Retrieval {
       bPpm: Long): DataFrame = {
     val p = withDocStats(post)
     val terms = pairs.map(_._2).distinct
-    val byTerm = p.groupBy(when(col("term").isin(terms: _*), col("term")))
-      .agg(count(lit(1)), count_if(col("lead")), sum(col("tf")))
-      .collect()
-    val nd = byTerm.map(_.getLong(2)).sum
-    val sumDl = byTerm.filterNot(_.isNullAt(3)).map(_.getLong(3)).sum
+    val (nd, sumDl, df) = graft.changesets.Pipeline.storedPostingsStatistics(post, terms)
+      .getOrElse {
+        val byTerm = p.groupBy(when(col("term").isin(terms: _*), col("term")))
+          .agg(count(lit(1)), count_if(col("lead")), sum(col("tf")))
+          .collect()
+        (byTerm.map(_.getLong(2)).sum, byTerm.filterNot(_.isNullAt(3)).map(_.getLong(3)).sum,
+          byTerm.filterNot(_.isNullAt(0)).map(r => r.getString(0) -> r.getLong(1)).toMap)
+      }
     val avgdlPpm = if (nd == 0L) 1L else Math.multiplyExact(sumDl, 1000000L) / nd
-    val idf = byTerm.filterNot(_.isNullAt(0))
-      .map(r => r.getString(0) -> Math.multiplyExact(nd, 1000000L) / r.getLong(1)).toMap
+    val idf = df.map { case (t, n) => t -> Math.multiplyExact(nd, 1000000L) / n }
+    // avgdl rides in the table, not in the plan: a literal would make
+    // each version's probe compile its own classes
     val qIdf = p.sparkSession.createDataFrame(
-      pairs.collect { case (qid, t) if idf.contains(t) => Row(qid, t, idf(t)) }.asJava,
+      pairs.collect { case (qid, t) if idf.contains(t) => Row(qid, t, idf(t), avgdlPpm) }.asJava,
       StructType(Seq(qidField, StructField("term", StringType),
-        StructField("idf", LongType, nullable = false))))
+        StructField("idf", LongType, nullable = false),
+        StructField("avgdl_ppm", LongType, nullable = false))))
     // a null doc counts toward df and nd but, as in the doc-keyed join
     // this replaced, never scores
     val scored = p.filter(col("term").isin(idf.keys.toSeq: _*) && col("doc").isNotNull)
       .join(broadcast(qIdf), Seq("term"))
       .withColumn("len_ppm", expr(
-        s"(1000000 - $bPpm) + ($bPpm * ((dl * 1000000000000) div $avgdlPpm)) div 1000000"))
+        s"(1000000 - $bPpm) + ($bPpm * ((dl * 1000000000000) div avgdl_ppm)) div 1000000"))
       .withColumn("sat_ppm", expr(
         s"(tf * ($k1Ppm + 1000000) * 1000000) div (tf * 1000000 + ($k1Ppm * len_ppm) div 1000000)"))
       .groupBy(col("qid"), col("doc"))

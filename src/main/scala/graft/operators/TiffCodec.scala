@@ -270,8 +270,8 @@ object TiffCodec {
       val out = compression match {
         case 1 => raw
         case 32773 => packBitsDecode(raw, expect)
-        case _ => graft.sources.Pdf.lzwDecode(raw)
-          .getOrElse(throw Malformed(s"tiff: malformed LZW $what"))
+        case _ => graft.sources.Pdf.lzwDecode(raw, limit = expect)
+          .fold(reason => throw Malformed(s"tiff: $what: $reason"), identity)
       }
       if (out.length != expect)
         throw Malformed(s"tiff: $what decoded ${out.length} of $expect bytes")

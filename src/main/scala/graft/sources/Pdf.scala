@@ -339,7 +339,7 @@ object Pdf {
         case "ASCII85Decode" | "A85" => cur = ascii85Decode(cur.get)
         case "RunLengthDecode" | "RL" => cur = runLengthDecode(cur.get)
         case "LZWDecode" | "LZW" if lzwDefault && !hasPredictor =>
-          cur = lzwDecode(cur.get)
+          cur = lzwDecode(cur.get).toOption
         case _ => cur = None
       }
     }
@@ -700,45 +700,82 @@ object Pdf {
     * width bumping at table sizes 511/1023/2047 (EarlyChange 1, the
     * default — non-default parameters are skipped upstream). A code
     * beyond the table (other than the next-to-assign KwKwK case) is
-    * malformed → None.
+    * `Left("malformed LZW stream")`. Output stops at `limit` bytes, at
+    * most [[InflateCap]] (a TIFF strip passes its size): a stream with
+    * more is `Left("LZW output exceeds <limit> bytes")`, having held at
+    * most the limit plus one chunk.
     */
-  private[graft] def lzwDecode(d: Array[Byte]): Option[Array[Byte]] = {
-    val out = new java.io.ByteArrayOutputStream(d.length * 3 + 16)
-    val table = new Array[Array[Byte]](4096)
+  private[graft] def lzwDecode(d: Array[Byte], limit: Int = InflateCap): Either[String, Array[Byte]] = {
+    val cap = math.min(limit, InflateCap)
+    // the table holds each code as (prefix code, last byte, first
+    // byte, length): a code's bytes are written by walking its
+    // prefixes, so no code allocates
+    val prefix = new Array[Int](4096)
+    val last = new Array[Byte](4096)
+    val first = new Array[Byte](4096)
+    val size = new Array[Int](4096)
+    var c = 0
+    while (c < 256) { last(c) = c.toByte; first(c) = c.toByte; size(c) = 1; c += 1 }
+    // output in chunks (doubling up to 4 MiB) joined once at the end,
+    // so a stream stopped at the limit never regrew or copied them
+    val parts = Vector.newBuilder[(Array[Byte], Int)]
+    var chunk = new Array[Byte](math.max(4096, math.min(d.length * 3L + 16, cap.toLong)).toInt)
+    var at = 0
+    var total = 0
     var nextCode = 258
     var width = 9
-    var prev: Array[Byte] = null
+    var prev = -1
     var acc = 0L
     var nbits = 0
     var i = 0
-    def reset(): Unit = { nextCode = 258; width = 9; prev = null }
-    while (i < d.length || nbits >= width) {
+    var eod = false
+    while (!eod && (i < d.length || nbits >= width)) {
       if (nbits < width) { acc = (acc << 8) | (d(i) & 0xff); nbits += 8; i += 1 }
       else {
         val code = ((acc >>> (nbits - width)) & ((1 << width) - 1)).toInt
         nbits -= width
-        if (code == 256) reset()
-        else if (code == 257) return Some(out.toByteArray)
+        if (code == 256) { nextCode = 258; width = 9; prev = -1 }
+        else if (code == 257) eod = true
         else {
-          val entry: Array[Byte] =
-            if (code < 256) Array(code.toByte)
-            else if (code < nextCode && table(code) != null) table(code)
-            else if (code == nextCode && prev != null) prev :+ prev(0) // KwKwK
-            else return None
-          out.write(entry, 0, entry.length)
-          if (prev != null && nextCode < 4096) {
-            table(nextCode) = prev :+ entry(0)
+          if (code > nextCode || (code == nextCode && prev < 0))
+            return Left("malformed LZW stream")
+          if (prev >= 0 && nextCode < 4096) {
+            // prev + the first byte of this code (of prev itself when
+            // this code is the one being assigned: KwKwK)
+            prefix(nextCode) = prev
+            last(nextCode) = first(if (code == nextCode) prev else code)
+            first(nextCode) = first(prev)
+            size(nextCode) = size(prev) + 1
             nextCode += 1
           }
-          prev = entry
+          val n = size(code)
+          if (total + n > cap) return Left(s"LZW output exceeds $cap bytes")
+          if (at + n > chunk.length) {
+            parts += ((chunk, at))
+            chunk = new Array[Byte](math.min(chunk.length * 2, 4 << 20))
+            at = 0
+          }
+          var k = at + n - 1
+          var x = code
+          while (k >= at) { chunk(k) = last(x); x = prefix(x); k -= 1 }
+          at += n
+          total += n
+          prev = code
           // EarlyChange 1: width bumps one code early
           if (width < 12 && nextCode + 1 > (1 << width) - 1) width += 1
         }
       }
     }
-    // EOD never arrived — tolerate (some writers omit it) if bits left
-    // are only padding
-    Some(out.toByteArray)
+    // a stream without EOD is kept (some writers omit it): the bits
+    // left are only padding
+    val done = parts.result()
+    if (done.isEmpty) Right(java.util.Arrays.copyOf(chunk, at))
+    else {
+      val out = new Array[Byte](total)
+      var w = 0
+      (done :+ ((chunk, at))).foreach { case (p, n) => System.arraycopy(p, 0, out, w, n); w += n }
+      Right(out)
+    }
   }
 
   /** PDF delimiter or whitespace byte (spec §7.2.2-3): token

@@ -6,7 +6,8 @@ import graft.operators.{ArtifactStamp, Quality}
 import graft.sources.{Export, Robots}
 
 /** Every commit record graft reads back — export manifests, the MG,
-  * count-min, CDC and recrawl heads, artifact stamps — is parsed as
+  * count-min, CDC and recrawl heads, artifact stamps, Bench's prior
+  * `bench_detail.json` — is parsed as
   * JSON, not matched with patterns: keys in another order, a decoy
   * field nested in an object before the real one, and escaped quotes
   * and backslashes in strings all read as what the record says.
@@ -48,6 +49,19 @@ class JsonReadersSpec extends SparkSpec {
       Export.readManifest(d)
     }
     assert(e.getMessage === "manifest missing total_rows")
+  }
+
+  test("bench prior detail: reordered keys, an escaped quote in the sf path, a decoy sf") {
+    val d = tmpDir("json-bench")
+    val sf = s"$d/sf \"0.1\""
+    val p = Paths.get(d, "bench_detail.json")
+    put(d, "bench_detail.json",
+      s"""{"queries": {"q2_b": {"runs": [1.5], "sec": 1.5}, "q10_a": {"storage_mb": 0.0, "sec": 0.25},
+        | "converter": {"sec": 9}}, "note": "\\"sf\\":\\"elsewhere\\"", "sf2": "x",
+        | "sf": ${graft.Json.Mapper.writeValueAsString(sf)}, "metric": "total"}""".stripMargin)
+    assert(Bench.priorSeconds(p, sf) === Map("q2_b" -> 1.5, "q10_a" -> 0.25))
+    assert(Bench.priorSeconds(p, "elsewhere") === Map.empty)
+    assert(Bench.priorSeconds(Paths.get(d, "missing.json"), sf) === Map.empty)
   }
 
   test("MG heavy-hitter head") {

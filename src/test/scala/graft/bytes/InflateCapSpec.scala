@@ -97,6 +97,75 @@ class InflateCapSpec extends AnyFunSuite {
     good.take(headerEnd) ++ zz(1) ++ zz(block.length.toLong) ++ block ++ sync
   }
 
+  /** An LZW stream (the PDF and TIFF flavor) of at least `n` zero bytes,
+    * built code by code: each new code is the one being assigned (the
+    * previous code plus a zero), then the longest code repeats. About
+    * 3 KB per 8 MiB.
+    */
+  private def lzwZeros(n: Long): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    var acc = 0L
+    var nbits = 0
+    var width = 9
+    var nextCode = 258
+    var prev = -1
+    def put(code: Int): Unit = {
+      acc = (acc << width) | code
+      nbits += width
+      while (nbits >= 8) { out.write(((acc >>> (nbits - 8)) & 0xff).toInt); nbits -= 8 }
+      if (prev >= 0 && nextCode < 4096) nextCode += 1
+      prev = code
+      if (width < 12 && nextCode + 1 > (1 << width) - 1) width += 1
+    }
+    put(0)
+    var left = n - 1
+    while (left > 0) {
+      val code = math.min(nextCode, 4095)
+      put(code)
+      left -= code - 256 // code c >= 258 holds c - 256 zeros
+    }
+    put(257)
+    if (nbits > 0) out.write(((acc << (8 - nbits)) & 0xff).toInt)
+    out.toByteArray
+  }
+
+  test("lzw: the zero stream decodes to its zeros; output past the limit is refused") {
+    val z = lzwZeros(100000)
+    val all = Pdf.lzwDecode(z)
+    assert(all.map(b => (b.length >= 100000, b.forall(_ == 0))) === Right((true, true)))
+    val n = all.map(_.length).getOrElse(0)
+    assert(Pdf.lzwDecode(z, limit = n).map(_.length) === Right(n))
+    assert(Pdf.lzwDecode(z, limit = n - 1) === Left(s"LZW output exceeds ${n - 1} bytes"))
+  }
+
+  test("pdf LZWDecode bomb: the stream is skipped, the document's text kept") {
+    val bomb = lzwZeros(BombBytes)
+    assert(bomb.length < (64 << 10))
+    val pdf = ("%PDF-1.4\n1 0 obj\n<< /Length " + bomb.length + " /Filter /LZWDecode >>\nstream\n")
+      .getBytes(US_ASCII) ++ bomb ++
+      ("\nendstream\nendobj\n2 0 obj\n<< /Length 15 >>\nstream\nBT (kept) Tj ET\n" +
+        "endstream\nendobj\n%%EOF\n").getBytes(US_ASCII)
+    val (got, grown) = allocating(Pdf.extractText(pdf))
+    assert(got.map(x => (x.nStreams, x.nRaw, x.nSkipped, x.text.trim)) === Right((2, 1, 1, "kept")))
+    assert(grown < 2L * InflateCap, s"allocated $grown bytes")
+  }
+
+  test("tiff LZW strip bomb: output past the strip's size is refused") {
+    // 8192 x 8192 8-bit gray in one LZW strip of 64 MiB, its stream
+    // decoding to 80 MiB
+    val strip = lzwZeros(BombBytes)
+    val tiff = ByteBuffer.allocate(8 + 2 + 12 * 8 + 4 + strip.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    tiff.put("II".getBytes(US_ASCII)).putShort(42.toShort).putInt(8).putShort(8.toShort)
+    for ((tag, tpe, v) <- Seq((256, 4, 8192), (257, 4, 8192), (258, 3, 8), (259, 3, 5),
+        (262, 3, 1), (273, 4, 110), (278, 4, 8192), (279, 4, strip.length)))
+      tiff.putShort(tag.toShort).putShort(tpe.toShort).putInt(1).putInt(v)
+    tiff.putInt(0).put(strip)
+    val (got, grown) = allocating(graft.operators.TiffCodec.decode(tiff.array()))
+    assert(got === Left(s"tiff: strip 0: LZW output exceeds $InflateCap bytes"))
+    assert(grown < 2L * InflateCap, s"allocated $grown bytes")
+  }
+
   test("png IDAT bomb: a raster past the cap is refused before inflating") {
     // 8193 rows of 1 filter byte + 8192 gray samples: 67,125,249 bytes
     val bomb = png(8192, 8193, 0, zeros(8193L * 8193, Bytes.Zlib))

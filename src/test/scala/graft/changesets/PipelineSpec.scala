@@ -72,6 +72,19 @@ class PipelineSpec extends SparkSpec {
     assert(!r2.ran && r2.reason.contains("unchanged"))
   }
 
+  test("both publish runs report the changeset count their conversion observed") {
+    val ids = 1 to 11
+    val runs = Seq[(String, (String, String, String) => Pipeline.Result)](
+      "run" -> ((xml, pub, state) => Pipeline.run(spark, xml, pub, state, sourceVersion = "v1")),
+      "runPointer" -> ((xml, pub, state) =>
+        Pipeline.runPointer(spark, xml, pub, state, sourceVersion = "v1")))
+    for ((name, publish) <- runs) {
+      val r = publish(writeXml(ids), tmpDir(s"pipe-rows-$name"), tmpDir(s"pipe-rows-state-$name"))
+      assert(r.ran && r.rows === ids.size.toLong, name)
+      assert(spark.read.parquet(r.published.get).count() === r.rows, name)
+    }
+  }
+
   test("retention keeps the newest N versioned artifacts") {
     val pub = tmpDir("pipe-pub3")
     val state = tmpDir("pipe-state3")

@@ -15,15 +15,17 @@ import graft.operators.Similarity
   * outside, with no hook in the store:
   *
   *   - after the data write: a segment dir with no manifest naming it,
-  *     written directly;
+  *     written directly (a postings one with its lexicon, which a
+  *     postings write stores before the manifest);
   *   - after the manifest commit: the op runs, then the pointer is
   *     flipped back to its parent.
   *
   * In both, readers must see exactly the parent version, retention
   * must delete no segment or model a retained manifest references, an
   * absorb replay must converge to the uninterrupted run, and an
-  * explicit-token op retried under a fresh token must read the same.
-  * Retention must order versions by manifest `seq`, not mtime.
+  * explicit-token op retried under a fresh token must read the same
+  * (postings: with the same stored statistics). Retention must order
+  * versions by manifest `seq`, not mtime.
   */
 class SegmentStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -110,9 +112,22 @@ class SegmentStoreSpec extends SparkSpec {
     assert(rows(ix.read(live(ix, dir))) === parentRows)
   }
 
-  /** A half-finished data write: a segment dir no manifest names. */
-  private def writeOrphan(ix: Index, dir: String, ref: String): Unit =
-    ix.read(live(ix, dir)).write.parquet(s"$dir/$ref")
+  /** A half-finished data write: a segment dir no manifest names,
+    * holding a postings write's lexicon too — one that disagrees with
+    * what the ref's own write would store.
+    */
+  private def writeOrphan(ix: Index, dir: String, ref: String): Unit = {
+    val rows = ix.read(live(ix, dir))
+    rows.write.parquet(s"$dir/$ref")
+    if (ix eq Postings) rows.groupBy(col("term")).agg((count(lit(1)) * 2).as("df"))
+      .write.parquet(s"$dir/$ref/${SegmentStore.LexiconDir}")
+  }
+
+  /** A postings version's stored statistics for a few terms. */
+  private def figures(ix: Index, versionDir: String) =
+    if (ix eq Postings) Pipeline.storedPostingsStatistics(ix.read(versionDir),
+      Seq("alpha", "beta", "doc3", "doc21", "word0"))
+    else None
 
   private val ops: Seq[(String, String, (Index, String, String) => String)] = Seq(
     ("publish", "seg", (ix, dir, v) => ix.publish(dir, v, 0 until 20)),
@@ -122,7 +137,10 @@ class SegmentStoreSpec extends SparkSpec {
 
   for (ix <- Seq(Ann, Postings); (op, written, run) <- ops)
     test(s"${ix.name} $op: a crash at either commit point leaves the parent live; a retry converges") {
-      val expected = rows(ix.read(run(ix, parent(ix, s"$op-clean"), "x")))
+      val clean = run(ix, parent(ix, s"$op-clean"), "x")
+      val expected = rows(ix.read(clean))
+      val expectedFigures = figures(ix, clean)
+      assert(expectedFigures.isDefined === (ix eq Postings))
 
       // after the data write: nothing references the segment, so the
       // same token simply rewrites it
@@ -132,7 +150,9 @@ class SegmentStoreSpec extends SparkSpec {
       assertParentLive(ix, d1, parentRows)
       assert(!Files.exists(Paths.get(d1, ix.segmentDir, s"$written-x")), "orphan not collected")
       writeOrphan(ix, d1, s"${ix.segmentDir}/$written-x")
-      assert(rows(ix.read(run(ix, d1, "x"))) === expected)
+      val retried = run(ix, d1, "x")
+      assert(rows(ix.read(retried)) === expected)
+      assert(figures(ix, retried) === expectedFigures)
       assertRefsIntact(ix, d1)
 
       // after the manifest commit: the committed version keeps its
@@ -142,7 +162,9 @@ class SegmentStoreSpec extends SparkSpec {
       ix.store.flipPointer(d2, s"${ix.prefix}v1", "v1")
       assertParentLive(ix, d2, parentRows)
       if (op != "publish") intercept[IllegalArgumentException](run(ix, d2, "x"))
-      assert(rows(ix.read(run(ix, d2, "x-retry"))) === expected)
+      val retriedFresh = run(ix, d2, "x-retry")
+      assert(rows(ix.read(retriedFresh)) === expected)
+      assert(figures(ix, retriedFresh) === expectedFigures)
       assertRefsIntact(ix, d2)
     }
 
