@@ -270,9 +270,8 @@ object Bench {
     // converter; its implied bound is "full planet inside one CI
     // job"). Synthetic but shape-faithful input: all 12 attributes
     // + a comment tag per element.
-    // sharded like any real dump directory (a single uncompressed .osm
-    // is one XML input split; the production planet bz2 splits via the
-    // codec instead) — 16 chunks let the parse fan out across cores
+    // sharded like any real dump directory — 16 chunks let the parse
+    // fan out across cores
     val convRows = 500000
     val chunks = 16
     val xmlDir = java.nio.file.Files.createTempDirectory("bench-changesets")
@@ -298,26 +297,22 @@ object Bench {
     // same warm-once/measure-twice/report-min discipline as the
     // queries: a single conversion measurement at 32 threads swings
     // 2-3x with GC phase
-    def convOnce(opts: graft.changesets.ChangesetConverter.Options): (Long, Double) = {
+    def convOnce(): (Long, Double) = {
       System.gc()
       val t0 = System.nanoTime()
-      val written = graft.changesets.ChangesetConverter.convert(
-        spark, xmlDir.toString, convOut, opts)
+      val written = graft.changesets.ChangesetConverter.convert(spark, xmlDir.toString, convOut)
       (written, (System.nanoTime() - t0) / 1e9)
     }
-    def convMetric(opts: graft.changesets.ChangesetConverter.Options): String = {
-      convOnce(opts) // warm
-      val (rows, s1) = convOnce(opts)
-      val (_, s2) = convOnce(opts)
+    convOnce() // warm
+    // the converter has one parser; the artifact writes this figure
+    // under both `converter` and `converter_fast` so readers of the
+    // older two-key artifact keep working
+    val conv = {
+      val (rows, s1) = convOnce()
+      val (_, s2) = convOnce()
       val sec = math.min(s1, s2)
       s"""{"rows":$rows,"sec":${r3(sec)},"rows_per_sec":${(rows / sec).toLong}}"""
     }
-    val conv = convMetric(graft.changesets.ChangesetConverter.Options())
-    // the opt-in hand-rolled scanner (Options(fastParser=true)): same
-    // rows, ~4x the single-core throughput of the StAX datasource —
-    // the number to hold against the reference's single-threaded
-    // quick-xml converter
-    val convFast = convMetric(graft.changesets.ChangesetConverter.Options(fastParser = true))
     // ~150 MB of temp input per run — don't leak it across rounds
     def rmTree(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p)) {
@@ -407,7 +402,7 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":${jsonString(sfDir)},""" +
         s""""sf2":${jsonString(sfDir2)},""" +
         s""""total_sf2":${r3(total2)},"queries":$detailQs,"converter":$conv,""" +
-        s""""converter_fast":$convFast,"ann_split":$annSplit,"calib_sec":${r3(calib)},""" +
+        s""""converter_fast":$conv,"ann_split":$annSplit,"calib_sec":${r3(calib)},""" +
         s""""calib_samples":$calibJson,"calib_mt_sec":${r3(calibMt)},""" +
         s""""calib_mt_max_sec":${r3(calibMtMax)}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
@@ -472,7 +467,7 @@ object Bench {
     println(
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsCompact,""" +
         s""""queries_elided":$elided,"total_sf2":${r3(total2)},"n_queries":${results.size},""" +
-        s""""converter":$conv,"converter_fast":$convFast,"ann_split":$annSplit,""" +
+        s""""converter":$conv,"converter_fast":$conv,"ann_split":$annSplit,""" +
         s""""calib_sec":${r3(calib)},"calib_mt_sec":${r3(calibMt)},""" +
         s""""run_spread_sec":${r3(runSpread)},"calib_mt_ratio":${r3(mtRatio)},""" +
         s""""membw_gbs":${r3(membwSt)},"membw_mt_gbs":${r3(membwMt)},""" +

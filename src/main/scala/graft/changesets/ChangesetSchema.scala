@@ -2,39 +2,15 @@ package graft.changesets
 
 import org.apache.spark.sql.types._
 
-/** Schemas for the OSM changeset conversion.
+/** Schema for the OSM changeset conversion.
   *
   * Mirrors the reference's fixed 13-column output schema
-  * (reference src/main.rs:384-408) and the raw XML shape its parser
-  * consumes (attributes of `<changeset>` plus `<tag k v>` children,
-  * src/main.rs:199-284). All raw attributes are read as strings so the
-  * projection layer owns the value-parse semantics (strict parses that
-  * fail the run, src/main.rs:333,337 — see ChangesetConverter).
+  * (reference src/main.rs:384-408). FastChangesetParser fills it from
+  * the attributes of `<changeset>` and its `<tag k v>` children
+  * (src/main.rs:199-284), with strict value parses that fail the run
+  * (src/main.rs:333,337).
   */
 object ChangesetSchema {
-
-  /** Raw read schema for the Spark XML source with rowTag=changeset,
-    * attributePrefix="_". Unknown attributes are dropped by schema
-    * omission (reference src/main.rs:220) and non-`tag` child subtrees
-    * (e.g. `<discussion>`) are skipped the same way (src/main.rs:261-269).
-    */
-  val raw: StructType = StructType(Seq(
-    StructField("_id", StringType),
-    StructField("_created_at", StringType),
-    StructField("_closed_at", StringType),
-    StructField("_open", StringType),
-    StructField("_user", StringType),
-    StructField("_uid", StringType),
-    StructField("_min_lat", StringType),
-    StructField("_min_lon", StringType),
-    StructField("_max_lat", StringType),
-    StructField("_max_lon", StringType),
-    StructField("_num_changes", StringType),
-    StructField("_comments_count", StringType),
-    StructField("tag", ArrayType(StructType(Seq(
-      StructField("_k", StringType),
-      StructField("_v", StringType))))),
-    StructField("_corrupt_record", StringType)))
 
   /** Output schema (reference src/main.rs:384-408). `num_changes` and
     * `comments_count` are parquet UINT_32 in the reference; Spark has no

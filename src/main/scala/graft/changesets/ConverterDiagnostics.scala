@@ -29,13 +29,11 @@ import org.apache.spark.sql.functions._
   *                       damaged fragment (the reference's two buffer
   *                       windows).
   *
-  * The report is computed with the splittable text framing
-  * (`lineSep = "</changeset>"`, same as FastChangesetParser), NOT the
-  * StAX datasource, which exposes neither offsets nor record order —
-  * so ONE report serves both parse paths: it describes the same
-  * damaged fragments either path skips/captures under
-  * continue-on-error. ChangesetConverterSpec pins report↔StAX and
-  * report↔fast-path agreement on damaged fixtures.
+  * The report uses the converter's own text framing
+  * (`lineSep = "</changeset>"`) and FastChangesetParser's record
+  * scanner, so it describes exactly the damaged fragments that
+  * `ChangesetConverter.parse` skips under continue-on-error.
+  * ConverterDiagnosticsSpec pins that agreement on damaged fixtures.
   *
   * Scale: one linear pass over the input text, no shuffle, ~zero
   * driver state; the output is proportional to the damage, not the
@@ -96,32 +94,6 @@ object ConverterDiagnostics {
         errs
       }
     }(Encoders.product[CorruptFragment]).toDF()
-  }
-
-  /** The StAX path's corrupt-record table: what PERMISSIVE mode
-    * captured and `parse(continueOnError = true)` dropped — exposed
-    * instead of silently discarded. Bounded context windows only (the
-    * StAX datasource has no offsets; use `report` for positions).
-    */
-  def corruptRecords(spark: SparkSession, input: String): DataFrame = {
-    val table = ChangesetConverter.readRaw(spark, input, continueOnError = true)
-      .filter(col("_corrupt_record").isNotNull)
-      .select(
-        col("_metadata.file_path").as("file"),
-        // whatever the PERMISSIVE parse salvaged before failing
-        col("_id").as("partial_id"),
-        substring(col("_corrupt_record"), 1, 500).as("context_head"),
-        // negative-position substring = suffix window
-        when(length(col("_corrupt_record")) > 500,
-          substring(col("_corrupt_record"), -500, 500))
-          .otherwise(col("_corrupt_record")).as("context_tail"))
-    // RDD barrier: downstream queries (e.g. .count()) would otherwise
-    // prune the projection to nothing and trip Spark's "query
-    // references only the corrupt record column" guard at the raw
-    // scan. The barrier pins the 4-column projection; the lost
-    // codegen/pushdown across it is irrelevant on a diagnostics table
-    // sized by the damage, not the dump.
-    spark.createDataFrame(table.rdd, table.schema)
   }
 
   /** Reference-format stderr dump (src/main.rs:344-363) for the CLI's

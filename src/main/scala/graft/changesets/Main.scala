@@ -9,7 +9,7 @@ import graft.GraftSession
 object Main {
   private val usage =
     """usage: graft.changesets.Main --input <xml[.bz2]> --output <parquet dir>
-      |         [--batch-size N] [--continue-on-error] [--single-file] [--fast-parser]""".stripMargin
+      |         [--batch-size N] [--continue-on-error] [--single-file]""".stripMargin
 
   def main(args: Array[String]): Unit = {
     var input = ""
@@ -23,7 +23,9 @@ object Main {
         case "--batch-size" => opts = opts.copy(batchSize = args(i + 1).toLong); i += 2
         case "--continue-on-error" => opts = opts.copy(continueOnError = true); i += 1
         case "--single-file" => opts = opts.copy(singleFile = true); i += 1
-        case "--fast-parser" => opts = opts.copy(fastParser = true); i += 1
+        // the converter has one parser; the old selector stays accepted
+        // so existing command lines still run
+        case "--fast-parser" => i += 1
         case other => System.err.println(s"unknown option: $other\n$usage"); sys.exit(2)
       }
     }

@@ -124,7 +124,7 @@ class ChangesetConverterSpec extends SparkSpec {
         |</osm>""".stripMargin) // second element is malformed
     val rows = parseRows(f.toString, ChangesetConverter.Options(continueOnError = true))
     assert(rows.map(_.id).toSeq == Seq(1L))
-    intercept[Exception] { parseRows(f.toString) } // FAILFAST
+    intercept[Exception] { parseRows(f.toString) } // no continue-on-error: abort
   }
 
   test("F10: non-changeset top-level elements ignored") {
@@ -157,9 +157,13 @@ class ChangesetConverterSpec extends SparkSpec {
   test("F11: timestamp shape is RFC3339-strict — no-offset and date-only forms abort") {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    // chrono parse_from_rfc3339 rejects these; a lenient cast would
-    // silently read them in session TZ (reference src/main.rs:193-197)
-    for (bad <- Seq("2020-01-01", "2020-01-01 12:00:00", "2020-01-01T12:00:00")) {
+    // chrono parse_from_rfc3339 rejects these; a lenient parse would
+    // silently read them in session TZ, or accept a missing second, a
+    // second in the offset or an empty fraction as java.time does
+    // (reference src/main.rs:193-197)
+    for (bad <- Seq("2020-01-01", "2020-01-01 12:00:00", "2020-01-01T12:00:00",
+        "2020-01-01T12:00+01:00", "2020-01-01T12:00:00+01:00:30",
+        "2020-01-01T12:00:00.+01:00")) {
       val e = intercept[Exception] {
         parseRows(writeXml(s"""<changeset id="1" created_at="$bad"/>"""))
       }

@@ -25,25 +25,10 @@ class ChangesetRoundTripSpec extends SparkSpec {
         .getOrElse(fail(s"generator exhausted at iteration $i"))
       val f = Files.createTempFile("prop", ".osm")
       Files.writeString(f, RoundTripXml.render(cs))
-      val got = ChangesetConverter.parse(spark, f.toString,
-        ChangesetConverter.Options()).as[Changeset].collect().sortBy(_.id).toList
+      val got = ChangesetConverter.parse(spark, f.toString)
+        .as[Changeset].collect().sortBy(_.id).toList
       // ms-truncated timestamps: the schema stores epoch millis
       assert(got === cs.sortBy(_.id).toList, s"round-trip mismatch at seed ${42L + i}")
-      Files.deleteIfExists(f)
-    }
-  }
-
-  test("fast parser: the same round trip, bit-identical") {
-    import spark.implicits._
-    (1 to 15).foreach { i =>
-      val cs = RoundTripXml.genChangesets
-        .apply(Gen.Parameters.default, Seed(42L + i))
-        .getOrElse(fail(s"generator exhausted at iteration $i"))
-      val f = Files.createTempFile("propf", ".osm")
-      Files.writeString(f, RoundTripXml.render(cs))
-      val got = ChangesetConverter.parse(spark, f.toString,
-        ChangesetConverter.Options(fastParser = true)).as[Changeset].collect().sortBy(_.id).toList
-      assert(got === cs.sortBy(_.id).toList, s"fast round-trip mismatch at seed ${42L + i}")
       Files.deleteIfExists(f)
     }
   }

@@ -1,16 +1,17 @@
 package graft.changesets
 
 import java.nio.file.Files
-
-import org.apache.spark.sql.Row
+import java.sql.Timestamp
 
 import graft.SparkSpec
 
-/** The fast parser's contract is "same rows as the XML-datasource
-  * path" — pinned here differentially on edge-case fixtures and on the
-  * round-trip generator corpus, plus the two-tier error semantics.
+/** The converter's parser (FastChangesetParser) against explicit
+  * expected rows on edge-case fixtures and against the round-trip
+  * generator's own values (RoundTripXml), plus the two-tier error
+  * semantics and single-file splitting.
   */
 class FastParserSpec extends SparkSpec {
+  import spark.implicits._
 
   private def write(xml: String): String = {
     val f = Files.createTempFile("fastp", ".osm")
@@ -18,20 +19,17 @@ class FastParserSpec extends SparkSpec {
     f.toString
   }
 
-  private def rows(path: String, opts: ChangesetConverter.Options): Seq[Row] =
-    ChangesetConverter.parse(spark, path, opts)
-      .orderBy("id").collect().toSeq
+  private def changesets(path: String): Seq[Changeset] =
+    ChangesetConverter.parse(spark, path).as[Changeset].collect().sortBy(_.id).toSeq
 
-  private def bothAgree(xml: String): Seq[Row] = {
-    val p = write(xml)
-    val slow = rows(p, ChangesetConverter.Options())
-    val fast = rows(p, ChangesetConverter.Options(fastParser = true))
-    assert(fast === slow, s"fast/slow divergence on:\n$xml")
-    slow
-  }
+  private def ts(s: String) = Some(Timestamp.from(java.time.Instant.parse(s)))
+
+  /** A changeset with the reference's defaults (src/main.rs:40-42). */
+  private def cs(id: Long): Changeset =
+    Changeset(id, None, None, open = false, None, None, None, None, None, None, 0L, 0L, None)
 
   test("differential: self-closing + open elements, entities, quotes, unknown attrs") {
-    val got = bothAgree(
+    val got = changesets(write(
       """<?xml version="1.0" encoding="UTF-8"?>
         |<osm version="0.6">
         |<changeset id="1" created_at="2024-01-02T03:04:05Z" open="false" user="a&amp;b &lt;c&gt;" uid="7" num_changes="3" comments_count="1"/>
@@ -45,32 +43,29 @@ class FastParserSpec extends SparkSpec {
         |<changeset id='4' open='true' user='single > quoted'/>
         |<changeset id="5"
         |   user="attrs split over lines" open="true"/>
-        |</osm>""".stripMargin)
-    assert(got.size === 5)
-    val byId = got.map(r => r.getLong(0) -> r).toMap
-    assert(byId(2).getString(12) === "last w wins") // last comment tag wins
-    assert(byId(3).getBoolean(3) === false)         // "True" != "true"
-    assert(byId(4).getString(4) === "single > quoted")
-    assert(byId(5).getString(4) === "attrs split over lines")
+        |</osm>""".stripMargin))
+    assert(got === Seq(
+      cs(1).copy(created_at = ts("2024-01-02T03:04:05Z"), user = Some("a&b <c>"),
+        uid = Some(7L), num_changes = 3L, comments_count = 1L),
+      cs(2).copy(created_at = ts("2024-01-02T03:04:05.250Z"), open = true,
+        user = Some("it's \"q\""), min_lat = Some(-1.5), min_lon = Some(2.5),
+        max_lat = Some(3.5), max_lon = Some(4.5),
+        description = Some("last w wins")), // last comment tag wins
+      cs(3),                                // "True" != "true"
+      cs(4).copy(open = true, user = Some("single > quoted")),
+      cs(5).copy(open = true, user = Some("attrs split over lines"))))
   }
 
   test("newline INSIDE an attribute value: fast path keeps it raw like quick-xml") {
     // XML-spec attribute-value normalization folds the newline to a
     // space; quick-xml (the reference, src/main.rs:205) hands the raw
-    // bytes through, and so does the fast path. The StAX datasource
-    // normalizes — a documented strict-path divergence from the
-    // reference, not from the fast path.
+    // bytes through, and so does the parser
     val p = write("<osm><changeset id=\"1\" user=\"multi\nline\" open=\"true\"/></osm>")
-    val fast = rows(p, ChangesetConverter.Options(fastParser = true))
-    assert(fast.head.getString(4) === "multi\nline")
-    val slow = rows(p, ChangesetConverter.Options())
-    assert(slow.head.getString(4) === "multi line")
+    assert(changesets(p).head.user === Some("multi\nline"))
   }
 
   test("differential: tags without a comment, and no tags, give a null description") {
-    // the default parser once raised INVALID_ARRAY_INDEX_IN_ELEMENT_AT
-    // under ANSI when a changeset's tags held no comment
-    val got = bothAgree(
+    val got = changesets(write(
       """<osm>
         |<changeset id="1" open="false">
         |  <tag k="created_by" v="JOSM"/>
@@ -78,19 +73,15 @@ class FastParserSpec extends SparkSpec {
         |</changeset>
         |<changeset id="2" open="false"/>
         |<changeset id="3" open="false"><tag k="comment" v="kept"/></changeset>
-        |</osm>""".stripMargin)
-    assert(got.map(_.getLong(0)) === Seq(1L, 2L, 3L))
-    assert(got(0).isNullAt(12) && got(1).isNullAt(12))
-    assert(got(2).getString(12) === "kept")
+        |</osm>""".stripMargin))
+    assert(got === Seq(cs(1), cs(2), cs(3).copy(description = Some("kept"))))
   }
 
   test("differential: absent attributes default exactly like the reference") {
-    val got = bothAgree(
-      """<osm><changeset open="true"/><changeset id="9"/></osm>""")
+    val got = changesets(write(
+      """<osm><changeset open="true"/><changeset id="9"/></osm>"""))
     // missing @id -> 0 (Rust Default), counters 0, the rest null
-    assert(got.map(_.getLong(0)) === Seq(0L, 9L))
-    assert(got.forall(r => r.getLong(10) === 0L && r.getLong(11) === 0L))
-    assert(got.forall(r => r.isNullAt(1) && r.isNullAt(5)))
+    assert(got === Seq(cs(0).copy(open = true), cs(9)))
   }
 
   test("differential: random round-trip corpora (seeded)") {
@@ -100,7 +91,8 @@ class FastParserSpec extends SparkSpec {
     (1 to 10).foreach { i =>
       val batch = gen.apply(Gen.Parameters.default, Seed(1000L + i))
         .getOrElse(fail(s"generator exhausted at $i"))
-      bothAgree(RoundTripXml.render(batch))
+      assert(changesets(write(RoundTripXml.render(batch))) === batch.sortBy(_.id),
+        s"round-trip mismatch at seed ${1000L + i}")
     }
   }
 
@@ -109,12 +101,11 @@ class FastParserSpec extends SparkSpec {
         """<osm><changeset id="x1"/></osm>""",
         """<osm><changeset id="1" uid=" 42"/></osm>""",
         """<osm><changeset id="1" created_at="2024-01-02 03:04:05"/></osm>""",
-        """<osm><changeset id="1" num_changes="4294967296"/></osm>""");
-        fast <- Seq(false, true)) {
+        """<osm><changeset id="1" num_changes="4294967296"/></osm>""")) {
       val p = write(bad)
       val e = intercept[Exception] {
         ChangesetConverter.parse(spark, p,
-          ChangesetConverter.Options(continueOnError = true, fastParser = fast)).collect()
+          ChangesetConverter.Options(continueOnError = true)).collect()
       }
       def messages(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
@@ -122,16 +113,14 @@ class FastParserSpec extends SparkSpec {
       assert(messages(e).exists(m =>
         m.contains("parse failed") || m.contains("u32 range") ||
           m.contains("entity") || m.contains("RaiseError")),
-        s"fast=$fast xml=$bad got=${messages(e)}")
+        s"xml=$bad got=${messages(e)}")
     }
     // unresolvable entity: a VALUE error in the reference (unescape_value's
-    // `?`, src/main.rs:205) — the fast path matches; the XML datasource
-    // classifies it as record corruption instead (documented divergence:
-    // entity resolution happens inside the StAX tokenizer there)
+    // `?`, src/main.rs:205), so continue-on-error does not skip it
     val p = write("""<osm><changeset id="1" user="bad &entity;"/></osm>""")
     val e = intercept[Exception] {
       ChangesetConverter.parse(spark, p,
-        ChangesetConverter.Options(continueOnError = true, fastParser = true)).collect()
+        ChangesetConverter.Options(continueOnError = true)).collect()
     }
     assert(e.getMessage != null || e.getCause != null)
   }
@@ -146,27 +135,24 @@ class FastParserSpec extends SparkSpec {
         |</osm>""".stripMargin
     val p = write(xml)
     val kept = ChangesetConverter.parse(spark, p,
-        ChangesetConverter.Options(continueOnError = true, fastParser = true))
+        ChangesetConverter.Options(continueOnError = true))
       .collect().map(_.getLong(0)).sorted.toSeq
     // fragment 2 is damaged and dropped; fragment bounds stop its
     // unterminated quote from swallowing the NEXT changeset, so 3
     // survives (strictly better recovery than a linear tokenizer)
     assert(kept === Seq(1L, 3L))
     assertThrows[Exception] {
-      ChangesetConverter.parse(spark, p,
-        ChangesetConverter.Options(fastParser = true)).collect()
+      ChangesetConverter.parse(spark, p).collect()
     }
   }
 
   test("duplicate attributes: fast path keeps the LAST like the reference's match arms") {
     // quick-xml with check_* disabled passes duplicate attributes
     // through and the reference's match arms overwrite
-    // (src/main.rs:207-221, last assignment wins). A validating XML
-    // parser calls this malformed — the StAX path drops the record
-    // under PERMISSIVE — so the lenient tier is fast-path parity only.
+    // (src/main.rs:207-221, last assignment wins), where a validating
+    // XML parser would call the record malformed
     val p = write("""<osm><changeset id="1" user="first" user="second" open="true"/></osm>""")
-    val fast = rows(p, ChangesetConverter.Options(fastParser = true))
-    assert(fast.size === 1 && fast.head.getString(4) === "second")
+    assert(changesets(p) === Seq(cs(1).copy(open = true, user = Some("second"))))
   }
 
   test("bz2 input (incl. multistream, the planet format): both paths agree") {
@@ -184,12 +170,8 @@ class FastParserSpec extends SparkSpec {
     val half = xml.length / 2
     val multi = Files.createTempFile("fastp-multi", ".osm.bz2")
     writeBz2(multi, Seq(xml.substring(0, half), xml.substring(half)))
-    for (p <- Seq(single, multi)) {
-      val slow = rows(p.toString, ChangesetConverter.Options())
-      val fast = rows(p.toString, ChangesetConverter.Options(fastParser = true))
-      assert(fast === slow, s"bz2 fast/slow divergence for $p")
-      assert(slow.size === batch.size)
-    }
+    for (p <- Seq(single, multi))
+      assert(changesets(p.toString) === batch.sortBy(_.id), s"bz2 round-trip mismatch for $p")
   }
 
   /** Each element of `parts` becomes its own bz2 stream member. */
@@ -212,9 +194,20 @@ class FastParserSpec extends SparkSpec {
       s"""<changeset id="$i" created_at="2024-01-01T00:00:00Z" open="false" num_changes="${i % 7}" comments_count="0"/>\n"""))
     sb.append("</osm>\n")
     val p = write(sb.toString)
-    val df = FastChangesetParser.parse(spark, p, continueOnError = false)
-    assert(df.count() === n.toLong)
-    assert(df.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0)
-      === (n.toLong - 1) * n / 2)
+    // ~550 KB: 64 KB splits cut the file, and record framing must hold
+    // across every cut
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, 64L * 1024)
+    try {
+      val df = FastChangesetParser.parse(spark, p, continueOnError = false)
+      assert(df.rdd.getNumPartitions > 1)
+      assert(df.count() === n.toLong)
+      assert(df.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0)
+        === (n.toLong - 1) * n / 2)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }

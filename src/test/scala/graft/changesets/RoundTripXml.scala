@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import org.scalacheck.{Arbitrary, Gen}
 
 /** Shared random-changeset corpus generator + XML renderer for the
-  * round-trip and fast-parser differential suites.
+  * round-trip suites (ChangesetRoundTripSpec, FastParserSpec): the
+  * generated values are the expected rows.
   */
 object RoundTripXml {
 
