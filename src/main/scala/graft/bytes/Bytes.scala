@@ -36,6 +36,8 @@ object Bytes {
       case _: ArrayIndexOutOfBoundsException | _: StringIndexOutOfBoundsException =>
         Left(s"$fmt: truncated payload")
       case _: NegativeArraySizeException => Left(s"$fmt: negative size field")
+      // a decimal or hex field parsed with toInt/parseInt past Int range
+      case _: NumberFormatException => Left(s"$fmt: number out of range")
     }
 
   /** A size read from untrusted bytes, checked against [[InflateCap]]

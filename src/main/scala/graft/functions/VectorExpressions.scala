@@ -304,7 +304,8 @@ object VectorExpressions {
     native(Hash60Md5.fnName, 1)(c => Hash60Md5(c(0))),
     native(Md5Bin.fnName, 1)(c => Md5Bin(c(0))),
     native(GramHashes.fnName, 1)(c => GramHashes(c(0))),
-    native(StopwordHits.fnName, 2)(c => StopwordHits(c(0), c(1))))
+    native(StopwordHits.fnName, 2)(c => StopwordHits(c(0), c(1))),
+    native(HtmlText.fnName, 1)(c => HtmlText(c(0))))
 
   private def native[E <: Expression: ClassTag](name: String, arity: Int)(
       build: Seq[Expression] => E): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =

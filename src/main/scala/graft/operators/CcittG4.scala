@@ -80,27 +80,31 @@ object CcittG4 {
     "000000010111", "000000011100", "000000011101", "000000011110",
     "000000011111").map(t) // 1792..2560, both colors
 
-  // decode maps: (len, code) -> run
-  private def mkMap(term: Array[(Int, Int)], makeup: Array[(Int, Int)]): Map[(Int, Int), Int] = {
-    val m = Map.newBuilder[(Int, Int), Int]
-    term.zipWithIndex.foreach { case ((c, l), run) => m += ((l, c) -> run) }
-    makeup.zipWithIndex.foreach { case ((c, l), i) => m += ((l, c) -> (64 * (i + 1))) }
-    ExtMakeup.zipWithIndex.foreach { case ((c, l), i) => m += ((l, c) -> (1792 + 64 * i)) }
-    m.result()
+  // every code of one color as (len, code, run)
+  private def codes(term: Array[(Int, Int)], makeup: Array[(Int, Int)]): Seq[(Int, Int, Int)] =
+    term.toSeq.zipWithIndex.map { case ((c, l), run) => (l, c, run) } ++
+      makeup.toSeq.zipWithIndex.map { case ((c, l), i) => (l, c, 64 * (i + 1)) } ++
+      ExtMakeup.toSeq.zipWithIndex.map { case ((c, l), i) => (l, c, 1792 + 64 * i) }
+  private val WhiteCodes = codes(WhiteTerm, WhiteMakeup)
+  private val BlackCodes = codes(BlackTerm, BlackMakeup)
+
+  // decode tables: the run of the code `code` of `len` bits at
+  // (1 << len) | code, -1 where no code is (codes are at most 13 bits)
+  private def runTable(cs: Seq[(Int, Int, Int)]): Array[Int] = {
+    val t = Array.fill(1 << 15)(-1)
+    cs.foreach { case (l, c, run) => t((1 << l) | c) = run }
+    t
   }
-  private val WhiteMap = mkMap(WhiteTerm, WhiteMakeup)
-  private val BlackMap = mkMap(BlackTerm, BlackMakeup)
+  private val WhiteRuns = runTable(WhiteCodes)
+  private val BlackRuns = runTable(BlackCodes)
 
   // table integrity: prefix-freeness per color (a transcription slip
   // almost always breaks this)
   locally {
-    def check(m: Map[(Int, Int), Int], name: String): Unit = {
-      val codes = m.keys.toSeq
-      for (a @ (la, ca) <- codes; (lb, cb) <- codes
-           if la < lb && (cb >> (lb - la)) == ca)
-        throw new IllegalStateException(s"CcittG4 $name table: ${a} prefixes ($lb,$cb)")
-    }
-    check(WhiteMap, "white"); check(BlackMap, "black")
+    def check(cs: Seq[(Int, Int, Int)], name: String): Unit =
+      for ((la, ca, _) <- cs; (lb, cb, _) <- cs if la < lb && (cb >> (lb - la)) == ca)
+        throw new IllegalStateException(s"CcittG4 $name table: ($la,$ca) prefixes ($lb,$cb)")
+    check(WhiteCodes, "white"); check(BlackCodes, "black")
   }
 
   // -------------------------------------------------------- bit stream
@@ -140,7 +144,7 @@ object CcittG4 {
 
   /** One MH run of `color` (0 white, 1 black): makeup chain + term. */
   private[operators] def readRun(r: Reader, color: Int): Int = {
-    val map = if (color == 0) WhiteMap else BlackMap
+    val table = if (color == 0) WhiteRuns else BlackRuns
     var total = 0
     var done = false
     while (!done) {
@@ -151,7 +155,7 @@ object CcittG4 {
         code = (code << 1) | r.bit()
         len += 1
         if (len > 14) throw Malformed("g4: unknown run code")
-        run = map.getOrElse((len, code), -1)
+        run = table((1 << len) | code)
       }
       total += run
       done = run < 64 // a terminating code ends the chain

@@ -494,8 +494,7 @@ object JpegCodec {
             progBW = Array.tabulate(nc)(i => frameMcusX * comps(i).h)
             val totalCoefs = (0 until nc).map(i =>
               progBW(i).toLong * frameMcusY * comps(i).v * 64).sum
-            if (totalCoefs > (1L << 26))
-              return Left("jpeg: progressive frame too large for coefficient buffering")
+            capped("jpeg", "progressive coefficient buffer", totalCoefs * 4)
             progCoefs = Array.tabulate(nc)(i =>
               new Array[Int]((progBW(i) * frameMcusY * comps(i).v * 64)))
           }

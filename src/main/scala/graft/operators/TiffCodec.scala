@@ -203,6 +203,9 @@ object TiffCodec {
     // feeds the same single-pass stats - O(region) memory either way
     def emitRegion(data: Array[Byte], x0: Int, y0: Int,
         dataRowBytes: Int, visW: Int, visH: Int): Unit = {
+      // mn/mx are captured vars (heap refs); the pixel loop updates locals
+      var lo = mn
+      var hi = mx
       var r = 0
       while (r < visH) {
         val base = r * dataRowBytes
@@ -214,35 +217,29 @@ object TiffCodec {
           }
         }
         val y = y0 + r
-        // channel triple at column x of this row (post-predictor)
-        def c012(x: Int): (Int, Int, Int) = {
+        // channel i (0-2) of the pixel at column x of this row
+        // (post-predictor); gray repeats its one sample
+        def ch(x: Int, i: Int): Int = {
           val px = base + x * spp
-          if (palette != null) {
-            val idx = data(px) & 0xff
-            (palette(0)(idx), palette(1)(idx), palette(2)(idx))
-          } else if (spp == 1) {
-            val v0 = data(px) & 0xff
-            val v = if (photometric == 0) 255 - v0 else v0
-            (v, v, v)
-          } else {
-            def ch(i: Int) = {
-              val rv = data(px + i) & 0xff
-              if (photometric == 0) 255 - rv else rv
-            }
-            (ch(0), ch(1), ch(2))
+          if (palette != null) palette(i)(data(px) & 0xff)
+          else {
+            val v = data(if (spp == 1) px else px + i) & 0xff
+            if (photometric == 0) 255 - v else v
           }
         }
+        val color = palette != null || spp == 3
         var x = 0
         while (x < visW) {
-          val (c0, c1, c2) = c012(x)
-          if (palette != null || spp == 3) {
-            sums(0) += c0; sums(1) += c1; sums(2) += c2
-            if (c0 < mn) mn = c0; if (c1 < mn) mn = c1; if (c2 < mn) mn = c2
-            if (c0 > mx) mx = c0; if (c1 > mx) mx = c1; if (c2 > mx) mx = c2
-          } else {
-            sums(0) += c0
-            if (c0 < mn) mn = c0
-            if (c0 > mx) mx = c0
+          val c0 = ch(x, 0)
+          sums(0) += c0
+          if (c0 < lo) lo = c0
+          if (c0 > hi) hi = c0
+          if (color) {
+            val c1 = ch(x, 1)
+            val c2 = ch(x, 2)
+            sums(1) += c1; sums(2) += c2
+            if (c1 < lo) lo = c1; if (c2 < lo) lo = c2
+            if (c1 > hi) hi = c1; if (c2 > hi) hi = c2
           }
           x += 1
         }
@@ -250,13 +247,15 @@ object TiffCodec {
         var g = 0
         while (g < 64) {
           if (gridY(g) == y && gridX(g) >= x0 && gridX(g) < x0 + visW) {
-            val (c0, c1, c2) = c012(gridX(g) - x0)
-            grays(g) = c0 + c1 + c2
+            val gx = gridX(g) - x0
+            grays(g) = ch(gx, 0) + ch(gx, 1) + ch(gx, 2)
           }
           g += 1
         }
         r += 1
       }
+      mn = lo
+      mx = hi
     }
 
     def decodeRegion(off: Int, len: Int, size: Long, what: String): Array[Byte] = {

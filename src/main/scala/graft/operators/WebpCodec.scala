@@ -85,7 +85,7 @@ object WebpCodec {
 
   // ------------------------------------------------------------ decode
 
-  private final class BitReader(d: Array[Byte], var pos: Int, end: Int) {
+  private[operators] final class BitReader(d: Array[Byte], var pos: Int, end: Int) {
     private var acc = 0L
     private var n = 0
     def bits(k: Int): Int = {
@@ -107,56 +107,76 @@ object WebpCodec {
     * symbol order; first-read bit = MSB of the code). A code with
     * exactly ONE used symbol reads zero bits (the simple-code
     * degenerate the spec allows). Over/under-subscribed codes abort.
+    * Codes come from counting lengths: the first code of each length
+    * follows from the counts of the shorter ones (RFC 1951 §3.2.2).
     */
-  private final class Huff(lengths: Array[Int]) {
+  private[operators] final class Huff(lengths: Array[Int]) {
     private var single = -1
     // binary tree in arrays; node 0 is the root, -sym-1 marks a leaf
     private var left: Array[Int] = null
     private var right: Array[Int] = null
     locally {
-      val used = lengths.zipWithIndex.filter(_._1 > 0)
-      if (used.isEmpty) throw Malformed("webp: empty prefix code")
-      if (used.length == 1) single = used(0)._2
-      else {
-        var kraft = 0.0
-        used.foreach { case (l, _) =>
-          if (l > 15) throw Malformed(s"webp: code length $l > 15")
-          kraft += 1.0 / (1L << l)
+      val count = new Array[Int](16) // used symbols per code length
+      var nUsed = 0
+      var first = -1
+      var tooLong = -1
+      var sym = 0
+      while (sym < lengths.length) {
+        val l = lengths(sym)
+        if (l > 0) {
+          nUsed += 1
+          if (first < 0) first = sym
+          if (l <= 15) count(l) += 1
+          else if (tooLong < 0) tooLong = l
         }
-        if (math.abs(kraft - 1.0) > 1e-12)
-          throw Malformed("webp: prefix code not complete")
-        val maxNodes = 2 * used.length + 16
-        left = Array.fill(maxNodes)(0)
-        right = Array.fill(maxNodes)(0)
-        var nextNode = 1
-        // canonical code assignment: sort by (length, symbol)
+        sym += 1
+      }
+      if (nUsed == 0) throw Malformed("webp: empty prefix code")
+      if (nUsed == 1) single = first
+      else {
+        if (tooLong >= 0) throw Malformed(s"webp: code length $tooLong > 15")
+        // Kraft sum in units of 2^-15: complete iff exactly 2^15
+        var kraft = 0L
+        var l = 1
+        while (l <= 15) { kraft += count(l).toLong << (15 - l); l += 1 }
+        if (kraft != (1L << 15)) throw Malformed("webp: prefix code not complete")
+        val next = new Array[Int](16)
         var code = 0
-        var prevLen = 0
-        used.sortBy { case (l, s) => (l, s) }.foreach { case (l, sym) =>
-          code <<= (l - prevLen)
-          prevLen = l
-          // walk MSB-first, creating nodes
-          var node = 0
-          var i = l - 1
-          while (i >= 0) {
-            val b = (code >> i) & 1
-            if (i == 0) {
-              if (b == 0) left(node) = -sym - 1 else right(node) = -sym - 1
-            } else {
+        l = 1
+        while (l <= 15) {
+          code = (code + count(l - 1)) << 1
+          next(l) = code
+          l += 1
+        }
+        val maxNodes = 2 * nUsed + 16
+        left = new Array[Int](maxNodes)
+        right = new Array[Int](maxNodes)
+        var nextNode = 1
+        sym = 0
+        while (sym < lengths.length) {
+          val len = lengths(sym)
+          if (len > 0) {
+            val c = next(len)
+            next(len) += 1
+            // walk MSB-first, creating nodes
+            var node = 0
+            var i = len - 1
+            while (i > 0) {
+              val b = (c >> i) & 1
               val nxt = if (b == 0) left(node) else right(node)
-              val child =
+              node =
                 if (nxt > 0) nxt
                 else {
-                  val c = nextNode
+                  val n = nextNode
                   nextNode += 1
-                  if (b == 0) left(node) = c else right(node) = c
-                  c
+                  if (b == 0) left(node) = n else right(node) = n
+                  n
                 }
-              node = child
+              i -= 1
             }
-            i -= 1
+            if ((c & 1) == 0) left(node) = -sym - 1 else right(node) = -sym - 1
           }
-          code += 1
+          sym += 1
         }
       }
     }
@@ -378,7 +398,7 @@ object WebpCodec {
       }
     }
     val nPx = xsize.toLong * ysize
-    if (nPx > (1L << 26)) throw Malformed("webp: raster too large for buffering")
+    capped("webp", "pixel buffer", nPx * 4)
     if (nPx <= 0) throw Malformed("webp: empty image stream")
 
     val cacheBits = if (br.bit() == 1) br.bits(4) else 0

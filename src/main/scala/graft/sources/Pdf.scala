@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -92,6 +94,71 @@ object Pdf {
       nXrefCompressed: Int = 0, // xref-stream type-2 (in-ObjStm) entries
       nCmaps: Int = 0) // /ToUnicode CMaps parsed and applied
 
+  // every dictionary pattern the extractor reads, compiled once
+  private val FontTypeRe = "/Type\\s*/Font".r
+  private val ToUnicodeRe = "/ToUnicode\\s+(\\d+)\\s+0\\s+R".r
+  private val FontResRe = "/Font\\s*<<([^>]*)>>".r
+  private val FontRefRe = "/(\\w+)\\s+(\\d+)\\s+0\\s+R".r
+  private val LengthRe = "/Length\\s+(\\d+)(?!\\s+0\\s+R)".r
+  private val ImageRe = "/Subtype\\s*/Image".r
+  private val ObjStmRe = "/Type\\s*/ObjStm".r
+  private val XRefRe = "/Type\\s*/XRef".r
+  private val EarlyChange0Re = "/EarlyChange\\s+0".r
+  private val KRe = "/K\\s+(-?\\d+)".r
+  private val ColumnsRe = "/Columns\\s+(-?\\d+)".r
+  private val RowsRe = "/Rows\\s+(-?\\d+)".r
+  private val SignedHeightRe = "/Height\\s+(-?\\d+)".r
+  private val EncodedByteAlignRe = "/EncodedByteAlign\\s+true".r
+  private val EndOfLineRe = "/EndOfLine\\s+true".r
+  private val WidthRe = "/Width\\s+(\\d+)".r
+  private val HeightRe = "/Height\\s+(\\d+)".r
+  private val BitsRe = "/BitsPerComponent\\s+(\\d+)".r
+  private val IndexedRe = ("/ColorSpace\\s*\\[\\s*/Indexed\\s*/(DeviceRGB|DeviceGray)" +
+    "\\s+(\\d+)\\s*<([0-9A-Fa-f\\s]*)>\\s*\\]").r
+  private val ColorSpaceRe = "/ColorSpace\\s*/([A-Za-z0-9]+)".r
+  private val NRe = "/N\\s+(\\d+)".r
+  private val FirstRe = "/First\\s+(\\d+)".r
+  private val DigitsRe = "\\d+".r
+  private val PageRe = "/Type\\s*/Page(?![A-Za-z])".r
+  private val WRe = "/W\\s*\\[([^\\]]*)\\]".r
+  private val PredictorRe = "/Predictor\\s+(\\d+)".r
+  private val FilterRe = "/Filter\\s*(\\[[^\\]]*\\]|/[A-Za-z0-9]+)".r
+  private val NameRe = "/([A-Za-z0-9]+)".r
+  private val CodespaceRe = "(?s)begincodespacerange\\s*<([0-9A-Fa-f]+)>".r
+  private val HexTokRe = "<([0-9A-Fa-f]+)>".r
+  private val BfCharRe = "(?s)beginbfchar(.*?)endbfchar".r
+  private val BfRangeRe = "(?s)beginbfrange(.*?)endbfrange".r
+  private val RangeTokRe = "<([0-9A-Fa-f]+)>|\\[|\\]".r
+
+  /** Every top-level object header `(\d+)\s+0\s+obj`, as the
+    * leftmost non-overlapping `(start, number)` matches a regex scan
+    * would give, found from each `obj` by a backward check: whitespace,
+    * the generation `0`, whitespace, then the object number's digits.
+    * Whitespace is `\s`'s set, `[ \t\n\x0B\f\r]`.
+    */
+  private[sources] def objectStarts(s: String): Array[(Int, Int)] = {
+    def ws(c: Char) = c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
+    def digit(c: Char) = c >= '0' && c <= '9'
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    var t = s.indexOf("obj")
+    while (t >= 0) {
+      var q = t - 1
+      while (q >= 0 && ws(s(q))) q -= 1
+      if (q < t - 1 && q >= 0 && s(q) == '0') {
+        val zero = q
+        q -= 1
+        while (q >= 0 && ws(s(q))) q -= 1
+        if (q < zero - 1 && q >= 0 && digit(s(q))) {
+          val numEnd = q + 1
+          while (q >= 0 && digit(s(q))) q -= 1
+          out += ((q + 1, s.substring(q + 1, numEnd).toInt))
+        }
+      }
+      t = s.indexOf("obj", t + 3)
+    }
+    out.toArray
+  }
+
   def sniff(data: Array[Byte]): Boolean =
     data.length >= 5 && data(0) == '%' && data(1) == 'P' &&
       data(2) == 'D' && data(3) == 'F' && data(4) == '-'
@@ -131,17 +198,17 @@ object Pdf {
     // CMap streams must feed the code->unicode map, never the shows
     // scanner, and content decoding becomes font-aware (Tf tracking).
     val objStarts: Array[(Int, Int)] =
-      "(\\d+)\\s+0\\s+obj".r.findAllMatchIn(s).map(m => (m.start, m.group(1).toInt)).toArray
+      objectStarts(s)
     val fontToUni: Map[Int, Int] = objStarts.flatMap { case (off, num) =>
       val end = s.indexOf("endobj", off)
       val seg = s.substring(off, if (end > 0) math.min(end, off + 4096) else math.min(s.length, off + 4096))
-      if ("/Type\\s*/Font".r.findFirstIn(seg).isDefined)
-        "/ToUnicode\\s+(\\d+)\\s+0\\s+R".r.findFirstMatchIn(seg).map(m => num -> m.group(1).toInt)
+      if (FontTypeRe.findFirstIn(seg).isDefined)
+        ToUnicodeRe.findFirstMatchIn(seg).map(m => num -> m.group(1).toInt)
       else None
     }.toMap
     val resFont: Map[String, Int] =
-      "/Font\\s*<<([^>]*)>>".r.findAllMatchIn(s).flatMap { m =>
-        "/(\\w+)\\s+(\\d+)\\s+0\\s+R".r.findAllMatchIn(m.group(1))
+      FontResRe.findAllMatchIn(s).flatMap { m =>
+        FontRefRe.findAllMatchIn(m.group(1))
           .map(fm => fm.group(1) -> fm.group(2).toInt)
       }.toMap
     val toUniObjs: Set[Int] = fontToUni.values.toSet
@@ -187,8 +254,7 @@ object Pdf {
           var ds = sp + 6
           if (ds < s.length && s(ds) == '\r') ds += 1
           if (ds < s.length && s(ds) == '\n') ds += 1
-          val lenDirect = "/Length\\s+(\\d+)(?!\\s+0\\s+R)".r
-            .findFirstMatchIn(dict).map(_.group(1).toInt)
+          val lenDirect = LengthRe.findFirstMatchIn(dict).map(_.group(1).toInt)
           val de = lenDirect.map(ds + _).filter(_ <= s.length)
             .getOrElse {
               val e = s.indexOf("endstream", ds)
@@ -201,7 +267,7 @@ object Pdf {
               }
             }
           if (de > s.length) { from = sp + 6 }
-          else if ("/Subtype\\s*/Image".r.findFirstIn(dict).isDefined) {
+          else if (ImageRe.findFirstIn(dict).isDefined) {
             // image XObject: the raster never feeds the shows scanner;
             // decode it to stats through the shared image codecs
             // (DCTDecode tails route to the in-house JPEG decoder,
@@ -218,7 +284,7 @@ object Pdf {
               case None => nImageSkipped += 1
             }
             from = math.max(de, sp + 6)
-          } else if ("/Type\\s*/ObjStm".r.findFirstIn(dict).isDefined) {
+          } else if (ObjStmRe.findFirstIn(dict).isDefined) {
             // OBJECT stream (spec §7.5.7, modern writers): unpack the
             // compressed dict objects — never the shows scanner (its
             // bytes are dicts, not content)
@@ -231,7 +297,7 @@ object Pdf {
               }
             }
             from = math.max(de, sp + 6)
-          } else if ("/Type\\s*/XRef".r.findFirstIn(dict).isDefined) {
+          } else if (XRefRe.findFirstIn(dict).isDefined) {
             // cross-reference STREAM (spec §7.5.8): W-column entries,
             // usually flate + PNG Up predictor — decode and tally
             // entry types (1 = offset, 2 = compressed-in-ObjStm)
@@ -327,7 +393,7 @@ object Pdf {
   private def applyFilters(dict: String, filters: Seq[String],
       data: Array[Byte], ds: Int, de: Int,
       predictorHandledByCaller: Boolean = false): Option[Array[Byte]] = {
-    val lzwDefault = !"/EarlyChange\\s+0".r.findFirstIn(dict).isDefined
+    val lzwDefault = !EarlyChange0Re.findFirstIn(dict).isDefined
     val hasPredictor = !predictorHandledByCaller && dict.contains("/Predictor")
     var cur: Option[Array[Byte]] =
       Some(java.util.Arrays.copyOfRange(data, ds, de))
@@ -358,20 +424,18 @@ object Pdf {
   private def decodeCcittImage(dict: String,
       bytes: Array[Byte]): Option[graft.operators.ImageCodec.ImageStats] = {
     import graft.operators.{CcittG3, CcittG4, ImageCodec}
-    def num(k: String): Option[Int] =
-      (k + "\\s+(-?\\d+)").r.findFirstMatchIn(dict).map(_.group(1).toInt)
-    def flag(k: String): Boolean =
-      (k + "\\s+true").r.findFirstIn(dict).isDefined
-    val k = num("/K").getOrElse(0)
-    val w = num("/Columns").getOrElse(1728)
-    val rows = num("/Rows").orElse(num("/Height")).getOrElse(0)
+    def num(re: Regex): Option[Int] = re.findFirstMatchIn(dict).map(_.group(1).toInt)
+    def flag(re: Regex): Boolean = re.findFirstIn(dict).isDefined
+    val k = num(KRe).getOrElse(0)
+    val w = num(ColumnsRe).getOrElse(1728)
+    val rows = num(RowsRe).orElse(num(SignedHeightRe)).getOrElse(0)
     if (w <= 0 || rows <= 0 || w.toLong * rows > (64L << 20)) return None
     val bits =
       try {
         if (k < 0) Some(CcittG4.decode(bytes, w, rows))
         else if (k == 0)
-          Some(CcittG3.decodeMH(bytes, w, rows, byteAlign = flag("/EncodedByteAlign")))
-        else if (flag("/EndOfLine")) Some(CcittG3.decodeG3(bytes, w, rows, twoD = true))
+          Some(CcittG3.decodeMH(bytes, w, rows, byteAlign = flag(EncodedByteAlignRe)))
+        else if (flag(EndOfLineRe)) Some(CcittG3.decodeG3(bytes, w, rows, twoD = true))
         else None
       } catch { case Malformed(_) => None }
     bits.flatMap { b =>
@@ -400,17 +464,14 @@ object Pdf {
       if (isDct) graft.operators.ImageCodec.decode(bytes).toOption
       else if (isCcitt) decodeCcittImage(dict, bytes)
       else {
-        def num(k: String): Option[Int] =
-          (k + "\\s+(\\d+)").r.findFirstMatchIn(dict).map(_.group(1).toInt)
+        def num(re: Regex): Option[Int] = re.findFirstMatchIn(dict).map(_.group(1).toInt)
         // /Indexed palette color space (r20 — the scanned-PDF palette
         // shape, the PNG/GIF/TIFF-palette precedent): base family +
         // hival + an INLINE hex-string lookup table; stream-ref
         // lookups stay out of scope (skip)
-        val indexed = ("/ColorSpace\\s*\\[\\s*/Indexed\\s*/(DeviceRGB|DeviceGray)" +
-          "\\s+(\\d+)\\s*<([0-9A-Fa-f\\s]*)>\\s*\\]").r.findFirstMatchIn(dict)
-        val cs = "/ColorSpace\\s*/([A-Za-z0-9]+)".r
-          .findFirstMatchIn(dict).map(_.group(1))
-        (num("/Width"), num("/Height"), num("/BitsPerComponent"), indexed) match {
+        val indexed = IndexedRe.findFirstMatchIn(dict)
+        val cs = ColorSpaceRe.findFirstMatchIn(dict).map(_.group(1))
+        (num(WidthRe), num(HeightRe), num(BitsRe), indexed) match {
           case (Some(w), Some(h), Some(8), Some(m)) if w > 0 && h > 0 =>
             val baseCh = if (m.group(1) == "DeviceGray") 1 else 3
             val hival = m.group(2).toInt
@@ -443,7 +504,7 @@ object Pdf {
               if (bad) None
               else graft.operators.ImageCodec.decode(pnm).toOption
             }
-          case _ => (num("/Width"), num("/Height"), num("/BitsPerComponent"), cs) match {
+          case _ => (num(WidthRe), num(HeightRe), num(BitsRe), cs) match {
             case (Some(w), Some(h), Some(8), Some(space))
                 if w > 0 && h > 0 &&
                   (space == "DeviceRGB" || space == "DeviceGray") =>
@@ -471,25 +532,24 @@ object Pdf {
     * the header is malformed — never a throw, never garbage counts.
     */
   private def parseObjStm(dict: String, body: Array[Byte]): Option[(Int, Int)] = {
-    val n = "/N\\s+(\\d+)".r.findFirstMatchIn(dict).map(_.group(1).toInt)
-    val first = "/First\\s+(\\d+)".r.findFirstMatchIn(dict).map(_.group(1).toInt)
+    val n = NRe.findFirstMatchIn(dict).map(_.group(1).toInt)
+    val first = FirstRe.findFirstMatchIn(dict).map(_.group(1).toInt)
     (n, first) match {
       case (Some(n0), Some(f0)) if n0 >= 0 && n0 <= (1 << 20) && f0 >= 0 &&
           f0 <= body.length =>
         val s = new String(body, java.nio.charset.StandardCharsets.ISO_8859_1)
-        val nums = "\\d+".r.findAllIn(s.substring(0, f0)).map(_.toLong).toIndexedSeq
+        val nums = DigitsRe.findAllIn(s.substring(0, f0)).map(_.toLong).toIndexedSeq
         if (nums.length < 2L * n0) None
         else {
           val offs = Array.tabulate(n0)(i => nums(2 * i + 1))
           var pages = 0
-          val pageRe = "/Type\\s*/Page(?![A-Za-z])".r
           var i = 0
           while (i < n0) {
             val st = f0 + offs(i)
             val en = if (i + 1 < n0) math.min(f0 + offs(i + 1), s.length.toLong)
               else s.length.toLong
             if (st >= 0 && st <= en && en <= s.length) {
-              if (pageRe.findFirstIn(s.substring(st.toInt, en.toInt)).isDefined)
+              if (PageRe.findFirstIn(s.substring(st.toInt, en.toInt)).isDefined)
                 pages += 1
             }
             i += 1
@@ -506,12 +566,12 @@ object Pdf {
     * Returns (type-1 offset entries, type-2 in-ObjStm entries).
     */
   private def parseXrefStream(dict: String, body: Array[Byte]): Option[(Int, Int)] = {
-    "/W\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(dict).map(_.group(1)).flatMap { ws =>
-      val w = "\\d+".r.findAllIn(ws).map(_.toInt).toIndexedSeq
+    WRe.findFirstMatchIn(dict).map(_.group(1)).flatMap { ws =>
+      val w = DigitsRe.findAllIn(ws).map(_.toInt).toIndexedSeq
       val rowLen = w.sum
       if (w.isEmpty || rowLen <= 0 || rowLen > 32) None
       else {
-        val pred = "/Predictor\\s+(\\d+)".r.findFirstMatchIn(dict)
+        val pred = PredictorRe.findFirstMatchIn(dict)
           .map(_.group(1).toInt).getOrElse(1)
         val rows: Option[Array[Byte]] =
           if (pred == 1) Some(body)
@@ -590,10 +650,10 @@ object Pdf {
     * dict carries no filter.
     */
   private def filtersOf(dict: String): Seq[String] =
-    "/Filter\\s*(\\[[^\\]]*\\]|/[A-Za-z0-9]+)".r.findFirstMatchIn(dict) match {
+    FilterRe.findFirstMatchIn(dict) match {
       case None => Nil
       case Some(m) =>
-        "/([A-Za-z0-9]+)".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
+        NameRe.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
     }
 
   /** ASCIIHexDecode (spec 7.4.2): hex pairs to bytes, whitespace
@@ -894,7 +954,7 @@ object Pdf {
     // a 1-byte space (simple fonts), <FFFF> 2-byte (composite) — the
     // show-string walk consumes codes at this width
     val width =
-      "(?s)begincodespacerange\\s*<([0-9A-Fa-f]+)>".r.findFirstMatchIn(c)
+      CodespaceRe.findFirstMatchIn(c)
         .map(m => math.max(1, math.min(2, m.group(1).length / 2))).getOrElse(2)
     val out = Map.newBuilder[Int, String]
     def hexVal(tok: String): Int = Integer.parseInt(tok, 16)
@@ -908,19 +968,17 @@ object Pdf {
       if (k < tok.length) sb.append(Integer.parseInt(tok.substring(k), 16).toChar)
       sb.toString
     }
-    val hexTok = "<([0-9A-Fa-f]+)>".r
-    for (m <- "(?s)beginbfchar(.*?)endbfchar".r.findAllMatchIn(c)) {
-      val toks = hexTok.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
+    for (m <- BfCharRe.findAllMatchIn(c)) {
+      val toks = HexTokRe.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
       toks.grouped(2).foreach {
         case Seq(src, dst) => out += hexVal(src) -> hexStr(dst)
         case _ => () // dangling token: malformed entry, skip
       }
     }
-    for (m <- "(?s)beginbfrange(.*?)endbfrange".r.findAllMatchIn(c)) {
+    for (m <- BfRangeRe.findAllMatchIn(c)) {
       // token walk: <lo> <hi> then either <dstStart> or [<d> <d> …]
       val body = m.group(1)
-      val tok = "<([0-9A-Fa-f]+)>|\\[|\\]".r
-      val toks = tok.findAllMatchIn(body).map(_.matched).toSeq
+      val toks = RangeTokRe.findAllMatchIn(body).map(_.matched).toSeq
       var i = 0
       while (i + 1 < toks.length) {
         (toks.lift(i), toks.lift(i + 1), toks.lift(i + 2)) match {

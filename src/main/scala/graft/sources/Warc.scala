@@ -85,7 +85,7 @@ object Warc {
       val blank = findBlank(pos)
       if (blank < 0) { err("warc: unterminated header block"); return out.toSeq }
       val head = new String(data, pos, blank - pos, "US-ASCII")
-      val lines = head.split(Crlf)
+      val lines = crlfLines(head)
       if (!lines.head.startsWith("WARC/")) {
         err(s"warc: expected version line, got '${lines.head.take(40)}'")
         return out.toSeq
@@ -124,8 +124,7 @@ object Warc {
               }
               if (hEnd < 0) (-1, "", new String(data, bodyStart, clen.toInt, "UTF-8"))
               else {
-                val hLines = new String(data, bodyStart, hEnd - bodyStart, "US-ASCII")
-                  .split(Crlf)
+                val hLines = crlfLines(new String(data, bodyStart, hEnd - bodyStart, "US-ASCII"))
                 val st = hLines.head.split(' ')
                   .lift(1).flatMap(_.toIntOption).getOrElse(-1)
                 val ct = hLines.tail.flatMap { l =>
@@ -151,6 +150,42 @@ object Warc {
       }
     }
     out.toSeq
+  }
+
+  /** `s` split at each CRLF as `String.split` splits it (no separator
+    * gives `Array(s)`; trailing empty lines are dropped), without the
+    * regex `String.split` compiles per call for a two-character
+    * separator.
+    */
+  private def crlfLines(s: String): Array[String] = {
+    var i = s.indexOf(Crlf)
+    if (i < 0) return Array(s)
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var from = 0
+    while (i >= 0) {
+      out += s.substring(from, i)
+      from = i + 2
+      i = s.indexOf(Crlf, from)
+    }
+    out += s.substring(from)
+    while (out.nonEmpty && out.last.isEmpty) out.remove(out.length - 1)
+    out.toArray
+  }
+
+  /** Whether data[from, from + n) holds `charset` in any ASCII case —
+    * without it [[CharsetRe]] cannot match.
+    */
+  private def hasCharsetWord(data: Array[Byte], from: Int, n: Int): Boolean = {
+    val word = "charset"
+    var i = from
+    val last = from + n - word.length
+    while (i <= last) {
+      var k = 0
+      while (k < word.length && (data(i + k) | 0x20) == word.charAt(k)) k += 1
+      if (k == word.length) return true
+      i += 1
+    }
+    false
   }
 
   private val CharsetRe =
@@ -179,7 +214,7 @@ object Warc {
     }
     def fromMeta = {
       val n = math.min(1024, pLen)
-      if (n <= 0) None
+      if (n <= 0 || !hasCharsetWord(data, pStart, n)) None
       else {
         val prefix = new String(data, pStart, n, "ISO-8859-1")
         val m = CharsetRe.matcher(prefix)
@@ -303,23 +338,14 @@ object Warc {
       "path", "content")
   }
 
-  /** HTML boilerplate strip → clean text, entirely in codegen'd
-    * builtin expressions (no UDF): drop script/style subtrees and
-    * comments, replace every remaining tag with a space, decode the
-    * common entities, collapse whitespace. Tag strip runs BEFORE
-    * entity decode so text content like `&lt;b&gt;` survives as
+  /** HTML boilerplate strip → clean text: drop script/style subtrees
+    * and comments, replace every remaining tag with a space, decode the
+    * common entities, collapse whitespace — one byte pass per step in
+    * the native [[graft.functions.HtmlText]] (no UDF). Tag strip runs
+    * BEFORE entity decode so text content like `&lt;b&gt;` survives as
     * literal `<b>` instead of being re-parsed as markup.
     */
-  def htmlText(html: Column): Column = {
-    val noScript = regexp_replace(html, "(?is)<script\\b[^>]*>.*?</script>", " ")
-    val noStyle = regexp_replace(noScript, "(?is)<style\\b[^>]*>.*?</style>", " ")
-    val noComment = regexp_replace(noStyle, "(?s)<!--.*?-->", " ")
-    val noTags = regexp_replace(noComment, "<[^>]+>", " ")
-    val ent = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
-      "&#39;" -> "'", "&nbsp;" -> " ", "&amp;" -> "&")
-      .foldLeft(noTags) { case (c, (from, to)) => regexp_replace(c, from, to) }
-    trim(regexp_replace(ent, "\\s+", " "))
-  }
+  def htmlText(html: Column): Column = call_function(graft.functions.HtmlText.fnName, html)
 
   /** MAIN-CONTENT extraction by block link-density — the standard
     * crawl-extraction quality step above [[htmlText]]'s flat strip

@@ -301,4 +301,25 @@ class InflateCapSpec extends AnyFunSuite {
     assert(got === Left("tiff: strip 0 of 10000000000 bytes exceeds 64 MiB"))
     assert(grown < (1L << 20), s"allocated $grown bytes")
   }
+
+  test("jpeg: a SOF2 frame declaring 65535 x 65535 is refused before its coefficient buffer") {
+    // SOI, then SOF2: 8-bit, 65535 x 65535, three 1x1 components
+    val j = Array(0xff, 0xd8, 0xff, 0xc2, 0x00, 0x11, 0x08, 0xff, 0xff, 0xff, 0xff, 0x03,
+      0x01, 0x11, 0x00, 0x02, 0x11, 0x00, 0x03, 0x11, 0x00).map(_.toByte)
+    val (got, grown) = allocating(graft.operators.JpegCodec.decode(j))
+    // 3 components x 8192 x 8192 blocks x 64 coefficients x 4 bytes
+    assert(got === Left("jpeg: progressive coefficient buffer of 51539607552 bytes exceeds 64 MiB"))
+    assert(grown < (1L << 20), s"allocated $grown bytes")
+  }
+
+  test("webp: a VP8L header declaring 16384 x 16384 is refused before its pixel buffer") {
+    val w = graft.operators.WebpCodec.encodeWebpLossless(new Array[Byte](3), 1, 1)
+    assert(w(20) === 0x2f.toByte) // the VP8L signature after RIFF/WEBP/VP8L headers
+    // width-1 and height-1 as 14 bits each, all ones; alpha and version stay 0
+    w(21) = 0xff.toByte; w(22) = 0xff.toByte; w(23) = 0xff.toByte
+    w(24) = ((w(24) & 0xf0) | 0x0f).toByte
+    val (got, grown) = allocating(graft.operators.WebpCodec.decode(w))
+    assert(got === Left("webp: pixel buffer of 1073741824 bytes exceeds 64 MiB"))
+    assert(grown < (1L << 20), s"allocated $grown bytes")
+  }
 }

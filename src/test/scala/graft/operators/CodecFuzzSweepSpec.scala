@@ -9,32 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * flips, zero-runs, and self-splices across the whole family.)
   */
 class CodecFuzzSweepSpec extends AnyFunSuite {
-
-  private def mutations(base: Array[Byte], seed: Long, n: Int): Iterator[Array[Byte]] = {
-    var s = seed
-    def next(bound: Int): Int = {
-      s = s * 6364136223846793005L + 1442695040888963407L
-      (((s >>> 33) % bound).toInt + bound) % bound
-    }
-    Iterator.tabulate(n) { _ =>
-      val m = base.clone()
-      next(4) match {
-        case 0 =>
-          for (_ <- 0 to next(3)) m(next(m.length)) = (next(256)).toByte
-          m
-        case 1 => m.take(next(m.length + 1))
-        case 2 =>
-          val from = next(m.length)
-          java.util.Arrays.fill(m, from, math.min(m.length, from + 1 + next(16)), 0.toByte)
-          m
-        case _ =>
-          val from = next(m.length); val to = next(m.length)
-          val len = math.min(1 + next(8), m.length - math.max(from, to))
-          if (len > 0) System.arraycopy(base, from, m, to, len)
-          m
-      }
-    }
-  }
+  import CodecFuzzSweepSpec.mutations
 
   private val gray = Array.tabulate(16 * 12)(i => (i * 7).toByte)
   private val rgb = Array.tabulate(3 * 10 * 8)(i => (i * 11).toByte)
@@ -114,6 +89,38 @@ class CodecFuzzSweepSpec extends AnyFunSuite {
     for (m <- mutations(gz, 2008L, N)) {
       val recs = Warc.parseArchive("m", m)
       assert(recs.forall(r => r.ok || r.error.startsWith("warc")), recs.map(_.error))
+    }
+  }
+}
+
+object CodecFuzzSweepSpec {
+
+  /** `n` seeded mutants of `base`: byte flips, truncations, zero-runs
+    * and self-splices.
+    */
+  def mutations(base: Array[Byte], seed: Long, n: Int): Iterator[Array[Byte]] = {
+    var s = seed
+    def next(bound: Int): Int = {
+      s = s * 6364136223846793005L + 1442695040888963407L
+      (((s >>> 33) % bound).toInt + bound) % bound
+    }
+    Iterator.tabulate(n) { _ =>
+      val m = base.clone()
+      next(4) match {
+        case 0 =>
+          for (_ <- 0 to next(3)) m(next(m.length)) = (next(256)).toByte
+          m
+        case 1 => m.take(next(m.length + 1))
+        case 2 =>
+          val from = next(m.length)
+          java.util.Arrays.fill(m, from, math.min(m.length, from + 1 + next(16)), 0.toByte)
+          m
+        case _ =>
+          val from = next(m.length); val to = next(m.length)
+          val len = math.min(1 + next(8), m.length - math.max(from, to))
+          if (len > 0) System.arraycopy(base, from, m, to, len)
+          m
+      }
     }
   }
 }

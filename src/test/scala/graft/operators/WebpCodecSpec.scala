@@ -283,4 +283,130 @@ class WebpCodecSpec extends AnyFunSuite {
       WebpCodec.decode(bb) // Left or Right, must not throw
     }
   }
+
+  test("Huff: the counted canonical code ≡ the sort-built one it replaced") {
+    import graft.bytes.Bytes.Malformed
+    val rnd = new java.util.SplittableRandom(20261020L)
+    // a complete code: split random leaves until `leaves` remain
+    def complete(leaves: Int): Array[Int] = {
+      val ls = scala.collection.mutable.ArrayBuffer(1, 1)
+      while (ls.length < leaves) {
+        val i = rnd.nextInt(ls.length)
+        if (ls(i) < 15) { ls(i) += 1; ls += ls(i) }
+      }
+      ls.toArray
+    }
+    def place(ls: Array[Int], alphabet: Int): Array[Int] = {
+      val out = new Array[Int](alphabet)
+      val syms = scala.util.Random.javaRandomToRandom(new java.util.Random(rnd.nextLong()))
+        .shuffle((0 until alphabet).toList).take(ls.length)
+      syms.zip(ls).foreach { case (sym, l) => out(sym) = l }
+      out
+    }
+    def vector(kind: Int): Array[Int] = {
+      val alphabet = 2 + rnd.nextInt(300)
+      val ls = complete(2 + rnd.nextInt(math.min(alphabet, 60) - 1))
+      kind match {
+        case 0 => place(ls, alphabet) // complete
+        case 1 => // over-subscribed: one code shorter
+          val i = ls.indexWhere(_ > 1); if (i >= 0) ls(i) -= 1; place(ls, alphabet)
+        case 2 => // under-subscribed: one code longer
+          val i = ls.indexWhere(_ < 15); if (i >= 0) ls(i) += 1; place(ls, alphabet)
+        case 3 => ls(rnd.nextInt(ls.length)) = 16 + rnd.nextInt(5); place(ls, alphabet)
+        case 4 => place(Array(1 + rnd.nextInt(20)), alphabet) // one symbol
+        case _ => new Array[Int](alphabet) // empty
+      }
+    }
+    def outcome(build: => Unit): Option[String] =
+      try { build; None } catch { case Malformed(m) => Some(m) }
+    val stream = Array.fill(64)(rnd.nextInt(256).toByte)
+    def symbols(read: WebpCodec.BitReader => Int): (Seq[Int], Option[String]) = {
+      val br = new WebpCodec.BitReader(stream, 0, stream.length)
+      val out = Seq.newBuilder[Int]
+      var err: Option[String] = None
+      var k = 0
+      while (err.isEmpty && k < 300) {
+        try out += read(br) catch { case Malformed(m) => err = Some(m) }
+        k += 1
+      }
+      (out.result(), err)
+    }
+    var built = 0
+    for (i <- 0 until 3000) {
+      val ls = vector(i % 6)
+      var neu: WebpCodec.Huff = null
+      var old: OldHuff = null
+      val want = outcome { old = new OldHuff(ls.clone()) }
+      assert(outcome { neu = new WebpCodec.Huff(ls.clone()) } === want, ls.mkString(","))
+      if (want.isEmpty) {
+        built += 1
+        assert(symbols(neu.read) === symbols(old.read), ls.mkString(","))
+      }
+    }
+    assert(built > 1000)
+  }
+
+  /** WebpCodec's prefix code before the counting rewrite, verbatim. */
+  private final class OldHuff(lengths: Array[Int]) {
+    import graft.bytes.Bytes.Malformed
+    private var single = -1
+    private var left: Array[Int] = null
+    private var right: Array[Int] = null
+    locally {
+      val used = lengths.zipWithIndex.filter(_._1 > 0)
+      if (used.isEmpty) throw Malformed("webp: empty prefix code")
+      if (used.length == 1) single = used(0)._2
+      else {
+        var kraft = 0.0
+        used.foreach { case (l, _) =>
+          if (l > 15) throw Malformed(s"webp: code length $l > 15")
+          kraft += 1.0 / (1L << l)
+        }
+        if (math.abs(kraft - 1.0) > 1e-12)
+          throw Malformed("webp: prefix code not complete")
+        val maxNodes = 2 * used.length + 16
+        left = Array.fill(maxNodes)(0)
+        right = Array.fill(maxNodes)(0)
+        var nextNode = 1
+        var code = 0
+        var prevLen = 0
+        used.sortBy { case (l, s) => (l, s) }.foreach { case (l, sym) =>
+          code <<= (l - prevLen)
+          prevLen = l
+          var node = 0
+          var i = l - 1
+          while (i >= 0) {
+            val b = (code >> i) & 1
+            if (i == 0) {
+              if (b == 0) left(node) = -sym - 1 else right(node) = -sym - 1
+            } else {
+              val nxt = if (b == 0) left(node) else right(node)
+              val child =
+                if (nxt > 0) nxt
+                else {
+                  val c = nextNode
+                  nextNode += 1
+                  if (b == 0) left(node) = c else right(node) = c
+                  c
+                }
+              node = child
+            }
+            i -= 1
+          }
+          code += 1
+        }
+      }
+    }
+    def read(br: WebpCodec.BitReader): Int = {
+      if (single >= 0) return single
+      var node = 0
+      while (true) {
+        val nxt = if (br.bit() == 0) left(node) else right(node)
+        if (nxt < 0) return -nxt - 1
+        if (nxt == 0) throw Malformed("webp: invalid prefix code walk")
+        node = nxt
+      }
+      -1
+    }
+  }
 }
