@@ -314,15 +314,8 @@ object Bench {
       s"""{"rows":$rows,"sec":${r3(sec)},"rows_per_sec":${(rows / sec).toLong}}"""
     }
     // ~150 MB of temp input per run — don't leak it across rounds
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.forEach(c => rmTree(c)) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rmTree(xmlDir)
-    rmTree(java.nio.file.Paths.get(convOut).getParent)
+    Checkpoints.deleteDir(spark, xmlDir.toString)
+    Checkpoints.deleteDir(spark, java.nio.file.Paths.get(convOut).getParent.toString)
 
     // ANN build-vs-probe split: q85/q86/q90 sweep times are dominated
     // by index BUILD (k-means + PQ training + encode) — a fixed cost

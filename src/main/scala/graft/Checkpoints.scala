@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -55,8 +56,17 @@ object Checkpoints {
     try body(dir.toString).localCheckpoint(true)
     finally {
       sc.removeJobTag(tag)
-      try awaitJobs(spark, tag) finally graft.changesets.Pipeline.deleteRecursively(dir)
+      try awaitJobs(spark, tag) finally deleteDir(spark, dir.toString)
     }
+  }
+
+  /** Delete `dir` and everything under it: the one recursive delete of
+    * the temp dirs queries and Bench make, a Hadoop delete through the
+    * session's conf.
+    */
+  def deleteDir(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** Block until no job tagged `tag` has been running for three polls

@@ -1,14 +1,10 @@
 package graft.changesets
 
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
-
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
-import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
@@ -18,6 +14,8 @@ import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.Json
 
 /** The reference's scheduled pipeline (EP2, SURVEY.md §3) as a
   * driver-side runner: file-level change detection → full reconvert →
@@ -78,18 +76,26 @@ object Pipeline {
     }
   }
 
-  /** The committed `.last-modified` marker (reference
-    * process-changesets-r2.yml:44-50,224-234).
+  /** The Hadoop conf of the active session: the conf of the calls that
+    * take no session.
     */
-  def readMarker(stateDir: String): Option[String] = {
-    val p = Paths.get(stateDir, ".last-modified")
-    if (Files.exists(p)) Some(Files.readString(p).trim) else None
-  }
+  private[graft] def activeConf: Configuration = SparkSession.active.sessionState.newHadoopConf()
 
-  def writeMarker(stateDir: String, value: String): Unit = {
-    Files.createDirectories(Paths.get(stateDir))
-    Files.writeString(Paths.get(stateDir, ".last-modified"), value + "\n")
-  }
+  /** The committed `.last-modified` marker (reference
+    * process-changesets-r2.yml:44-50,224-234): the last source version
+    * a run published. A marker from before the JSON commit holds the
+    * bare token.
+    */
+  def readMarker(stateDir: String): Option[String] = readMarker(stateDir, activeConf)
+
+  def writeMarker(stateDir: String, value: String): Unit = writeMarker(stateDir, value, activeConf)
+
+  private def readMarker(stateDir: String, conf: Configuration): Option[String] =
+    Json.readText(new Path(stateDir, ".last-modified"), conf).map(s =>
+      Json.parseOption(s).flatMap(Json.text(_, "source_version")).getOrElse(s.trim))
+
+  private def writeMarker(stateDir: String, value: String, conf: Configuration): Unit =
+    Json.commit(new Path(stateDir, ".last-modified"), Seq("source_version" -> value), conf)
 
   /** One pipeline run.
     *
@@ -108,8 +114,8 @@ object Pipeline {
       force: Boolean = false,
       keepHistory: Int = 5,
       opts: ChangesetConverter.Options = ChangesetConverter.Options()): Result = {
-
-    if (!force && readMarker(stateDir).contains(sourceVersion))
+    val conf = spark.sessionState.newHadoopConf()
+    if (!force && readMarker(stateDir, conf).contains(sourceVersion))
       return Result(ran = false, rows = 0L, published = None,
         reason = s"unchanged (version $sourceVersion)")
 
@@ -126,23 +132,27 @@ object Pipeline {
     // overwrite has the same race; object-store copies are per-object
     // atomic there)
     val latest = s"$publishDir/changesets.parquet"
-    val latestPath = Paths.get(latest)
-    val staging = Paths.get(publishDir, ".changesets.parquet.staging")
-    val retired = Paths.get(publishDir, ".changesets.parquet.retired")
-    recoverPublish(publishDir)
-    deleteRecursively(staging)
-    deleteRecursively(retired)
-    copyRecursively(Paths.get(versioned), staging)
-    if (Files.exists(latestPath)) Files.move(latestPath, retired)
-    Files.move(staging, latestPath)
-    deleteRecursively(retired)
+    val staging = new Path(publishDir, ".changesets.parquet.staging")
+    val retired = new Path(publishDir, ".changesets.parquet.retired")
+    val fs = staging.getFileSystem(conf)
+    recoverPublish(fs, publishDir)
+    fs.delete(staging, true)
+    fs.delete(retired, true)
+    FileUtil.copy(fs, new Path(versioned), fs, staging, false, conf)
+    if (fs.exists(new Path(latest))) move(fs, new Path(latest), retired)
+    move(fs, staging, new Path(latest))
+    fs.delete(retired, true)
 
-    writeIndex(publishDir, latest, rows, sourceVersion)
-    applyRetention(publishDir, keepHistory)
-    writeMarker(stateDir, sourceVersion)
+    writeIndex(publishDir, rows, sourceVersion, conf)
+    applyRetention(fs, publishDir, keepHistory, protect = None)
+    writeMarker(stateDir, sourceVersion, conf)
     Result(ran = true, rows = rows, published = Some(latest),
       reason = if (force) "forced" else "source changed")
   }
+
+  /** Rename `from` to `to`, failing loudly when the filesystem refuses. */
+  private[graft] def move(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"could not rename $from to $to")
 
   /** Crash recovery for the publish swap. The swap is two renames
     * (latest→retired, staging→latest); a crash between them leaves the
@@ -157,11 +167,13 @@ object Pipeline {
     * so long-lived readers can also invoke it before opening the
     * artifact.
     */
-  def recoverPublish(publishDir: String): Unit = {
-    val latestPath = Paths.get(publishDir, "changesets.parquet")
-    val retired = Paths.get(publishDir, ".changesets.parquet.retired")
-    if (!Files.exists(latestPath) && Files.exists(retired))
-      Files.move(retired, latestPath)
+  def recoverPublish(publishDir: String): Unit =
+    recoverPublish(new Path(publishDir).getFileSystem(activeConf), publishDir)
+
+  private def recoverPublish(fs: FileSystem, publishDir: String): Unit = {
+    val latest = new Path(publishDir, "changesets.parquet")
+    val retired = new Path(publishDir, ".changesets.parquet.retired")
+    if (!fs.exists(latest) && fs.exists(retired)) move(fs, retired, latest)
   }
   // ------------------------------------------------------------------
   // Pointer-flip publish — the object-store variant of the swap.
@@ -179,52 +191,39 @@ object Pipeline {
   // the pointer at the previous (still complete) version: no recovery
   // step needed, unlike recoverPublish's retired-name window.
   //
-  // Locally the pointer write is modeled the same way ([[commitJson]]):
-  // write the new pointer content to a temp name, then one Files.move —
+  // The pointer is a commit record ([[graft.Json.commit]]): the new
+  // content goes to a temp name, then one rename replaces the pointer —
   // the single-small-object flip that maps to one PUT on a store.
   // ------------------------------------------------------------------
 
   private val PointerName = "current.json"
 
-  private val JsonOut = graft.Json.Mapper.writer(new DefaultPrettyPrinter().withSeparators(
-    Separators.createDefaultInstance().withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
-
-  /** The one commit primitive for pointers, manifests and the catalog:
-    * `fields` as a JSON object written to a temp name beside `target`,
-    * then one atomic move onto it. A reader sees the old file or the
-    * new one, never a torn write.
-    */
-  private[changesets] def commitJson(target: JPath, fields: (String, Any)*): Unit = {
-    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
-    Files.writeString(tmp, JsonOut.writeValueAsString(ListMap(fields: _*)))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private[changesets] def readJson(p: JPath): JsonNode = graft.Json.read(p)
-
   /** The publishDir-relative path a pointer file's `field` names,
     * resolved against publishDir (None before the first flip).
     */
   private[changesets] def readPointer(
-      publishDir: String, name: String, field: String): Option[String] = {
-    val p = Paths.get(publishDir, name)
-    if (!Files.exists(p)) None
-    else Option(readJson(p).get(field)).map(f => s"$publishDir/${f.asText}")
-  }
+      publishDir: String, name: String, field: String, conf: Configuration): Option[String] =
+    Json.read(new Path(publishDir, name), conf).flatMap(j => Option(j.get(field)))
+      .map(f => s"$publishDir/${f.asText}")
 
   /** Atomically point `current.json` at an already-written versioned
     * artifact. Call ONLY after the artifact is fully written (the
     * caller's Spark write has committed).
     */
   def flipPointer(publishDir: String, versionedFile: String, rows: Long, version: String): Unit =
-    commitJson(Paths.get(publishDir, PointerName),
-      "file" -> versionedFile, "rows" -> rows, "source_version" -> version)
+    flipPointer(publishDir, versionedFile, rows, version, activeConf)
+
+  private def flipPointer(publishDir: String, versionedFile: String, rows: Long, version: String,
+      conf: Configuration): Unit =
+    Json.commit(new Path(publishDir, PointerName),
+      Seq("file" -> versionedFile, "rows" -> rows, "source_version" -> version), conf)
 
   /** Resolve the current pointer to the artifact path it names (None
     * before the first publish). This is the whole reader protocol:
     * one small read, then open the immutable artifact.
     */
-  def readCurrent(publishDir: String): Option[String] = readPointer(publishDir, PointerName, "file")
+  def readCurrent(publishDir: String): Option[String] =
+    readPointer(publishDir, PointerName, "file", activeConf)
 
   /** Pointer-flip pipeline run: convert to a versioned immutable
     * artifact, flip the pointer, retain newest N (never deleting the
@@ -241,19 +240,19 @@ object Pipeline {
       force: Boolean = false,
       keepHistory: Int = 5,
       opts: ChangesetConverter.Options = ChangesetConverter.Options()): Result = {
-
-    if (!force && readMarker(stateDir).contains(sourceVersion))
+    val conf = spark.sessionState.newHadoopConf()
+    if (!force && readMarker(stateDir, conf).contains(sourceVersion))
       return Result(ran = false, rows = 0L, published = None,
         reason = s"unchanged (version $sourceVersion)")
 
-    Files.createDirectories(Paths.get(publishDir))
     val versionedFile = s"changesets-${safeVersion(sourceVersion)}.parquet"
     val versioned = s"$publishDir/$versionedFile"
     val rows = ChangesetConverter.convert(spark, inputXml, versioned, opts)
 
-    flipPointer(publishDir, versionedFile, rows, sourceVersion)
-    applyRetention(publishDir, keepHistory, protect = readCurrent(publishDir))
-    writeMarker(stateDir, sourceVersion)
+    flipPointer(publishDir, versionedFile, rows, sourceVersion, conf)
+    applyRetention(new Path(publishDir).getFileSystem(conf), publishDir, keepHistory,
+      protect = Some(versioned))
+    writeMarker(stateDir, sourceVersion, conf)
     Result(ran = true, rows = rows, published = Some(versioned),
       reason = if (force) "forced" else "source changed")
   }
@@ -309,7 +308,7 @@ object Pipeline {
     * open both halves through the same manifest.
     */
   def annModelDir(pairDir: String): String =
-    s"${Paths.get(pairDir).getParent}/${readAnnManifest(pairDir)._1}"
+    s"${new Path(pairDir).getParent}/${readAnnManifest(pairDir)._1}"
 
   /** The pair's index as ONE DataFrame: the union of its manifest's
     * immutable segments, minus its tombstones ([[SegmentStore.read]]).
@@ -426,7 +425,7 @@ object Pipeline {
       idCol: String,
       vecCol: String,
       keepHistory: Int = 5): String =
-    annStore.absorb(publishDir, batchId, keepHistory)(
+    annStore.absorb(spark, publishDir, batchId, keepHistory)(
       appendAnn(spark, publishDir, s"batch-$batchId", newVecs, idCol, vecCol,
         keepHistory, absorbBatchId = Some(batchId)))
 
@@ -641,7 +640,7 @@ object Pipeline {
       idCol: String,
       textCol: String,
       keepHistory: Int = 5): String =
-    postingsStore.absorb(publishDir, batchId, keepHistory)(
+    postingsStore.absorb(spark, publishDir, batchId, keepHistory)(
       appendPostings(spark, publishDir, s"batch-$batchId", newDocs, idCol, textCol,
         keepHistory, absorbBatchId = Some(batchId)))
 
@@ -663,9 +662,12 @@ object Pipeline {
     * (yml:176-222): size, update time token, row count, usage snippet.
     */
   def writeIndex(publishDir: String, latest: String, rows: Long, version: String): Unit =
-    commitJson(Paths.get(publishDir, "index.json"),
+    writeIndex(publishDir, rows, version, activeConf)
+
+  private def writeIndex(publishDir: String, rows: Long, version: String, conf: Configuration): Unit =
+    Json.commit(new Path(publishDir, "index.json"), Seq(
       "file" -> "changesets.parquet", "rows" -> rows, "source_version" -> version,
-      "usage" -> "SELECT COUNT(*) FROM 'changesets.parquet'")
+      "usage" -> "SELECT COUNT(*) FROM 'changesets.parquet'"), conf)
 
   /** Row-level incremental merge — the upgrade path past the
     * reference's reprocess-everything contract: union the published
@@ -704,46 +706,33 @@ object Pipeline {
     * artifacts carry no manifest; the segment stores order by their
     * manifests' `seq` instead ([[SegmentStore.applyRetention]]).
     */
-  def applyRetention(publishDir: String, keep: Int, protect: Option[String] = None): Unit = {
-    val dir = Paths.get(publishDir)
-    if (Files.exists(dir))
-      retainNewest(listChildren(dir)
-        .filter(_.toString.matches(".*/changesets-.*\\.parquet$"))
-        .sortBy(p => (Files.getLastModifiedTime(p).toMillis, p.toString)).reverse, keep, protect)
-  }
+  def applyRetention(publishDir: String, keep: Int, protect: Option[String] = None): Unit =
+    applyRetention(new Path(publishDir).getFileSystem(activeConf), publishDir, keep, protect)
+
+  private def applyRetention(fs: FileSystem, publishDir: String, keep: Int,
+      protect: Option[String]): Unit =
+    retainNewest(fs, children(fs, new Path(publishDir))
+      .filter(_.getPath.getName.matches("changesets-.*\\.parquet"))
+      .sortBy(c => (c.getModificationTime, c.getPath.getName)).reverse.map(_.getPath),
+      keep, protect.map(new Path(_)))
 
   /** Delete all but the first `keep` of `newestFirst` — except the
     * artifact `protect` names (the current pointer's target), even
     * when the order would age it out (e.g. a rollback flip back to an
-    * old version followed by N new publishes).
+    * old version followed by N new publishes). Returns what it deleted.
     */
   private[changesets] def retainNewest(
-      newestFirst: Seq[JPath], keep: Int, protect: Option[String]): Unit = {
-    val keepAlways = protect.map(p => Paths.get(p).toAbsolutePath.normalize)
-    newestFirst.drop(keep)
-      .filterNot(p => keepAlways.contains(p.toAbsolutePath.normalize))
-      .foreach(deleteRecursively)
+      fs: FileSystem, newestFirst: Seq[Path], keep: Int, protect: Option[Path]): Seq[Path] = {
+    val keepAlways = protect.map(fs.makeQualified)
+    val gone = newestFirst.drop(keep).filterNot(p => keepAlways.contains(fs.makeQualified(p)))
+    gone.foreach(fs.delete(_, true))
+    gone
   }
 
-  private[changesets] def listChildren(p: JPath): Seq[JPath] = {
-    val s = Files.list(p)
-    try s.toArray.toSeq.map(_.asInstanceOf[JPath])
-    finally s.close()
-  }
-
-  private[graft] def deleteRecursively(p: JPath): Unit = {
-    if (Files.isDirectory(p)) listChildren(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
-
-  private def copyRecursively(from: JPath, to: JPath): Unit = {
-    if (Files.isDirectory(from)) {
-      Files.createDirectories(to)
-      listChildren(from).foreach(c => copyRecursively(c, to.resolve(c.getFileName)))
-    } else {
-      Files.copy(from, to, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  /** The entries of `dir`; none when it does not exist. */
+  private[graft] def children(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
 }
 
 /** One version of a [[SegmentStore]]: its commit record. All refs are
@@ -844,7 +833,8 @@ private[graft] final class SegmentStore(
     sortColumns: Boolean,
     prepare: DataFrame => DataFrame = identity,
     figures: Option[(DataFrame, String) => RefStats] = None) {
-  import Pipeline.{deleteRecursively, listChildren, safeVersion}
+  import Pipeline.{activeConf, children, safeVersion}
+  import SegmentStore.Listing
 
   /** The frames [[read]] returned, weakly held and keyed by identity
     * (a Dataset keeps Object's equality), with the version each one
@@ -859,65 +849,66 @@ private[graft] final class SegmentStore(
     */
   def opened(df: DataFrame): Option[(String, SegmentManifest)] = Option(returned.get(df))
 
-  def readCurrent(publishDir: String): Option[String] =
-    Pipeline.readPointer(publishDir, pointerName, "dir")
+  def readCurrent(publishDir: String): Option[String] = readCurrent(publishDir, activeConf)
+
+  private def readCurrent(publishDir: String, conf: Configuration): Option[String] =
+    Pipeline.readPointer(publishDir, pointerName, "dir", conf)
 
   /** Atomically point the pointer at an already-committed version dir.
     * Flipping BACK to an older dir is the rollback.
     */
   def flipPointer(publishDir: String, versionDir: String, version: String): Unit =
-    Pipeline.commitJson(Paths.get(publishDir, pointerName),
-      "dir" -> versionDir, "source_version" -> version)
+    flipPointer(publishDir, versionDir, version, activeConf)
+
+  private def flipPointer(publishDir: String, versionDir: String, version: String,
+      conf: Configuration): Unit =
+    Json.commit(new Path(publishDir, pointerName),
+      Seq("dir" -> versionDir, "source_version" -> version), conf)
 
   /** A version dir's manifest. Fails loudly on a dir with no manifest —
     * a half-written version must never be readable.
     */
-  def readManifest(versionDir: String): SegmentManifest = {
-    val p = Paths.get(versionDir, "manifest.json")
-    if (!Files.exists(p))
-      throw new IllegalStateException(
-        s"$kind version at $versionDir has no manifest.json — the version is incomplete " +
-          "(a write commits its segments first, the manifest last)")
-    val j = Pipeline.readJson(p)
-    if (!j.has("segments"))
-      throw new IllegalStateException(s"manifest at $versionDir names no segments")
-    def all(field: String) = j.path(field).elements.asScala.toSeq
-    val segments = all("segments").map(_.asText)
-    val tombstones = all("tombstones").map(_.asText)
-    val scopes =
-      if (j.has("tombstone_scopes")) all("tombstone_scopes").map(_.asInt)
-      else tombstones.map(_ => segments.size)
-    if (scopes.size != tombstones.size || scopes.exists(s => s < 0 || s > segments.size))
-      throw new IllegalStateException(
-        s"manifest at $versionDir has tombstone scopes $scopes that do not fit its " +
-          s"${tombstones.size} tombstone(s) over ${segments.size} segment(s)")
-    val stats = j.path("stats").properties.asScala.flatMap { e =>
-      for (nd <- graft.Json.long(e.getValue, "nd"); dl <- graft.Json.long(e.getValue, "sum_dl"))
-        yield e.getKey -> RefStats(nd, dl)
-    }.toMap
-    SegmentManifest(segments, tombstones,
-      all("absorbed").map(_.asLong).toSet, Option(j.get("model")).map(_.asText),
-      j.path("seq").asLong(0L),
-      Option(j.get("parent")).map(p => (p.asText, j.path("parent_seq").asLong(0L))),
-      scopes, stats)
-  }
+  def readManifest(versionDir: String): SegmentManifest = readManifest(versionDir, activeConf)
 
-  /** Every committed version under publishDir, with its manifest. */
-  private def versions(publishDir: String): Seq[(JPath, SegmentManifest)] = {
-    val dir = Paths.get(publishDir)
-    if (!Files.exists(dir)) Nil
-    else listChildren(dir)
-      .filter(p => p.getFileName.toString.startsWith(prefix) &&
-        Files.exists(p.resolve("manifest.json")))
-      .map(p => p -> readManifest(p.toString))
-  }
+  private def readManifest(versionDir: String, conf: Configuration): SegmentManifest =
+    manifest(versionDir, conf).getOrElse(throw new IllegalStateException(
+      s"$kind version at $versionDir has no manifest.json — the version is incomplete " +
+        "(a write commits its segments first, the manifest last)"))
 
-  /** The names retained versions hold: their dirs and every ref their
-    * manifests name — what garbage collection keeps and what a new
-    * version must not overwrite.
-    */
-  private def referenced(publishDir: String): Set[String] =
-    versions(publishDir).flatMap { case (p, m) => p.getFileName.toString +: m.refs }.toSet
+  /** The manifest of the version dir `versionDir`; None when it has none. */
+  private def manifest(versionDir: String, conf: Configuration): Option[SegmentManifest] =
+    Json.read(new Path(versionDir, "manifest.json"), conf).map { j =>
+      if (!j.has("segments"))
+        throw new IllegalStateException(s"manifest at $versionDir names no segments")
+      def all(field: String) = j.path(field).elements.asScala.toSeq
+      val segments = all("segments").map(_.asText)
+      val tombstones = all("tombstones").map(_.asText)
+      val scopes =
+        if (j.has("tombstone_scopes")) all("tombstone_scopes").map(_.asInt)
+        else tombstones.map(_ => segments.size)
+      if (scopes.size != tombstones.size || scopes.exists(s => s < 0 || s > segments.size))
+        throw new IllegalStateException(
+          s"manifest at $versionDir has tombstone scopes $scopes that do not fit its " +
+            s"${tombstones.size} tombstone(s) over ${segments.size} segment(s)")
+      val stats = j.path("stats").properties.asScala.flatMap { e =>
+        for (nd <- Json.long(e.getValue, "nd"); dl <- Json.long(e.getValue, "sum_dl"))
+          yield e.getKey -> RefStats(nd, dl)
+      }.toMap
+      SegmentManifest(segments, tombstones,
+        all("absorbed").map(_.asLong).toSet, Option(j.get("model")).map(_.asText),
+        j.path("seq").asLong(0L),
+        Option(j.get("parent")).map(p => (p.asText, j.path("parent_seq").asLong(0L))),
+        scopes, stats)
+    }
+
+  private def list(publishDir: String, conf: Configuration): Listing = {
+    val fs = new Path(publishDir).getFileSystem(conf)
+    val dirs = children(fs, new Path(publishDir)).filter(c =>
+      c.isDirectory && c.getPath.getName.startsWith(prefix))
+      .map(c => c.getPath.getName -> c.getModificationTime).toMap
+    Listing(publishDir, conf, dirs,
+      dirs.keys.flatMap(n => manifest(s"$publishDir/$n", conf).map(n -> _)).toMap)
+  }
 
   /** Keep the newest N versions by manifest `seq` (mtime, then name,
     * break ties among manifests without one), never deleting `protect`;
@@ -927,19 +918,20 @@ private[graft] final class SegmentStore(
     * lets versions share segments without copies while rollback and
     * retention stay safe.
     */
-  def applyRetention(publishDir: String, keep: Int, protect: Option[String] = None): Unit = {
-    val dir = Paths.get(publishDir)
-    if (!Files.exists(dir)) return
-    val seqOf = versions(publishDir).map { case (p, m) => p -> m.seq }.toMap
-    Pipeline.retainNewest(listChildren(dir)
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(prefix))
-      .sortBy(p => (seqOf.getOrElse(p, -1L), Files.getLastModifiedTime(p).toMillis, p.toString))
-      .reverse, keep, protect)
-    val held = referenced(publishDir)
-    (segmentDir +: modelDir.toSeq).map(dir.resolve).filter(Files.exists(_)).foreach { store =>
-      listChildren(store)
-        .filterNot(c => held.contains(s"${store.getFileName}/${c.getFileName}"))
-        .foreach(deleteRecursively)
+  def applyRetention(publishDir: String, keep: Int, protect: Option[String] = None): Unit =
+    retain(list(publishDir, activeConf), keep, protect.map(new Path(_)))
+
+  private def retain(l: Listing, keep: Int, protect: Option[Path]): Unit = {
+    val fs = l.fs
+    val root = new Path(l.publishDir)
+    val newestFirst = l.dirs.toSeq.sortBy { case (n, mtime) =>
+      (l.manifests.get(n).fold(-1L)(_.seq), mtime, n) }.reverse.map(d => new Path(root, d._1))
+    val gone = Pipeline.retainNewest(fs, newestFirst, keep, protect).map(_.getName).toSet
+    val held = l.copy(manifests = l.manifests.filter(v => !gone(v._1))).referenced
+    (segmentDir +: modelDir.toSeq).foreach { store =>
+      children(fs, new Path(root, store))
+        .filterNot(c => held(s"$store/${c.getPath.getName}"))
+        .foreach(c => fs.delete(c.getPath, true))
     }
   }
 
@@ -955,9 +947,12 @@ private[graft] final class SegmentStore(
     * join. Opening a version launches no Spark job ([[readSegments]]).
     * A store with `figures` remembers the returned frame ([[opened]]).
     */
-  def read(spark: SparkSession, versionDir: String): DataFrame = {
-    val publishDir = Paths.get(versionDir).getParent.toString
-    val m = readManifest(versionDir)
+  def read(spark: SparkSession, versionDir: String): DataFrame =
+    read(spark, new Path(versionDir).getParent.toString,
+      readManifest(versionDir, spark.sessionState.newHadoopConf()))
+
+  /** [[read]] of the version of `publishDir` whose manifest is `m`. */
+  private def read(spark: SparkSession, publishDir: String, m: SegmentManifest): DataFrame = {
     val runs = m.segments.indices.foldLeft(Vector.empty[(Vector[String], Seq[String])]) {
       case (acc :+ ((segs, tombs)), i) if m.hiddenBy(i) == tombs =>
         acc :+ ((segs :+ m.segments(i), tombs))
@@ -980,11 +975,10 @@ private[graft] final class SegmentStore(
     */
   def publish(spark: SparkSession, publishDir: String, sourceVersion: String, rows: DataFrame,
       keepHistory: Int, model: Option[String] = None): String = {
-    Files.createDirectories(Paths.get(publishDir))
     val segRef = ref("seg", sourceVersion)
     val stats = writeData(rows, publishDir, segRef)
-    commit(publishDir, sourceVersion, SegmentManifest(Seq(segRef), model = model, stats = stats),
-      keepHistory)
+    commit(list(publishDir, spark.sessionState.newHadoopConf()), sourceVersion,
+      SegmentManifest(Seq(segRef), model = model, stats = stats), keepHistory)
   }
 
   /** O(delta) append: `encode` turns the batch into the delta segment's
@@ -1001,18 +995,19 @@ private[graft] final class SegmentStore(
   def append(spark: SparkSession, publishDir: String, sourceVersion: String, batch: DataFrame,
       batchIdCol: String, keepHistory: Int, absorbBatchId: Option[Long])(
       encode: SegmentManifest => DataFrame): String = {
-    val (cur, m) = live(publishDir, s"append$kind")
-    requireFresh(s"append$kind", publishDir, cur, sourceVersion)
+    val l = list(publishDir, spark.sessionState.newHadoopConf())
+    val (cur, m) = live(l, s"append$kind")
+    requireFresh(s"append$kind", l, cur, sourceVersion)
     val newIds = batch.select(col(batchIdCol).as(idCol)).distinct()
     val delta = encode(m)
-    val dup = read(spark, cur).join(broadcast(newIds), Seq(idCol), "left_semi").count()
+    val dup = read(spark, publishDir, m).join(broadcast(newIds), Seq(idCol), "left_semi").count()
     require(dup == 0L,
       s"append$kind: $dup row(s) of the live index at $cur share an id with the new " +
         "batch — batches must be disjoint (re-running an already-appended batch would " +
         "duplicate its rows).")
     val segRef = ref("seg", sourceVersion)
     val stats = writeData(delta, publishDir, segRef)
-    commit(publishDir, sourceVersion, child(cur, m).copy(segments = m.segments :+ segRef,
+    commit(l, sourceVersion, child(cur, m).copy(segments = m.segments :+ segRef,
       absorbed = m.absorbed ++ absorbBatchId, stats = m.stats ++ stats), keepHistory)
   }
 
@@ -1026,15 +1021,16 @@ private[graft] final class SegmentStore(
     */
   def delete(publishDir: String, sourceVersion: String, ids: DataFrame, idsCol: String,
       keepHistory: Int): String = {
-    val (cur, m) = live(publishDir, s"delete$kind")
-    requireFresh(s"delete$kind", publishDir, cur, sourceVersion)
+    val spark = ids.sparkSession
+    val l = list(publishDir, spark.sessionState.newHadoopConf())
+    val (cur, m) = live(l, s"delete$kind")
+    requireFresh(s"delete$kind", l, cur, sourceVersion)
     val tRef = ref("tomb", sourceVersion)
     ids.select(col(idsCol).as(idCol)).distinct().write.mode("overwrite").parquet(s"$publishDir/$tRef")
-    val spark = ids.sparkSession
     val stats = if (!m.figured) Map.empty else recordFigures(publishDir, tRef,
-      read(spark, cur).join(broadcast(readSegments(spark, publishDir, Seq(tRef))), Seq(idCol),
-        "left_semi"))
-    commit(publishDir, sourceVersion, child(cur, m).copy(tombstones = m.tombstones :+ tRef,
+      read(spark, publishDir, m).join(broadcast(readSegments(spark, publishDir, Seq(tRef))),
+        Seq(idCol), "left_semi"))
+    commit(l, sourceVersion, child(cur, m).copy(tombstones = m.tombstones :+ tRef,
       scopes = m.scopes :+ m.segments.size, stats = m.stats ++ stats), keepHistory)
   }
 
@@ -1046,12 +1042,13 @@ private[graft] final class SegmentStore(
     */
   def compact(spark: SparkSession, publishDir: String, sourceVersion: String,
       keepHistory: Int): String = {
-    val (cur, m) = live(publishDir, s"compact$kind")
+    val l = list(publishDir, spark.sessionState.newHadoopConf())
+    val (cur, m) = live(l, s"compact$kind")
     if (m.segments.size <= 1 && m.tombstones.isEmpty) return cur
-    requireFresh(s"compact$kind", publishDir, cur, sourceVersion)
+    requireFresh(s"compact$kind", l, cur, sourceVersion)
     val segRef = ref("seg", sourceVersion)
-    val stats = writeData(read(spark, cur), publishDir, segRef)
-    commit(publishDir, sourceVersion, child(cur, m).copy(segments = Seq(segRef), tombstones = Nil,
+    val stats = writeData(read(spark, publishDir, m), publishDir, segRef)
+    commit(l, sourceVersion, child(cur, m).copy(segments = Seq(segRef), tombstones = Nil,
       scopes = Nil, stats = stats), keepHistory)
   }
 
@@ -1072,28 +1069,28 @@ private[graft] final class SegmentStore(
     *   - anything else reaches `append`, whose token checks refuse a
     *     version that would overwrite what a retained manifest names.
     */
-  def absorb(publishDir: String, batchId: Long, keepHistory: Int)(append: => String): String = {
-    val (cur, m) = live(publishDir, s"absorb${kind}Batch")
-    val segRef = ref("seg", s"batch-$batchId")
+  def absorb(spark: SparkSession, publishDir: String, batchId: Long, keepHistory: Int)(
+      append: => String): String = {
+    val l = list(publishDir, spark.sessionState.newHadoopConf())
+    val (cur, m) = live(l, s"absorb${kind}Batch")
     val name = prefix + s"batch-$batchId"
-    val committed = Paths.get(publishDir, name, "manifest.json")
     def extendsLive(b: SegmentManifest) =
       b.parent == child(cur, m).parent && b.absorbed == m.absorbed + batchId
-    if (m.absorbed(batchId) || m.segments.contains(segRef)) cur
-    else if (Files.exists(committed) && extendsLive(readManifest(committed.getParent.toString)))
-      flip(publishDir, name, s"batch-$batchId", keepHistory)
+    if (m.absorbed(batchId) || m.segments.contains(ref("seg", s"batch-$batchId"))) cur
+    else if (l.manifests.get(name).exists(extendsLive)) flip(l, name, s"batch-$batchId", keepHistory)
     else append
   }
 
-  private def live(publishDir: String, op: String): (String, SegmentManifest) = {
-    val cur = readCurrent(publishDir).getOrElse(throw new IllegalStateException(
-      s"$op: no current $kind version under $publishDir — publish$kind must run first"))
-    (cur, readManifest(cur))
+  /** The live version of a listed publish dir: its dir and manifest. */
+  private def live(l: Listing, op: String): (String, SegmentManifest) = {
+    val cur = readCurrent(l.publishDir, l.conf).getOrElse(throw new IllegalStateException(
+      s"$op: no current $kind version under ${l.publishDir} — publish$kind must run first"))
+    (cur, l.manifests.getOrElse(new Path(cur).getName, readManifest(cur, l.conf)))
   }
 
   /** `m` (the live version at `cur`) as the parent of a new version. */
   private def child(cur: String, m: SegmentManifest): SegmentManifest =
-    m.copy(parent = Some((Paths.get(cur).getFileName.toString, m.seq)))
+    m.copy(parent = Some((new Path(cur).getName, m.seq)))
 
   private def ref(what: String, sourceVersion: String): String =
     s"$segmentDir/$what-${safeVersion(sourceVersion)}"
@@ -1105,10 +1102,9 @@ private[graft] final class SegmentStore(
     * manifest holds (after a compaction the live manifest names one
     * segment), and `mode("overwrite")` would destroy them.
     */
-  private def requireFresh(op: String, publishDir: String, cur: String,
-      sourceVersion: String): Unit = {
+  private def requireFresh(op: String, l: Listing, cur: String, sourceVersion: String): Unit = {
     val clash = Seq(prefix + safeVersion(sourceVersion), ref("seg", sourceVersion),
-      ref("tomb", sourceVersion)).filter(referenced(publishDir))
+      ref("tomb", sourceVersion)).filter(l.referenced)
     require(clash.isEmpty,
       s"$op: sourceVersion '$sourceVersion' resolves to ${clash.mkString("'", "', '", "'")}, " +
         s"which a retained manifest already references (the live version is '$cur') — " +
@@ -1140,30 +1136,32 @@ private[graft] final class SegmentStore(
     figures.map(f => r -> f(rows, s"$publishDir/$r/${SegmentStore.LexiconDir}")).toMap
 
   /** Commit `m` as the version of `sourceVersion` — the manifest LAST,
-    * after every segment it names, with seq = 1 + the largest retained
-    * seq — then flip to it.
+    * after every segment it names, with seq = 1 + the largest seq `l`
+    * lists — then flip to it.
     */
-  private def commit(publishDir: String, sourceVersion: String, m: SegmentManifest,
+  private def commit(l: Listing, sourceVersion: String, m: SegmentManifest,
       keepHistory: Int): String = {
     val name = prefix + safeVersion(sourceVersion)
-    val seq = 1L + versions(publishDir).map(_._2.seq).maxOption.getOrElse(0L)
-    val dir = Paths.get(publishDir, name)
-    Files.createDirectories(dir)
-    val stats = ListMap(m.stats.toSeq.sortBy(_._1).map { case (r, s) =>
+    val committed = m.copy(seq = 1L + l.manifests.values.map(_.seq).maxOption.getOrElse(0L))
+    val stats = ListMap(committed.stats.toSeq.sortBy(_._1).map { case (r, s) =>
       r -> ListMap("nd" -> s.nd, "sum_dl" -> s.sumDl) }: _*)
-    Pipeline.commitJson(dir.resolve("manifest.json"), m.model.map("model" -> _).toSeq ++ Seq(
-      "segments" -> m.segments, "tombstones" -> m.tombstones, "tombstone_scopes" -> m.scopes,
-      "absorbed" -> m.absorbed.toSeq.sorted, "source_version" -> sourceVersion,
-      "seq" -> seq) ++ m.parent.toSeq.flatMap { case (p, ps) =>
-        Seq("parent" -> p, "parent_seq" -> ps) } ++ Option.when(stats.nonEmpty)("stats" -> stats): _*)
-    flip(publishDir, name, sourceVersion, keepHistory)
+    Json.commit(new Path(s"${l.publishDir}/$name", "manifest.json"),
+      committed.model.map("model" -> _).toSeq ++ Seq(
+        "segments" -> committed.segments, "tombstones" -> committed.tombstones,
+        "tombstone_scopes" -> committed.scopes, "absorbed" -> committed.absorbed.toSeq.sorted,
+        "source_version" -> sourceVersion, "seq" -> committed.seq) ++
+        committed.parent.toSeq.flatMap { case (p, ps) => Seq("parent" -> p, "parent_seq" -> ps) } ++
+        Option.when(stats.nonEmpty)("stats" -> stats), l.conf)
+    flip(l.committed(name, committed), name, sourceVersion, keepHistory)
   }
 
-  private def flip(publishDir: String, name: String, sourceVersion: String,
-      keepHistory: Int): String = {
-    flipPointer(publishDir, name, sourceVersion)
-    applyRetention(publishDir, keepHistory, protect = readCurrent(publishDir))
-    s"$publishDir/$name"
+  /** Flip the pointer to the committed version `name`, then apply
+    * retention to the listing `l`, which holds it.
+    */
+  private def flip(l: Listing, name: String, sourceVersion: String, keepHistory: Int): String = {
+    flipPointer(l.publishDir, name, sourceVersion, l.conf)
+    retain(l, keepHistory, protect = Some(new Path(l.publishDir, name)))
+    s"${l.publishDir}/$name"
   }
 
   /** The Spark schema key in the footer of every parquet file Spark
@@ -1244,4 +1242,25 @@ private[graft] final class SegmentStore(
 private[graft] object SegmentStore {
   /** The dir inside a ref's dir that holds its stored lexicon. */
   val LexiconDir = "_lexicon"
+
+  /** One listing of a publish dir: every version dir (its name and
+    * mtime) and the manifest of each committed one, keyed by dir name.
+    * A write lists once and passes the listing down, so it opens each
+    * retained manifest once.
+    */
+  final case class Listing(publishDir: String, conf: Configuration,
+      dirs: Map[String, Long], manifests: Map[String, SegmentManifest]) {
+    def fs: FileSystem = new Path(publishDir).getFileSystem(conf)
+
+    /** The names retained versions hold: their dirs and every ref their
+      * manifests name — what garbage collection keeps and what a new
+      * version must not overwrite.
+      */
+    def referenced: Set[String] = manifests.flatMap { case (n, m) => n +: m.refs }.toSet
+
+    /** This listing once `m` is committed as version `name`. */
+    def committed(name: String, m: SegmentManifest): Listing =
+      copy(dirs = dirs.updated(name, dirs.getOrElse(name, System.currentTimeMillis)),
+        manifests = manifests.updated(name, m))
+  }
 }

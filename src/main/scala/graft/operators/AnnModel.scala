@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
@@ -149,25 +147,11 @@ object AnnModel {
       g.add("sub", m); g.add("cluster", c); addVec(g, "centroid", cv)
     }
     writeGroups(spark, new Path(modelDir, "codebooks.parquet"), cbSchema, cbRows)
-    val manifest =
-      s"""{
-         |  "format": "graft-ann-model",
-         |  "version": 1,
-         |  "nlist": ${coarse.length},
-         |  "dims": ${coarse(0).length},
-         |  "num_subspaces": ${codebooks.length},
-         |  "codebook_size": ${codebooks(0).length},
-         |  "sub_dim": ${codebooks(0)(0).length}
-         |}
-         |""".stripMargin
-    // resolve through the session's Hadoop FileSystem, like the
-    // parquet writes above — a URI-schemed or non-local modelDir must
-    // not split the artifact across filesystems (manifest local,
-    // parquet remote)
-    val manifestPath = new Path(modelDir, "manifest.json")
-    val fs = manifestPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(manifestPath, true)
-    try out.write(manifest.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    graft.Json.commit(new Path(modelDir, "manifest.json"), Seq(
+      "format" -> "graft-ann-model", "version" -> 1, "nlist" -> coarse.length,
+      "dims" -> coarse(0).length, "num_subspaces" -> codebooks.length,
+      "codebook_size" -> codebooks(0).length, "sub_dim" -> codebooks(0)(0).length),
+      spark.sessionState.newHadoopConf())
   }
 
   /** Reads a model dir written by [[save]] (or its pre-r22 Spark
@@ -176,15 +160,13 @@ object AnnModel {
     * silently-wrong quantizer.
     */
   def load(spark: SparkSession, modelDir: String): IvfPq = {
-    val manifestPath = new Path(modelDir, "manifest.json")
-    val fs = manifestPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(manifestPath)
-    val manifest =
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    val manifest = graft.Json.read(new Path(modelDir, "manifest.json"),
+      spark.sessionState.newHadoopConf()).getOrElse(throw new java.io.FileNotFoundException(
+        s"AnnModel.load: no manifest.json in $modelDir"))
     def field(name: String): Int = {
-      val m = s""""$name":\\s*(\\d+)""".r.findFirstMatchIn(manifest)
-      require(m.isDefined, s"AnnModel.load: manifest missing '$name' ($modelDir)")
-      m.get.group(1).toInt
+      val v = graft.Json.long(manifest, name)
+      require(v.isDefined, s"AnnModel.load: manifest missing '$name' ($modelDir)")
+      v.get.toInt
     }
     val (nlist, nsub, cbSize) = (field("nlist"), field("num_subspaces"), field("codebook_size"))
     val (dims, subDim) = (field("dims"), field("sub_dim"))

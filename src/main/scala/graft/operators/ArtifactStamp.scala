@@ -12,17 +12,13 @@ package graft.operators
   */
 object ArtifactStamp {
 
-  /** Write/overwrite `dir/fileName` with the scheme string
-    * (idempotent — producers re-stamp on every append, which also
-    * heals a stamp lost to partial copies).
+  /** Commit `dir/fileName` with the scheme string ([[graft.Json.commit]];
+    * idempotent — producers re-stamp on every append, which also heals
+    * a stamp lost to partial copies).
     */
   def write(dir: String, conf: org.apache.hadoop.conf.Configuration,
-      fileName: String, scheme: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, fileName)
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(p, true)
-    try out.write(graft.Json.Mapper.writeValueAsBytes(Map("scheme" -> scheme))) finally out.close()
-  }
+      fileName: String, scheme: String): Unit =
+    graft.Json.commit(new org.apache.hadoop.fs.Path(dir, fileName), Seq("scheme" -> scheme), conf)
 
   /** The stored scheme string at `dir/fileName`, if the stamp exists
     * and parses — the read half of [[write]], for operators that need
@@ -49,14 +45,12 @@ object ArtifactStamp {
   def require(dir: String, conf: org.apache.hadoop.conf.Configuration,
       fileName: String, expected: String, artifactKind: String,
       mismatchDetail: String = "composing them would silently produce wrong results"): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, fileName)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p))
-      throw new IllegalStateException(
+    val stored = graft.Json.readText(new org.apache.hadoop.fs.Path(dir, fileName), conf)
+      .getOrElse(throw new IllegalStateException(
         s"$artifactKind at $dir has no $fileName stamp — its scheme is unknown " +
           s"and composing '$expected' work with it could silently produce wrong " +
-          "results. Verify its provenance and stamp it with ArtifactStamp.write.")
-    val parsed = read(dir, conf, fileName)
+          "results. Verify its provenance and stamp it with ArtifactStamp.write."))
+    val parsed = scheme(stored)
     if (!parsed.contains(expected))
       throw new IllegalStateException(
         s"$artifactKind at $dir was built with scheme " +

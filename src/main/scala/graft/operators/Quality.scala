@@ -530,19 +530,18 @@ object Quality {
     */
   private def readMgHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[(Long, Long)] = {
-    for (j <- graft.sources.AtomicHead.read(stateDir, "_mg_head.json", hconf);
+    for (j <- graft.Json.read(new org.apache.hadoop.fs.Path(stateDir, "_mg_head.json"), hconf);
          g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id"))
       yield (g, b)
   }
 
-  /** Commit the head pointer via create-temp + atomic rename — the
-    * staged-swap discipline of Pipeline.publish applied to the sketch
-    * state, so a crash mid-commit can corrupt at most a temp file.
+  /** Commit the head pointer ([[graft.Json.commit]]: temp name, then
+    * one rename), so a crash mid-commit can corrupt at most a temp file.
     */
   private def writeMgHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration, gen: Long, lastBatch: Long): Unit =
-    graft.sources.AtomicHead.write(stateDir, "_mg_head.json", gen,
-      s"""{"gen": $gen, "last_batch_id": $lastBatch}""", hconf)
+    graft.Json.commit(new org.apache.hadoop.fs.Path(stateDir, "_mg_head.json"),
+      Seq("gen" -> gen, "last_batch_id" -> lastBatch), hconf)
 
   /** The committed sketch rows of a persisted state dir — resolves the
     * head pointer to its immutable generation dir. Fails loudly on a
@@ -560,7 +559,7 @@ object Quality {
 
   private def readCmsHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[CmsHead] = {
-    for (j <- graft.sources.AtomicHead.read(stateDir, "_cms_head.json", hconf);
+    for (j <- graft.Json.read(new org.apache.hadoop.fs.Path(stateDir, "_cms_head.json"), hconf);
          g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id");
          dd <- graft.Json.long(j, "d"); ww <- graft.Json.long(j, "w"))
       yield CmsHead(g, b, dd.toInt, ww.toInt)
@@ -568,9 +567,8 @@ object Quality {
 
   private def writeCmsHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration, h: CmsHead): Unit =
-    graft.sources.AtomicHead.write(stateDir, "_cms_head.json", h.gen,
-      s"""{"gen": ${h.gen}, "last_batch_id": ${h.lastBatch}, """ +
-        s""""d": ${h.d}, "w": ${h.w}}""", hconf)
+    graft.Json.commit(new org.apache.hadoop.fs.Path(stateDir, "_cms_head.json"),
+      Seq("gen" -> h.gen, "last_batch_id" -> h.lastBatch, "d" -> h.d, "w" -> h.w), hconf)
 
   /** One incremental step of a persisted count-min sketch: absorb
     * `batch`'s token stream into the sketch at `stateDir`. CMS is a
@@ -1248,15 +1246,15 @@ object Quality {
 
   private def readCdcHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[CdcHead] = {
-    for (j <- graft.sources.AtomicHead.read(stateDir, "_cdc_head.json", hconf);
+    for (j <- graft.Json.read(new org.apache.hadoop.fs.Path(stateDir, "_cdc_head.json"), hconf);
          g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id"))
       yield CdcHead(g, b)
   }
 
   private def writeCdcHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration, h: CdcHead): Unit =
-    graft.sources.AtomicHead.write(stateDir, "_cdc_head.json", h.gen,
-      s"""{"gen": ${h.gen}, "last_batch_id": ${h.lastBatch}}""", hconf)
+    graft.Json.commit(new org.apache.hadoop.fs.Path(stateDir, "_cdc_head.json"),
+      Seq("gen" -> h.gen, "last_batch_id" -> h.lastBatch), hconf)
 
   /** One change-data-capture step over FULL corpus snapshots — the
     * persisted, incremental form of [[snapshotDiff]]: each arriving

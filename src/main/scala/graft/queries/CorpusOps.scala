@@ -1343,10 +1343,7 @@ object CorpusOps {
     val modelDir = java.nio.file.Files.createTempDirectory("q92-model").toString
     graft.operators.AnnModel.save(s, modelDir, coarse, codebooks)
     val model = graft.operators.AnnModel.load(s, modelDir)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(modelDir))
+    graft.Checkpoints.deleteDir(s, modelDir)
     Similarity.ivfPqScan(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding",
         k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
       .orderBy(col("query_id"), col("rank"))
@@ -1933,30 +1930,25 @@ object CorpusOps {
     val subDim = sample(0).length / 4
     val codebooks = Array.tabulate(4)(m =>
       sample.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val publishDir = java.nio.file.Files.createTempDirectory("q106-ann").toString
-    val day1 = Similarity.ivfPqIndex(
-      emb.filter(col("vec_id") < 400), "vec_id", "embedding", coarse, codebooks)
-    graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", day1, coarse, codebooks)
-    graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
-      emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
-    val model = graft.operators.AnnModel.load(s, graft.changesets.Pipeline.annModelDir(cur))
-    // the index must be read back from the published artifact — that
-    // IS the operator — but the read stays a LAZY parquet scan (r22):
-    // deleting the temp dir after the probe materializes replaces the
-    // eager pre-delete checkpoint's full extra pass, and lets the
-    // probe's cluster prune reach the partitioned scan
-    val index = graft.changesets.Pipeline.readAnnIndex(s, cur)
-    val out = Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
-        "vec_id", "embedding",
-        k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp publish dir
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q106-ann") { publishDir =>
+      val day1 = Similarity.ivfPqIndex(
+        emb.filter(col("vec_id") < 400), "vec_id", "embedding", coarse, codebooks)
+      graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", day1, coarse, codebooks)
+      graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
+        emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
+      val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+      val model = graft.operators.AnnModel.load(s, graft.changesets.Pipeline.annModelDir(cur))
+      // the index must be read back from the published artifact — that
+      // IS the operator — but the read stays a LAZY parquet scan (r22):
+      // deleting the temp dir after the probe materializes replaces the
+      // eager pre-delete checkpoint's full extra pass, and lets the
+      // probe's cluster prune reach the partitioned scan
+      val index = graft.changesets.Pipeline.readAnnIndex(s, cur)
+      Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
+          "vec_id", "embedding",
+          k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(publishDir))
-    out
   }
 
   // --------------------------------------------------------------- q171
@@ -1985,30 +1977,25 @@ object CorpusOps {
     val subDim = sample(0).length / 4
     val codebooks = Array.tabulate(4)(m =>
       sample.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val publishDir = java.nio.file.Files.createTempDirectory("q171-ann").toString
-    val day1 = Similarity.ivfPqIndex(
-      emb.filter(col("vec_id") < 400), "vec_id", "embedding", coarse, codebooks)
-    val day1Dir = graft.changesets.Pipeline.publishAnn(
-      s, publishDir, "day1", day1, coarse, codebooks)
-    graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
-      emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
-    // the live pointer moved on; the read below is the RETAINED pair
-    require(!graft.changesets.Pipeline.readCurrentAnn(publishDir).contains(day1Dir),
-      "q171 precondition: the append must have moved the live pointer")
-    val model = graft.operators.AnnModel.load(
-      s, graft.changesets.Pipeline.annModelDir(day1Dir))
-    // lazy artifact read, rm after the probe (see q106)
-    val index = graft.changesets.Pipeline.readAnnIndex(s, day1Dir)
-    val out = Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
-        "vec_id", "embedding",
-        k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp publish dir
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q171-ann") { publishDir =>
+      val day1 = Similarity.ivfPqIndex(
+        emb.filter(col("vec_id") < 400), "vec_id", "embedding", coarse, codebooks)
+      val day1Dir = graft.changesets.Pipeline.publishAnn(
+        s, publishDir, "day1", day1, coarse, codebooks)
+      graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
+        emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
+      // the live pointer moved on; the read below is the RETAINED pair
+      require(!graft.changesets.Pipeline.readCurrentAnn(publishDir).contains(day1Dir),
+        "q171 precondition: the append must have moved the live pointer")
+      val model = graft.operators.AnnModel.load(
+        s, graft.changesets.Pipeline.annModelDir(day1Dir))
+      // lazy artifact read, deleted after the probe (see q106)
+      val index = graft.changesets.Pipeline.readAnnIndex(s, day1Dir)
+      Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
+          "vec_id", "embedding",
+          k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(publishDir))
-    out
   }
 
   private val q171Sql = q92SqlAt("a.vec_id < 400")
@@ -2040,28 +2027,23 @@ object CorpusOps {
     val subDim = sample(0).length / 4
     val codebooks = Array.tabulate(4)(m =>
       sample.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val publishDir = java.nio.file.Files.createTempDirectory("q173-ann").toString
-    val full = Similarity.ivfPqIndex(emb, "vec_id", "embedding", coarse, codebooks)
-    graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", full, coarse, codebooks)
-    graft.changesets.Pipeline.deleteAnn(s, publishDir, "takedown1",
-      emb.filter(col("vec_id") >= 400 && col("vec_id") < 450), "vec_id")
-    graft.changesets.Pipeline.deleteAnn(s, publishDir, "takedown2",
-      emb.filter(col("vec_id") >= 450), "vec_id")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
-    val model = graft.operators.AnnModel.load(
-      s, graft.changesets.Pipeline.annModelDir(cur))
-    // lazy artifact read, rm after the probe (see q106)
-    val index = graft.changesets.Pipeline.readAnnIndex(s, cur)
-    val out = Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
-        "vec_id", "embedding",
-        k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp publish dir
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q173-ann") { publishDir =>
+      val full = Similarity.ivfPqIndex(emb, "vec_id", "embedding", coarse, codebooks)
+      graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", full, coarse, codebooks)
+      graft.changesets.Pipeline.deleteAnn(s, publishDir, "takedown1",
+        emb.filter(col("vec_id") >= 400 && col("vec_id") < 450), "vec_id")
+      graft.changesets.Pipeline.deleteAnn(s, publishDir, "takedown2",
+        emb.filter(col("vec_id") >= 450), "vec_id")
+      val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+      val model = graft.operators.AnnModel.load(
+        s, graft.changesets.Pipeline.annModelDir(cur))
+      // lazy artifact read, deleted after the probe (see q106)
+      val index = graft.changesets.Pipeline.readAnnIndex(s, cur)
+      Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
+          "vec_id", "embedding",
+          k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(publishDir))
-    out
   }
 
   private val q173Sql = q92SqlAt("a.vec_id < 400")
@@ -2093,30 +2075,25 @@ object CorpusOps {
     val subDim = sample(0).length / 4
     val codebooks = Array.tabulate(4)(m =>
       sample.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val publishDir = java.nio.file.Files.createTempDirectory("q133-ann").toString
-    val day1 = Similarity.ivfPqIndex(
-      emb.filter(col("vec_id") < 300), "vec_id", "embedding", coarse, codebooks)
-    graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", day1, coarse, codebooks)
-    graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
-      emb.filter(col("vec_id") >= 300 && col("vec_id") < 400), "vec_id", "embedding")
-    graft.changesets.Pipeline.appendAnn(s, publishDir, "day3",
-      emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
-    graft.changesets.Pipeline.compactAnn(s, publishDir, "weekly-compact")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
-    val model = graft.operators.AnnModel.load(s, graft.changesets.Pipeline.annModelDir(cur))
-    // same artifact-read rule as q106 (the read-back IS the operator),
-    // kept lazy: the probe materializes, then the temp dir deletes
-    val index = graft.changesets.Pipeline.readAnnIndex(s, cur)
-    val out = Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
-        "vec_id", "embedding",
-        k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp publish dir
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q133-ann") { publishDir =>
+      val day1 = Similarity.ivfPqIndex(
+        emb.filter(col("vec_id") < 300), "vec_id", "embedding", coarse, codebooks)
+      graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", day1, coarse, codebooks)
+      graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
+        emb.filter(col("vec_id") >= 300 && col("vec_id") < 400), "vec_id", "embedding")
+      graft.changesets.Pipeline.appendAnn(s, publishDir, "day3",
+        emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
+      graft.changesets.Pipeline.compactAnn(s, publishDir, "weekly-compact")
+      val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+      val model = graft.operators.AnnModel.load(s, graft.changesets.Pipeline.annModelDir(cur))
+      // same artifact-read rule as q106 (the read-back IS the operator),
+      // kept lazy: the probe materializes, then the temp dir deletes
+      val index = graft.changesets.Pipeline.readAnnIndex(s, cur)
+      Similarity.ivfPqProbe(emb.filter(col("vec_id") < 5), index,
+          "vec_id", "embedding",
+          k = 10, coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(publishDir))
-    out
   }
 
   // --------------------------------------------------------------- q104
@@ -2998,54 +2975,50 @@ object CorpusOps {
     val subDim = sample(0).length / 4
     val codebooks = Array.tabulate(4)(m =>
       sample.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val publishDir = java.nio.file.Files.createTempDirectory("q232-ann").toString
-    val idx1 = Similarity.ivfPqIndex(day1, "vid", "embedding", coarse, codebooks)
-    val day1Dir = graft.changesets.Pipeline.publishAnn(
-      s, publishDir, "chunks-day1", idx1, coarse, codebooks)
-    graft.changesets.Pipeline.appendAnn(
-      s, publishDir, "chunks-day2", day2, "vid", "embedding")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
-    require(cur != day1Dir,
-      "q232 precondition: the append must have moved the live pointer")
-    val model = graft.operators.AnnModel.load(
-      s, graft.changesets.Pipeline.annModelDir(cur))
-    // the three artifact reads stay LAZY parquet scans (r22): the r21
-    // form eagerly localCheckpoint'd each index before probing — three
-    // extra full materialization passes whose only purpose was to
-    // outlive the early temp-dir delete. Deleting AFTER the one probe
-    // job lets each probe read its segments once, with the shared
-    // cluster prune below reaching the partitioned scan as a real
-    // partition filter (publishAnn's layout exists for exactly this).
-    val liveIdx = graft.changesets.Pipeline.readAnnIndex(s, cur)
-    val asofIdx = graft.changesets.Pipeline.readAnnIndex(s, day1Dir)
-    graft.changesets.Pipeline.compactAnn(s, publishDir, "chunks-compact")
-    val cur2 = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
-    require(cur2 != cur, "q232 precondition: compaction must publish a new pair")
-    // liveIdx/asofIdx are lazy scans: compactAnn's retention must have
-    // kept both versions, or the probe below would read collected segments
-    Seq(cur, day1Dir).foreach(v => require(
-      java.nio.file.Files.exists(java.nio.file.Paths.get(v, "manifest.json")),
-      s"q232 precondition: $v must outlive the compaction's retention"))
-    val compIdx = graft.changesets.Pipeline.readAnnIndex(s, cur2)
-    // one probe table for ALL three probes — the query batch and
-    // frozen model are shared, so a per-probe recompute is pure waste
-    val table = Similarity.probeTable(
-      queries, "vid", "embedding", model.coarse, model.codebooks, nprobe = 2)
-    def probe(idx: DataFrame, stage: String): DataFrame =
-      table.fold(Similarity.ivfPqProbe(queries, idx, "vid", "embedding", k = 5,
-          coarse = model.coarse, codebooks = model.codebooks, nprobe = 2))(
-          Similarity.ivfPqProbe(idx, _, k = 5))
-        .select(lit(stage).as("stage"), col("query_id"), col("neighbor_id"),
-          col("rank"), col("approx_d2"))
-    val out = probe(asofIdx, "asof")
-      .union(probe(compIdx, "compact"))
-      .union(probe(liveIdx, "live"))
-      .orderBy(col("stage"), col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp publish dir
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    val out = graft.Checkpoints.overTempDir(s, "q232-ann") { publishDir =>
+      val idx1 = Similarity.ivfPqIndex(day1, "vid", "embedding", coarse, codebooks)
+      val day1Dir = graft.changesets.Pipeline.publishAnn(
+        s, publishDir, "chunks-day1", idx1, coarse, codebooks)
+      graft.changesets.Pipeline.appendAnn(
+        s, publishDir, "chunks-day2", day2, "vid", "embedding")
+      val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+      require(cur != day1Dir,
+        "q232 precondition: the append must have moved the live pointer")
+      val model = graft.operators.AnnModel.load(
+        s, graft.changesets.Pipeline.annModelDir(cur))
+      // the three artifact reads stay LAZY parquet scans (r22): the r21
+      // form eagerly localCheckpoint'd each index before probing — three
+      // extra full materialization passes whose only purpose was to
+      // outlive the early temp-dir delete. Deleting AFTER the one probe
+      // job lets each probe read its segments once, with the shared
+      // cluster prune below reaching the partitioned scan as a real
+      // partition filter (publishAnn's layout exists for exactly this).
+      val liveIdx = graft.changesets.Pipeline.readAnnIndex(s, cur)
+      val asofIdx = graft.changesets.Pipeline.readAnnIndex(s, day1Dir)
+      graft.changesets.Pipeline.compactAnn(s, publishDir, "chunks-compact")
+      val cur2 = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+      require(cur2 != cur, "q232 precondition: compaction must publish a new pair")
+      // liveIdx/asofIdx are lazy scans: compactAnn's retention must have
+      // kept both versions, or the probe below would read collected segments
+      Seq(cur, day1Dir).foreach(v => require(
+        java.nio.file.Files.exists(java.nio.file.Paths.get(v, "manifest.json")),
+        s"q232 precondition: $v must outlive the compaction's retention"))
+      val compIdx = graft.changesets.Pipeline.readAnnIndex(s, cur2)
+      // one probe table for ALL three probes — the query batch and
+      // frozen model are shared, so a per-probe recompute is pure waste
+      val table = Similarity.probeTable(
+        queries, "vid", "embedding", model.coarse, model.codebooks, nprobe = 2)
+      def probe(idx: DataFrame, stage: String): DataFrame =
+        table.fold(Similarity.ivfPqProbe(queries, idx, "vid", "embedding", k = 5,
+            coarse = model.coarse, codebooks = model.codebooks, nprobe = 2))(
+            Similarity.ivfPqProbe(idx, _, k = 5))
+          .select(lit(stage).as("stage"), col("query_id"), col("neighbor_id"),
+            col("rank"), col("approx_d2"))
+      probe(asofIdx, "asof")
+        .union(probe(compIdx, "compact"))
+        .union(probe(liveIdx, "live"))
+        .orderBy(col("stage"), col("query_id"), col("rank"))
     }
-    rm(new java.io.File(publishDir))
     Seq(corpus, queries).foreach(graft.Checkpoints.release)
     out
   }
@@ -3179,37 +3152,33 @@ object CorpusOps {
     val subDim = sample(0).length / 4
     val codebooks = Array.tabulate(4)(m =>
       sample.map(_.slice(m * subDim, (m + 1) * subDim)))
-    val publishDir = java.nio.file.Files.createTempDirectory("q255-ann").toString
-    graft.changesets.Pipeline.publishAnn(
-      s, publishDir, "chunks-day1",
-      Similarity.ivfPqIndex(day1, "vid", "embedding", coarse, codebooks),
-      coarse, codebooks)
-    // day 2 as two DOCUMENT micro-batches through the stream's body
-    def absorb(batchId: Long, m: Int): String =
-      graft.changesets.Pipeline.absorbChunkAnnBatch(
-        s, publishDir, batchId, docs.filter(col("doc_id") % 4 === m),
-        "doc_id", "text", enc, winTokens = 32, stride = 24)
-    absorb(0L, 1)
-    val cur = absorb(1L, 3)
-    // at-least-once replay: the committed batch id must skip
-    val replayed = absorb(1L, 3)
-    require(replayed == cur,
-      "q255 precondition: replaying an absorbed batch id must be a no-op")
-    val model = graft.operators.AnnModel.load(
-      s, graft.changesets.Pipeline.annModelDir(cur))
-    // lazy artifact read, deleted AFTER the probe materializes (r22):
-    // the eager pre-delete checkpoint was a full extra pass over the
-    // index whose only purpose was outliving the rm
-    val liveIdx = graft.changesets.Pipeline.readAnnIndex(s, cur)
-    val out = Similarity.ivfPqProbe(queries, liveIdx, "vid", "embedding", k = 5,
-        coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("approx_d2"))
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true) // materialize before deleting the temp publish dir
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    val out = graft.Checkpoints.overTempDir(s, "q255-ann") { publishDir =>
+      graft.changesets.Pipeline.publishAnn(
+        s, publishDir, "chunks-day1",
+        Similarity.ivfPqIndex(day1, "vid", "embedding", coarse, codebooks),
+        coarse, codebooks)
+      // day 2 as two DOCUMENT micro-batches through the stream's body
+      def absorb(batchId: Long, m: Int): String =
+        graft.changesets.Pipeline.absorbChunkAnnBatch(
+          s, publishDir, batchId, docs.filter(col("doc_id") % 4 === m),
+          "doc_id", "text", enc, winTokens = 32, stride = 24)
+      absorb(0L, 1)
+      val cur = absorb(1L, 3)
+      // at-least-once replay: the committed batch id must skip
+      val replayed = absorb(1L, 3)
+      require(replayed == cur,
+        "q255 precondition: replaying an absorbed batch id must be a no-op")
+      val model = graft.operators.AnnModel.load(
+        s, graft.changesets.Pipeline.annModelDir(cur))
+      // lazy artifact read, deleted AFTER the probe materializes (r22):
+      // the eager pre-delete checkpoint was a full extra pass over the
+      // index whose only purpose was outliving the delete
+      val liveIdx = graft.changesets.Pipeline.readAnnIndex(s, cur)
+      Similarity.ivfPqProbe(queries, liveIdx, "vid", "embedding", k = 5,
+          coarse = model.coarse, codebooks = model.codebooks, nprobe = 2)
+        .select(col("query_id"), col("neighbor_id"), col("rank"), col("approx_d2"))
+        .orderBy(col("query_id"), col("rank"))
     }
-    rm(new java.io.File(publishDir))
     Seq(day1, queries).foreach(graft.Checkpoints.release)
     out
   }
@@ -3271,14 +3240,17 @@ object CorpusOps {
     * breaks the hash.
     */
   private def q218(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("q218-export").toString + "/data"
-    graft.sources.Export.writeShardsWithManifest(
-      t(s, dir, "documents"), "doc_id", out, seed = 42L, rowsPerShard = 64L)
-    replayExport(s, out)
+    graft.Checkpoints.overTempDir(s, "q218-export") { base =>
+      val out = s"$base/data"
+      graft.sources.Export.writeShardsWithManifest(
+        t(s, dir, "documents"), "doc_id", out, seed = 42L, rowsPerShard = 64L)
+      replayExport(s, out)
+    }
   }
 
   /** q218/q222's read-back: the training order replayed from the temp
-    * export at `out`, materialized, then the export deleted.
+    * export at `out` (the caller's `overTempDir` materializes it, then
+    * deletes the export).
     * Verification runs once, INSIDE readShardsInOrderIfAny (it refuses
     * any non-ok shard, loudly — the r21 form also called verifyShards
     * first, paying the full scan + checksum fold twice per query); a
@@ -3290,14 +3262,9 @@ object CorpusOps {
       case Some(rows) => rows
         .select(col("doc_id"), col("position"), col("shard").cast("long").as("shard"))
         .orderBy(col("position"))
-        .localCheckpoint(true) // materialize before deleting the temp export
       case None =>
         s.range(0).select(col("id").as("doc_id"), col("id").as("position"), col("id").as("shard"))
     }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(out).getParentFile)
     replay
   }
 
@@ -3316,14 +3283,16 @@ object CorpusOps {
     */
   private def q222(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val out = java.nio.file.Files.createTempDirectory("q222-export").toString + "/data"
-    graft.sources.Export.writeShardsWithManifest(
-      docs.filter(col("doc_id") % 4 =!= 0), "doc_id", out,
-      seed = 42L, rowsPerShard = 64L)
-    graft.sources.Export.appendShardsWithManifest(
-      docs.filter(col("doc_id") % 4 === 0), "doc_id", out,
-      deltaSeed = 43L, batchId = 0L)
-    replayExport(s, out)
+    graft.Checkpoints.overTempDir(s, "q222-export") { base =>
+      val out = s"$base/data"
+      graft.sources.Export.writeShardsWithManifest(
+        docs.filter(col("doc_id") % 4 =!= 0), "doc_id", out,
+        seed = 42L, rowsPerShard = 64L)
+      graft.sources.Export.appendShardsWithManifest(
+        docs.filter(col("doc_id") % 4 === 0), "doc_id", out,
+        deltaSeed = 43L, batchId = 0L)
+      replayExport(s, out)
+    }
   }
 
   private val q222Sql =

@@ -680,16 +680,17 @@ object Curation {
     */
   private def q124(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val stateDir = java.nio.file.Files.createTempDirectory("q124-state").toString
-    val corpusDir = java.nio.file.Files.createTempDirectory("q124-corpus").toString + "/data"
-    Quality.heavyHittersIncrement(
-      docs.filter(col("doc_id") % 2 === 0), "text", stateDir, corpusDir, capacity = 64,
-      batchId = Some(0L))
-    Quality.heavyHittersIncrement(
-      docs.filter(col("doc_id") % 2 =!= 0), "text", stateDir, corpusDir, capacity = 64,
-      batchId = Some(1L))
-    val corpus = s.read.parquet(corpusDir)
-    Quality.heavyHittersFromState(corpus, "text", stateDir, support = 32)
+    graft.Checkpoints.overTempDir(s, "q124-state") { base =>
+      val (stateDir, corpusDir) = (s"$base/state", s"$base/corpus")
+      Quality.heavyHittersIncrement(
+        docs.filter(col("doc_id") % 2 === 0), "text", stateDir, corpusDir, capacity = 64,
+        batchId = Some(0L))
+      Quality.heavyHittersIncrement(
+        docs.filter(col("doc_id") % 2 =!= 0), "text", stateDir, corpusDir, capacity = 64,
+        batchId = Some(1L))
+      val corpus = s.read.parquet(corpusDir)
+      Quality.heavyHittersFromState(corpus, "text", stateDir, support = 32)
+    }
   }
 
   // --------------------------------------------------------------- q125
@@ -707,15 +708,16 @@ object Curation {
   private def q125(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val bench = docs.filter(col("doc_id") % 23 === 0)
-    val indexDir = java.nio.file.Files.createTempDirectory("q125-index").toString
-    Quality.decontaminationIndexIncrement(
-      bench.filter(col("doc_id") % 2 === 0), "doc_id", "text", indexDir)
-    Quality.decontaminationIndexIncrement(
-      bench.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", indexDir)
-    Quality.decontaminateWithIndex(
-        docs.filter(col("doc_id") % 23 =!= 0), "doc_id", "text", indexDir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .orderBy(col("doc_id"))
+    graft.Checkpoints.overTempDir(s, "q125-index") { indexDir =>
+      Quality.decontaminationIndexIncrement(
+        bench.filter(col("doc_id") % 2 === 0), "doc_id", "text", indexDir)
+      Quality.decontaminationIndexIncrement(
+        bench.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", indexDir)
+      Quality.decontaminateWithIndex(
+          docs.filter(col("doc_id") % 23 =!= 0), "doc_id", "text", indexDir)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy(col("doc_id"))
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -3180,35 +3180,31 @@ object MediaStream {
   private def q140(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Formats
     val docs = t(s, dir, "documents")
-    val base = java.nio.file.Files.createTempDirectory("q140-fmt").toString
-    def leg(fmt: String): DataFrame = {
-      val p = s"$base/$fmt"
-      val back = fmt match {
-        case "csv" => Formats.writeCsv(docs, p); Formats.readCsv(s, p, docs.schema)
-        case "json" => Formats.writeJsonLines(docs, p); Formats.readJsonLines(s, p, docs.schema)
-        case _ => Formats.writeOrc(docs, p); Formats.readOrc(s, p, docs.schema)
+    graft.Checkpoints.overTempDir(s, "q140-fmt") { base =>
+      def leg(fmt: String): DataFrame = {
+        val p = s"$base/$fmt"
+        val back = fmt match {
+          case "csv" => Formats.writeCsv(docs, p); Formats.readCsv(s, p, docs.schema)
+          case "json" => Formats.writeJsonLines(docs, p); Formats.readJsonLines(s, p, docs.schema)
+          case _ => Formats.writeOrc(docs, p); Formats.readOrc(s, p, docs.schema)
+        }
+        back.agg(
+          count(lit(1)).as("n_rows"),
+          sum(col("doc_id")).as("sum_id"),
+          sum(col("n_chars")).as("sum_chars"),
+          // concat, not concat_ws: null-PROPAGATING like the oracle's
+          // '||', so a null cell drops the row from both sums instead of
+          // silently vanishing on the Spark side only (r14 advice)
+          sum(pmod(graft.functions.TextFunctions.hash60(
+            concat(col("text"), lit("|"), col("lang"), lit("|"), col("source"))), lit(1L << 40)))
+            .as("content_sum"))
+          .select(lit(fmt).as("format"), col("*"))
       }
-      back.agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("doc_id")).as("sum_id"),
-        sum(col("n_chars")).as("sum_chars"),
-        // concat, not concat_ws: null-PROPAGATING like the oracle's
-        // '||', so a null cell drops the row from both sums instead of
-        // silently vanishing on the Spark side only (r14 advice)
-        sum(pmod(graft.functions.TextFunctions.hash60(
-          concat(col("text"), lit("|"), col("lang"), lit("|"), col("source"))), lit(1L << 40)))
-          .as("content_sum"))
-        .select(lit(fmt).as("format"), col("*"))
+      // the read-back IS the operator under test: overTempDir
+      // materializes it before the temp dirs go
+      Seq("csv", "json", "orc").map(leg).reduce(_.unionByName(_))
+        .orderBy(col("format"))
     }
-    // materialize before deleting the temp dirs (the q106 discipline:
-    // the read-back IS the operator under test)
-    val out = Seq("csv", "json", "orc").map(leg).reduce(_.unionByName(_))
-      .orderBy(col("format")).localCheckpoint(true)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(base))
-    out
   }
 
   private val q140Sql =

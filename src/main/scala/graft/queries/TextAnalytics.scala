@@ -1605,21 +1605,16 @@ object TextAnalytics {
   private def q155(s: SparkSession, dir: String): DataFrame = {
     val (d, w) = (4, 64)
     val docs = t(s, dir, "documents")
-    val state = java.nio.file.Files.createTempDirectory("q155-cms").toString
-    Quality.countMinIncrement(s, state,
-      docs.filter(col("doc_id") < 250), "text", d, w, batchId = 0L)
-    Quality.countMinIncrement(s, state,
-      docs.filter(col("doc_id") >= 250), "text", d, w, batchId = 1L)
-    Quality.countMinIncrement(s, state,
-      docs.filter(col("doc_id") >= 250), "text", d, w, batchId = 1L)
-    val tok = docs.select(explode(tokens(col("text"))).as("term"))
-    val out = cmsProbe(s, tok, Quality.readCmsSketch(s, state), d, w)
-      .localCheckpoint(true) // materialize before deleting the temp state
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q155-cms") { state =>
+      Quality.countMinIncrement(s, state,
+        docs.filter(col("doc_id") < 250), "text", d, w, batchId = 0L)
+      Quality.countMinIncrement(s, state,
+        docs.filter(col("doc_id") >= 250), "text", d, w, batchId = 1L)
+      Quality.countMinIncrement(s, state,
+        docs.filter(col("doc_id") >= 250), "text", d, w, batchId = 1L)
+      val tok = docs.select(explode(tokens(col("text"))).as("term"))
+      cmsProbe(s, tok, Quality.readCmsSketch(s, state), d, w)
     }
-    rm(new java.io.File(state))
-    out
   }
 
   private val q153Sql =
@@ -1854,7 +1849,6 @@ object TextAnalytics {
   private def q195(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Robots
     val docs = t(s, dir, "documents")
-    val stateDir = java.nio.file.Files.createTempDirectory("q195-state").toString
     val rev2 = concat(col("text"),
       when(col("doc_id") % 7 === 0, lit(" rev2")).otherwise(lit("")))
     val v1 = docs.filter(col("doc_id") % 11 =!= 5)
@@ -1864,23 +1858,25 @@ object TextAnalytics {
     val v3 = docs.select(col("doc_id"),
       concat(rev2,
         when(col("doc_id") % 5 === 0, lit(" rev3")).otherwise(lit(""))).as("t"))
-    Robots.recrawlIncrement(s, stateDir, v1, "doc_id", "t", batchId = 1L)
-    Robots.recrawlIncrement(s, stateDir, v2, "doc_id", "t", batchId = 2L)
-    // at-least-once replay of an absorbed version: MUST skip
-    Robots.recrawlIncrement(s, stateDir, v2, "doc_id", "t", batchId = 2L)
-    Robots.recrawlIncrement(s, stateDir, v3, "doc_id", "t", batchId = 3L)
-    Robots.readRecrawlState(s, stateDir)
-      .withColumn("change_ppm", expr(
-        "CASE WHEN n_obs > 1 THEN (n_changes * 1000000L) DIV (n_obs - 1) " +
-          "ELSE 0L END"))
-      .withColumn("refresh_class",
-        when(col("n_obs") === 1, "new")
-          .when(col("change_ppm") >= 500000L, "hot")
-          .when(col("change_ppm") === 0, "cold")
-          .otherwise("warm"))
-      .select(col("id").as("doc_id"), col("n_obs"), col("n_changes"),
-        col("change_ppm"), col("refresh_class"))
-      .orderBy(col("doc_id"))
+    graft.Checkpoints.overTempDir(s, "q195-state") { stateDir =>
+      Robots.recrawlIncrement(s, stateDir, v1, "doc_id", "t", batchId = 1L)
+      Robots.recrawlIncrement(s, stateDir, v2, "doc_id", "t", batchId = 2L)
+      // at-least-once replay of an absorbed version: MUST skip
+      Robots.recrawlIncrement(s, stateDir, v2, "doc_id", "t", batchId = 2L)
+      Robots.recrawlIncrement(s, stateDir, v3, "doc_id", "t", batchId = 3L)
+      Robots.readRecrawlState(s, stateDir)
+        .withColumn("change_ppm", expr(
+          "CASE WHEN n_obs > 1 THEN (n_changes * 1000000L) DIV (n_obs - 1) " +
+            "ELSE 0L END"))
+        .withColumn("refresh_class",
+          when(col("n_obs") === 1, "new")
+            .when(col("change_ppm") >= 500000L, "hot")
+            .when(col("change_ppm") === 0, "cold")
+            .otherwise("warm"))
+        .select(col("id").as("doc_id"), col("n_obs"), col("n_changes"),
+          col("change_ppm"), col("refresh_class"))
+        .orderBy(col("doc_id"))
+    }
   }
 
   // --------------------------------------------------------------- q197
@@ -1978,24 +1974,19 @@ object TextAnalytics {
     val v3 = docs.select(col("doc_id"),
       concat(rev2,
         when(col("doc_id") % 5 === 0, lit(" rev3")).otherwise(lit(""))).as("t"))
-    val base = java.nio.file.Files.createTempDirectory("q185-cdc").toString
-    val (state, logd) = (s"$base/state", s"$base/log")
-    Quality.cdcAbsorb(s, state, logd, v1, "doc_id", "t", batchId = 0L)
-    Quality.cdcAbsorb(s, state, logd, v2, "doc_id", "t", batchId = 1L)
-    Quality.cdcAbsorb(s, state, logd, v2, "doc_id", "t", batchId = 1L) // replay: no-op
-    Quality.cdcAbsorb(s, state, logd, v3, "doc_id", "t", batchId = 2L)
-    val out = Quality.readCdcLog(s, logd)
-      .groupBy(col("batch_id").cast("long").as("batch_id"), col("change"))
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        md5(array_join(transform(array_sort(collect_list(col("id"))),
-          x => x.cast("string")), "|")).as("ids_fp"))
-      .orderBy(col("batch_id"), col("change"))
-      .localCheckpoint(true) // materialize before deleting the temp dirs
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    graft.Checkpoints.overTempDir(s, "q185-cdc") { base =>
+      val (state, logd) = (s"$base/state", s"$base/log")
+      Quality.cdcAbsorb(s, state, logd, v1, "doc_id", "t", batchId = 0L)
+      Quality.cdcAbsorb(s, state, logd, v2, "doc_id", "t", batchId = 1L)
+      Quality.cdcAbsorb(s, state, logd, v2, "doc_id", "t", batchId = 1L) // replay: no-op
+      Quality.cdcAbsorb(s, state, logd, v3, "doc_id", "t", batchId = 2L)
+      Quality.readCdcLog(s, logd)
+        .groupBy(col("batch_id").cast("long").as("batch_id"), col("change"))
+        .agg(count(lit(1)).cast("long").as("n_docs"),
+          md5(array_join(transform(array_sort(collect_list(col("id"))),
+            x => x.cast("string")), "|")).as("ids_fp"))
+        .orderBy(col("batch_id"), col("change"))
     }
-    rm(new java.io.File(base))
-    out
   }
 
   private val q185Sql =

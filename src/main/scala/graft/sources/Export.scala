@@ -1,6 +1,9 @@
 package graft.sources
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -75,8 +78,7 @@ object Export {
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("position"))
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)
-    val d = new java.io.File(outDir)
-    Option(d.listFiles()).toSeq.flatten.count(_.getName.startsWith("shard="))
+    shardDirs(docs.sparkSession.sessionState.newHadoopConf(), outDir)
   }
 
   /** [[writeShards]] plus the catalog a data loader actually consumes:
@@ -85,10 +87,9 @@ object Export {
     * order — so an epoch scheduler sizes itself without listing or
     * footer-reading thousands of shard files, and a re-export is
     * verifiable by manifest diff alone (same corpus + seed ⇒
-    * byte-identical manifest). Manifest commits LAST via temp + atomic
-    * move (the [[graft.changesets.Pipeline]] artifact rule: a crash
-    * mid-export leaves data files but no manifest — an incomplete
-    * export is never mistaken for a committed one).
+    * byte-identical manifest). The manifest commits LAST ([[graft.Json.commit]]:
+    * a crash mid-export leaves data files but no manifest — an
+    * incomplete export is never mistaken for a committed one).
     */
   def writeShardsWithManifest(
       docs: DataFrame,
@@ -108,8 +109,8 @@ object Export {
           rows.map { case (s, _, c) => s -> c }.toMap)
       }
     val total = perShard.map(_._2).sum
-    writeManifestJson(outDir, seed, rowsPerShard, n, total,
-      perShard.toSeq, checksums, lastBatch = -1L)
+    writeManifest(spark, outDir, ExportManifest(seed, rowsPerShard, n, total, perShard.toSeq,
+      checksums = checksums))
     n
   }
 
@@ -139,33 +140,15 @@ object Export {
       .orderBy(col("shard"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
 
-  private def writeManifestJson(
-      outDir: String, seed: Long, rowsPerShard: Long, n: Int, total: Long,
-      perShard: Seq[(Int, Long)], checksums: Map[Int, Long],
-      lastBatch: Long): Unit = {
-    val shardJson = perShard
-      .map { case (sh, r) =>
-        checksums.get(sh) match {
-          case Some(c) => s"""{"shard": $sh, "rows": $r, "checksum": $c}"""
-          case None => s"""{"shard": $sh, "rows": $r}"""
-        }
-      }
-      .mkString("[", ", ", "]")
-    val json =
-      s"""{
-         |  "seed": $seed,
-         |  "rows_per_shard": $rowsPerShard,
-         |  "n_shards": $n,
-         |  "total_rows": $total,
-         |  "last_batch_id": $lastBatch,
-         |  "shards": $shardJson
-         |}""".stripMargin
-    val tmp = java.nio.file.Paths.get(outDir, ".manifest.json.tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(outDir, "manifest.json"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** Commit `m` as `outDir/manifest.json` ([[graft.Json.commit]]). */
+  private def writeManifest(spark: org.apache.spark.sql.SparkSession, outDir: String,
+      m: ExportManifest): Unit =
+    graft.Json.commit(new Path(outDir, "manifest.json"), Seq(
+      "seed" -> m.seed, "rows_per_shard" -> m.rowsPerShard, "n_shards" -> m.nShards,
+      "total_rows" -> m.totalRows, "last_batch_id" -> m.lastBatch,
+      "shards" -> m.shards.map { case (sh, r) =>
+        ListMap("shard" -> sh, "rows" -> r) ++ m.checksums.get(sh).map("checksum" -> _) }),
+      spark.sessionState.newHadoopConf())
 
   /** INCREMENTAL export append — the O(delta) daily-drop step for the
     * training artifact. Deliberately NO time-travel on this lifecycle
@@ -217,8 +200,7 @@ object Export {
     val n0 = m.totalRows
     val deltaCount = delta.count()
     if (deltaCount == 0L) {
-      writeManifestJson(outDir, m.seed, r, m.nShards, n0, m.shards,
-        m.checksums, math.max(batchId, m.lastBatch))
+      writeManifest(spark, outDir, m.copy(lastBatch = math.max(batchId, m.lastBatch)))
       return m.nShards
     }
     val positioned = shufflePositions(delta, idCol, deltaSeed)
@@ -226,7 +208,7 @@ object Export {
       .withColumn("shard", expr(s"(position - 1) div $r"))
     val firstTouched = n0 / r // the partial shard when n0 % r != 0
     val toWrite =
-      if (n0 % r == 0 || !shardDirsExist(outDir)) positioned
+      if (n0 % r == 0 || !shardDirsExist(spark, outDir)) positioned
       else {
         // trust only COMMITTED rows (position <= the manifest total):
         // a crashed earlier attempt may have already rewritten this
@@ -258,8 +240,8 @@ object Export {
         readShardFiles(spark, outDir).filter(col("shard") >= firstTouched))
       .map { case (s, _, c) => s -> c }.toMap
     val checksums = m.checksums.filter(_._1 < firstTouched) ++ touched
-    writeManifestJson(outDir, m.seed, r, nShards, n1, perShard,
-      checksums, math.max(batchId, m.lastBatch))
+    writeManifest(spark, outDir, m.copy(nShards = nShards, totalRows = n1, shards = perShard,
+      lastBatch = math.max(batchId, m.lastBatch), checksums = checksums))
     nShards
   }
 
@@ -279,12 +261,10 @@ object Export {
     * must never schedule against one.
     */
   def readManifest(outDir: String): ExportManifest = {
-    val p = java.nio.file.Paths.get(outDir, "manifest.json")
-    if (!java.nio.file.Files.exists(p))
-      throw new IllegalStateException(
+    val j = graft.Json.read(new Path(outDir, "manifest.json"), graft.changesets.Pipeline.activeConf)
+      .getOrElse(throw new IllegalStateException(
         s"no manifest.json in $outDir — export never committed (the " +
-          "manifest lands LAST; data files without one are an aborted write)")
-    val j = graft.Json.read(p)
+          "manifest lands LAST; data files without one are an aborted write)"))
     def f(k: String): Long =
       graft.Json.long(j, k).getOrElse(throw new IllegalStateException(s"manifest missing $k"))
     val entries = j.path("shards").elements.asScala.toSeq
@@ -333,7 +313,7 @@ object Export {
     val manifest = m.shards
       .map { case (s, r) => (s, r, m.checksums.get(s)) }
       .toDF("shard", "manifest_rows", "manifest_checksum")
-    if (!shardDirsExist(outDir))
+    if (!shardDirsExist(spark, outDir))
       // no data files at all: a committed EMPTY export verifies clean
       // (empty report); a manifest promising shards reports them all
       // missing
@@ -405,7 +385,7 @@ object Export {
   def readShardsInOrderIfAny(
       spark: org.apache.spark.sql.SparkSession, outDir: String): Option[DataFrame] =
     if (readManifest(outDir).totalRows > 0) Some(readShardsInOrder(spark, outDir))
-    else if (shardDirsExist(outDir))
+    else if (shardDirsExist(spark, outDir))
       throw new IllegalStateException(s"export verification failed: $outDir is committed " +
         "EMPTY (total_rows = 0) but holds shard= dirs: unexpected_shard")
     else None
@@ -417,9 +397,15 @@ object Export {
       spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame =
     spark.read.option("basePath", outDir).parquet(s"$outDir/shard=*")
 
-  private def shardDirsExist(outDir: String): Boolean =
-    Option(new java.io.File(outDir).listFiles()).toSeq.flatten
-      .exists(_.getName.startsWith("shard="))
+  private def shardDirsExist(spark: org.apache.spark.sql.SparkSession, outDir: String): Boolean =
+    shardDirs(spark.sessionState.newHadoopConf(), outDir) > 0
+
+  /** The number of `shard=` dirs in `outDir`; 0 when it does not exist. */
+  private def shardDirs(conf: org.apache.hadoop.conf.Configuration, outDir: String): Int = {
+    val dir = new Path(outDir)
+    graft.changesets.Pipeline.children(dir.getFileSystem(conf), dir)
+      .count(_.getPath.getName.startsWith("shard="))
+  }
 
   /** EXACT stratified holdout selection — carve a validation/test set
     * of EXACTLY `budget` examples out of the corpus, allocated across

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,37 +61,24 @@ object Layout {
     * At fleet scale this is the nightly OPTIMIZE pass; the rewrite is
     * one shuffle-free-scan + exchange, cost linear in the partition's
     * bytes, and the swap keeps a `.pre-compact` escape hatch until the
-    * new layout is fully written (same staged-rename discipline as
-    * Pipeline's publish).
+    * new layout is fully written (the staged two-rename swap of
+    * [[graft.changesets.Pipeline.run]]'s stable-name publish).
     */
   def compact(spark: SparkSession, dir: String, targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val path = java.nio.file.Paths.get(dir)
-    val bytes = {
-      val s = java.nio.file.Files.list(path)
-      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.toString.endsWith(".parquet"))
-        .map(java.nio.file.Files.size).sum
-      finally s.close()
-    }
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val bytes = fs.listStatus(path).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val staged = dir + ".compact-staging"
+    val staged = new Path(dir + ".compact-staging")
     spark.read.parquet(dir)
       .repartition(nFiles)
-      .write.mode("overwrite").parquet(staged)
-    val retired = java.nio.file.Paths.get(dir + ".pre-compact")
-    deleteTree(retired)
-    java.nio.file.Files.move(path, retired)
-    java.nio.file.Files.move(java.nio.file.Paths.get(staged), path)
-    deleteTree(retired)
+      .write.mode("overwrite").parquet(staged.toString)
+    val retired = new Path(dir + ".pre-compact")
+    fs.delete(retired, true)
+    graft.changesets.Pipeline.move(fs, path, retired)
+    graft.changesets.Pipeline.move(fs, staged, path)
+    fs.delete(retired, true)
     nFiles
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try s.forEach(c => deleteTree(c)) finally s.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
   }
 }

@@ -167,15 +167,15 @@ object Robots {
 
   private def readRcHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[RcHead] = {
-    for (j <- AtomicHead.read(stateDir, "_rc_head.json", hconf);
+    for (j <- graft.Json.read(new org.apache.hadoop.fs.Path(stateDir, "_rc_head.json"), hconf);
          g <- graft.Json.long(j, "gen"); b <- graft.Json.long(j, "last_batch_id"))
       yield RcHead(g, b)
   }
 
   private def writeRcHead(stateDir: String,
       hconf: org.apache.hadoop.conf.Configuration, h: RcHead): Unit =
-    AtomicHead.write(stateDir, "_rc_head.json", h.gen,
-      s"""{"gen": ${h.gen}, "last_batch_id": ${h.lastBatch}}""", hconf)
+    graft.Json.commit(new org.apache.hadoop.fs.Path(stateDir, "_rc_head.json"),
+      Seq("gen" -> h.gen, "last_batch_id" -> h.lastBatch), hconf)
 
   /** One incremental step of the recrawl estimator — the PRODUCTION
     * form of [[recrawlSchedule]]: snapshot versions arrive one at a

@@ -740,8 +740,7 @@ object Warc {
   // ------------------------------------------------------------------
 
   /** The page template, as a Column so Spark and the SQL oracle can
-    * build character-identical bytes (all-ASCII corpus: char length
-    * == byte length).
+    * build character-identical bytes.
     */
   private def pageHtml(docId: Column, text: Column, lang: Column, source: Column): Column =
     concat(
@@ -753,17 +752,19 @@ object Warc {
       lit("&gt;</div>\n</body></html>"))
 
   /** One full WARC response record (version line, headers, HTTP
-    * response, trailing blank lines) per document.
+    * response, trailing blank lines) per document. Both Content-Length
+    * headers count the UTF-8 bytes of their block, so non-ASCII text
+    * keeps the framing.
     */
   private def record(docId: Column, html: Column): Column = {
     val http = concat(
       lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\nContent-Length: "),
-      length(html), lit("\r\n\r\n"), html)
+      octet_length(html), lit("\r\n\r\n"), html)
     concat(
       lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: <urn:graft:"),
       docId, lit(">\r\nWARC-Target-URI: urn:doc:"), docId,
       lit("\r\nContent-Type: application/http; msgtype=response\r\nContent-Length: "),
-      length(http), lit("\r\n\r\n"), http, lit("\r\n\r\n"))
+      octet_length(http), lit("\r\n\r\n"), http, lit("\r\n\r\n"))
   }
 
   /** documents -> (archive_id, bytes): docs grouped `doc_id % nArchives`,

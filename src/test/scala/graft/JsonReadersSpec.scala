@@ -6,8 +6,8 @@ import graft.operators.{ArtifactStamp, Quality}
 import graft.sources.{Export, Robots}
 
 /** Every commit record graft reads back — export manifests, the MG,
-  * count-min, CDC and recrawl heads, artifact stamps, Bench's prior
-  * `bench_detail.json` — is parsed as
+  * count-min, CDC and recrawl heads, artifact stamps, ANN model
+  * manifests, Bench's prior `bench_detail.json` — is parsed as
   * JSON, not matched with patterns: keys in another order, a decoy
   * field nested in an object before the real one, and escaped quotes
   * and backslashes in strings all read as what the record says.
@@ -91,6 +91,22 @@ class JsonReadersSpec extends SparkSpec {
   test("recrawl head") {
     val d = stateDir("_rc_head.json")(Seq((1L, 1L, 0L, "h")).toDF("id", "n_obs", "n_changes", "last_hash"))
     assert(Robots.readRecrawlState(spark, d).count() === 1L)
+  }
+
+  test("ANN model manifest: reordered keys, a nested decoy, a missing field") {
+    val d = tmpDir("json-model")
+    val coarse = Array(Array(1.0, 2.0), Array(3.0, 4.0))
+    val codebooks = Array(Array(Array(1.0), Array(2.0)), Array(Array(3.0), Array(4.0)))
+    graft.operators.AnnModel.save(spark, d, coarse, codebooks)
+    put(d, "manifest.json",
+      """{"decoy": {"nlist": 99, "dims": 99, "num_subspaces": 99, "codebook_size": 99, "sub_dim": 99},
+        | "note": "\"nlist\": 99", "sub_dim": 1, "codebook_size": 2, "num_subspaces": 2,
+        | "dims": 2, "nlist": 2, "version": 1, "format": "graft-ann-model"}""".stripMargin)
+    val m = graft.operators.AnnModel.load(spark, d)
+    assert(m.coarse.map(_.toSeq).toSeq === coarse.map(_.toSeq).toSeq)
+    put(d, "manifest.json", """{"dims": 2, "num_subspaces": 2, "codebook_size": 2, "sub_dim": 1}""")
+    val e = intercept[IllegalArgumentException](graft.operators.AnnModel.load(spark, d))
+    assert(e.getMessage.startsWith("requirement failed: AnnModel.load: manifest missing 'nlist'"))
   }
 
   test("artifact stamp: escaped quotes and backslashes round-trip; key order is free") {

@@ -25,11 +25,15 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftFs.register(s.sparkContext.hadoopConfiguration)
     s
   }
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A fresh temp dir, addressed through the `graftfs` test scheme. */
+  def graftDir(prefix: String): String = GraftFs.path(tmpDir(prefix))
 
   /** Spark jobs started on this thread (and on the threads it spawns,
     * which inherit its job group) while `body` runs: how many started,

@@ -202,7 +202,8 @@ class LifecycleProbeSpec extends SparkSpec {
     assert(bm25(Pipeline.readPostingsIndex(spark, appended)) === bm25(rebuilt))
     // a manifest from before the statistics: no `stats` field at all
     val manifest = java.nio.file.Paths.get(appended, "manifest.json")
-    val json = graft.Json.read(manifest).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val json = graft.Json.Mapper.readTree(manifest.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     json.remove("stats")
     java.nio.file.Files.writeString(manifest, graft.Json.Mapper.writeValueAsString(json))
     assert(!Pipeline.postingsStore.readManifest(appended).figured)

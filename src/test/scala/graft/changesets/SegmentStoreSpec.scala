@@ -94,10 +94,9 @@ class SegmentStoreSpec extends SparkSpec {
 
   /** Every ref of every retained manifest is on disk. */
   private def assertRefsIntact(ix: Index, dir: String): Unit =
-    Pipeline.listChildren(Paths.get(dir))
-      .filter(p => p.getFileName.toString.startsWith(ix.prefix) &&
-        Files.exists(p.resolve("manifest.json")))
-      .flatMap(p => ix.store.readManifest(p.toString).refs)
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith(ix.prefix) && new java.io.File(f, "manifest.json").exists)
+      .flatMap(f => ix.store.readManifest(f.toString).refs)
       .foreach(r => assert(Files.exists(Paths.get(dir, r)), s"retention deleted referenced $r"))
 
   /** The crash state's contract: the parent is live and reads as

@@ -165,6 +165,25 @@ class WarcSpec extends SparkSpec {
       (9L, 200, "Doc 9", "Doc 9 Doc 9 & friends lone doc lang: fr <srcC>")))
   }
 
+  test("non-ASCII documents keep their framing: every record of both archive forms comes back") {
+    val rnd = new scala.util.Random(11)
+    val words = Seq("alpha", "é", "日本語", "café", "naïve", "beta", "Ω", "straße")
+    val docs = (0 until 60).map { i =>
+      (i.toLong, Seq.fill(3 + rnd.nextInt(8))(words(rnd.nextInt(words.size))).mkString(" "),
+        "xx", s"src$i")
+    }.toDF("doc_id", "text", "lang", "source")
+    def texts(archives: org.apache.spark.sql.DataFrame) =
+      Warc.parseArchives(archives, "archive_id", "bytes")
+        .select(col("ok"), regexp_extract(col("record_id"), "urn:graft:(\\d+)", 1).cast("long"),
+          Warc.htmlText(col("payload")))
+        .collect().map(r => (r.getBoolean(0), r.getLong(1), r.getString(2))).sortBy(_._2).toSeq
+    val want = docs.collect().map(r => (true, r.getLong(0),
+      s"Doc ${r.getLong(0)} Doc ${r.getLong(0)} & friends ${r.getString(1)} lang: xx <${r.getString(3)}>"))
+      .toSeq
+    assert(texts(Warc.toWarcArchives(docs, nArchives = 3)) === want)
+    assert(texts(Warc.toWarcArchivesGz(docs, nArchives = 3)) === want)
+  }
+
   test(".warc.gz frames to the same rows as its uncompressed twin (multi-member walk)") {
     val plain = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture))
     // two members split at an ARBITRARY byte offset (not a record
